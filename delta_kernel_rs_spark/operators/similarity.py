@@ -416,6 +416,21 @@ def random_hyperplane_buckets(
     return df.withColumn(out, bucket)
 
 
+def _int8_codes(nv, qs):
+    """int8 codes of normalized vectors ``nv`` (rows) at scales ``qs``:
+    ``floor(nv/qs + 0.5)`` clamped to ±127, 0 where the scale is 0.
+
+    Spark's ``least``/``greatest`` order NaN above every number, so a NaN
+    code (a zero-norm vector of denormals: ``nv`` is ±inf and ``qs`` inf)
+    clamps to 127; ``np.clip`` would pass it through to INT64_MIN."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        codes = np.floor(nv / qs[:, None] + 0.5)
+    codes = np.where(np.isnan(codes), 127.0, np.clip(codes, -127.0, 127.0))
+    return np.where(qs[:, None] == 0.0, 0.0, codes).astype(np.int64)
+
+
 def _bucket_topk_quantized(id_col: str, vec_col: str, k: int, dims: int):
     """Per-bucket int8-quantized top-k, as an applyInPandas body.
 
@@ -455,10 +470,7 @@ def _bucket_topk_quantized(id_col: str, vec_col: str, k: int, dims: int):
             V = np.stack(vecs[valid]).astype(np.float64)
             nv = V / np.sqrt(n2[valid])[:, None]
             qs = np.maximum(0.0, np.max(np.abs(nv), axis=1)) / 127.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                codes = np.floor(nv / qs[:, None] + 0.5)
-            codes = np.clip(codes, -127.0, 127.0)
-            codes = np.where(qs[:, None] == 0.0, 0.0, codes).astype(np.int64)
+            codes = _int8_codes(nv, qs)
         else:
             codes = np.zeros((0, dims), dtype=np.int64)
             qs = np.zeros(0)
@@ -764,8 +776,8 @@ def _assign_centroids_arrow(
     columns; NaN agrees too (Spark orders NaN largest and breaks ties on
     lowest cid — numpy argmax returns the FIRST NaN index).
 
-    Rows whose vector is NULL or not ``dims`` long take the JVM's
-    degenerate path: all-null cosines → lowest centroid id; norm2 is the
+    Rows whose vector is NULL, holds a NULL element or is not ``dims``
+    long take the JVM's degenerate path: all-null cosines → lowest centroid id; norm2 is the
     self-fold of whatever elements exist (the zip_with null-padding
     semantics). Output matches `_assign_literal_centroids`:
     (id_col, vec_col, norm2, centroid_id).
@@ -803,6 +815,13 @@ def _assign_centroids_arrow(
                 .astype(np.int64)
             )
             fast = lens == dims
+            values = pc.list_flatten(vecs)
+            if values.null_count:
+                # a NULL element nulls the JVM fold: such rows take the
+                # degenerate path below (typed NULL norm2, lowest cid)
+                parents = pc.list_parent_indices(vecs).to_numpy(zero_copy_only=False)
+                nulls = pc.is_null(values).to_numpy(zero_copy_only=False)
+                fast[parents[nulls]] = False
             if fast.any() and k:
                 sub = vecs.take(pa.array(np.nonzero(fast)[0]))
                 V = (

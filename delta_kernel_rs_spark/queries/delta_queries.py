@@ -663,6 +663,11 @@ def d07_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the filtered-away group). The change subtree executes ONCE; the
     # extra shuffle carries each change row exactly once, the same bytes
     # net_changes' aggregation already exchanged.
+    # Contract change: the rows arm now re-emits its data columns from the
+    # grouping keys, so Spark's grouping normalization applies to them —
+    # -0.0 comes back as 0.0 and every NaN as the canonical NaN. The
+    # fixtures carry neither; a float fixture that does would need the
+    # original values re-emitted from the collected structs instead.
     ch = cdf_t.changes(0)
     grouped = ch.groupBy(*COLS).agg(
         F.collect_list(F.struct("_change_type", "_commit_version")).alias("evs"),

@@ -5,8 +5,8 @@ V1 classic single-file checkpoints; reconciled actions = latest P&M, live
 adds, unexpired remove tombstones, latest txn per app, live domain
 metadata) and log compaction (kernel/src/log_compaction/).
 
-The reconciliation replay runs as a Spark job (same dedup aggregate as the
-scan); only the driver-side rename of the single output file is local.
+The reconciliation replay runs as a Spark job (a newest-wins dedup
+aggregate); only the driver-side rename of the single output file is local.
 """
 
 from __future__ import annotations
@@ -47,12 +47,24 @@ def _pad_to_actions_schema(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
+def _version_map_df(spark, seg) -> DataFrame:
+    """(log filename → version) lookup, built from the driver's listing.
+
+    Compacted files carry the range end as their effective version (all
+    actions inside are already newest-wins-reconciled for the range).
+    """
+    rows = [
+        (c.filename, c.end_version if c.end_version is not None else c.version)
+        for c in seg.commit_files
+    ]
+    return spark.createDataFrame(rows, "log_filename STRING, version LONG")
+
+
 def _full_replay(snapshot: Snapshot) -> DataFrame:
     """Latest (add, remove, version) per file key across the whole segment —
-    the scan replay, but keeping remove tombstones too."""
+    the newest-wins fold, keeping remove tombstones too."""
     spark = snapshot.spark
     seg = snapshot.log_segment
-    scan = snapshot.scan()
     arms = []
     if seg.commit_files:
         from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA
@@ -63,7 +75,7 @@ def _full_replay(snapshot: Snapshot) -> DataFrame:
                 "log_filename",
                 F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
             )
-            .join(F.broadcast(scan._version_map_df()), "log_filename")
+            .join(F.broadcast(_version_map_df(spark, seg)), "log_filename")
             .select("add", "remove", "version")
         )
     if seg.checkpoint_parts:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA
 from delta_kernel_rs_spark.sources.scan import (
+    SCAN_FILES_SCHEMA,
     ScanFile,
     absolutize_decoded_path,
     canonical_log_path,
@@ -205,24 +206,6 @@ def refresh_scan_files(
 def scan_files_list_to_df(spark, files: list[ScanFile]) -> DataFrame:
     """Lift a collected ScanFile list back into the scan-files frame shape
     (stats/mtime null — the cached list never carries them)."""
-    from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA as _S
-
-    dv_type = _S["add"].dataType["deletionVector"].dataType
-    import pyspark.sql.types as T
-
-    struct = T.StructType(
-        [
-            T.StructField("file_path", T.StringType()),
-            T.StructField("size", T.LongType()),
-            T.StructField("modification_time", T.LongType()),
-            T.StructField("stats", T.StringType()),
-            T.StructField("partition_values", T.MapType(T.StringType(), T.StringType())),
-            T.StructField("deletion_vector", dv_type),
-            T.StructField("base_row_id", T.LongType()),
-            T.StructField("default_row_commit_version", T.LongType()),
-            T.StructField("commit_version", T.LongType()),
-        ]
-    )
     rows = [
         (
             f.path,
@@ -237,4 +220,4 @@ def scan_files_list_to_df(spark, files: list[ScanFile]) -> DataFrame:
         )
         for f in files
     ]
-    return spark.createDataFrame(rows, struct)
+    return spark.createDataFrame(rows, SCAN_FILES_SCHEMA)

@@ -1,25 +1,33 @@
-"""SparkSession-free log replay producing an Arrow live-file list.
+"""The engine's log replay: the snapshot's live files as one Arrow table.
 
-The PySpark Python Data Source API executes ``schema()`` and
-``partitions()`` in a plain Python worker process with no SparkSession,
-so the batch facade (sources/batch_source.py) replays the Delta log the
-way the reference kernel itself does — single-node, newest-wins dedup
-over the commit tail (kernel/src/log_replay/mod.rs:28-56), checkpoint
-bulk consumed columnar (kernel's parallel checkpoint iterators):
+Every read plans from this replay — ``Scan`` (sources/scan.py) lifts the
+table into a local DataFrame on the driver, and the batch facade
+(sources/batch_source.py) calls it from the Python Data Source worker,
+which has no SparkSession. It replays the Delta log the way the
+reference kernel does — single-node, newest-wins dedup over the commit
+tail (kernel/src/log_replay/mod.rs:28-66), checkpoint bulk consumed
+columnar (kernel's parallel checkpoint iterators):
 
 * the commit TAIL (everything after the checkpoint, bounded by the
   table's checkpoint cadence) is parsed as JSON into Python dicts;
 * the CHECKPOINT — where the O(files) bulk lives — is read with pyarrow
   and stays columnar end-to-end: dedup against tail keys is an Arrow
-  ``is_in`` anti-filter, and the result ships to executors as Arrow IPC
-  slices. No per-file Python objects are ever materialized for
-  checkpoint files.
+  ``is_in`` anti-filter. No per-file Python objects are ever
+  materialized for checkpoint files.
+
+Each live file carries the version of the action that made it live
+(a compacted file's end version for tail actions, the checkpoint version
+for checkpoint adds), its ``modificationTime`` and its stats JSON — re-
+derived from ``stats_parsed`` when a ``writeStatsAsJson=false``
+checkpoint nulled the document.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import urllib.parse
+from datetime import timezone
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -48,6 +56,9 @@ FILES_SCHEMA = pa.schema(
         # facade (plans/py_skipping.py); dropped before tasks ship to
         # executors so checkpoint-sized stats bulk never rides the IPC
         ("stats", pa.string()),
+        ("modification_time", pa.int64()),
+        # version of the action that made the file live
+        ("commit_version", pa.int64()),
     ]
 )
 
@@ -65,7 +76,10 @@ def pq_read(path: str, columns: list[str] | None = None, filters=None) -> pa.Tab
     return pq.read_table(path.removeprefix("file://"), columns=columns, filters=filters)
 
 
-def _iter_actions(storage, commit_path: str):
+def _iter_actions(storage, commit_path: str, strict: bool = False):
+    """Parsed action lines of one NDJSON log file. ``strict`` raises on a
+    line that is not valid JSON — file-action replay must fail loudly on
+    a torn commit rather than silently drop an add or a remove."""
     for line in storage.read_text(commit_path).splitlines():
         line = line.strip()
         if not line:
@@ -73,6 +87,8 @@ def _iter_actions(storage, commit_path: str):
         try:
             yield json.loads(line)
         except ValueError:
+            if strict:
+                raise ValueError(f"malformed action line in {commit_path}: {line[:80]!r}")
             continue
 
 
@@ -151,23 +167,29 @@ def _dv_uid_py(dv: dict | None) -> str:
     )
 
 
-def replay_commit_tail(storage, seg) -> dict[tuple[str, str], dict | None]:
-    """Newest-wins file actions from the commit tail: key → live add dict,
-    or None when the newest action is a remove. Python-dict sized by the
-    tail only (checkpoint cadence), never the full table."""
-    actions: dict[tuple[str, str], dict | None] = {}
+def replay_commit_tail(
+    storage, seg
+) -> dict[tuple[str, str], tuple[dict, int] | None]:
+    """Newest-wins file actions from the commit tail: key → (live add
+    dict, its commit version), or None when the newest action is a
+    remove. A compacted file's actions take its end version. Python-dict
+    sized by the tail only (checkpoint cadence), never the full table."""
+    actions: dict[tuple[str, str], tuple[dict, int] | None] = {}
     for c in seg.commit_files:  # ascending — later commits overwrite
-        for action in _iter_actions(storage, c.path):
-            if "add" in action:
-                a = action["add"]
-                actions[(_unq(a["path"]), _dv_uid_py(a.get("deletionVector")))] = a
-            elif "remove" in action:
-                r = action["remove"]
+        version = c.version if c.end_version is None else c.end_version
+        for action in _iter_actions(storage, c.path, strict=True):
+            a = action.get("add")
+            if a is not None:
+                key = (_unq(a["path"]), _dv_uid_py(a.get("deletionVector")))
+                actions[key] = (a, version)
+                continue
+            r = action.get("remove")
+            if r is not None:
                 actions[(_unq(r["path"]), _dv_uid_py(r.get("deletionVector")))] = None
     return actions
 
 
-def _adds_from_pylist(adds: list[dict]) -> pa.Table:
+def _adds_from_pylist(adds: list[dict], versions: list[int] | None = None) -> pa.Table:
     rows = [
         {
             "path": a["path"],
@@ -177,8 +199,10 @@ def _adds_from_pylist(adds: list[dict]) -> pa.Table:
             "base_row_id": a.get("baseRowId"),
             "default_row_commit_version": a.get("defaultRowCommitVersion"),
             "stats": a.get("stats"),
+            "modification_time": a.get("modificationTime"),
+            "commit_version": None if versions is None else versions[i],
         }
-        for a in adds
+        for i, a in enumerate(adds)
     ]
     return pa.Table.from_pylist(rows, schema=FILES_SCHEMA)
 
@@ -204,26 +228,29 @@ def _checkpoint_adds_arrow(seg, storage=None) -> pa.Table:
     sidecar pointers still name parquet files. Found by the round-12
     foreign-checkpoint fuzz: this fold used to feed the json top to the
     parquet reader and crash."""
+    version = seg.checkpoint_version
+
+    def resolve(sidecars: list[str]) -> pa.Table:
+        return pa.concat_tables(
+            [
+                pq_read(p if "://" in p or p.startswith("/") else f"{seg.log_dir}/_sidecars/{p}")
+                for p in sidecars
+            ],
+            promote_options="permissive",
+        )
+
     json_parts = [p for p in seg.checkpoint_parts if p.endswith(".json")]
     if json_parts and storage is not None:
-        actions = [a for p in json_parts for a in _iter_actions(storage, p)]
+        actions = [a for p in json_parts for a in _iter_actions(storage, p, strict=True)]
         sidecars = [
             a["sidecar"]["path"]
             for a in actions
-            if a.get("sidecar", {}).get("path")
+            if (a.get("sidecar") or {}).get("path")
         ]
         if not sidecars:
-            return _adds_from_pylist(
-                [a["add"] for a in actions if a.get("add", {}).get("path")]
-            )
-        resolved = [
-            p if "://" in p or p.startswith("/") else f"{seg.log_dir}/_sidecars/{p}"
-            for p in sidecars
-        ]
-        top = pa.concat_tables(
-            [pq_read(p) for p in resolved], promote_options="permissive"
-        )
-        return _conform_checkpoint_table(top)
+            adds = [a["add"] for a in actions if (a.get("add") or {}).get("path")]
+            return _adds_from_pylist(adds, [version] * len(adds))
+        return _conform_checkpoint_table(resolve(sidecars), version)
     top = pa.concat_tables(
         [pq_read(p) for p in seg.checkpoint_parts], promote_options="permissive"
     )
@@ -231,17 +258,63 @@ def _checkpoint_adds_arrow(seg, storage=None) -> pa.Table:
         sc = pc.struct_field(top.column("sidecar"), "path")
         sidecars = [p for p in sc.to_pylist() if p]
         if sidecars:
-            resolved = [
-                p if "://" in p or p.startswith("/") else f"{seg.log_dir}/_sidecars/{p}"
-                for p in sidecars
-            ]
-            top = pa.concat_tables(
-                [pq_read(p) for p in resolved], promote_options="permissive"
-            )
-    return _conform_checkpoint_table(top)
+            top = resolve(sidecars)
+    return _conform_checkpoint_table(top, version)
 
 
-def _conform_checkpoint_table(top: pa.Table) -> pa.Table:
+def _stats_json(value, typ: pa.DataType) -> str | None:
+    """One ``stats_parsed`` value as the stats JSON document Spark's
+    ``to_json`` writes for it: null fields dropped, timestamps at
+    millisecond precision in UTC, non-finite floats quoted."""
+    if value is None:
+        return None
+    if pa.types.is_struct(typ):
+        parts = []
+        for f in typ:
+            doc = _stats_json(value.get(f.name), f.type)
+            if doc is not None:
+                parts.append(f"{json.dumps(f.name)}:{doc}")
+        return "{" + ",".join(parts) + "}"
+    if pa.types.is_timestamp(typ):
+        if value.tzinfo is not None:
+            value = value.astimezone(timezone.utc).replace(tzinfo=None)
+            zone = "Z"
+        else:  # TIMESTAMP_NTZ
+            zone = ""
+        return f'"{value:%Y-%m-%dT%H:%M:%S}.{value.microsecond // 1000:03d}{zone}"'
+    if pa.types.is_date(typ):
+        return f'"{value.isoformat()}"'
+    if pa.types.is_decimal(typ):
+        return str(value)
+    if pa.types.is_floating(typ):
+        if math.isnan(value):
+            return '"NaN"'
+        if math.isinf(value):
+            return '"Infinity"' if value > 0 else '"-Infinity"'
+        if pa.types.is_float32(typ):
+            import numpy as np
+
+            return str(np.float32(value))
+        return repr(float(value))
+    return json.dumps(value)
+
+
+def _checkpoint_stats(add: pa.StructArray, n: int) -> pa.Array:
+    """``add.stats``, falling back to a document re-derived from
+    ``add.stats_parsed`` where the JSON is null (writeStatsAsStruct
+    checkpoints written with writeStatsAsJson=false)."""
+    stats = _struct_subfield(add, "stats", pa.string(), n)
+    names = {f.name for f in add.type}
+    if "stats_parsed" not in names or not stats.null_count:
+        return stats
+    parsed = _as_array(pc.struct_field(add, "stats_parsed"))
+    docs = stats.to_pylist()
+    for i in pc.indices_nonzero(pc.is_null(stats)).to_pylist():
+        docs[i] = _stats_json(parsed[i].as_py(), parsed.type)
+    return pa.array(docs, type=pa.string())
+
+
+def _conform_checkpoint_table(top: pa.Table, version: int) -> pa.Table:
     """Normalize resolved checkpoint rows (post-sidecar) to FILES_SCHEMA."""
     if "add" not in top.column_names:
         return FILES_SCHEMA.empty_table()
@@ -266,7 +339,9 @@ def _conform_checkpoint_table(top: pa.Table) -> pa.Table:
         dv,
         _struct_subfield(add, "baseRowId", pa.int64(), n),
         _struct_subfield(add, "defaultRowCommitVersion", pa.int64(), n),
-        _struct_subfield(add, "stats", pa.string(), n),
+        _checkpoint_stats(add, n),
+        _struct_subfield(add, "modificationTime", pa.int64(), n),
+        pa.array([version] * n, type=pa.int64()),
     ]
     return pa.Table.from_arrays(cols, schema=FILES_SCHEMA)
 
@@ -301,12 +376,13 @@ def _arrow_keys(tbl: pa.Table) -> pa.Array:
 def live_files_arrow(storage, seg) -> pa.Table:
     """The snapshot's live files as one Arrow table (FILES_SCHEMA).
 
-    Same dedup semantics as the distributed replay (sources/scan.py
-    add_actions_df): newest tail action wins per (path, dv-uid) key;
-    checkpoint files survive unless ANY tail action touched their key.
+    Reference dedup semantics (kernel/src/log_replay/mod.rs:28-66):
+    newest tail action wins per (path, dv-uid) key; checkpoint files
+    survive unless ANY tail action touched their key.
     """
     tail = replay_commit_tail(storage, seg)
-    live_tail = _adds_from_pylist([a for a in tail.values() if a is not None])
+    live = [hit for hit in tail.values() if hit is not None]
+    live_tail = _adds_from_pylist([a for a, _ in live], [v for _, v in live])
     if not seg.checkpoint_parts:
         return live_tail
     ck = _checkpoint_adds_arrow(seg, storage)

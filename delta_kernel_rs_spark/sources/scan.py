@@ -1,24 +1,21 @@
-"""Table scan: distributed log replay → live file list → logical DataFrame.
+"""Table scan: driver-side log replay → live-file frame → logical DataFrame.
 
-The metadata query is the reference's flagship declarative plan
-(kernel/src/plans/mod.rs:16-25, built at kernel/src/scan/scan_plan.rs:49-80):
+Planning follows the reference kernel, which replays the log on a single
+node (kernel/src/log_replay/mod.rs:28-66): ``pyreplay.live_files_arrow``
+folds the commit tail and the checkpoint into one Arrow table of live
+files on the driver (~10 ms for a few hundred files), and
+``Scan.scan_files_df`` lifts that table into a local DataFrame in the
+reference's scan-row shape (kernel/src/scan/mod.rs:1410-1440). Spark
+plans a local relation on the driver, so data skipping, the projections
+and the path collect in ``to_df`` run as zero Spark jobs; the frame joins
+executor-side only where file constants (partition values, DV
+descriptors, row-id constants) meet the data rows.
 
-    SELECT add FROM (SELECT max_by(action, version) AS add
-                     FROM commits GROUP BY file_key)
-    WHERE add IS NOT NULL
-    UNION ALL
-    SELECT c.add FROM checkpoint c
-    LEFT ANTI JOIN commit_keys k ON c.file_key = k.file_key
-
-with ``file_key = (path, dv_unique_id)`` (kernel/src/log_replay/mod.rs:28-56)
-— here lowered to DataFrame ops so the replay runs distributed on executors
-(the reference's streaming ``AddRemoveDedupVisitor`` becomes a shuffle
-aggregate; its ``parallel_scan_metadata`` checkpoint parallelism is free).
-
-Scale notes (100 TB posture): the replay never materializes the log on the
-driver — only the final live-file *path list* is collected (exactly what
-Spark's own parquet source needs); partition values / DV descriptors stay
-distributed and are joined back against ``_metadata.file_path``.
+One Arrow table and its frame are kept per (session, table, version) in
+a small driver LRU; nothing is persisted. The Column helpers below
+(path decoding, DV identity, checkpoint conforming) serve the Spark-side
+folds that remain: the checkpoint writer, the change feed and the
+incremental refresh.
 """
 
 from __future__ import annotations
@@ -26,33 +23,57 @@ from __future__ import annotations
 from collections import OrderedDict
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from delta_kernel_rs_spark.functions.partition_codec import parse_partition_column
 from delta_kernel_rs_spark.functions.schema_codec import physical_name, quoted
-from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA
+from delta_kernel_rs_spark.sources.actions import DELETION_VECTOR_TYPE, SCAN_ACTIONS_SCHEMA
 
 
-#: persisted live-adds frames, one per (session, table, version); small
-#: LRU — evictees are unpersisted (see Scan.cached_add_actions_df).
+#: persisted snapshot-derived frames (change-feed events, incremental
+#: merges, with_files_df overrides), one per stable key; small LRU —
+#: evictees are unpersisted (see cached_files_frame).
 _LIVE_ADDS_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-# Adds frames are metadata-sized and persist MEMORY_AND_DISK (spill, not
+# Frames are metadata-sized and persist MEMORY_AND_DISK (spill, not
 # OOM, on million-file tables); an 8-entry cache thrashes on workloads
 # that touch tens of tables per session — every query paid the persist
 # without ever reusing it.
 _LIVE_ADDS_CACHE_MAX = 64
 
+#: live files per (session, table, version): the Arrow replay result and
+#: the local DataFrame lifted from it (see Scan._live_files)
+_SCAN_FILES_CACHE: "OrderedDict[tuple, tuple[pa.Table, DataFrame]]" = OrderedDict()
+_SCAN_FILES_CACHE_MAX = 64
+
+#: the scan-row schema of ``Scan.scan_files_df()``
+SCAN_FILES_SCHEMA = T.StructType(
+    [
+        T.StructField("file_path", T.StringType()),
+        T.StructField("size", T.LongType()),
+        T.StructField("modification_time", T.LongType()),
+        T.StructField("stats", T.StringType()),
+        T.StructField("partition_values", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("deletion_vector", DELETION_VECTOR_TYPE),
+        T.StructField("base_row_id", T.LongType()),
+        T.StructField("default_row_commit_version", T.LongType()),
+        T.StructField("commit_version", T.LongType()),
+    ]
+)
+
 
 def cached_files_frame(key: tuple, builder) -> DataFrame:
     """Persist-and-reuse a metadata-sized frame under a stable LRU key.
 
-    One code path for every immutable snapshot-derived frame (live adds,
-    incremental merges): the first caller persists, later callers with
-    the same key share the SAME persisted DataFrame object; evictees are
-    unpersisted. Keys must pin everything the frame depends on
-    (application, table, version range, checkpoint shape)."""
+    One code path for every immutable snapshot-derived frame that Spark
+    computes (change-feed events, incremental merges): the first caller
+    persists, later callers with the same key share the SAME persisted
+    DataFrame object; evictees are unpersisted. Keys must pin everything
+    the frame depends on (application, table, version range, checkpoint
+    shape)."""
     df = _LIVE_ADDS_CACHE.get(key)
     if df is not None:
         _LIVE_ADDS_CACHE.move_to_end(key)
@@ -66,6 +87,47 @@ def cached_files_frame(key: tuple, builder) -> DataFrame:
         except Exception:  # session already stopped
             pass
     return df
+
+
+def absolute_file_paths(paths: pa.Array, table_path: str) -> pa.Array:
+    """Log paths → plain absolute filesystem paths, in Arrow: the driver
+    twin of :func:`resolve_add_path` (tolerant percent-decode, ``file:``
+    scheme stripped, relative paths joined to the table root)."""
+    from delta_kernel_rs_spark.sources.pyreplay import _unq
+
+    paths = pc.cast(paths, pa.string())
+    if pc.any(pc.match_substring(paths, "%")).as_py():
+        paths = pa.array([p if p is None else _unq(p) for p in paths.to_pylist()], pa.string())
+    root = pa.scalar(table_path.rstrip("/") + "/", pa.string())
+    return pc.if_else(
+        pc.match_substring(paths, "://"),
+        pc.replace_substring_regex(paths, r"^file:/+", "/"),
+        pc.if_else(
+            pc.starts_with(paths, "/"),
+            paths,
+            pc.binary_join_element_wise(root, paths, ""),
+        ),
+    )
+
+
+def scan_rows_arrow(files: pa.Table, table_path: str) -> pa.Table:
+    """``pyreplay.live_files_arrow`` output → the scan-row table of
+    :data:`SCAN_FILES_SCHEMA` (absolute ``file_path``)."""
+    col = lambda name: files.column(name).combine_chunks()  # noqa: E731
+    return pa.Table.from_arrays(
+        [
+            absolute_file_paths(col("path"), table_path),
+            col("size"),
+            col("modification_time"),
+            col("stats"),
+            col("partition_values"),
+            col("dv"),
+            col("base_row_id"),
+            col("default_row_commit_version"),
+            col("commit_version"),
+        ],
+        names=SCAN_FILES_SCHEMA.fieldNames(),
+    )
 
 
 def dv_unique_id(dv_col: Column) -> Column:
@@ -326,15 +388,6 @@ class ScanFile:
     default_row_commit_version: int | None = None
 
 
-def file_constants_df(spark, files: list["ScanFile"]) -> DataFrame:
-    """(path → partition values) lookup built from a collected file list —
-    avoids re-running log replay just to fetch per-file constants."""
-    rows = [(f.path, f.partition_values or {}) for f in files]
-    return spark.createDataFrame(
-        rows, "__const_path STRING, __pv MAP<STRING,STRING>"
-    )
-
-
 class Scan:
     """A configured read of a snapshot (reference kernel/src/scan/mod.rs)."""
 
@@ -350,7 +403,6 @@ class Scan:
         self.predicate = predicate
         self.columns = columns
         self.with_row_ids = with_row_ids
-        self._files_cache: list[ScanFile] | None = None
         self._files_df_override: DataFrame | None = None
         self._exclude_keys_df: DataFrame | None = None
         # String predicates are parsed into the typed AST so the default
@@ -481,8 +533,40 @@ class Scan:
     # ------------------------------------------------------------------
     # Scan-file DataFrame with resolved absolute paths
     # ------------------------------------------------------------------
+    def _live_files(self) -> tuple[pa.Table, DataFrame]:
+        """(scan-row Arrow table, local DataFrame over it) for this
+        snapshot, from the driver LRU.
+
+        The replay result for one snapshot is immutable, so every scan of
+        that snapshot shares one Arrow table and one frame. The frame is a
+        local relation: Catalyst evaluates filters and projections over
+        it on the driver, so nothing needs persisting."""
+        seg = self.snapshot.log_segment
+        key = (
+            self.spark.sparkContext.applicationId,
+            self.snapshot.table_path,
+            self.snapshot.version,
+            seg.checkpoint_version,
+            len(seg.commit_files),
+        )
+        hit = _SCAN_FILES_CACHE.get(key)
+        if hit is not None:
+            _SCAN_FILES_CACHE.move_to_end(key)
+            return hit
+        from delta_kernel_rs_spark.sources.pyreplay import live_files_arrow
+
+        rows = scan_rows_arrow(
+            live_files_arrow(self.snapshot.storage, seg), self.snapshot.table_path
+        )
+        hit = (rows, self.spark.createDataFrame(rows, SCAN_FILES_SCHEMA))
+        _SCAN_FILES_CACHE[key] = hit
+        while len(_SCAN_FILES_CACHE) > _SCAN_FILES_CACHE_MAX:
+            _SCAN_FILES_CACHE.popitem(last=False)
+        return hit
+
     def scan_files_df(self) -> DataFrame:
-        """One row per live file: absolute path + file-constant columns.
+        """One row per live file: absolute path + file-constant columns
+        (:data:`SCAN_FILES_SCHEMA`).
 
         This is the reference's scan-row schema (kernel/src/scan/
         mod.rs:1410-1440): path, size, modificationTime, stats, DV,
@@ -491,19 +575,7 @@ class Scan:
         if self._files_df_override is not None:
             df = self._files_df_override
         else:
-            table_path = self.snapshot.table_path
-            adds = self.cached_add_actions_df()
-            df = adds.select(
-                resolve_add_path(F.col("add.path"), table_path).alias("file_path"),
-                F.col("add.size").alias("size"),
-                F.col("add.modificationTime").alias("modification_time"),
-                F.col("add.stats").alias("stats"),
-                F.col("add.partitionValues").alias("partition_values"),
-                F.col("add.deletionVector").alias("deletion_vector"),
-                F.col("add.baseRowId").alias("base_row_id"),
-                F.col("add.defaultRowCommitVersion").alias("default_row_commit_version"),
-                F.col("version").alias("commit_version"),
-            )
+            df = self._live_files()[1]
         skip_pred = self._file_skipping_predicate()
         if skip_pred is not None:
             df = df.filter(skip_pred)
@@ -525,7 +597,6 @@ class Scan:
         driver (CDF-by-row-tracking drops files byte-identical in both
         compared snapshots this way; round-6 verdict, What's wrong #3)."""
         self._exclude_keys_df = keys_df
-        self._files_cache = None
         return self
 
     def file_keys_df(self) -> DataFrame:
@@ -575,28 +646,25 @@ class Scan:
         return derived if keep is None else (keep & derived)
 
     def files(self) -> list[ScanFile]:
-        if self._files_cache is None:
-            # stats (multi-KB JSON per file) and mtime are plan-only columns
-            # — never ship them to the driver; at a million files that is
-            # the difference between MBs and GBs of driver heap.
-            rows = self.scan_files_df().drop("stats", "modification_time").collect()
-            self._files_cache = [
-                ScanFile(
-                    path=r.file_path,
-                    size=r.size,
-                    partition_values=dict(r.partition_values or {}),
-                    dv=r.deletion_vector.asDict() if r.deletion_vector else None,
-                    base_row_id=r.base_row_id,
-                    commit_version=r.commit_version,
-                    default_row_commit_version=r.default_row_commit_version,
-                )
-                for r in rows
-            ]
-        return self._files_cache
+        """The kept live files as driver-side handles (a collect of
+        :meth:`scan_files_df`; stats and mtime are plan-only columns)."""
+        rows = self.scan_files_df().drop("stats", "modification_time").collect()
+        return [
+            ScanFile(
+                path=r.file_path,
+                size=r.size,
+                partition_values=dict(r.partition_values or {}),
+                dv=r.deletion_vector.asDict() if r.deletion_vector else None,
+                base_row_id=r.base_row_id,
+                commit_version=r.commit_version,
+                default_row_commit_version=r.default_row_commit_version,
+            )
+            for r in rows
+        ]
 
     def with_files_df(self, files_df: DataFrame, persist: bool = True) -> "Scan":
         """Plan this scan off a caller-supplied scan-files frame instead of
-        log replay — the frame-shaped twin of assigning ``_files_cache``.
+        log replay.
 
         Used by the incremental refresh path (``scan_metadata_from``,
         reference kernel/src/scan/mod.rs:880-1024): the merged
@@ -607,8 +675,8 @@ class Scan:
         ``persist`` (default) spills the frame into the same bounded LRU
         the live-adds cache uses: ``to_df()`` executes the scan-files
         subtree several times (head collect, DV descriptors, constants),
-        and unlike the default path this frame has no persisted replay
-        underneath it — measured 2.4→2.0 s on the d03 incr arm at sf0.1.
+        and unlike the default path's local relation this frame is
+        computed by Spark — measured 2.4→2.0 s on the d03 incr arm at sf0.1.
         A frame that is ALREADY persisted (e.g. the stable-key cached
         merge from ``Snapshot.scan_files_df_from``) is used as-is — no
         duplicate persist, no id()-keyed LRU churn. Evictees are
@@ -621,7 +689,6 @@ class Scan:
                 lambda: files_df,
             )
         self._files_df_override = files_df
-        self._files_cache = None
         return self
 
     # ------------------------------------------------------------------
@@ -716,35 +783,25 @@ class Scan:
     def to_df(self) -> DataFrame:
         """The scan result as a lazy logical DataFrame.
 
-        Planning is distributed by default: the only O(files) driver state
-        is the path-string list the parquet reader requires (plus one
-        has-DV bit per file) — file constants, DV descriptors, and row-id
-        constants stay in DataFrames joined executor-side. A scan whose
-        ``files()`` list was already materialized reuses that bounded
-        list; a ``with_files_df`` override plans off the supplied frame.
+        The parquet reader needs the kept path list, collected from
+        :meth:`scan_files_df` (plus one has-DV bit per file); file
+        constants, DV descriptors and row-id constants are joined from
+        the same frame executor-side. A ``with_files_df`` override plans
+        off the supplied frame.
         """
         spark = self.spark
         schema = self.snapshot.schema
         meta = self.snapshot.metadata
         pcols = meta.partition_columns
 
-        files = self._files_cache
-        if files is not None:
-            paths = [f.path for f in files]
-            needs_dv = any(f.dv for f in files)
-            sfdf = None
-        else:
-            # One collect of (path, has_dv) pairs only — never ScanFile
-            # objects, stats JSON, or partition-value dicts (round-5
-            # verdict, What's wrong #3). The frame sits on the snapshot's
-            # persisted live-adds cache, so the constants joins below
-            # reuse one replay instead of re-running it per action.
-            sfdf = self.scan_files_df().drop("stats", "modification_time")
-            head = sfdf.select(
-                "file_path", F.col("deletion_vector").isNotNull().alias("has_dv")
-            ).collect()
-            paths = [r.file_path for r in head]
-            needs_dv = any(r.has_dv for r in head)
+        # One collect of (path, has_dv) pairs only; over the local
+        # relation the skipping filter and this collect run on the driver.
+        sfdf = self.scan_files_df().drop("stats", "modification_time")
+        head = sfdf.select(
+            "file_path", F.col("deletion_vector").isNotNull().alias("has_dv")
+        ).collect()
+        paths = [r.file_path for r in head]
+        needs_dv = any(r.has_dv for r in head)
 
         if not paths:
             out_fields = [f for f in schema.fields if self.columns is None or f.name in self.columns]
@@ -778,31 +835,21 @@ class Scan:
             # exists solely to drop DV-hidden rows — a DV-free snapshot
             # must not pay it (measured 1.4 s -> 0.6 s on the d07 lineage
             # arm's base-snapshot read, PLANS.md round 10)
-            from delta_kernel_rs_spark.functions.dv import (
-                deleted_rows_df,
-                deleted_rows_from_desc_df,
-            )
+            from delta_kernel_rs_spark.functions.dv import deleted_rows_from_desc_df
 
             # No broadcast hint: the deleted-row set is unbounded (billions
             # of rows on a heavily-deleted table) — let AQE pick the join.
-            if files is not None:
-                deleted = deleted_rows_df(spark, files, self.snapshot.table_path)
-            else:
-                desc_df = (
-                    sfdf.filter(F.col("deletion_vector").isNotNull())
-                    .select(
-                        F.col("file_path").alias("dv_file_path"),
-                        F.col("deletion_vector.storageType").alias("storage_type"),
-                        F.col("deletion_vector.pathOrInlineDv").alias(
-                            "path_or_inline"
-                        ),
-                        F.col("deletion_vector.offset").alias("offset"),
-                    )
-                    .repartition(64)
+            desc_df = (
+                sfdf.filter(F.col("deletion_vector").isNotNull())
+                .select(
+                    F.col("file_path").alias("dv_file_path"),
+                    F.col("deletion_vector.storageType").alias("storage_type"),
+                    F.col("deletion_vector.pathOrInlineDv").alias("path_or_inline"),
+                    F.col("deletion_vector.offset").alias("offset"),
                 )
-                deleted = deleted_rows_from_desc_df(
-                    desc_df, self.snapshot.table_path
-                )
+                .repartition(64)
+            )
+            deleted = deleted_rows_from_desc_df(desc_df, self.snapshot.table_path)
             df = df.join(
                 deleted,
                 (df["__file_path"] == deleted["dv_file_path"])
@@ -811,13 +858,10 @@ class Scan:
             )
 
         if pcols:
-            if files is not None:
-                const_df = file_constants_df(spark, files)
-            else:
-                const_df = sfdf.select(
-                    F.col("file_path").alias("__const_path"),
-                    F.col("partition_values").alias("__pv"),
-                )
+            const_df = sfdf.select(
+                F.col("file_path").alias("__const_path"),
+                F.col("partition_values").alias("__pv"),
+            )
             df = df.join(
                 maybe_broadcast(const_df),
                 df["__file_path"] == F.col("__const_path"),
@@ -841,20 +885,11 @@ class Scan:
             # add's defaultRowCommitVersion (reference row_tracking.rs +
             # transform_spec.rs:48-56 — materialized-column override would
             # coalesce in front of this once writes materialize it).
-            if files is not None:
-                row_consts = self.spark.createDataFrame(
-                    [
-                        (f.path, f.base_row_id, f.default_row_commit_version)
-                        for f in files
-                    ],
-                    "__rid_path STRING, __base_row_id LONG, __drcv LONG",
-                )
-            else:
-                row_consts = sfdf.select(
-                    F.col("file_path").alias("__rid_path"),
-                    F.col("base_row_id").alias("__base_row_id"),
-                    F.col("default_row_commit_version").alias("__drcv"),
-                )
+            row_consts = sfdf.select(
+                F.col("file_path").alias("__rid_path"),
+                F.col("base_row_id").alias("__base_row_id"),
+                F.col("default_row_commit_version").alias("__drcv"),
+            )
             df = df.join(
                 maybe_broadcast(row_consts),
                 df["__file_path"] == F.col("__rid_path"),

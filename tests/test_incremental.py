@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from delta_kernel_rs_spark.sources.delete import delete_with_dvs
+from delta_kernel_rs_spark.sources.incremental import scan_files_list_to_df
 from delta_kernel_rs_spark.sources.table import DeltaTable
 
 
@@ -49,8 +50,7 @@ def test_refresh_matches_full_scan_after_append_and_dv_delete(spark, table):
     assert sorted(map(as_key, refreshed)) == sorted(map(as_key, full))
 
     # And the refreshed file list reads back the right rows.
-    scan = latest.scan()
-    scan._files_cache = refreshed
+    scan = latest.scan().with_files_df(scan_files_list_to_df(spark, refreshed))
     got = {r.k for r in scan.to_df().collect()}
     assert got == {k for k in range(100) if k % 4 != 0}
 
