@@ -229,8 +229,8 @@ def table_changes(
     # The classified events frame is commit-METADATA-sized (one row per
     # file action in the range, never row-level data), immutable for a
     # fixed (table, start, end), and re-executed by every arm's constants
-    # join + DV-descriptor subtree — exactly the live-adds cache shape, so
-    # it lands in the same bounded stable-key LRU (evictees unpersisted).
+    # join + DV-descriptor subtree, so it lands in the bounded stable-key
+    # LRU of persisted frames (evictees unpersisted).
     # NOTE the r7 reverted experiment persisted the WIDE row-level change
     # frame — that one costs more to materialize than it saves and defeats
     # per-arm column pruning; this is the small planning frame instead.

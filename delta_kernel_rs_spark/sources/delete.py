@@ -134,11 +134,10 @@ def _collect_file_meta(sfdf) -> list[_FileMeta]:
 
 def _candidate_frames(scan, head=None):
     """Candidate-row frame planned from ``scan_files_df()`` — the DML twin
-    of ``Scan.to_df()``'s distributed planning (sources/scan.py:398-414):
-    the only O(files) driver state is the (path, has-DV bit) list the
-    parquet reader requires; partition constants and DV descriptors stay
-    in DataFrames joined executor-side, riding the snapshot's persisted
-    live-adds cache.
+    of ``Scan.to_df()``'s planning: the only O(files) driver state is the
+    (path, has-DV bit) list the parquet reader requires; partition
+    constants and DV descriptors stay in DataFrames joined executor-side,
+    off the snapshot's cached live-files frame.
 
     ``head``: optional ``[(path, has_dv)]`` subset from a prior phase —
     the rewrite phase passes the matched files so the second pass reads

@@ -141,8 +141,9 @@ def refresh_scan_files_df(snapshot, base_version: int, prior_df: DataFrame):
     with the ``(base, target]`` diff, entirely in-plan.
 
     ``prior_df`` is the base-version scan's ``scan_files_df()`` (or any
-    frame with that schema — typically the persisted live-adds projection,
-    so the merge costs one replay of only the NEW commits). The reference
+    frame with that schema — typically the base version's cached
+    live-files frame, so the merge costs one replay of only the NEW
+    commits). The reference
     passes prior state as columnar batches, not heap objects
     (kernel/src/scan/mod.rs:880-1024); this is the DataFrame equivalent —
     the driver never materializes either file list.

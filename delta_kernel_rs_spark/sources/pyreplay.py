@@ -76,10 +76,10 @@ def pq_read(path: str, columns: list[str] | None = None, filters=None) -> pa.Tab
     return pq.read_table(path.removeprefix("file://"), columns=columns, filters=filters)
 
 
-def _iter_actions(storage, commit_path: str, strict: bool = False):
-    """Parsed action lines of one NDJSON log file. ``strict`` raises on a
-    line that is not valid JSON — file-action replay must fail loudly on
-    a torn commit rather than silently drop an add or a remove."""
+def _iter_actions(storage, commit_path: str):
+    """Parsed action lines of one NDJSON log file. A line that is not
+    valid JSON raises: a torn commit must fail the read loudly rather
+    than silently drop an add or a remove."""
     for line in storage.read_text(commit_path).splitlines():
         line = line.strip()
         if not line:
@@ -87,9 +87,7 @@ def _iter_actions(storage, commit_path: str, strict: bool = False):
         try:
             yield json.loads(line)
         except ValueError:
-            if strict:
-                raise ValueError(f"malformed action line in {commit_path}: {line[:80]!r}")
-            continue
+            raise ValueError(f"malformed action line in {commit_path}: {line[:80]!r}") from None
 
 
 def snapshot_metadata(storage, seg) -> tuple[dict, dict]:
@@ -177,7 +175,7 @@ def replay_commit_tail(
     actions: dict[tuple[str, str], tuple[dict, int] | None] = {}
     for c in seg.commit_files:  # ascending — later commits overwrite
         version = c.version if c.end_version is None else c.end_version
-        for action in _iter_actions(storage, c.path, strict=True):
+        for action in _iter_actions(storage, c.path):
             a = action.get("add")
             if a is not None:
                 key = (_unq(a["path"]), _dv_uid_py(a.get("deletionVector")))
@@ -241,7 +239,7 @@ def _checkpoint_adds_arrow(seg, storage=None) -> pa.Table:
 
     json_parts = [p for p in seg.checkpoint_parts if p.endswith(".json")]
     if json_parts and storage is not None:
-        actions = [a for p in json_parts for a in _iter_actions(storage, p, strict=True)]
+        actions = [a for p in json_parts for a in _iter_actions(storage, p)]
         sidecars = [
             a["sidecar"]["path"]
             for a in actions
@@ -308,9 +306,10 @@ def _checkpoint_stats(add: pa.StructArray, n: int) -> pa.Array:
     if "stats_parsed" not in names or not stats.null_count:
         return stats
     parsed = _as_array(pc.struct_field(add, "stats_parsed"))
+    missing = pc.indices_nonzero(pc.is_null(stats))
     docs = stats.to_pylist()
-    for i in pc.indices_nonzero(pc.is_null(stats)).to_pylist():
-        docs[i] = _stats_json(parsed[i].as_py(), parsed.type)
+    for i, value in zip(missing.to_pylist(), parsed.take(missing).to_pylist()):
+        docs[i] = _stats_json(value, parsed.type)
     return pa.array(docs, type=pa.string())
 
 

@@ -31,7 +31,8 @@ from pyspark.sql import types as T
 
 from delta_kernel_rs_spark.functions.partition_codec import parse_partition_column
 from delta_kernel_rs_spark.functions.schema_codec import physical_name, quoted
-from delta_kernel_rs_spark.sources.actions import DELETION_VECTOR_TYPE, SCAN_ACTIONS_SCHEMA
+from delta_kernel_rs_spark.sources.actions import DELETION_VECTOR_TYPE
+from delta_kernel_rs_spark.sources.pyreplay import _unq, live_files_arrow
 
 
 #: persisted snapshot-derived frames (change-feed events, incremental
@@ -93,8 +94,6 @@ def absolute_file_paths(paths: pa.Array, table_path: str) -> pa.Array:
     """Log paths → plain absolute filesystem paths, in Arrow: the driver
     twin of :func:`resolve_add_path` (tolerant percent-decode, ``file:``
     scheme stripped, relative paths joined to the table root)."""
-    from delta_kernel_rs_spark.sources.pyreplay import _unq
-
     paths = pc.cast(paths, pa.string())
     if pc.any(pc.match_substring(paths, "%")).as_py():
         paths = pa.array([p if p is None else _unq(p) for p in paths.to_pylist()], pa.string())
@@ -420,117 +419,6 @@ class Scan:
             )
 
     # ------------------------------------------------------------------
-    # Log replay → live adds
-    # ------------------------------------------------------------------
-    def _version_map_df(self) -> DataFrame:
-        """(log filename → version) lookup, built from the driver's listing.
-
-        Compacted files carry the range end as their effective version (all
-        actions inside are already newest-wins-reconciled for the range).
-        """
-        seg = self.snapshot.log_segment
-        rows = [
-            (c.filename, c.end_version if c.end_version is not None else c.version)
-            for c in seg.commit_files
-        ]
-        return self.spark.createDataFrame(rows, "log_filename STRING, version LONG")
-
-    def cached_add_actions_df(self) -> DataFrame:
-        """Live adds with a per-(session, table, version) persisted cache.
-
-        The replay result for one snapshot is immutable, so every scan of
-        that snapshot (and every constants-join subtree inside one to_df
-        plan) can share a single persisted frame instead of re-running
-        replay per action — delta-spark's cached state-reconstruction
-        pattern. A small LRU bounds the cache; evictees are unpersisted.
-        """
-        seg = self.snapshot.log_segment
-        key = (
-            self.spark.sparkContext.applicationId,
-            self.snapshot.table_path,
-            self.snapshot.version,
-            seg.checkpoint_version,
-            len(seg.commit_files),
-        )
-        return cached_files_frame(key, self.add_actions_df)
-
-    def add_actions_df(self) -> DataFrame:
-        """Live ``add`` actions (+ commit version) after full replay."""
-        seg = self.snapshot.log_segment
-        spark = self.spark
-        commit_arm = None
-        if seg.commit_files:
-            raw = spark.read.schema(SCAN_ACTIONS_SCHEMA).option("mode", "FAILFAST").json(
-                [c.path for c in seg.commit_files]
-            )
-            commit_arm = (
-                raw.withColumn(
-                    "log_filename",
-                    F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-                )
-                .join(F.broadcast(self._version_map_df()), "log_filename")
-                .filter(F.col("add").isNotNull() | F.col("remove").isNotNull())
-                .select(
-                    # file identity is the DECODED path: a remove written
-                    # with a different percent-encoding than the add it
-                    # shadows must still match (canonical_log_path docstring)
-                    canonical_log_path(
-                        F.coalesce(F.col("add.path"), F.col("remove.path"))
-                    ).alias("key_path"),
-                    # dv_unique_id never returns NULL (missing DV → ""), so
-                    # pick the branch by which action is present.
-                    F.when(
-                        F.col("add").isNotNull(),
-                        dv_unique_id(F.col("add.deletionVector")),
-                    )
-                    .otherwise(dv_unique_id(F.col("remove.deletionVector")))
-                    .alias("key_dv"),
-                    "add",
-                    "version",
-                )
-            )
-
-        checkpoint_arm = None
-        if seg.checkpoint_parts:
-            ckpt = resolved_checkpoint_df(spark, seg)
-            if "add" in ckpt.columns:
-                checkpoint_arm = (
-                    ckpt.filter(F.col("add").isNotNull())
-                    .select(
-                        canonical_log_path(F.col("add.path")).alias("key_path"),
-                        dv_unique_id(F.col("add.deletionVector")).alias("key_dv"),
-                        "add",
-                        F.lit(seg.checkpoint_version).cast("long").alias("version"),
-                    )
-                )
-
-        if commit_arm is None and checkpoint_arm is None:
-            raise ValueError("empty log segment")
-
-        if commit_arm is not None:
-            # Newest-wins dedup: max_by(action, version) per file key; dead
-            # files (newest action is a remove) yield add IS NULL.
-            latest = (
-                commit_arm.groupBy("key_path", "key_dv")
-                .agg(F.max_by(F.struct("version", "add"), F.col("version")).alias("w"))
-                .select(
-                    "key_path",
-                    "key_dv",
-                    F.col("w.version").alias("version"),
-                    F.col("w.add").alias("add"),
-                )
-            )
-            live_commit_adds = latest.filter(F.col("add").isNotNull())
-            if checkpoint_arm is not None:
-                commit_keys = commit_arm.select("key_path", "key_dv").distinct()
-                checkpoint_live = checkpoint_arm.join(
-                    F.broadcast(commit_keys), ["key_path", "key_dv"], "left_anti"
-                )
-                return live_commit_adds.unionByName(checkpoint_live)
-            return live_commit_adds
-        return checkpoint_arm
-
-    # ------------------------------------------------------------------
     # Scan-file DataFrame with resolved absolute paths
     # ------------------------------------------------------------------
     def _live_files(self) -> tuple[pa.Table, DataFrame]:
@@ -553,8 +441,6 @@ class Scan:
         if hit is not None:
             _SCAN_FILES_CACHE.move_to_end(key)
             return hit
-        from delta_kernel_rs_spark.sources.pyreplay import live_files_arrow
-
         rows = scan_rows_arrow(
             live_files_arrow(self.snapshot.storage, seg), self.snapshot.table_path
         )

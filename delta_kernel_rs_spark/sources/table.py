@@ -1016,8 +1016,8 @@ class DeltaTable:
         previous version's CRC with this commit's actions (reference
         snapshot/incremental.rs). When the chain is broken (a streamed
         maintenance commit upstream skipped its CRC), re-seed it with a
-        full compute — one distributed agg over the live-adds frame, no
-        commit-text read. Advisory — failures are swallowed."""
+        full compute — one agg over the live-files frame, no commit-text
+        read. Advisory — failures are swallowed."""
         from delta_kernel_rs_spark.sources.crc import (
             update_crc_incremental,
             write_crc_full,

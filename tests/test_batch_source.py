@@ -96,9 +96,11 @@ def test_planning_builds_no_scanfile_objects(spark, orders, tmp_path, monkeypatc
     assert got.count() == 400
 
 
-def test_arrow_replay_matches_spark_replay(spark, orders, tmp_path):
-    """pyreplay's live-file set == the distributed replay's, including
+def test_arrow_replay_matches_dict_replay(spark, orders, tmp_path):
+    """pyreplay's live-file set == a newest-wins dict replay's, including
     checkpoint anti-join semantics after deletes."""
+    from tests.test_replay_differential import oracle_rows
+
     path = str(tmp_path / "t")
     parts = orders.limit(300).randomSplit([1.0] * 3, seed=3)
     t = DeltaTable.create(spark, path, df=parts[0])
@@ -110,8 +112,7 @@ def test_arrow_replay_matches_spark_replay(spark, orders, tmp_path):
     seg = build_log_segment(storage, path)
     files = live_files_arrow(storage, seg)
     arrow_paths = {f"{path}/{p}" for p in files.column("path").to_pylist()}
-    spark_paths = {f.path for f in t.snapshot().scan().files()}
-    assert arrow_paths == spark_paths
+    assert arrow_paths == set(oracle_rows(t.snapshot()))
 
     meta, proto = snapshot_metadata(storage, seg)
     assert meta["schemaString"] == t.snapshot().metadata.schema_string

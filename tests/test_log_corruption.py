@@ -76,3 +76,27 @@ def test_torn_commit_json_fails_loudly(spark, tmp_path):
         fh.write('{"add": {"path": "truncated-no-close\n')
     with pytest.raises(Exception):
         DeltaTable(spark, t.path).to_df().count()
+
+
+def test_torn_commit_json_fails_facade_reads(spark, tmp_path):
+    """The facade's planners parse commits without a SparkSession; a torn
+    line must fail them too, not drop the action it held (the change
+    feed used to report the commit without the torn add)."""
+    from delta_kernel_rs_spark.sources.batch_source import register_batch_source
+
+    t = DeltaTable.create(
+        spark,
+        str(tmp_path / "tbl"),
+        df=spark.range(10).select(F.col("id").alias("k")),
+        properties={"delta.enableChangeDataFeed": "true"},
+    )
+    t.append(spark.range(10, 20).select(F.col("id").alias("k")), auto_checkpoint=False)
+    log = os.path.join(t.path, "_delta_log", f"{1:020d}.json")
+    with open(log, "a") as fh:
+        fh.write('{"add": {"path": "truncated-no-close\n')
+    register_batch_source(spark)
+    reader = spark.read.format("delta_kernel").option("path", t.path)
+    with pytest.raises(Exception, match="malformed action line"):
+        reader.load().count()
+    with pytest.raises(Exception, match="malformed action line"):
+        reader.option("readChangeFeed", "true").option("startingVersion", 1).load().count()

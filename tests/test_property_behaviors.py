@@ -232,6 +232,34 @@ def test_checkpoint_write_stats_as_struct_and_json_policies(spark, tmp_path):
     total = snap.scan().scan_files_df().count()
     assert kept < total
 
+    # ... and so does the facade's: a pushed filter opens fewer footers
+    import delta_kernel_rs_spark.sources.batch_source as bs
+    from pyspark.sql import datasource as DS
+
+    reads: list[str] = []
+    real = bs.pq_read_schema_names
+
+    def counting(p):
+        reads.append(p)
+        return real(p)
+
+    def footers(push=None) -> int:
+        reads.clear()
+        r = bs.DeltaKernelBatchReader(None, {"path": t.path})
+        if push is not None:
+            r.pushFilters(push)
+        for part in r.partitions():
+            for _ in r.read(part):
+                pass
+        return len(reads)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bs, "pq_read_schema_names", counting)
+        all_files = footers()
+        pruned = footers([DS.GreaterThanOrEqual(("a",), 1000)])
+    assert all_files == total
+    assert 0 < pruned < all_files
+
 
 def test_optimize_honors_target_file_size_property(spark, tmp_path):
     t = DeltaTable.create(

@@ -138,30 +138,9 @@ def _frame_rows(df) -> dict:
     return out
 
 
-def _old_spark_rows(snap):
-    from pyspark.sql import functions as F
-
-    from delta_kernel_rs_spark.sources.scan import resolve_add_path
-
-    adds = snap.scan().add_actions_df()
-    return _frame_rows(adds.select(
-        resolve_add_path(F.col("add.path"), snap.table_path).alias("file_path"),
-        F.col("add.size").alias("size"),
-        F.col("add.modificationTime").alias("modification_time"),
-        F.col("add.stats").alias("stats"),
-        F.col("add.partitionValues").alias("partition_values"),
-        F.col("add.deletionVector").alias("deletion_vector"),
-        F.col("add.baseRowId").alias("base_row_id"),
-        F.col("add.defaultRowCommitVersion").alias("default_row_commit_version"),
-        F.col("version").alias("commit_version"),
-    ))
-
-
 def assert_same_replay(snap, ctx: str) -> None:
     got = _frame_rows(snap.scan().scan_files_df())
     assert got, f"{ctx}: no live files"
-    old = _old_spark_rows(snap)
-    assert got == old, f"{ctx}: Arrow replay != Spark replay"
     assert got == oracle_rows(snap), f"{ctx}: Arrow replay != dict replay"
 
 

@@ -233,8 +233,7 @@ def test_to_df_never_materializes_scan_files(spark, tmp_path, monkeypatch):
 def test_metadata_scale_20k_files(spark, tmp_path):
     """Metadata-scale smoke (the reference ships a 300k-add-files fixture;
     kernel/tests/data): a synthetic 20k-add log — multi-commit + partition
-    values + stats JSON, no real data files — must replay distributed,
-    checkpoint, serve stats-pruned planning through scan_files_df, and
+    values + stats JSON, no real data files — must replay, checkpoint, serve stats-pruned planning through scan_files_df, and
     to_df planning must stay path-strings-only on the driver."""
     import json
     import os
@@ -300,7 +299,7 @@ def test_metadata_scale_20k_files(spark, tmp_path):
     snap2 = t.snapshot()
     assert snap2.scan().scan_files_df().count() == n_files
     # replay + both plans + checkpoint well under a minute on metadata
-    # alone — the distributed-shape guard, not a microbenchmark
+    # alone — a scale guard, not a microbenchmark
     assert replay_s < 60, replay_s
 
 
