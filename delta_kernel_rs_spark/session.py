@@ -20,10 +20,10 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Let AQE coalesce CACHED plan materialization too (off by default).
-    # The engine persists metadata-sized frames (live adds, incremental
-    # merges — sources/scan.py LRU); without this every persisted frame
-    # materializes at the static shuffle-partition count and every
-    # downstream mini-job (head collects, broadcast builds, constants
+    # The engine persists metadata-sized frames (change-feed events,
+    # incremental merges — sources/scan.py LRU); without this every
+    # persisted frame materializes at the static shuffle-partition count
+    # and every downstream mini-job (head collects, broadcast builds, constants
     # joins) pays one task per mostly-empty partition. At 100 TB the
     # same applies: file-list frames are KBs-per-partition at any static
     # count. Measured r12: d13 1.73→0.90 s, d05 1.06→0.73 s at sf0.1.
