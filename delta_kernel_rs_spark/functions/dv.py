@@ -21,6 +21,10 @@ from __future__ import annotations
 import struct
 import uuid as _uuid
 import zlib
+from typing import Iterator
+
+# module-level: arrow_udf resolves live_row_filter's type hints from these
+import pyarrow as pa
 
 DV_MAGIC = 1681511377
 SERIAL_COOKIE = 12347
@@ -242,18 +246,87 @@ def extract_dv_blob(blob: bytes, offset: int | None) -> bytes:
     return data
 
 
+def _dv_bitmap(table_path: str, dv: dict, read_file) -> bytes:
+    """One descriptor's serialized bitmap; ``read_file(path) -> bytes``
+    fetches a DV file (the per-blob CRC32 is verified)."""
+    if dv.get("storageType") == "i":
+        return z85_decode(dv["pathOrInlineDv"])
+    blob = read_file(dv_absolute_path(table_path, dv))
+    off = dv.get("offset")
+    # Arrow→pandas turns a null int64 offset into NaN — normalize.
+    return extract_dv_blob(blob, None if off is None or off != off else int(off))
+
+
 def read_dv_row_indexes(storage, table_path: str, dv: dict) -> list[int]:
     """Materialize a DV descriptor into deleted row indexes.
 
     All I/O goes through the table's storage handler, so non-local tables
     (HadoopStorage) work; the per-blob CRC32 is verified.
     """
-    st = dv.get("storageType")
-    if st == "i":
-        return decode_treemap(z85_decode(dv["pathOrInlineDv"]))
-    path = dv_absolute_path(table_path, dv)
-    blob = storage.read_bytes(path)
-    return decode_treemap(extract_dv_blob(blob, dv.get("offset")))
+    return decode_treemap(_dv_bitmap(table_path, dv, storage.read_bytes))
+
+
+def deleted_row_indexes(table_path: str, dv: dict, blob_cache: dict):
+    """A DV descriptor → int64 numpy array of its deleted row indexes.
+    Executor-safe: DV files open through ``pyarrow.fs``
+    (file/hdfs/s3 URIs); ``blob_cache`` (path → bytes, kept by the caller
+    for one task) reads a DV file shared by many descriptors once."""
+    import numpy as np
+
+    from delta_kernel_rs_spark.sources.delta_paths import arrow_fs_and_path
+
+    def read_file(path: str) -> bytes:
+        blob = blob_cache.get(path)
+        if blob is None:
+            fs, rel = arrow_fs_and_path(path)
+            with fs.open_input_stream(rel) as fh:
+                blob = blob_cache[path] = fh.read()
+        return blob
+
+    return np.asarray(
+        decode_treemap(_dv_bitmap(table_path, dv, read_file)), dtype=np.int64
+    )
+
+
+def live_row_filter(descriptors: dict[str, dict], table_path: str):
+    """Boolean Arrow UDF over (file path, physical row index): False for a
+    row its file's deletion vector hides.
+
+    ``descriptors`` maps each DV-carrying file's plain absolute path to its
+    descriptor. It is O(DV files) and travels in the UDF closure (Spark
+    broadcasts a large one); the bitmaps decode only inside the executor
+    task, once per file per task — the reference's per-file selection
+    vector (kernel/src/scan/mod.rs:858-864, :1330-1406) with no shuffle.
+    Spark's ``_metadata.row_index`` is the physical position even after
+    row-group pruning, so pushed-down predicates stay correct below it.
+    """
+    from pyspark.sql.functions import arrow_udf
+
+    def keep(batches: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
+        import numpy as np
+        import pyarrow.compute as pc
+
+        # imported here: the worker must resolve the module, not the closure
+        from delta_kernel_rs_spark.functions.dv import deleted_row_indexes
+
+        blob_cache: dict[str, bytes] = {}
+        last_path, deleted = None, None
+        for paths, rows in batches:
+            codes = pc.dictionary_encode(paths)
+            ids = codes.indices.to_numpy(zero_copy_only=False)
+            ri = rows.to_numpy(zero_copy_only=False)
+            out = np.empty(len(ri), dtype=bool)
+            for code, path in enumerate(codes.dictionary.to_pylist()):
+                if path != last_path:  # a task reads its files one by one
+                    deleted = deleted_row_indexes(
+                        table_path, descriptors[path], blob_cache
+                    )
+                    last_path = path
+                sel = ids == code
+                out[sel] = ~np.isin(ri[sel], deleted)
+            yield pa.array(out)
+
+    return arrow_udf(keep, "boolean")
 
 
 def write_dv_file(storage, table_path: str, dv_blobs: list[bytes]) -> tuple[str, list[tuple[int, int]]]:
@@ -314,34 +387,20 @@ def dv_diff_from_df(desc_df, table_path: str):
     hundreds of millions of indexes per file on a 100 TB table) are only
     ever materialized inside executor workers — the driver never sees a
     row index (reference resolves DV sibling pairs the same way,
-    table_changes/resolve_dvs.rs; scan twin: deleted_rows_from_desc_df).
+    table_changes/resolve_dvs.rs; scan twin: live_row_filter).
     """
-    from collections.abc import Iterator
-
     import pandas as pd
 
     def diff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from delta_kernel_rs_spark.sources.delta_paths import arrow_fs_and_path
+        from delta_kernel_rs_spark.functions.dv import deleted_row_indexes
 
         blob_cache: dict[str, bytes] = {}
 
         def indexes(st, p_or_inline, off) -> set[int]:
             if st is None or (isinstance(st, float) and pd.isna(st)):
                 return set()
-            if st == "i":
-                return set(decode_treemap(z85_decode(p_or_inline)))
-            # Arrow→pandas turns a null int64 offset into NaN — normalize.
-            off = None if (off is None or pd.isna(off)) else int(off)
-            abs_path = dv_absolute_path(
-                table_path, {"storageType": st, "pathOrInlineDv": p_or_inline}
-            )
-            blob = blob_cache.get(abs_path)
-            if blob is None:
-                fs, rel = arrow_fs_and_path(abs_path)
-                with fs.open_input_stream(rel) as fh:
-                    blob = fh.read()
-                blob_cache[abs_path] = blob
-            return set(decode_treemap(extract_dv_blob(blob, off)))
+            dv = {"storageType": st, "pathOrInlineDv": p_or_inline, "offset": off}
+            return set(deleted_row_indexes(table_path, dv, blob_cache).tolist())
 
         for pdf in batches:
             for r in pdf.itertuples(index=False):
@@ -371,57 +430,6 @@ def dv_diff_from_df(desc_df, table_path: str):
     )
 
 
-def deleted_rows_from_desc_df(desc_df, table_path: str):
-    """(file_path, row_index) DataFrame of all deleted rows.
-
-    ``desc_df`` columns: dv_file_path, storage_type, path_or_inline,
-    offset — one row per DV-carrying file. The descriptors are tiny and
-    parallelize to executors; each executor resolves the DV blob path
-    itself, opens the spans via pyarrow.fs (file/hdfs/s3 URIs) and
-    explodes them to row indexes there — the driver never materializes
-    the deleted-row set (reference applies a per-file selection vector
-    at kernel/src/scan/mod.rs:1330-1406; a heavily-deleted 100 TB table
-    can hold billions of deleted rows, so the explode must be
-    distributed).
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from delta_kernel_rs_spark.sources.delta_paths import arrow_fs_and_path
-
-        blob_cache: dict[str, bytes] = {}
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                if r.storage_type == "i":
-                    data = z85_decode(r.path_or_inline)
-                else:
-                    dv_path = dv_absolute_path(
-                        table_path,
-                        {"storageType": r.storage_type, "pathOrInlineDv": r.path_or_inline},
-                    )
-                    blob = blob_cache.get(dv_path)
-                    if blob is None:
-                        fs, rel = arrow_fs_and_path(dv_path)
-                        with fs.open_input_stream(rel) as fh:
-                            blob = fh.read()
-                        blob_cache[dv_path] = blob
-                    off = None if (r.offset is None or pd.isna(r.offset)) else int(r.offset)
-                    data = extract_dv_blob(blob, off)
-                idx = decode_treemap(data)
-                for start in range(0, len(idx), 1 << 20):
-                    chunk = idx[start : start + (1 << 20)]
-                    yield pd.DataFrame(
-                        {
-                            "dv_file_path": [r.dv_file_path] * len(chunk),
-                            "dv_row_index": pd.Series(chunk, dtype="int64"),
-                        }
-                    )
-
-    return desc_df.mapInPandas(explode, "dv_file_path STRING, dv_row_index LONG")
-
-
 def dv_blobs_from_hits_df(hits_df, table_path: str):
     """Executor-side DV bitmap construction: one serialized roaring
     treemap per file.
@@ -439,25 +447,18 @@ def dv_blobs_from_hits_df(hits_df, table_path: str):
     import pandas as pd
 
     def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        from delta_kernel_rs_spark.sources.delta_paths import arrow_fs_and_path
+        from delta_kernel_rs_spark.functions.dv import deleted_row_indexes
 
         path = pdf["__file_path"].iloc[0]
         idx = {int(i) for i in pdf["__row_index"]}
         st = pdf["old_st"].iloc[0]
         if st is not None and not (isinstance(st, float) and pd.isna(st)):
-            if st == "i":
-                idx.update(decode_treemap(z85_decode(pdf["old_p"].iloc[0])))
-            else:
-                abs_path = dv_absolute_path(
-                    table_path,
-                    {"storageType": st, "pathOrInlineDv": pdf["old_p"].iloc[0]},
-                )
-                fs, rel = arrow_fs_and_path(abs_path)
-                with fs.open_input_stream(rel) as fh:
-                    blob = fh.read()
-                off = pdf["old_off"].iloc[0]
-                off = None if (off is None or pd.isna(off)) else int(off)
-                idx.update(decode_treemap(extract_dv_blob(blob, off)))
+            dv = {
+                "storageType": st,
+                "pathOrInlineDv": pdf["old_p"].iloc[0],
+                "offset": pdf["old_off"].iloc[0],
+            }
+            idx.update(deleted_row_indexes(table_path, dv, {}).tolist())
         data = encode_treemap(sorted(idx))
         return pd.DataFrame(
             {"file_path": [path], "blob": [data], "cardinality": [len(idx)]}

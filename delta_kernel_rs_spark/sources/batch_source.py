@@ -419,17 +419,17 @@ class _FileSliceReadMixin:
         return out
 
     def _read_slice(self, partition: "_FileSliceTask") -> Iterator[Any]:
+        import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_type
 
-        from delta_kernel_rs_spark.functions.dv import read_dv_row_indexes
+        from delta_kernel_rs_spark.functions.dv import deleted_row_indexes
         from delta_kernel_rs_spark.streaming.cdf_source import _parse_pv_py
 
         files = ipc_deserialize(partition.ipc)
         if files.num_rows == 0:
             return
-        storage = storage_for_uri(self._path)
+        blob_cache: dict[str, bytes] = {}
         pset = set(self._pcols)
         phys_cols = [
             physical_name(f) for f in self._output_fields if f.name not in pset
@@ -498,11 +498,9 @@ class _FileSliceReadMixin:
             else:
                 table = pq_read(abs_path, columns=read_cols, filters=row_filter)
             if has_dv:
-                rows = read_dv_row_indexes(storage, self._path, dv)
-                mask_idx = pa.array(rows, type=pa.int64())
-                indices = pa.array(range(table.num_rows), type=pa.int64())
-                keep = pc.invert(pc.is_in(indices, value_set=mask_idx))
-                table = table.filter(keep)
+                deleted = deleted_row_indexes(self._path, dv, blob_cache)
+                positions = np.arange(table.num_rows, dtype=np.int64)
+                table = table.filter(pa.array(~np.isin(positions, deleted)))
                 if row_filter is not None:
                     # DV selection is by physical row index, so it must be
                     # applied before any row filtering shifts positions

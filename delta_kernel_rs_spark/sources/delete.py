@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from delta_kernel_rs_spark.functions.dv import write_dv_file
 from delta_kernel_rs_spark.plans.expressions import Predicate
-from delta_kernel_rs_spark.sources.scan import normalize_file_path
+from delta_kernel_rs_spark.sources.scan import live_file_head
 from delta_kernel_rs_spark.sources.transaction import _now_ms, begin
 
 def _dv_protocol_upgrade(snapshot) -> dict | None:
@@ -133,105 +133,34 @@ def _collect_file_meta(sfdf) -> list[_FileMeta]:
 
 
 def _candidate_frames(scan, head=None):
-    """Candidate-row frame planned from ``scan_files_df()`` — the DML twin
-    of ``Scan.to_df()``'s planning: the only O(files) driver state is the
-    (path, has-DV bit) list the parquet reader requires; partition
-    constants and DV descriptors stay in DataFrames joined executor-side,
-    off the snapshot's cached live-files frame.
+    """Candidate-row frame: ``Scan.live_rows`` over ``scan_files_df()``,
+    the same live-row read ``Scan.to_df()`` uses — the only O(files)
+    driver state is the ``live_file_head`` list the parquet reader
+    requires; partition constants stay in a frame joined executor-side.
 
-    ``head``: optional ``[(path, has_dv)]`` subset from a prior phase —
-    the rewrite phase passes the matched files so the second pass reads
-    ONLY them (a filter on the derived ``__file_path`` column could not
-    prune files; Catalyst doesn't push ``_metadata``-derived predicates).
+    ``head``: optional ``live_file_head`` subset from a prior phase — the
+    rewrite phase passes the matched files so the second pass reads ONLY
+    them (a filter on the derived ``__file_path`` column could not prune
+    files; Catalyst doesn't push ``_metadata``-derived predicates).
 
-    Rows already hidden by a file's deletion vector are excluded up front:
-    a rewrite or DV update must never resurrect them (reference keys replay
-    by FileActionKey(path, dv_unique_id) — log_replay/mod.rs:32 — so the
-    live rows are always "file minus current DV").
+    Rows already hidden by a file's deletion vector are excluded up front
+    (the per-file DV filter on executors): a rewrite or DV update must
+    never resurrect them (reference keys replay by FileActionKey(path,
+    dv_unique_id) — log_replay/mod.rs:32 — so the live rows are always
+    "file minus current DV").
 
     Returns ``(df, head, sfdf)``: ``df`` exposes the logical columns plus
     ``__file_path``/``__row_index``; ``sfdf`` is the (lazy) file-metadata
     frame narrowed to the same files, for bounded metadata collects.
     """
-    snapshot = scan.snapshot
-    spark = snapshot.spark
     sfdf = _scan_meta_df(scan)
     if head is None:
-        head = [
-            (r.file_path, r.has_dv)
-            for r in sfdf.select(
-                "file_path", F.col("deletion_vector").isNotNull().alias("has_dv")
-            ).collect()
-        ]
+        head = live_file_head(sfdf)
     else:
-        sfdf = _narrow(sfdf, spark, [p for p, _ in head])
+        sfdf = _narrow(sfdf, scan.spark, [p for p, _ in head])
     if not head:
         return None, head, sfdf
-    if scan._needs_widening_read():
-        # typeWidening tables: pre-widen files keep narrow physical types
-        # — reuse the scan's per-schema-epoch read (scan.py)
-        df = scan._read_with_widening(
-            spark, [p for p, _ in head], scan._physical_read_schema()
-        )
-    else:
-        df = spark.read.schema(scan._physical_read_schema()).parquet(
-            *[p for p, _ in head]
-        )
-    df = df.withColumn("__file_path", normalize_file_path(F.col("_metadata.file_path")))
-    df = df.withColumn("__row_index", F.col("_metadata.row_index"))
-    if any(has_dv for _, has_dv in head):
-        from delta_kernel_rs_spark.functions.dv import deleted_rows_from_desc_df
-
-        desc = (
-            sfdf.filter(F.col("deletion_vector").isNotNull())
-            .select(
-                F.col("file_path").alias("dv_file_path"),
-                F.col("deletion_vector.storageType").alias("storage_type"),
-                F.col("deletion_vector.pathOrInlineDv").alias("path_or_inline"),
-                F.col("deletion_vector.offset").alias("offset"),
-            )
-            .repartition(64)
-        )
-        deleted = deleted_rows_from_desc_df(desc, snapshot.table_path)
-        df = df.join(
-            deleted,
-            (df["__file_path"] == deleted["dv_file_path"])
-            & (df["__row_index"] == deleted["dv_row_index"]),
-            "left_anti",
-        )
-    from delta_kernel_rs_spark.functions.schema_codec import physical_name as _pn
-    from delta_kernel_rs_spark.functions.schema_codec import quoted as _q
-
-    pcols = snapshot.metadata.partition_columns
-    if pcols:
-        from delta_kernel_rs_spark.functions.partition_codec import parse_partition_column
-
-        const_df = sfdf.select(
-            F.col("file_path").alias("__const_path"),
-            F.col("partition_values").alias("__pv"),
-        )
-        if len(head) <= 100_000:
-            const_df = F.broadcast(const_df)
-        df = df.join(const_df, df["__file_path"] == F.col("__const_path"), "left")
-        fields = {f.name: f for f in snapshot.schema.fields}
-        for p in pcols:
-            df = df.withColumn(
-                p,
-                parse_partition_column(
-                    F.col("__pv").getItem(_pn(fields[p])), fields[p].dataType
-                ),
-            )
-        df = df.drop("__const_path", "__pv")
-    # Present logical column names to the predicate/caller (data columns
-    # were read under their physical parquet names).
-    proj = [
-        F.col(_q(_pn(f))).cast(f.dataType).alias(f.name)
-        if f.name not in set(pcols)
-        else F.col(_q(f.name))
-        for f in snapshot.schema.fields
-    ]
-    df = df.select(*proj, "__file_path", "__row_index")
-    return df, head, sfdf
+    return scan.live_rows(head, sfdf, file_cols=True), head, sfdf
 
 
 def delete_where(table, predicate) -> int:

@@ -26,6 +26,7 @@ from delta_kernel_rs_spark.sources.delete import (
     _rel_path,
     _scan_meta_df,
 )
+from delta_kernel_rs_spark.sources.scan import live_file_head
 from delta_kernel_rs_spark.sources.transaction import _now_ms, begin
 
 DEFAULT_TARGET_FILE_SIZE = 256 << 20
@@ -110,20 +111,15 @@ def _rewrite_files(
     """Rewrite the files selected by ``sel_sfdf`` (a scan-files-shaped
     frame) into ~target-sized files; dataChange=false.
 
-    Planning is distributed: the driver collects only (path, has-DV bit)
-    pairs for the read plus one size aggregate; the removes STREAM from
+    Planning is distributed: the driver collects only (path, DV
+    descriptor) pairs for the read plus one size aggregate; the removes STREAM from
     the selection frame into bounded NDJSON commit chunks — never an
     O(selected files) driver action list (a full-table ZORDER selects
     every file)."""
     from pyspark.sql import functions as F
 
     scan = snap.scan()
-    head = [
-        (r.file_path, r.has_dv)
-        for r in sel_sfdf.select(
-            "file_path", F.col("deletion_vector").isNotNull().alias("has_dv")
-        ).collect()
-    ]
+    head = live_file_head(sel_sfdf)
     if not head:
         return snap.version
     df, _, _ = _candidate_frames(scan, head=head)

@@ -8,8 +8,10 @@ files on the driver (~10 ms for a few hundred files), and
 reference's scan-row shape (kernel/src/scan/mod.rs:1410-1440). Spark
 plans a local relation on the driver, so data skipping, the projections
 and the path collect in ``to_df`` run as zero Spark jobs; the frame joins
-executor-side only where file constants (partition values, DV
-descriptors, row-id constants) meet the data rows.
+executor-side only where file constants (partition values, row-id
+constants) meet the data rows. Deletion vectors apply as a per-file keep
+filter on the executors (``Scan.live_rows``, the read the DML paths
+share).
 
 One Arrow table and its frame are kept per (session, table, version) in
 a small driver LRU; nothing is persisted. The Column helpers below
@@ -374,6 +376,24 @@ def _conform_checkpoint_file_actions(ckpt: DataFrame, add_type, remove_type) -> 
     return ckpt
 
 
+def live_file_head(sfdf: DataFrame) -> list[tuple[str, dict | None]]:
+    """``(file_path, DV descriptor or None)`` per file of a scan-files
+    frame — the one O(files) driver collect a parquet read needs. Over the
+    local relation this runs on the driver as zero Spark jobs; descriptors
+    are shipped to the DV filter undecoded."""
+    rows = sfdf.select(
+        "file_path",
+        F.col("deletion_vector.storageType").alias("st"),
+        F.col("deletion_vector.pathOrInlineDv").alias("dv"),
+        F.col("deletion_vector.offset").alias("off"),
+    ).collect()
+    return [
+        (r.file_path, None if r.st is None else
+         {"storageType": r.st, "pathOrInlineDv": r.dv, "offset": r.off})
+        for r in rows
+    ]
+
+
 @dataclass
 class ScanFile:
     """One live data file (driver-side handle)."""
@@ -560,7 +580,7 @@ class Scan:
 
         ``persist`` (default) spills the frame into the same bounded LRU
         the live-adds cache uses: ``to_df()`` executes the scan-files
-        subtree several times (head collect, DV descriptors, constants),
+        subtree several times (head collect, constants),
         and unlike the default path's local relation this frame is
         computed by Spark — measured 2.4→2.0 s on the d03 incr arm at sf0.1.
         A frame that is ALREADY persisted (e.g. the stable-key cached
@@ -666,93 +686,64 @@ class Scan:
             )
         return T.StructType(fields)
 
-    def to_df(self) -> DataFrame:
-        """The scan result as a lazy logical DataFrame.
+    def live_rows(self, head, sfdf: DataFrame, file_cols: bool = False) -> DataFrame:
+        """The live rows of the files in ``head``, in logical columns.
 
-        The parquet reader needs the kept path list, collected from
-        :meth:`scan_files_df` (plus one has-DV bit per file); file
-        constants, DV descriptors and row-id constants are joined from
-        the same frame executor-side. A ``with_files_df`` override plans
-        off the supplied frame.
+        ``head`` is :func:`live_file_head` output (or a subset of it);
+        ``sfdf`` is the scan-files frame the per-file constants (partition
+        values, row-id constants) join from. DV-free files go through the
+        plain parquet reader; DV-carrying files through a second read of
+        only those files, filtered by :func:`live_row_filter` on (file,
+        physical row index) — the bitmaps decode on executors, the driver
+        ships descriptors only. ``file_cols`` keeps ``__file_path`` and
+        ``__row_index`` (the DML candidate read needs them).
         """
+        from functools import reduce
+
+        from delta_kernel_rs_spark.functions.dv import live_row_filter
+
         spark = self.spark
         schema = self.snapshot.schema
-        meta = self.snapshot.metadata
-        pcols = meta.partition_columns
-
-        # One collect of (path, has_dv) pairs only; over the local
-        # relation the skipping filter and this collect run on the driver.
-        sfdf = self.scan_files_df().drop("stats", "modification_time")
-        head = sfdf.select(
-            "file_path", F.col("deletion_vector").isNotNull().alias("has_dv")
-        ).collect()
-        paths = [r.file_path for r in head]
-        needs_dv = any(r.has_dv for r in head)
-
-        if not paths:
-            out_fields = [f for f in schema.fields if self.columns is None or f.name in self.columns]
-            if self.with_row_ids:
-                out_fields = list(out_fields) + [
-                    T.StructField("row_id", T.LongType(), True),
-                    T.StructField("row_commit_version", T.LongType(), True),
-                ]
-            return spark.createDataFrame([], T.StructType(out_fields))
-
-        # broadcast per-file constants only when the file count is known
-        # small; beyond that let AQE pick the join strategy
-        def maybe_broadcast(frame: DataFrame) -> DataFrame:
-            return F.broadcast(frame) if len(paths) <= 100_000 else frame
-
+        pcols = self.snapshot.metadata.partition_columns
+        need_path = bool(pcols) or self.with_row_ids or file_cols
+        need_index = self.with_row_ids or file_cols
         phys_schema = self._physical_read_schema()
-        if self._needs_widening_read():
-            df = self._read_with_widening(spark, paths, phys_schema)
-        else:
-            df = spark.read.schema(phys_schema).parquet(*paths)
 
-        if pcols or needs_dv or self.with_row_ids:
-            df = df.withColumn(
-                "__file_path", normalize_file_path(F.col("_metadata.file_path"))
-            )
-        if needs_dv or self.with_row_ids:
-            df = df.withColumn("__row_index", F.col("_metadata.row_index"))
-        if needs_dv:
-            # row ids need __row_index only; the deleted-rows anti-join
-            # (shuffle + an Arrow Python crossing to decode descriptors)
-            # exists solely to drop DV-hidden rows — a DV-free snapshot
-            # must not pay it (measured 1.4 s -> 0.6 s on the d07 lineage
-            # arm's base-snapshot read, PLANS.md round 10)
-            from delta_kernel_rs_spark.functions.dv import deleted_rows_from_desc_df
+        def read(paths: list[str]) -> DataFrame:
+            if self._needs_widening_read():
+                return self._read_with_widening(spark, paths, phys_schema)
+            return spark.read.schema(phys_schema).parquet(*paths)
 
-            # No broadcast hint: the deleted-row set is unbounded (billions
-            # of rows on a heavily-deleted table) — let AQE pick the join.
-            desc_df = (
-                sfdf.filter(F.col("deletion_vector").isNotNull())
-                .select(
-                    F.col("file_path").alias("dv_file_path"),
-                    F.col("deletion_vector.storageType").alias("storage_type"),
-                    F.col("deletion_vector.pathOrInlineDv").alias("path_or_inline"),
-                    F.col("deletion_vector.offset").alias("offset"),
-                )
-                .repartition(64)
-            )
-            deleted = deleted_rows_from_desc_df(desc_df, self.snapshot.table_path)
-            df = df.join(
-                deleted,
-                (df["__file_path"] == deleted["dv_file_path"])
-                & (df["__row_index"] == deleted["dv_row_index"]),
-                "left_anti",
-            )
+        file_path = normalize_file_path(F.col("_metadata.file_path"))
+        row_index = F.col("_metadata.row_index")
+        clean = [p for p, dv in head if dv is None]
+        dvs = {p: dv for p, dv in head if dv is not None}
+        arms = [read(clean)] if clean else []
+        if dvs:
+            keep = live_row_filter(dvs, self.snapshot.table_path)
+            arms.append(read(sorted(dvs)).filter(keep(file_path, row_index)))
+        if need_path:
+            arms = [arm.withColumn("__file_path", file_path) for arm in arms]
+        if need_index:
+            arms = [arm.withColumn("__row_index", row_index) for arm in arms]
+        df = reduce(DataFrame.unionByName, arms)
 
+        consts = {}
         if pcols:
+            consts["partition_values"] = "__pv"
+        if self.with_row_ids:
+            consts["base_row_id"] = "__base_row_id"
+            consts["default_row_commit_version"] = "__drcv"
+        if consts:
             const_df = sfdf.select(
                 F.col("file_path").alias("__const_path"),
-                F.col("partition_values").alias("__pv"),
+                *[F.col(c).alias(a) for c, a in consts.items()],
             )
-            df = df.join(
-                maybe_broadcast(const_df),
-                df["__file_path"] == F.col("__const_path"),
-                "left",
-            )
+            # broadcast per-file constants only when the file count is known
+            # small; beyond that let AQE pick the join strategy
+            if len(head) <= 100_000:
+                const_df = F.broadcast(const_df)
+            df = df.join(const_df, df["__file_path"] == F.col("__const_path"), "left")
 
         # Final projection in logical column order: physical→logical rename,
         # partition-value parse, type normalization (widening casts).
@@ -771,22 +762,35 @@ class Scan:
             # add's defaultRowCommitVersion (reference row_tracking.rs +
             # transform_spec.rs:48-56 — materialized-column override would
             # coalesce in front of this once writes materialize it).
-            row_consts = sfdf.select(
-                F.col("file_path").alias("__rid_path"),
-                F.col("base_row_id").alias("__base_row_id"),
-                F.col("default_row_commit_version").alias("__drcv"),
-            )
-            df = df.join(
-                maybe_broadcast(row_consts),
-                df["__file_path"] == F.col("__rid_path"),
-                "left",
-            )
             out_cols.append(
                 (F.col("__base_row_id") + F.col("__row_index")).alias("row_id")
             )
             out_cols.append(F.col("__drcv").alias("row_commit_version"))
-        df = df.select(*out_cols)
+        if file_cols:
+            out_cols += [F.col("__file_path"), F.col("__row_index")]
+        return df.select(*out_cols)
 
+    def to_df(self) -> DataFrame:
+        """The scan result as a lazy logical DataFrame.
+
+        The parquet reader needs the kept path list, collected from
+        :meth:`scan_files_df` with each file's DV descriptor; see
+        :meth:`live_rows`. A ``with_files_df`` override plans off the
+        supplied frame.
+        """
+        sfdf = self.scan_files_df().drop("stats", "modification_time")
+        head = live_file_head(sfdf)
+        if not head:
+            schema = self.snapshot.schema
+            out_fields = [f for f in schema.fields if self.columns is None or f.name in self.columns]
+            if self.with_row_ids:
+                out_fields = list(out_fields) + [
+                    T.StructField("row_id", T.LongType(), True),
+                    T.StructField("row_commit_version", T.LongType(), True),
+                ]
+            return self.spark.createDataFrame([], T.StructType(out_fields))
+
+        df = self.live_rows(head, sfdf)
         if self.predicate is not None:
             pred = self.predicate
             from delta_kernel_rs_spark.plans.expressions import Predicate

@@ -442,3 +442,64 @@ def test_incremental_refresh_never_materializes_scan_files(
         (r.file_path, str(r.deletion_vector)) for r in df.collect()
     }
     assert key(refreshed_df) == key(full)
+
+
+def _plan_nodes(plan: str):
+    """(node line, ancestor lines) per node of a physical-plan tree string."""
+    stack: list[tuple[int, str]] = []
+    for line in plan.splitlines():
+        body = line.lstrip(" :|+-")
+        if not body:
+            continue
+        depth = len(line) - len(body)
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        yield body, [b for _, b in stack]
+        stack.append((depth, body))
+
+
+def test_dv_scan_is_a_per_file_filter_not_a_join(spark, tmp_path):
+    """A scan through deletion vectors applies each file's bitmap as a
+    per-file keep filter on the executors: no anti-join, no exploded
+    deleted-row frame, and the DV-free files read with no Python UDF
+    above their parquet scan."""
+    from delta_kernel_rs_spark.sources.delete import delete_with_dvs
+
+    path = str(tmp_path / "tbl")
+    ranged = spark.range(0, 4000, 1, 4).select(F.col("id").alias("k"))
+    t = DeltaTable.create(spark, path, df=ranged)
+    delete_with_dvs(t, "k < 1000 AND k % 3 = 0")  # one of the four files
+    files = t.snapshot().scan().files()
+    assert sum(1 for f in files if f.dv) == 1 and len(files) == 4
+
+    df = t.to_df()
+    assert sorted(r.k for r in df.collect()) == [
+        k for k in range(4000) if not (k < 1000 and k % 3 == 0)
+    ]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "LeftAnti" not in plan and "MapInPandas" not in plan
+    scans = [above for node, above in _plan_nodes(plan) if node.startswith("FileScan parquet")]
+    assert len(scans) == 2
+    with_udf = [any(a.startswith("ArrowEvalPython") for a in above) for above in scans]
+    assert sorted(with_udf) == [False, True]
+
+
+def test_dv_scan_never_decodes_dvs_on_driver(spark, tmp_path, monkeypatch):
+    """A scan through a large DV ships descriptors only: with the decoders
+    forbidden on the driver, the scan still returns the right rows."""
+    from delta_kernel_rs_spark.functions import dv as dv_mod
+    from delta_kernel_rs_spark.sources.delete import delete_with_dvs
+
+    path = str(tmp_path / "tbl")
+    n = 1_000_000
+    t = DeltaTable.create(spark, path, df=_ints(spark, 0, n).coalesce(4))
+    delete_with_dvs(t, "k % 2 = 0")  # 500k deleted rows across the files
+
+    def forbid(*args, **kwargs):
+        raise AssertionError("DV decoded on the driver during a scan")
+
+    monkeypatch.setattr(dv_mod, "read_dv_row_indexes", forbid)
+    monkeypatch.setattr(dv_mod, "decode_treemap", forbid)
+    assert t.to_df().count() == n // 2
+    assert t.to_df(predicate="k >= 1000 AND k < 3000").count() == 1000
