@@ -18,6 +18,7 @@ u32 LE high-key followed by a standard 32-bit roaring serialization.
 
 from __future__ import annotations
 
+import re
 import struct
 import uuid as _uuid
 import zlib
@@ -288,17 +289,30 @@ def deleted_row_indexes(table_path: str, dv: dict, blob_cache: dict):
     )
 
 
+def plain_file_path(uri: str) -> str:
+    """Spark's percent-encoded ``_metadata.file_path`` URI → the plain
+    absolute path the log resolves to: the per-value twin of
+    ``scan.normalize_file_path``."""
+    from delta_kernel_rs_spark.sources.pyreplay import _unq
+
+    return re.sub(r"^file:/+", "/", _unq(uri))
+
+
 def live_row_filter(descriptors: dict[str, dict], table_path: str):
-    """Boolean Arrow UDF over (file path, physical row index): False for a
-    row its file's deletion vector hides.
+    """Boolean Arrow UDF over (``_metadata.file_path``, physical row
+    index): False for a row its file's deletion vector hides.
 
     ``descriptors`` maps each DV-carrying file's plain absolute path to its
     descriptor. It is O(DV files) and travels in the UDF closure (Spark
     broadcasts a large one); the bitmaps decode only inside the executor
     task, once per file per task — the reference's per-file selection
     vector (kernel/src/scan/mod.rs:858-864, :1330-1406) with no shuffle.
-    Spark's ``_metadata.row_index`` is the physical position even after
-    row-group pruning, so pushed-down predicates stay correct below it.
+    The UDF takes Spark's raw URI and decodes each distinct path of a batch
+    itself: a decoded column passed in would be inlined by Catalyst's
+    filter pushdown and evaluated per row a second time wherever the scan
+    also keeps the path. Spark's ``_metadata.row_index`` is the physical
+    position even after row-group pruning, so pushed-down predicates stay
+    correct below it.
     """
     from pyspark.sql.functions import arrow_udf
 
@@ -307,7 +321,10 @@ def live_row_filter(descriptors: dict[str, dict], table_path: str):
         import pyarrow.compute as pc
 
         # imported here: the worker must resolve the module, not the closure
-        from delta_kernel_rs_spark.functions.dv import deleted_row_indexes
+        from delta_kernel_rs_spark.functions.dv import (
+            deleted_row_indexes,
+            plain_file_path,
+        )
 
         blob_cache: dict[str, bytes] = {}
         last_path, deleted = None, None
@@ -319,7 +336,7 @@ def live_row_filter(descriptors: dict[str, dict], table_path: str):
             for code, path in enumerate(codes.dictionary.to_pylist()):
                 if path != last_path:  # a task reads its files one by one
                     deleted = deleted_row_indexes(
-                        table_path, descriptors[path], blob_cache
+                        table_path, descriptors[plain_file_path(path)], blob_cache
                     )
                     last_path = path
                 sel = ids == code

@@ -119,9 +119,9 @@ def collect_file_stats(
     "max": {...}, "nullCount": {...}}}`` with raw (untruncated) values —
     truncation happens at JSON-serialization time.
     """
-    from delta_kernel_rs_spark.sources.scan import normalize_file_path
+    from delta_kernel_rs_spark.sources.scan import normalize_file_path, read_named_files
 
-    df = spark.read.schema(read_schema).parquet(*paths)
+    df = read_named_files(spark, paths, schema=read_schema)
     cols = eligible_stats_columns(read_schema, num_indexed, stats_columns, required)
     aggs = [F.count(F.lit(1)).alias("__numRecords")]
     for f in cols:

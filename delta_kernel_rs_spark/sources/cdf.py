@@ -14,7 +14,7 @@ Scale shape (100 TB posture):
     four arms per commit);
   * event classification (cdc-supersedes, swap pairing, insert/delete) is
     a DataFrame groupBy — the driver collects O(commits) prepass facts and
-    the per-arm path STRINGS (which ``spark.read.parquet`` requires), never
+    the per-arm path STRINGS (which the parquet reader requires), never
     a Python row per file action;
   * per-commit version/timestamp/partition-values constants join from the
     classified events DataFrame (broadcast materializes JVM-side only);
@@ -45,7 +45,11 @@ from delta_kernel_rs_spark.functions.dv import dv_diff_from_df
 from delta_kernel_rs_spark.functions.partition_codec import parse_partition_column
 from delta_kernel_rs_spark.functions.schema_codec import physical_name, quoted
 from delta_kernel_rs_spark.sources.actions import CDF_ACTIONS_SCHEMA
-from delta_kernel_rs_spark.sources.scan import normalize_file_path, resolve_add_path
+from delta_kernel_rs_spark.sources.scan import (
+    normalize_file_path,
+    read_named_files,
+    resolve_add_path,
+)
 from delta_kernel_rs_spark.sources.snapshot import Snapshot
 from delta_kernel_rs_spark.sources.storage import storage_for
 
@@ -148,9 +152,9 @@ def table_changes(
     # Version comes from the commit filename ({v:020d}.json), computed
     # in-plan — no per-commit arms, no driver-side body parse.
     raw = (
-        spark.read.schema(CDF_ACTIONS_SCHEMA)
-        .option("mode", "FAILFAST")
-        .json(commit_paths)
+        read_named_files(
+            spark, commit_paths, fmt="json", schema=CDF_ACTIONS_SCHEMA, mode="FAILFAST"
+        )
         .withColumn(
             "version",
             F.split(
@@ -414,7 +418,7 @@ def table_changes(
 
     if paths_by_kind.get("insert"):
         df = with_lineage(
-            spark.read.schema(read_schema).parquet(*paths_by_kind["insert"])
+            read_named_files(spark, paths_by_kind["insert"], schema=read_schema)
         )
         df = join_constants(df, "insert")
         if dv_flags.get("insert", (False, False))[0]:
@@ -423,7 +427,7 @@ def table_changes(
 
     if paths_by_kind.get("delete"):
         df = with_lineage(
-            spark.read.schema(read_schema).parquet(*paths_by_kind["delete"])
+            read_named_files(spark, paths_by_kind["delete"], schema=read_schema)
         )
         df = join_constants(df, "delete")
         if dv_flags.get("delete", (False, False))[1]:
@@ -443,7 +447,7 @@ def table_changes(
             "side",
         )
         swap_df = with_lineage(
-            spark.read.schema(read_schema).parquet(*paths_by_kind["swap"])
+            read_named_files(spark, paths_by_kind["swap"], schema=read_schema)
         )
         pv_consts = arm_events("swap").select(
             F.col("file_path").alias("__const_path"),
@@ -474,7 +478,7 @@ def table_changes(
             phys_fields + [T.StructField(CHANGE_TYPE_COL, T.StringType(), True)]
         )
         df = with_lineage(
-            spark.read.schema(cdc_schema).parquet(*paths_by_kind["cdc"])
+            read_named_files(spark, paths_by_kind["cdc"], schema=cdc_schema)
         )
         df = join_constants(df, "cdc")
         arms.append(logical_projection(df, F.col(CHANGE_TYPE_COL)))

@@ -26,6 +26,7 @@ from delta_kernel_rs_spark.sources.delta_paths import (
 from delta_kernel_rs_spark.sources.scan import (
     canonical_log_path,
     dv_unique_id,
+    read_named_files,
     resolved_checkpoint_df,
 )
 from delta_kernel_rs_spark.sources.snapshot import Snapshot
@@ -69,7 +70,13 @@ def _full_replay(snapshot: Snapshot) -> DataFrame:
     if seg.commit_files:
         from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA
 
-        raw = spark.read.schema(SCAN_ACTIONS_SCHEMA).option("mode", "FAILFAST").json([c.path for c in seg.commit_files])
+        raw = read_named_files(
+            spark,
+            [c.path for c in seg.commit_files],
+            fmt="json",
+            schema=SCAN_ACTIONS_SCHEMA,
+            mode="FAILFAST",
+        )
         arms.append(
             raw.withColumn(
                 "log_filename",

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from delta_kernel_rs_spark.sources.actions import ACTIONS_SCHEMA
 from delta_kernel_rs_spark.sources.log_segment import InvalidLogError
+from delta_kernel_rs_spark.sources.scan import read_named_files
 from delta_kernel_rs_spark.sources.storage import storage_for
 
 #: Action kinds a caller may request (reference DeltaAction enum,
@@ -124,8 +125,7 @@ def commit_range(
         mtime_ms[v] = entry[1]
 
     raw = (
-        spark.read.schema(ACTIONS_SCHEMA)
-        .json(commit_paths)
+        read_named_files(spark, commit_paths, fmt="json", schema=ACTIONS_SCHEMA)
         .withColumn(
             "version",
             F.split(

@@ -29,6 +29,7 @@ from delta_kernel_rs_spark.sources.scan import (
     absolutize_decoded_path,
     canonical_log_path,
     dv_unique_id,
+    read_named_files,
 )
 
 
@@ -75,10 +76,12 @@ def incremental_actions_df(snapshot, base_version: int) -> DataFrame | None:
     version_map = spark.createDataFrame(
         [(by_version[v][0], v) for v in want], "log_filename STRING, version LONG"
     )
-    raw = (
-        spark.read.schema(SCAN_ACTIONS_SCHEMA)
-        .option("mode", "FAILFAST")
-        .json([by_version[v][1] for v in want])
+    raw = read_named_files(
+        spark,
+        [by_version[v][1] for v in want],
+        fmt="json",
+        schema=SCAN_ACTIONS_SCHEMA,
+        mode="FAILFAST",
     )
     keyed = (
         raw.withColumn(

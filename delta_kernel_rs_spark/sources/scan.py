@@ -13,6 +13,12 @@ constants) meet the data rows. Deletion vectors apply as a per-file keep
 filter on the executors (``Scan.live_rows``, the read the DML paths
 share).
 
+Every read of files the log names (data files, commits, checkpoint
+parts, sidecars, change files) goes through :func:`read_named_files`,
+which lists the named paths on the driver instead of in Spark's
+one-task-per-path listing job, so building ``to_df()`` starts no Spark
+job at any file count.
+
 One Arrow table and its frame are kept per (session, table, version) in
 a small driver LRU; nothing is persisted. The Column helpers below
 (path decoding, DV identity, checkpoint conforming) serve the Spark-side
@@ -22,6 +28,7 @@ incremental refresh.
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 from dataclasses import dataclass
 
@@ -187,6 +194,52 @@ def normalize_file_path(col: Column) -> Column:
     return _strip_scheme(_tolerant_url_decode(col))
 
 
+#: Spark lists more than this many explicit paths with a Spark job of one
+#: task per path; at or below it, on the driver
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
+
+
+def read_named_files(
+    spark, paths, *, fmt: str = "parquet", schema=None, **options
+) -> DataFrame:
+    """A relation over files the log names, listed on the driver.
+
+    The log already names every file, so the store's listing is a
+    formality (the reference kernel hands its engine each file's
+    location straight from the log). Spark's reader still lists each
+    path; past ``parallelPartitionDiscovery.threshold`` (32) paths it
+    launches a listing job with one task per path, which costs more than
+    the driver's own listing at every measured size (relation build on a
+    4-vCPU host, 179 files: 1.09 vs 0.07 s; 20k: 45.6 vs 3.9 s; 100k: 63
+    vs 20 s). So the threshold is
+    held at its maximum while the relation is built, then restored, set
+    or unset, under a module lock. The listing runs when the relation is
+    built, never when it executes, so the raised value never reaches a
+    query; a missing file still fails here with ``PATH_NOT_FOUND``.
+
+    ``fmt`` is ``"parquet"`` or ``"json"``; a JSON read should pass a
+    ``schema``, or inferring one starts a job. ``options`` go to the
+    reader as-is.
+    """
+    reader = spark.read.format(fmt)
+    if schema is not None:
+        reader = reader.schema(schema)
+    for key, value in options.items():
+        reader = reader.option(key, value)
+    paths = list(paths)
+    with _LISTING_LOCK:
+        prior = spark.conf.get(_LISTING_THRESHOLD, None)
+        spark.conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
+        try:
+            return reader.load(paths)
+        finally:
+            if prior is None:
+                spark.conf.unset(_LISTING_THRESHOLD)
+            else:
+                spark.conf.set(_LISTING_THRESHOLD, prior)
+
+
 def canonical_log_path(col: Column) -> Column:
     """Percent-DECODED log path — the FILE-IDENTITY key for replay dedup.
 
@@ -290,10 +343,9 @@ def resolved_checkpoint_df(spark, seg) -> DataFrame:
     # the uuid ordering happened to expose it). Merge like the multipart
     # branch in checkpoint_top_df already does.
     def _read_sidecars(paths: list[str]) -> DataFrame:
-        reader = spark.read
         if len(paths) > 1:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+            return read_named_files(spark, paths, mergeSchema="true")
+        return read_named_files(spark, paths)
 
     hint_sidecars = seg.hint_sidecar_files() if hasattr(seg, "hint_sidecar_files") else None
     if hint_sidecars:
@@ -328,16 +380,14 @@ def checkpoint_top_df(spark, seg) -> DataFrame:
     """
     from delta_kernel_rs_spark.sources.actions import ACTIONS_SCHEMA
 
-    if all(p.endswith(".json") for p in seg.checkpoint_parts):
-        return (
-            spark.read.schema(ACTIONS_SCHEMA)
-            .option("mode", "FAILFAST")
-            .json(list(seg.checkpoint_parts))
+    parts = list(seg.checkpoint_parts)
+    if all(p.endswith(".json") for p in parts):
+        return read_named_files(
+            spark, parts, fmt="json", schema=ACTIONS_SCHEMA, mode="FAILFAST"
         )
-    reader = spark.read
-    if len(seg.checkpoint_parts) > 1:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*seg.checkpoint_parts)
+    if len(parts) > 1:
+        return read_named_files(spark, parts, mergeSchema="true")
+    return read_named_files(spark, parts)
 
 
 def _conform_checkpoint_file_actions(ckpt: DataFrame, add_type, remove_type) -> DataFrame:
@@ -654,7 +704,7 @@ class Scan:
                 )
                 for f in phys_schema.fields
             ]
-            arm = spark.read.schema(T.StructType(read_fields)).parquet(*group_paths)
+            arm = read_named_files(spark, group_paths, schema=T.StructType(read_fields))
             arm = arm.select(
                 *[
                     F.col(quoted(f.name)).cast(target[f.name].dataType).alias(f.name)
@@ -693,10 +743,14 @@ class Scan:
         ``sfdf`` is the scan-files frame the per-file constants (partition
         values, row-id constants) join from. DV-free files go through the
         plain parquet reader; DV-carrying files through a second read of
-        only those files, filtered by :func:`live_row_filter` on (file,
-        physical row index) — the bitmaps decode on executors, the driver
-        ships descriptors only. ``file_cols`` keeps ``__file_path`` and
-        ``__row_index`` (the DML candidate read needs them).
+        only those files, filtered by :func:`live_row_filter` on (Spark's
+        file URI, physical row index) — the bitmaps decode on executors,
+        the driver ships descriptors only. Both reads are relations built
+        by :func:`read_named_files` (driver-side listing, no Spark job).
+        The path is decoded to ``__file_path`` at most once per row, and
+        only when partition constants or ``file_cols`` need it.
+        ``file_cols`` keeps ``__file_path`` and ``__row_index`` (the DML
+        candidate read needs them).
         """
         from functools import reduce
 
@@ -712,17 +766,19 @@ class Scan:
         def read(paths: list[str]) -> DataFrame:
             if self._needs_widening_read():
                 return self._read_with_widening(spark, paths, phys_schema)
-            return spark.read.schema(phys_schema).parquet(*paths)
+            return read_named_files(spark, paths, schema=phys_schema)
 
-        file_path = normalize_file_path(F.col("_metadata.file_path"))
         row_index = F.col("_metadata.row_index")
         clean = [p for p, dv in head if dv is None]
         dvs = {p: dv for p, dv in head if dv is not None}
         arms = [read(clean)] if clean else []
         if dvs:
             keep = live_row_filter(dvs, self.snapshot.table_path)
-            arms.append(read(sorted(dvs)).filter(keep(file_path, row_index)))
+            arms.append(
+                read(sorted(dvs)).filter(keep(F.col("_metadata.file_path"), row_index))
+            )
         if need_path:
+            file_path = normalize_file_path(F.col("_metadata.file_path"))
             arms = [arm.withColumn("__file_path", file_path) for arm in arms]
         if need_index:
             arms = [arm.withColumn("__row_index", row_index) for arm in arms]

@@ -571,14 +571,16 @@ class Snapshot:
                     if dm and dm.get("domain") == domain:
                         return None if dm.get("removed") else dm.get("configuration")
                 return None
+            from delta_kernel_rs_spark.sources.scan import read_named_files
+
             # TOP-LEVEL parts only: domainMetadata never moves to sidecars
             parts = list(self.log_segment.checkpoint_parts)
             if all(pp.endswith(".json") for pp in parts):
                 from delta_kernel_rs_spark.sources.actions import ACTIONS_SCHEMA
 
-                ckpt = self.spark.read.schema(ACTIONS_SCHEMA).json(parts)
+                ckpt = read_named_files(self.spark, parts, fmt="json", schema=ACTIONS_SCHEMA)
             else:
-                ckpt = self.spark.read.parquet(*parts)
+                ckpt = read_named_files(self.spark, parts)
             if "domainMetadata" in ckpt.columns:
                 rows = (
                     ckpt.filter(F.col("domainMetadata.domain") == domain)

@@ -1042,13 +1042,20 @@ class DeltaTable:
         import urllib.parse
 
         from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA
-        from delta_kernel_rs_spark.sources.scan import resolved_checkpoint_df
+        from delta_kernel_rs_spark.sources.scan import (
+            read_named_files,
+            resolved_checkpoint_df,
+        )
 
         seg = self.snapshot().log_segment
         arms = []
         if seg.commit_files:
-            raw = self.spark.read.schema(SCAN_ACTIONS_SCHEMA).option("mode", "FAILFAST").json(
-                [c.path for c in seg.commit_files]
+            raw = read_named_files(
+                self.spark,
+                [c.path for c in seg.commit_files],
+                fmt="json",
+                schema=SCAN_ACTIONS_SCHEMA,
+                mode="FAILFAST",
             )
             arms.append(raw)
         if seg.checkpoint_parts:

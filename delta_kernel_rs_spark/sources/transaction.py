@@ -1105,7 +1105,7 @@ class Transaction:
 
         from pyspark.sql import functions as F
 
-        from delta_kernel_rs_spark.sources.scan import normalize_file_path
+        from delta_kernel_rs_spark.sources.scan import normalize_file_path, read_named_files
 
         def norm(p: str) -> str:
             return re.sub(r"^file:/+", "/", p)
@@ -1114,7 +1114,7 @@ class Transaction:
             p: f"{self.table_path}/{urllib.parse.unquote(p)}" for p in missing
         }
         counts = (
-            self.spark.read.parquet(*abs_of.values())
+            read_named_files(self.spark, abs_of.values())
             .groupBy(
                 normalize_file_path(F.col("_metadata.file_path")).alias("__p")
             )

@@ -8,6 +8,9 @@ this engine's analogues, per BASELINE.md's replication list:
 - ``10kAdds*/readMetadataLatest``: scan-files materialization on a
   generated 10k-add table, measured three ways — log-only (no
   checkpoint), after a V1 checkpoint, after a V2+sidecar checkpoint.
+- ``read_data_latest``: ``to_df()`` + ``count()`` over every live file of
+  the same table (log only), so the data read's per-file costs (path
+  listing, file opens) are measured at 10k files.
 - ``crc*/snapshotLatest``: Snapshot.create (P&M resolution) with a fresh
   CRC at the tip vs a stale one far behind vs none at all.
 - ``300k*``: the same two paths on the reference's pathological
@@ -122,6 +125,13 @@ def main() -> int:
 
         n_files = read_metadata()
         results["read_metadata_log_only"] = _timed(read_metadata)
+
+        def read_data():
+            # the data read over every live file: to_df() + count()
+            return t.to_df().count()
+
+        n_rows = read_data()
+        results["read_data_latest"] = _timed(read_data)
 
         t.checkpoint()
         results["read_metadata_v1_checkpoint"] = _timed(read_metadata)
@@ -274,6 +284,7 @@ def main() -> int:
                 "adds": args.adds,
                 "commits": args.commits,
                 "files_seen": n_files,
+                "rows_seen": n_rows,
                 "large_table_files": large_files,
             }
         )

@@ -44,7 +44,7 @@ ROWS_PER_FILE = 600
 COLS = ["id", "val", "s"]
 
 
-def _frame(spark, lo, hi, partitioned):
+def _frame(spark, lo, hi, partitioned, pvals=("0", "1")):
     # two partition values per task: half the tasks give the same file count
     tasks = N_FILES // 2 if partitioned else N_FILES
     df = spark.range(lo, hi, 1, tasks).select(
@@ -53,7 +53,7 @@ def _frame(spark, lo, hi, partitioned):
         F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
     )
     if partitioned:
-        df = df.withColumn("p", (F.col("id") % 2).cast("string"))
+        df = df.withColumn("p", F.when(F.col("id") % 2 == 0, pvals[0]).otherwise(pvals[1]))
     return df
 
 
@@ -176,7 +176,7 @@ def _attach_dvs(t: DeltaTable, model: Model, picks: dict[str, tuple[str, list[in
     return txn.commit()
 
 
-def _build(spark, path, *, partitioned, column_mapping):
+def _build(spark, path, *, partitioned, column_mapping, pvals=("0", "1")):
     props = {"delta.enableRowTracking": "true"}
     if column_mapping:
         props["delta.columnMapping.mode"] = "name"
@@ -185,7 +185,7 @@ def _build(spark, path, *, partitioned, column_mapping):
         t = DeltaTable.create(
             spark,
             path,
-            df=_frame(spark, 0, N_FILES * ROWS_PER_FILE, partitioned),
+            df=_frame(spark, 0, N_FILES * ROWS_PER_FILE, partitioned, pvals),
             partition_by=["p"] if partitioned else None,
             properties=props,
         )
@@ -260,6 +260,18 @@ def test_every_storage_type_and_shared_dv_files(spark, flat):
 def test_partitioned_with_column_mapping(spark, part_cm):
     t, model = part_cm
     assert t.snapshot().metadata.partition_columns == ["p"]
+    _assert_all_equal(spark, t, model.live())
+
+
+def test_partition_paths_spark_percent_encodes(spark, tmp_path):
+    """DV files under partition directories whose names Spark reports
+    percent-encoded in ``_metadata.file_path`` (space, '%', '+', ':'):
+    the keep filter must map each URI back to its log path."""
+    t, model = _build(
+        spark, str(tmp_path / "t"), partitioned=True, column_mapping=False,
+        pvals=("a b:c", "100%+x"),
+    )
+    assert any("%" in p for p in model.rows)
     _assert_all_equal(spark, t, model.live())
 
 

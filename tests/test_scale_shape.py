@@ -3,6 +3,7 @@ grows (VERDICT round-1 'done' criteria) + multi-part checkpoint writes."""
 
 from __future__ import annotations
 
+import itertools
 import re
 
 import pytest
@@ -458,6 +459,10 @@ def _plan_nodes(plan: str):
         stack.append((depth, body))
 
 
+#: the percent-decode inside ``scan.normalize_file_path``, as a plan prints it
+_PATH_DECODE = "UrlCodec.decode"
+
+
 def test_dv_scan_is_a_per_file_filter_not_a_join(spark, tmp_path):
     """A scan through deletion vectors applies each file's bitmap as a
     per-file keep filter on the executors: no anti-join, no exploded
@@ -483,6 +488,24 @@ def test_dv_scan_is_a_per_file_filter_not_a_join(spark, tmp_path):
     assert len(scans) == 2
     with_udf = [any(a.startswith("ArrowEvalPython") for a in above) for above in scans]
     assert sorted(with_udf) == [False, True]
+    # no partition constants to join: the filter takes Spark's raw URI and
+    # no arm decodes the path
+    assert _PATH_DECODE not in plan
+
+    # with partition constants, each arm decodes the path once, above the
+    # keep filter of the DV arm
+    ppath = str(tmp_path / "part")
+    t = DeltaTable.create(
+        spark, ppath, df=ranged.withColumn("p", F.col("k") % 2), partition_by=["p"]
+    )
+    delete_with_dvs(t, "k < 1000 AND k % 3 = 0")
+    df = t.to_df()
+    assert df.count() == 4000 - 334
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    scans = [above for node, above in _plan_nodes(plan) if node.startswith("FileScan parquet")]
+    assert len(scans) == 2
+    assert [sum(a.count(_PATH_DECODE) for a in above) for above in scans] == [1, 1]
 
 
 def test_dv_scan_never_decodes_dvs_on_driver(spark, tmp_path, monkeypatch):
@@ -503,3 +526,160 @@ def test_dv_scan_never_decodes_dvs_on_driver(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(dv_mod, "decode_treemap", forbid)
     assert t.to_df().count() == n // 2
     assert t.to_df(predicate="k >= 1000 AND k < 3000").count() == 1000
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs_started(spark, fn):
+    """(result of ``fn()``, stage names of every Spark job it started)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"jobs-started-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    stages = []
+    for job in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(job)
+        stages.append([tracker.getStageInfo(s).name for s in info.stageIds])
+    return out, stages
+
+
+def test_log_named_reads_start_no_listing_job(spark, tmp_path):
+    """Reads of files the log names list them on the driver: past Spark's
+    32-path threshold its reader would start a listing job of one task per
+    path. Building ``to_df()`` over 40 files, 4 of them with DVs, starts no
+    Spark job at all; building a change feed over 40 added files starts
+    only its classification collect."""
+    from delta_kernel_rs_spark.sources.cdf import table_changes
+    from delta_kernel_rs_spark.sources.delete import delete_with_dvs
+
+    path = str(tmp_path / "tbl")
+    t = DeltaTable.create(
+        spark,
+        path,
+        df=spark.range(0, 4000, 1, 40).select(F.col("id").alias("k")),
+        properties={"delta.enableChangeDataFeed": "true"},
+    )
+    delete_with_dvs(t, "k < 400 AND k % 3 = 0")
+    files = t.snapshot().scan().files()
+    assert len(files) == 40 and sum(1 for f in files if f.dv) == 4
+
+    df, stages = _jobs_started(spark, t.to_df)
+    assert stages == []
+    assert df.count() == 4000 - 134
+
+    changes, stages = _jobs_started(spark, lambda: table_changes(spark, path, 0, 1))
+    assert stages and all(
+        name.startswith("collect at ") and "cdf.py" in name for job in stages for name in job
+    ), stages
+    got = {r._change_type: r["count"] for r in changes.groupBy("_change_type").count().collect()}
+    assert got == {"insert": 4000, "delete": 134}
+
+
+@pytest.mark.parametrize("prior", [None, "7"], ids=["unset", "user_set"])
+def test_read_named_files_restores_listing_threshold(spark, tmp_path, prior):
+    """The helper holds Spark's listing threshold only while it builds the
+    relation, and leaves the session's value as it found it, set or
+    unset, also when the read raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from delta_kernel_rs_spark.sources.scan import _LISTING_THRESHOLD, read_named_files
+
+    paths = []
+    for i in range(10):
+        p = str(tmp_path / f"f{i}.parquet")
+        pq.write_table(pa.table({"k": [i]}), p)
+        paths.append(p)
+    if prior is None:
+        spark.conf.unset(_LISTING_THRESHOLD)
+    else:
+        spark.conf.set(_LISTING_THRESHOLD, prior)
+    try:
+        # 10 paths are past a threshold of 7: only a held threshold keeps
+        # the listing on the driver
+        df, stages = _jobs_started(spark, lambda: read_named_files(spark, paths, schema="k long"))
+        assert stages == []
+        assert spark.conf.get(_LISTING_THRESHOLD, None) == prior
+        assert sorted(r.k for r in df.collect()) == list(range(10))
+
+        with pytest.raises(AnalysisException) as err:
+            read_named_files(spark, paths + [str(tmp_path / "gone.parquet")], schema="k long")
+        assert err.value.getCondition() == "PATH_NOT_FOUND"
+        assert spark.conf.get(_LISTING_THRESHOLD, None) == prior
+
+        rows = read_named_files(
+            spark, [str(tmp_path / "f0.parquet")], fmt="json", schema="k long", mode="FAILFAST"
+        )
+        with pytest.raises(Exception):
+            rows.collect()  # parquet bytes are not JSON
+        assert spark.conf.get(_LISTING_THRESHOLD, None) == prior
+    finally:
+        spark.conf.unset(_LISTING_THRESHOLD)
+
+
+def test_read_named_files_concurrent_readers_restore_threshold(spark, tmp_path):
+    """Readers in several threads of one session each hold and restore the
+    threshold; the module lock keeps one from restoring another's raised
+    value, so the session ends with the user's value."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from delta_kernel_rs_spark.sources.scan import _LISTING_THRESHOLD, read_named_files
+
+    paths = []
+    for i in range(3):
+        p = str(tmp_path / f"f{i}.parquet")
+        pq.write_table(pa.table({"k": [i]}), p)
+        paths.append(p)
+    errors: list[BaseException] = []
+
+    def reader():
+        try:
+            for _ in range(5):
+                read_named_files(spark, paths, schema="k long")
+        except BaseException as e:  # noqa: BLE001 - surfaced by the assert below
+            errors.append(e)
+
+    spark.conf.set(_LISTING_THRESHOLD, "7")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader) for _ in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+        assert not any(th.is_alive() for th in threads)
+        assert errors == []
+        assert spark.conf.get(_LISTING_THRESHOLD, None) == "7"
+    finally:
+        sys.setswitchinterval(interval)
+        spark.conf.unset(_LISTING_THRESHOLD)
+
+
+def test_scan_of_missing_data_file_fails_loudly(spark, tmp_path):
+    """A log naming a data file that is gone fails the read with Spark's
+    PATH_NOT_FOUND, past the listing threshold and below it."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    for n_files in (40, 4):
+        path = str(tmp_path / f"tbl{n_files}")
+        t = DeltaTable.create(spark, path, df=_ints(spark, 0, 4000, partitions=n_files))
+        files = t.snapshot().scan().files()
+        assert len(files) == n_files
+        os.remove(files[n_files // 2].path)
+        with pytest.raises(AnalysisException) as err:
+            t.to_df().collect()
+        assert err.value.getCondition() == "PATH_NOT_FOUND"
