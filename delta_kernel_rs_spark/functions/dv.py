@@ -18,7 +18,6 @@ u32 LE high-key followed by a standard 32-bit roaring serialization.
 
 from __future__ import annotations
 
-import re
 import struct
 import uuid as _uuid
 import zlib
@@ -289,15 +288,6 @@ def deleted_row_indexes(table_path: str, dv: dict, blob_cache: dict):
     )
 
 
-def plain_file_path(uri: str) -> str:
-    """Spark's percent-encoded ``_metadata.file_path`` URI → the plain
-    absolute path the log resolves to: the per-value twin of
-    ``scan.normalize_file_path``."""
-    from delta_kernel_rs_spark.sources.pyreplay import _unq
-
-    return re.sub(r"^file:/+", "/", _unq(uri))
-
-
 def live_row_filter(descriptors: dict[str, dict], table_path: str):
     """Boolean Arrow UDF over (``_metadata.file_path``, physical row
     index): False for a row its file's deletion vector hides.
@@ -320,11 +310,9 @@ def live_row_filter(descriptors: dict[str, dict], table_path: str):
         import numpy as np
         import pyarrow.compute as pc
 
-        # imported here: the worker must resolve the module, not the closure
-        from delta_kernel_rs_spark.functions.dv import (
-            deleted_row_indexes,
-            plain_file_path,
-        )
+        # imported here: the worker must resolve the modules, not the closure
+        from delta_kernel_rs_spark.functions.dv import deleted_row_indexes
+        from delta_kernel_rs_spark.sources.scan import plain_file_path
 
         blob_cache: dict[str, bytes] = {}
         last_path, deleted = None, None

@@ -94,6 +94,11 @@ def crc_filename(version: int) -> str:
     return f"{version:020d}.crc"
 
 
+def is_local_path(path: str) -> bool:
+    """True for a local filesystem path: no scheme, or ``file:``."""
+    return "://" not in path or path.startswith("file://")
+
+
 def arrow_fs_and_path(path: str):
     """(pyarrow FileSystem, fs-relative path) for a table/file path.
 

@@ -15,9 +15,10 @@ share).
 
 Every read of files the log names (data files, commits, checkpoint
 parts, sidecars, change files) goes through :func:`read_named_files`,
-which lists the named paths on the driver instead of in Spark's
-one-task-per-path listing job, so building ``to_df()`` starts no Spark
-job at any file count.
+which lists local paths on the driver instead of in Spark's
+one-task-per-path listing job, so building ``to_df()`` over a local
+table starts no Spark job at any file count. Remote stores keep
+Spark's listing job.
 
 One Arrow table and its frame are kept per (session, table, version) in
 a small driver LRU; nothing is persisted. The Column helpers below
@@ -28,6 +29,7 @@ incremental refresh.
 
 from __future__ import annotations
 
+import re
 import threading
 from collections import OrderedDict
 from dataclasses import dataclass
@@ -41,6 +43,7 @@ from pyspark.sql import types as T
 from delta_kernel_rs_spark.functions.partition_codec import parse_partition_column
 from delta_kernel_rs_spark.functions.schema_codec import physical_name, quoted
 from delta_kernel_rs_spark.sources.actions import DELETION_VECTOR_TYPE
+from delta_kernel_rs_spark.sources.delta_paths import is_local_path
 from delta_kernel_rs_spark.sources.pyreplay import _unq, live_files_arrow
 
 
@@ -99,6 +102,10 @@ def cached_files_frame(key: tuple, builder) -> DataFrame:
     return df
 
 
+#: a local file URI's scheme, as Spark and the log spell it
+_FILE_SCHEME = r"^file:/+"
+
+
 def absolute_file_paths(paths: pa.Array, table_path: str) -> pa.Array:
     """Log paths → plain absolute filesystem paths, in Arrow: the driver
     twin of :func:`resolve_add_path` (tolerant percent-decode, ``file:``
@@ -109,7 +116,7 @@ def absolute_file_paths(paths: pa.Array, table_path: str) -> pa.Array:
     root = pa.scalar(table_path.rstrip("/") + "/", pa.string())
     return pc.if_else(
         pc.match_substring(paths, "://"),
-        pc.replace_substring_regex(paths, r"^file:/+", "/"),
+        pc.replace_substring_regex(paths, _FILE_SCHEME, "/"),
         pc.if_else(
             pc.starts_with(paths, "/"),
             paths,
@@ -155,7 +162,7 @@ def dv_unique_id(dv_col: Column) -> Column:
 
 
 def _strip_scheme(col: Column) -> Column:
-    return F.regexp_replace(col, r"^file:/+", "/")
+    return F.regexp_replace(col, _FILE_SCHEME, "/")
 
 
 def _tolerant_url_decode(col: Column) -> Column:
@@ -194,29 +201,54 @@ def normalize_file_path(col: Column) -> Column:
     return _strip_scheme(_tolerant_url_decode(col))
 
 
+def plain_file_path(uri: str) -> str:
+    """Spark's percent-encoded ``_metadata.file_path`` URI → the plain
+    absolute path the log resolves to: the per-value twin of
+    :func:`normalize_file_path`, for code that holds one path at a time
+    (the DV keep filter on the executors, driver-side collects)."""
+    return strip_file_scheme(_unq(uri))
+
+
+def strip_file_scheme(path: str) -> str:
+    """A local ``file:`` URI → its plain path; other paths as they are."""
+    return re.sub(_FILE_SCHEME, "/", path)
+
+
 #: Spark lists more than this many explicit paths with a Spark job of one
 #: task per path; at or below it, on the driver
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+#: guards ``_listing_raised``: session → [readers building now, prior value]
 _LISTING_LOCK = threading.Lock()
+_listing_raised: "dict[object, list]" = {}
 
 
 def read_named_files(
     spark, paths, *, fmt: str = "parquet", schema=None, **options
 ) -> DataFrame:
-    """A relation over files the log names, listed on the driver.
+    """A relation over files the log names; local files are listed on
+    the driver.
 
     The log already names every file, so the store's listing is a
     formality (the reference kernel hands its engine each file's
     location straight from the log). Spark's reader still lists each
     path; past ``parallelPartitionDiscovery.threshold`` (32) paths it
-    launches a listing job with one task per path, which costs more than
-    the driver's own listing at every measured size (relation build on a
-    4-vCPU host, 179 files: 1.09 vs 0.07 s; 20k: 45.6 vs 3.9 s; 100k: 63
-    vs 20 s). So the threshold is
-    held at its maximum while the relation is built, then restored, set
-    or unset, under a module lock. The listing runs when the relation is
-    built, never when it executes, so the raised value never reaches a
-    query; a missing file still fails here with ``PATH_NOT_FOUND``.
+    launches a listing job with one task per path. For local files
+    (no scheme, or ``file:``) that job costs more than the driver's own
+    one-path-at-a-time listing at every measured size (relation build on
+    a 4-vCPU host, 179 files: 1.09 vs 0.07 s; 20k: 45.6 vs 3.9 s; 100k:
+    63 vs 20 s), so the threshold is held at its maximum while the
+    relation is built. Remote stores are left on Spark's listing job:
+    there each path is a round trip, and the driver would pay them one
+    after another where the job spreads them over executors (not
+    measured).
+
+    The threshold is raised per session by the first concurrent reader
+    and restored, set or unset, by the last; the relations themselves
+    build outside the lock, in parallel. Other threads planning in the
+    same session meanwhile see the raised value too, so a directory read
+    they start then also lists on the driver. The listing runs when the
+    relation is built, never when it executes; a missing file fails
+    here with ``PATH_NOT_FOUND``.
 
     ``fmt`` is ``"parquet"`` or ``"json"``; a JSON read should pass a
     ``schema``, or inferring one starts a job. ``options`` go to the
@@ -228,16 +260,26 @@ def read_named_files(
     for key, value in options.items():
         reader = reader.option(key, value)
     paths = list(paths)
+    if not all(is_local_path(p) for p in paths):
+        return reader.load(paths)
     with _LISTING_LOCK:
-        prior = spark.conf.get(_LISTING_THRESHOLD, None)
-        spark.conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
-        try:
-            return reader.load(paths)
-        finally:
-            if prior is None:
-                spark.conf.unset(_LISTING_THRESHOLD)
-            else:
-                spark.conf.set(_LISTING_THRESHOLD, prior)
+        held = _listing_raised.get(spark)
+        if held is None:
+            prior = spark.conf.get(_LISTING_THRESHOLD, None)
+            spark.conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
+            held = _listing_raised[spark] = [0, prior]
+        held[0] += 1
+    try:
+        return reader.load(paths)
+    finally:
+        with _LISTING_LOCK:
+            held[0] -= 1
+            if held[0] == 0:
+                del _listing_raised[spark]
+                if held[1] is None:
+                    spark.conf.unset(_LISTING_THRESHOLD)
+                else:
+                    spark.conf.set(_LISTING_THRESHOLD, held[1])
 
 
 def canonical_log_path(col: Column) -> Column:
@@ -746,7 +788,8 @@ class Scan:
         only those files, filtered by :func:`live_row_filter` on (Spark's
         file URI, physical row index) — the bitmaps decode on executors,
         the driver ships descriptors only. Both reads are relations built
-        by :func:`read_named_files` (driver-side listing, no Spark job).
+        by :func:`read_named_files` (for local files a driver-side
+        listing, no Spark job).
         The path is decoded to ``__file_path`` at most once per row, and
         only when partition constants or ``file_cols`` need it.
         ``file_cols`` keeps ``__file_path`` and ``__row_index`` (the DML

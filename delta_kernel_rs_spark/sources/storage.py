@@ -19,6 +19,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+from delta_kernel_rs_spark.sources.delta_paths import is_local_path
+
 
 class CommitConflict(Exception):
     """The target commit file already exists — another writer won."""
@@ -466,7 +468,7 @@ class ArrowStorage:
 
 def storage_for(spark, table_path: str):
     """Pick a storage handler for the table URL."""
-    if "://" not in table_path or table_path.startswith("file://"):
+    if is_local_path(table_path):
         return LocalStorage()
     return HadoopStorage(spark, table_path)
 
@@ -475,6 +477,6 @@ def storage_for_uri(table_path: str):
     """Pick a SparkSession-free storage handler (streaming sources,
     executor-side code). Local paths keep the POSIX handler (atomic
     put-if-absent available); remote URIs get the pyarrow.fs handler."""
-    if "://" not in table_path or table_path.startswith("file://"):
+    if is_local_path(table_path):
         return LocalStorage()
     return ArrowStorage(table_path)

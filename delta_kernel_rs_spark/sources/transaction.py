@@ -1101,28 +1101,27 @@ class Transaction:
         missing = [a["add"]["path"] for a in adds if not a["add"].get("stats")]
         if not missing:
             return {}
-        import re
-
+        import pyarrow as pa
         from pyspark.sql import functions as F
 
-        from delta_kernel_rs_spark.sources.scan import normalize_file_path, read_named_files
+        from delta_kernel_rs_spark.sources.scan import (
+            absolute_file_paths,
+            plain_file_path,
+            read_named_files,
+            strip_file_scheme,
+        )
 
-        def norm(p: str) -> str:
-            return re.sub(r"^file:/+", "/", p)
-
-        abs_of = {
-            p: f"{self.table_path}/{urllib.parse.unquote(p)}" for p in missing
-        }
+        abs_paths = absolute_file_paths(pa.array(missing), self.table_path).to_pylist()
         counts = (
-            read_named_files(self.spark, abs_of.values())
-            .groupBy(
-                normalize_file_path(F.col("_metadata.file_path")).alias("__p")
-            )
+            read_named_files(self.spark, abs_paths)
+            .groupBy(F.col("_metadata.file_path").alias("__p"))
             .count()
             .collect()
         )
-        by_abs = {r["__p"]: r["count"] for r in counts}
-        return {p: by_abs.get(norm(a), 0) for p, a in abs_of.items()}
+        by_abs = {plain_file_path(r["__p"]): r["count"] for r in counts}
+        return {
+            p: by_abs.get(strip_file_scheme(a), 0) for p, a in zip(missing, abs_paths)
+        }
 
     def _prev_ict(self, version: int) -> int | None:
         if version < 0:

@@ -106,3 +106,39 @@ def test_cdf_by_row_tracking_skips_unchanged_files(spark, tmp_path):
     assert not (read & {f"file:{p}" for p in base_files}) and not (
         read & base_files
     ), f"unchanged files read: {read & base_files}"
+
+
+@pytest.mark.parametrize(
+    "scheme, partition_by", [("", ["p"]), ("file://", None)], ids=["partitioned", "file_uri"]
+)
+def test_recount_of_stats_less_files_matches_their_rows(spark, tmp_path, scheme, partition_by):
+    """Adds whose footer stats could not be parsed are recounted from the
+    data files; each count must land on its add when the partition
+    directory is percent-encoded in the log and when the table root is a
+    ``file://`` URI."""
+    import urllib.parse
+
+    import pyarrow.parquet as pq
+
+    from delta_kernel_rs_spark.sources.transaction import Transaction
+
+    path = scheme + str(tmp_path / "tbl")
+    df = spark.createDataFrame(
+        [(i, "a b" if i % 2 else "x+y") for i in range(7)], "k long, p string"
+    )
+    df = df.coalesce(1) if partition_by else df.repartition(2)
+    DeltaTable.create(spark, path, df=df, partition_by=partition_by)
+    commit = tmp_path / "tbl" / "_delta_log" / "00000000000000000000.json"
+    adds = [
+        {"add": {"path": json.loads(line)["add"]["path"]}}
+        for line in commit.read_text().splitlines()
+        if line.startswith('{"add"')
+    ]
+    assert len(adds) == 2
+    assert bool(partition_by) == all("%" in a["add"]["path"] for a in adds)
+    counts = Transaction(spark, path, "WRITE")._recount_missing_stats(adds)
+    assert counts == {
+        rel: pq.ParquetFile(tmp_path / "tbl" / urllib.parse.unquote(rel)).metadata.num_rows
+        for rel in (a["add"]["path"] for a in adds)
+    }
+    assert sum(counts.values()) == 7

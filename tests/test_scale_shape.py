@@ -625,9 +625,9 @@ def test_read_named_files_restores_listing_threshold(spark, tmp_path, prior):
 
 
 def test_read_named_files_concurrent_readers_restore_threshold(spark, tmp_path):
-    """Readers in several threads of one session each hold and restore the
-    threshold; the module lock keeps one from restoring another's raised
-    value, so the session ends with the user's value."""
+    """Readers in several threads of one session share one raised
+    threshold; none restores it while another still builds, and the
+    session ends with the user's value."""
     import sys
     import threading
 
@@ -665,6 +665,74 @@ def test_read_named_files_concurrent_readers_restore_threshold(spark, tmp_path):
     finally:
         sys.setswitchinterval(interval)
         spark.conf.unset(_LISTING_THRESHOLD)
+
+
+def test_read_named_files_builds_relations_in_parallel(spark, monkeypatch):
+    """Only the threshold change is serialized: two relations of one
+    session build at the same time, both under the raised value, and the
+    last reader to finish restores the session's value."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from delta_kernel_rs_spark.sources.scan import _LISTING_THRESHOLD, read_named_files
+
+    both_building = threading.Barrier(2, timeout=60)
+    seen: list = []
+
+    def load(self, paths):
+        seen.append(spark.conf.get(_LISTING_THRESHOLD, None))
+        both_building.wait()  # breaks if one build waits for the other
+        return paths
+
+    monkeypatch.setattr(DataFrameReader, "load", load)
+    errors: list[BaseException] = []
+
+    def reader(i):
+        try:
+            read_named_files(spark, [f"/data/f{i}.parquet"])
+        except BaseException as e:  # noqa: BLE001 - surfaced by the assert below
+            errors.append(e)
+
+    spark.conf.set(_LISTING_THRESHOLD, "7")
+    try:
+        threads = [threading.Thread(target=reader, args=(i,)) for i in range(2)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+        assert errors == []
+        assert seen == [str(2**31 - 1)] * 2
+        assert spark.conf.get(_LISTING_THRESHOLD, None) == "7"
+    finally:
+        spark.conf.unset(_LISTING_THRESHOLD)
+
+
+@pytest.mark.parametrize(
+    "paths, raised",
+    [
+        (["/data/a.parquet", "file:/data/b.parquet", "file:///data/c.parquet"], True),
+        (["s3a://bucket/t/a.parquet", "s3a://bucket/t/b.parquet"], False),
+        (["hdfs://nn:8020/t/a.parquet", "/data/b.parquet"], False),
+    ],
+    ids=["local", "remote", "mixed"],
+)
+def test_read_named_files_lists_only_local_paths_on_driver(spark, monkeypatch, paths, raised):
+    """The threshold is held only for local paths, whose driver listing
+    was measured; a read naming any remote path keeps Spark's listing
+    job and the session's value."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from delta_kernel_rs_spark.sources.scan import _LISTING_THRESHOLD, read_named_files
+
+    seen: list = []
+    monkeypatch.setattr(
+        DataFrameReader, "load", lambda self, p: seen.append(spark.conf.get(_LISTING_THRESHOLD, None))
+    )
+    spark.conf.unset(_LISTING_THRESHOLD)
+    read_named_files(spark, paths)
+    assert seen == [str(2**31 - 1) if raised else None]
+    assert spark.conf.get(_LISTING_THRESHOLD, None) is None
 
 
 def test_scan_of_missing_data_file_fails_loudly(spark, tmp_path):
