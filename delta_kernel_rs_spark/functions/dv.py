@@ -351,32 +351,6 @@ def write_dv_file(storage, table_path: str, dv_blobs: list[bytes]) -> tuple[str,
     return z85_encode(u.bytes), spans
 
 
-def dv_diff_df(spark, rows: list[tuple], table_path: str):
-    """Row-level diff of (old DV, new DV) pairs, decoded on EXECUTORS.
-
-    ``rows``: (group, file_path, version, ts_ms, old_dv|None, new_dv|None)
-    where the DVs are descriptor dicts. See :func:`dv_diff_from_df` for the
-    DataFrame-fed variant (the CDF path builds descriptors in-plan so the
-    driver never materializes them)."""
-
-    def desc_cols(dv: dict | None):
-        if not dv:
-            return (None, None, None)
-        return (dv.get("storageType"), dv.get("pathOrInlineDv"), dv.get("offset"))
-
-    desc_rows = [
-        (group, path, version, ts_ms, *desc_cols(old), *desc_cols(new))
-        for group, path, version, ts_ms, old, new in rows
-    ]
-    desc_df = spark.createDataFrame(
-        desc_rows,
-        "group STRING, file_path STRING, version LONG, ts_ms LONG,"
-        " old_st STRING, old_p STRING, old_off LONG,"
-        " new_st STRING, new_p STRING, new_off LONG",
-    ).repartition(max(1, min(len(desc_rows), 64)))
-    return dv_diff_from_df(desc_df, table_path)
-
-
 def dv_diff_from_df(desc_df, table_path: str):
     """DataFrame-fed DV pair diff (executor-side decode).
 

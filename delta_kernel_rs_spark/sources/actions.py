@@ -167,18 +167,6 @@ SCAN_ACTIONS_SCHEMA = T.StructType(
     ]
 )
 
-#: Subset for the change-data-feed replay: file actions + cdc + the range
-#: gate (metaData) + in-commit timestamps (commitInfo).
-CDF_ACTIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("add", ADD_TYPE),
-        T.StructField("remove", REMOVE_TYPE),
-        T.StructField("cdc", CDC_TYPE),
-        T.StructField("metaData", METADATA_TYPE),
-        T.StructField("commitInfo", COMMIT_INFO_TYPE),
-    ]
-)
-
 #: Subset for protocol & metadata resolution.
 PM_ACTIONS_SCHEMA = T.StructType(
     [

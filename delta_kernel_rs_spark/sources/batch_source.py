@@ -637,23 +637,18 @@ class DeltaKernelBatchReader(_FileSliceReadMixin, DataSourceReader):
 #
 # The SparkSession-free twin of sources/cdf.py table_changes (reference
 # kernel/src/table_changes/mod.rs:1-170): planning classifies the range's
-# commits into cdc / insert / delete / DV-swap events (cdc supersedes
-# add/remove within its commit, log_replay.rs:46-100), bin-packs them
-# into read tasks, and executors read the parquet, apply DV exclusions /
-# bitmap diffs (resolve_dvs.rs) and emit logical rows with the three CDF
-# metadata columns. Driver state is O(file events in the range) — the
-# same bound as table_changes' per-arm path lists.
+# commits with the shared classifier, cdf.plan_change_events (cdc
+# supersedes add/remove within its commit, log_replay.rs:46-100),
+# bin-packs the events into read tasks, and executors read the parquet
+# with pyarrow, apply DV exclusions / bitmap diffs (resolve_dvs.rs) and
+# emit logical rows with the three CDF metadata columns. Driver state is
+# O(file events in the range), as in table_changes.
 
 _CDF_META_FIELDS = [
     T.StructField("_change_type", T.StringType(), True),
     T.StructField("_commit_version", T.LongType(), True),
     T.StructField("_commit_timestamp", T.TimestampType(), True),
 ]
-
-
-def _cdf_enabled(meta: dict) -> bool:
-    cfg = meta.get("configuration") or {}
-    return str(cfg.get("delta.enableChangeDataFeed", "false")).lower() == "true"
 
 
 def _resolve_cdf_end(storage, path: str, opts: dict) -> int:
@@ -694,118 +689,10 @@ def _resolve_cdf_range(storage, path: str, opts: dict) -> tuple[int, int]:
         start = first_version_after_for_storage(storage, path, _parse_ts_ms(st))
     end = _resolve_cdf_end(storage, path, opts)
     if start > end:
-        raise ValueError(f"start {start} > end {end}")
+        from delta_kernel_rs_spark.sources.cdf import ChangeDataFeedError
+
+        raise ChangeDataFeedError(f"start {start} > end {end}")
     return start, end
-
-
-def _cdf_event_schema():
-    import pyarrow as pa
-
-    from delta_kernel_rs_spark.sources.pyreplay import DV_TYPE
-
-    return pa.schema(
-        [
-            ("kind", pa.string()),
-            ("path", pa.string()),
-            ("size", pa.int64()),
-            ("partition_values", pa.map_(pa.string(), pa.string())),
-            ("dv_old", DV_TYPE),
-            ("dv_new", DV_TYPE),
-            ("version", pa.int64()),
-            ("ts_ms", pa.int64()),
-        ]
-    )
-
-
-def _plan_cdf_events(storage, table_path: str, start: int, end: int, listing=None):
-    """One Arrow table of (kind, path, pv, dvs, version, ts) change events
-    for the range — cdc supersedes add/remove per commit, remove+add of
-    the same path is a DV swap, bare adds/removes are whole-file
-    inserts/deletes; a mid-range metaData that disables CDF fails the
-    whole range (reference table_changes/mod.rs:90-162).
-
-    ``listing`` (name → FileEntry) lets a caller that already listed the
-    log reuse it; otherwise only the [start, end] commit files are
-    stat()ed — O(range), never O(log size). A long-lived streaming table
-    must not pay a full directory listing per trigger."""
-    import pyarrow as pa
-
-    from delta_kernel_rs_spark.sources.pyreplay import _iter_actions
-
-    log_dir = f"{table_path}/_delta_log"
-    if listing is None:
-        listing = {}
-        for v in range(start, end + 1):
-            name = f"{v:020d}.json"
-            p = f"{log_dir}/{name}"
-            if storage.exists(p):
-                listing[name] = storage.stat(p)
-    rows: list[dict] = []
-    for v in range(start, end + 1):
-        name = f"{v:020d}.json"
-        entry = listing.get(name)
-        if entry is None:
-            raise ValueError(
-                f"commit {v} is missing from the log — the requested CDF "
-                f"range [{start}, {end}] is unavailable (log retention may "
-                "have expired it)"
-            )
-        ict: int | None = None
-        adds: dict[str, dict] = {}
-        removes: dict[str, dict] = {}
-        cdcs: list[dict] = []
-        for action in _iter_actions(storage, f"{log_dir}/{name}"):
-            if "commitInfo" in action:
-                t = (action["commitInfo"] or {}).get("inCommitTimestamp")
-                if t is not None:
-                    ict = int(t)
-            elif "metaData" in action:
-                if not _cdf_enabled(action["metaData"]):
-                    raise ValueError(
-                        f"change data feed was not enabled at version {v}; "
-                        "the requested range cannot be served"
-                    )
-            elif "add" in action and action["add"].get("dataChange"):
-                adds[action["add"]["path"]] = action["add"]
-            elif "remove" in action and action["remove"].get("dataChange"):
-                removes[action["remove"]["path"]] = action["remove"]
-            elif "cdc" in action:
-                cdcs.append(action["cdc"])
-        ts = ict if ict is not None else entry.last_modified_ms
-
-        def event(kind, src, dv_old=None, dv_new=None, _v=v, _ts=ts):
-            return {
-                "kind": kind,
-                "path": src["path"],
-                "size": int(src.get("size") or 0),
-                "partition_values": list((src.get("partitionValues") or {}).items()),
-                "dv_old": dv_old,
-                "dv_new": dv_new,
-                "version": _v,
-                "ts_ms": _ts,
-            }
-
-        if cdcs:  # cdc supersedes add/remove for its commit
-            rows.extend(event("cdc", c) for c in cdcs)
-            continue
-        for p, a in adds.items():
-            if p in removes:
-                rows.append(
-                    event(
-                        "swap",
-                        a,
-                        dv_old=removes[p].get("deletionVector"),
-                        dv_new=a.get("deletionVector"),
-                    )
-                )
-            else:
-                rows.append(event("insert", a, dv_new=a.get("deletionVector")))
-        rows.extend(
-            event("delete", r, dv_old=r.get("deletionVector"))
-            for p, r in removes.items()
-            if p not in adds
-        )
-    return pa.Table.from_pylist(rows, schema=_cdf_event_schema())
 
 
 class _CdfEventReadMixin:
@@ -953,13 +840,15 @@ class DeltaKernelCDFReader(_CdfEventReadMixin, DataSourceReader):
                 "versionAsOf/timestampAsOf don't apply to readChangeFeed; "
                 "use startingVersion/endingVersion (or the Timestamp forms)"
             )
+        from delta_kernel_rs_spark.sources.cdf import ChangeDataFeedError, cdf_enabled
+
         storage = storage_for_uri(self._path)
         self._start, self._end = _resolve_cdf_range(storage, self._path, opts)
         end_seg = build_log_segment(storage, self._path, self._end)
         meta, proto = snapshot_metadata(storage, end_seg)
         protocol_of(proto).ensure_read_supported(supported=_PYARROW_READER_FEATURES)
-        if not _cdf_enabled(meta):
-            raise ValueError(
+        if not cdf_enabled(meta):
+            raise ChangeDataFeedError(
                 "change data feed is not enabled (delta.enableChangeDataFeed)"
             )
         self._table_schema = parse_schema_string(meta["schemaString"])
@@ -974,13 +863,13 @@ class DeltaKernelCDFReader(_CdfEventReadMixin, DataSourceReader):
         if self._start < end_seg.version:
             start_seg = build_log_segment(storage, self._path, self._start)
             start_meta, _ = snapshot_metadata(storage, start_seg)
-            if not _cdf_enabled(start_meta):
-                raise ValueError(
+            if not cdf_enabled(start_meta):
+                raise ChangeDataFeedError(
                     f"change data feed was not enabled at version "
                     f"{self._start}; the requested range cannot be served"
                 )
             if parse_schema_string(start_meta["schemaString"]) != self._table_schema:
-                raise ValueError(
+                raise ChangeDataFeedError(
                     f"change data feed range [{self._start}, {self._end}] "
                     "spans a schema change: the start and end version "
                     "schemas are different — split the read at the schema "
@@ -991,8 +880,10 @@ class DeltaKernelCDFReader(_CdfEventReadMixin, DataSourceReader):
 
     # -- planning (driver-side worker) -----------------------------------
     def partitions(self) -> Sequence[InputPartition]:
+        from delta_kernel_rs_spark.sources.cdf import plan_change_events
+
         storage = storage_for_uri(self._path)
-        events = _plan_cdf_events(storage, self._path, self._start, self._end)
+        events = plan_change_events(storage, self._path, self._start, self._end)
         slices = bin_pack_by_size(events, self._target_bytes)
         if not slices:
             return [_FileSliceTask(ipc_serialize(events))]  # empty range

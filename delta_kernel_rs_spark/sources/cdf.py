@@ -7,21 +7,31 @@ supersede add/remove within a commit; resolve_dvs.rs — DV add/remove
 sibling pairs become row-level deltas; physical_to_logical.rs — column
 injection).
 
-Scale shape (100 TB posture):
-  * ONE distributed JSON read covers every commit in the range — the
-    driver never parses commit bodies, and the plan has a CONSTANT number
-    of nodes regardless of range length (one read per change *type*, not
-    four arms per commit);
-  * event classification (cdc-supersedes, swap pairing, insert/delete) is
-    a DataFrame groupBy — the driver collects O(commits) prepass facts and
-    the per-arm path STRINGS (which the parquet reader requires), never
-    a Python row per file action;
-  * per-commit version/timestamp/partition-values constants join from the
-    classified events DataFrame (broadcast materializes JVM-side only);
+:func:`plan_change_events` is the one change-feed classifier: it serves
+``table_changes`` here, the facade's ``readChangeFeed``
+(sources/batch_source.py) and the streaming change feed
+(streaming/cdf_source.py).
+
+Scale shape:
+  * the classifier runs on the driver over the range's commit JSON, one
+    commit after another: one ``stat`` and one whole-file read per commit
+    (never a ``_delta_log`` listing). It holds one Arrow row per file
+    action in the range — driver state is O(file actions in the range),
+    the same bound as the facade, which plans from the same table. The
+    serial per-commit cost is measured on local disk only
+    (scripts/bench_metadata.py ``cdf_plan_*`` arms); on a remote store each
+    commit costs two serial round trips, unmeasured;
+  * ``table_changes`` starts no Spark job before the read: the events
+    become a local relation (``spark.createDataFrame`` over the Arrow
+    table), and the per-kind path lists and DV flags come from the same
+    table through ``pyarrow.compute``;
+  * the plan has a CONSTANT number of nodes regardless of range length
+    (one parquet read per change *type*, not four arms per commit);
+  * per-file version/timestamp/partition-values constants join from the
+    events relation (broadcast);
   * DV bitmaps (old/new sibling pairs and exclusion sets) are decoded and
     diffed on EXECUTORS via ``functions.dv.dv_diff_from_df`` with
-    descriptors built in-plan — the driver never ships descriptors or row
-    indexes.
+    descriptors built in-plan — the driver never decodes a bitmap.
 
 Change classification per commit:
   * commits WITH cdc actions → read the cdc parquet files; they physically
@@ -35,8 +45,8 @@ Change classification per commit:
 
 from __future__ import annotations
 
-import urllib.parse
-
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,29 +54,123 @@ from pyspark.sql import types as T
 from delta_kernel_rs_spark.functions.dv import dv_diff_from_df
 from delta_kernel_rs_spark.functions.partition_codec import parse_partition_column
 from delta_kernel_rs_spark.functions.schema_codec import physical_name, quoted
-from delta_kernel_rs_spark.sources.actions import CDF_ACTIONS_SCHEMA
+from delta_kernel_rs_spark.sources.pyreplay import DV_TYPE, _iter_actions
 from delta_kernel_rs_spark.sources.scan import (
+    absolute_file_paths,
     normalize_file_path,
     read_named_files,
-    resolve_add_path,
 )
 from delta_kernel_rs_spark.sources.snapshot import Snapshot
-from delta_kernel_rs_spark.sources.storage import storage_for
 
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
 COMMIT_TIMESTAMP_COL = "_commit_timestamp"
 
 
-class ChangeDataFeedError(Exception):
+class ChangeDataFeedError(ValueError):
     pass
 
 
-def _abs_path(table_path: str, rel: str) -> str:
-    rel = urllib.parse.unquote(rel)
-    if "://" in rel or rel.startswith("/"):
-        return rel
-    return f"{table_path.rstrip('/')}/{rel}"
+def cdf_enabled(meta: dict) -> bool:
+    cfg = meta.get("configuration") or {}
+    return str(cfg.get("delta.enableChangeDataFeed", "false")).lower() == "true"
+
+
+#: one row per change event: (kind, log path, size, partition values,
+#: the remove's and the add's DV, commit version, commit timestamp)
+CHANGE_EVENT_SCHEMA = pa.schema(
+    [
+        ("kind", pa.string()),
+        ("path", pa.string()),
+        ("size", pa.int64()),
+        ("partition_values", pa.map_(pa.string(), pa.string())),
+        ("dv_old", DV_TYPE),
+        ("dv_new", DV_TYPE),
+        ("version", pa.int64()),
+        ("ts_ms", pa.int64()),
+    ]
+)
+
+
+def plan_change_events(storage, table_path: str, start: int, end: int) -> pa.Table:
+    """One Arrow table (:data:`CHANGE_EVENT_SCHEMA`) of change events for
+    the range — cdc supersedes add/remove per commit, remove+add of the
+    same path is a DV swap, bare adds/removes are whole-file
+    inserts/deletes; a mid-range metaData that disables CDF fails the
+    whole range (reference table_changes/mod.rs:90-162). The timestamp is
+    the commit's in-commit timestamp, else the commit file's mtime.
+
+    Only the [start, end] commit files are touched — one ``stat`` and
+    one whole-file read each, O(range), never O(log size): a long-lived
+    streaming table must not pay a full directory listing per trigger."""
+    log_dir = f"{table_path.rstrip('/')}/_delta_log"
+    rows: list[dict] = []
+    for v in range(start, end + 1):
+        commit = f"{log_dir}/{v:020d}.json"
+        try:
+            mtime_ms = storage.stat(commit).last_modified_ms
+        except FileNotFoundError:
+            raise ChangeDataFeedError(
+                f"commit {v} is missing from the log — the requested CDF "
+                f"range [{start}, {end}] is unavailable (log retention may "
+                "have expired it)"
+            ) from None
+        ict: int | None = None
+        adds: dict[str, dict] = {}
+        removes: dict[str, dict] = {}
+        cdcs: list[dict] = []
+        for action in _iter_actions(storage, commit):
+            if "commitInfo" in action:
+                t = (action["commitInfo"] or {}).get("inCommitTimestamp")
+                if t is not None:
+                    ict = int(t)
+            elif "metaData" in action:
+                if not cdf_enabled(action["metaData"]):
+                    raise ChangeDataFeedError(
+                        f"change data feed was not enabled at version {v}; "
+                        "the requested range cannot be served"
+                    )
+            elif "add" in action and action["add"].get("dataChange"):
+                adds[action["add"]["path"]] = action["add"]
+            elif "remove" in action and action["remove"].get("dataChange"):
+                removes[action["remove"]["path"]] = action["remove"]
+            elif "cdc" in action:
+                cdcs.append(action["cdc"])
+        ts = ict if ict is not None else mtime_ms
+
+        def event(kind, src, dv_old=None, dv_new=None, _v=v, _ts=ts):
+            return {
+                "kind": kind,
+                "path": src["path"],
+                "size": int(src.get("size") or 0),
+                "partition_values": list((src.get("partitionValues") or {}).items()),
+                "dv_old": dv_old,
+                "dv_new": dv_new,
+                "version": _v,
+                "ts_ms": _ts,
+            }
+
+        if cdcs:  # cdc supersedes add/remove for its commit
+            rows.extend(event("cdc", c) for c in cdcs)
+            continue
+        for p, a in adds.items():
+            if p in removes:
+                rows.append(
+                    event(
+                        "swap",
+                        a,
+                        dv_old=removes[p].get("deletionVector"),
+                        dv_new=a.get("deletionVector"),
+                    )
+                )
+            else:
+                rows.append(event("insert", a, dv_new=a.get("deletionVector")))
+        rows.extend(
+            event("delete", r, dv_old=r.get("deletionVector"))
+            for p, r in removes.items()
+            if p not in adds
+        )
+    return pa.Table.from_pylist(rows, schema=CHANGE_EVENT_SCHEMA)
 
 
 def _physical_fields(snapshot) -> list[T.StructField]:
@@ -102,7 +206,7 @@ def table_changes(
         )
     # CDF must have been enabled for the WHOLE range, not just at the end
     # snapshot (reference table_changes/mod.rs:90-162). Commits inside the
-    # range that carry a metaData action are checked in the replay below,
+    # range that carry a metaData action are checked by the classifier,
     # but commits written while CDF was off carry no metaData at all — so
     # also resolve the table metadata AS OF start_version.
     if start_version < snapshot.version:
@@ -123,210 +227,45 @@ def table_changes(
                 "spans a schema change: the start and end version schemas "
                 "are different — split the read at the schema change"
             )
-    storage = storage_for(spark, table_path)
-    log_dir = f"{table_path}/_delta_log"
-
-    # -- range availability + commit timestamps (one listing, no reads) ---
-    listing = {
-        e.path.rsplit("/", 1)[-1]: e for e in storage.list_dir(log_dir)
-    }
-    commit_paths: list[str] = []
-    mtime_ms: dict[int, int] = {}
-    for v in range(start_version, end_version + 1):
-        name = f"{v:020d}.json"
-        entry = listing.get(name)
-        if entry is None:
-            raise ChangeDataFeedError(
-                f"commit {v} is missing from the log — the requested CDF "
-                f"range [{start_version}, {end_version}] is unavailable "
-                "(log retention may have expired it)"
-            )
-        commit_paths.append(f"{log_dir}/{name}")
-        mtime_ms[v] = entry.last_modified_ms
-
     pcols = snapshot.metadata.partition_columns
     phys_fields = _physical_fields(snapshot)
     read_schema = T.StructType(phys_fields)
 
-    # -- ONE distributed read over every commit in the range --------------
-    # Version comes from the commit filename ({v:020d}.json), computed
-    # in-plan — no per-commit arms, no driver-side body parse.
-    raw = (
-        read_named_files(
-            spark, commit_paths, fmt="json", schema=CDF_ACTIONS_SCHEMA, mode="FAILFAST"
-        )
-        .withColumn(
-            "version",
-            F.split(
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1), r"\."
-            )
-            .getItem(0)
-            .cast("long"),
+    # -- driver-side classification: one Arrow row per change event -------
+    planned = plan_change_events(snapshot.storage, table_path, start_version, end_version)
+    if planned.num_rows == 0:
+        fields = list(snapshot.schema.fields) + [
+            T.StructField(CHANGE_TYPE_COL, T.StringType(), True),
+            T.StructField(COMMIT_VERSION_COL, T.LongType(), True),
+            T.StructField(COMMIT_TIMESTAMP_COL, T.TimestampType(), True),
+        ]
+        return spark.createDataFrame([], T.StructType(fields))
+    kinds = planned.column("kind")
+    file_paths = absolute_file_paths(planned.column("path"), table_path)
+    events = spark.createDataFrame(
+        pa.table(
+            {
+                "version": planned.column("version"),
+                "file_path": file_paths,
+                "kind": kinds,
+                "pv": planned.column("partition_values"),
+                "dv_new": planned.column("dv_new"),
+                "dv_old": planned.column("dv_old"),
+                "__ts": planned.column("ts_ms"),
+            }
         )
     )
 
-    # -- distributed classification ---------------------------------------
-    # One (version, path) event row per file action, built with a single
-    # groupBy: cdc supersedes add/remove for its commit (the per-version
-    # any-cdc fact is a WINDOW over the grouped frame — r13, formerly a
-    # separate driver collect), remove+add of the same path is a DV swap,
-    # bare adds/removes are whole-file inserts/deletes. The driver never
-    # holds these rows — only the path strings each arm's parquet read
-    # requires (collect_set below) and the O(commits) meta facts ever
-    # leave the cluster.
-    abs_path_col = resolve_add_path(F.col("rel_path"), table_path)
-    from pyspark.sql import Window
+    def has_dv(mask, dv_col: str) -> bool:
+        dvs = pc.filter(planned.column(dv_col), mask)
+        return pc.any(pc.is_valid(pc.struct_field(dvs, "storageType"))).as_py() or False
 
-    in_cdc_version = (
-        F.max(F.col("cdc").isNotNull().cast("int")).over(
-            Window.partitionBy("version")
-        )
-        == 1
-    )
-    kind_col = (
-        F.when(F.col("cdc").isNotNull(), F.lit("cdc"))
-        .when(in_cdc_version, F.lit(None).cast("string"))  # superseded
-        .when(F.col("add").isNotNull() & F.col("remove").isNotNull(), F.lit("swap"))
-        .when(F.col("add").isNotNull(), F.lit("insert"))
-        .otherwise(F.lit("delete"))
-    )
-    events = (
-        raw.select(
-            "version",
-            F.when(F.col("add.dataChange") == True, F.col("add")).alias("add"),  # noqa: E712
-            F.when(F.col("remove.dataChange") == True, F.col("remove")).alias("remove"),  # noqa: E712
-            F.col("cdc"),
-        )
-        .filter(
-            F.col("add").isNotNull()
-            | F.col("remove").isNotNull()
-            | F.col("cdc").isNotNull()
-        )
-        .select(
-            "version",
-            F.coalesce(F.col("add.path"), F.col("remove.path"), F.col("cdc.path")).alias("rel_path"),
-            "add",
-            "remove",
-            "cdc",
-        )
-        .groupBy("version", "rel_path")
-        .agg(
-            F.first("add", ignorenulls=True).alias("add"),
-            F.first("remove", ignorenulls=True).alias("remove"),
-            F.first("cdc", ignorenulls=True).alias("cdc"),
-        )
-        .select(
-            "version",
-            abs_path_col.alias("file_path"),
-            kind_col.alias("kind"),
-            F.coalesce(
-                F.col("add.partitionValues"),
-                F.col("remove.partitionValues"),
-                F.col("cdc.partitionValues"),
-            ).alias("pv"),
-            F.col("add.deletionVector").alias("dv_new"),
-            F.col("remove.deletionVector").alias("dv_old"),
-        )
-        .filter(F.col("kind").isNotNull())
-    )
-
-    # The classified events frame is commit-METADATA-sized (one row per
-    # file action in the range, never row-level data), immutable for a
-    # fixed (table, start, end), and re-executed by every arm's constants
-    # join + DV-descriptor subtree, so it lands in the bounded stable-key
-    # LRU of persisted frames (evictees unpersisted).
-    # NOTE the r7 reverted experiment persisted the WIDE row-level change
-    # frame — that one costs more to materialize than it saves and defeats
-    # per-arm column pruning; this is the small planning frame instead.
-    from delta_kernel_rs_spark.sources.scan import cached_files_frame
-
-    events = cached_files_frame(
-        (
-            "cdf_events",
-            spark.sparkContext.applicationId,
-            table_path,
-            start_version,
-            end_version,
-        ),
-        lambda: events,
-    )
-
-    # ONE job yields every prepass fact the driver needs (r13 — formerly
-    # two collects, i.e. two job submissions per changes() build): per
-    # KIND the path list + any-DV flags (DV-free arms skip the exclusion
-    # subplan entirely), and per VERSION the CDF gate + in-commit
-    # timestamp. Both branches are commit-metadata-sized; the union makes
-    # them one Spark job.
-    kind_summary = events.groupBy("kind").agg(
-        F.collect_set("file_path").alias("paths"),
-        F.max(F.col("dv_new.storageType").isNotNull().cast("int")).alias("any_dv_new"),
-        F.max(F.col("dv_old.storageType").isNotNull().cast("int")).alias("any_dv_old"),
-    ).select(
-        F.lit("kind").alias("tag"),
-        "kind",
-        "paths",
-        "any_dv_new",
-        "any_dv_old",
-        F.lit(None).cast("long").alias("version"),
-        F.lit(None).cast("int").alias("gate"),
-        F.lit(None).cast("long").alias("ict"),
-    )
-    meta_summary = (
-        raw.select(
-            "version",
-            F.col("metaData").isNotNull().alias("has_meta"),
-            F.lower(
-                F.col("metaData.configuration").getItem("delta.enableChangeDataFeed")
-            ).alias("cdf_flag"),
-            F.col("commitInfo.inCommitTimestamp").alias("ict"),
-        )
-        .filter(F.col("has_meta") | F.col("ict").isNotNull())
-        .groupBy("version")
-        .agg(
-            F.max(
-                F.when(
-                    F.col("has_meta")
-                    & (F.coalesce(F.col("cdf_flag"), F.lit("false")) != "true"),
-                    1,
-                ).otherwise(0)
-            ).alias("gate"),
-            F.max("ict").alias("ict"),
-        )
-        .select(
-            F.lit("meta").alias("tag"),
-            F.lit(None).cast("string").alias("kind"),
-            F.lit(None).cast("array<string>").alias("paths"),
-            F.lit(None).cast("int").alias("any_dv_new"),
-            F.lit(None).cast("int").alias("any_dv_old"),
-            "version",
-            "gate",
-            "ict",
-        )
-    )
-    summary = kind_summary.unionByName(meta_summary).collect()
-    gate_violations = [r.version for r in summary if r.tag == "meta" and r.gate]
-    if gate_violations:
-        raise ChangeDataFeedError(
-            f"change data feed was not enabled at version {min(gate_violations)}; "
-            "the requested range cannot be served"
-        )
-    ict = {r.version: r.ict for r in summary if r.tag == "meta" and r.ict is not None}
-    ts_of = {v: ict.get(v, mtime_ms[v]) for v in range(start_version, end_version + 1)}
-    ts_df = spark.createDataFrame(
-        [(v, t) for v, t in ts_of.items()], "version LONG, __ts LONG"
-    )
-    # per-commit timestamps ride a broadcast join on top of the persisted
-    # classification frame (built AFTER the collect — ICT values come from
-    # the same summary job)
-    events = events.join(F.broadcast(ts_df), "version")
-    paths_by_kind: dict[str, list[str]] = {
-        r.kind: sorted(r.paths) for r in summary if r.tag == "kind"
-    }
-    dv_flags = {
-        r.kind: (bool(r.any_dv_new), bool(r.any_dv_old))
-        for r in summary
-        if r.tag == "kind"
-    }
+    paths_by_kind: dict[str, list[str]] = {}
+    dv_flags: dict[str, tuple[bool, bool]] = {}
+    for kind in pc.unique(kinds).to_pylist():
+        mask = pc.equal(kinds, kind)
+        paths_by_kind[kind] = sorted(pc.unique(pc.filter(file_paths, mask)).to_pylist())
+        dv_flags[kind] = (has_dv(mask, "dv_new"), has_dv(mask, "dv_old"))
 
     # -- shared arm plumbing ----------------------------------------------
     def with_lineage(df: DataFrame) -> DataFrame:
@@ -339,8 +278,8 @@ def table_changes(
 
     def join_constants(df: DataFrame, kind: str) -> DataFrame:
         """Per-file (partition values, version, timestamp) via one broadcast
-        join — the constants side comes straight from the distributed event
-        classification (one row per (version, path) event; the join is on
+        join — the constants side is the events relation (one row per
+        (version, path) event; the join is on
         path alone, so a file with events at several versions fans out to
         one change row set per version). The broadcast materializes in the
         JVM only."""
@@ -483,13 +422,6 @@ def table_changes(
         df = join_constants(df, "cdc")
         arms.append(logical_projection(df, F.col(CHANGE_TYPE_COL)))
 
-    if not arms:
-        fields = list(snapshot.schema.fields) + [
-            T.StructField(CHANGE_TYPE_COL, T.StringType(), True),
-            T.StructField(COMMIT_VERSION_COL, T.LongType(), True),
-            T.StructField(COMMIT_TIMESTAMP_COL, T.TimestampType(), True),
-        ]
-        return spark.createDataFrame([], T.StructType(fields))
     out = arms[0]
     for a in arms[1:]:
         out = out.unionByName(a)

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from delta_kernel_rs_spark.functions.dv import write_dv_file
 from delta_kernel_rs_spark.plans.expressions import Predicate
-from delta_kernel_rs_spark.sources.scan import live_file_head
+from delta_kernel_rs_spark.sources.scan import live_file_head, strip_file_scheme
 from delta_kernel_rs_spark.sources.transaction import _now_ms, begin
 
 def _dv_protocol_upgrade(snapshot) -> dict | None:
@@ -75,7 +75,8 @@ def _rel_path(table_path: str, abs_path: str) -> str:
     lives under the table root; the absolute form otherwise (shallow-clone
     adds reference foreign roots — a remove must spell the path EXACTLY
     like the add it cancels, or replay never pairs them)."""
-    root = table_path.rstrip("/") + "/"
+    root = strip_file_scheme(table_path.rstrip("/")) + "/"
+    abs_path = strip_file_scheme(abs_path)
     if not abs_path.startswith(root):
         return "/".join(urllib.parse.quote(seg) for seg in abs_path.split("/"))
     rel = abs_path[len(root):]

@@ -113,7 +113,7 @@ def absolute_file_paths(paths: pa.Array, table_path: str) -> pa.Array:
     paths = pc.cast(paths, pa.string())
     if pc.any(pc.match_substring(paths, "%")).as_py():
         paths = pa.array([p if p is None else _unq(p) for p in paths.to_pylist()], pa.string())
-    root = pa.scalar(table_path.rstrip("/") + "/", pa.string())
+    root = pa.scalar(strip_file_scheme(table_path.rstrip("/")) + "/", pa.string())
     return pc.if_else(
         pc.match_substring(paths, "://"),
         pc.replace_substring_regex(paths, _FILE_SCHEME, "/"),
@@ -306,7 +306,7 @@ def absolutize_decoded_path(col: Column, table_path: str) -> Column:
     return (
         F.when(col.contains("://"), _strip_scheme(col))
         .when(col.startswith("/"), col)
-        .otherwise(F.concat(F.lit(table_path.rstrip("/") + "/"), col))
+        .otherwise(F.concat(F.lit(strip_file_scheme(table_path.rstrip("/")) + "/"), col))
     )
 
 

@@ -12,6 +12,10 @@ Two implementations:
     which is atomic on HDFS/ABFS (rename-based stores). For S3 a
     coordinating LogStore (e.g. DynamoDB) would be required — documented,
     out of scope for the local build.
+
+Every handler's ``stat`` raises :class:`FileNotFoundError` for a missing
+path, so a caller that needs a file's metadata pays one store round trip,
+not an ``exists`` probe followed by a ``stat``.
 """
 
 from __future__ import annotations
@@ -243,34 +247,28 @@ class HadoopStorage:
         return out
 
     def read_text(self, path: str) -> str:
-        stream = self._fs.open(self._jpath(path))
-        try:
-            reader = self._jvm.java.io.BufferedReader(
-                self._jvm.java.io.InputStreamReader(stream, "UTF-8")
-            )
-            lines = []
-            line = reader.readLine()
-            while line is not None:
-                lines.append(line)
-                line = reader.readLine()
-            return "\n".join(lines)
-        finally:
-            stream.close()
+        # one copyBytes call per file: a per-line readLine loop costs one
+        # py4j round trip per log action
+        return self.read_bytes(path).decode("utf-8")
 
     def read_bytes(self, path: str) -> bytes:
         stream = self._fs.open(self._jpath(path))
         try:
-            out = bytearray()
-            buf_cls = self._jvm.java.io.ByteArrayOutputStream
-            sink = buf_cls()
+            sink = self._jvm.java.io.ByteArrayOutputStream()
             self._jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, sink, 65536, False)
-            out += bytes(sink.toByteArray())
-            return bytes(out)
+            return bytes(sink.toByteArray())
         finally:
             stream.close()
 
     def stat(self, path: str) -> FileEntry:
-        status = self._fs.getFileStatus(self._jpath(path))
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            status = self._fs.getFileStatus(self._jpath(path))
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+                raise FileNotFoundError(path) from None
+            raise
         return FileEntry(
             status.getPath().toString(), status.getLen(), status.getModificationTime()
         )
@@ -453,7 +451,11 @@ class ArrowStorage:
             return fh.read()
 
     def stat(self, path: str) -> FileEntry:
+        import pyarrow.fs as pafs
+
         info = self._fs.get_file_info(self._rel(path))
+        if info.type == pafs.FileType.NotFound:
+            raise FileNotFoundError(path)
         return FileEntry(
             path,
             info.size or 0,

@@ -623,8 +623,10 @@ class DeltaTable:
         return v
 
     def _rel(self, abs_path: str) -> str:
-        p = abs_path
-        root = self.path.rstrip("/") + "/"
+        from delta_kernel_rs_spark.sources.scan import strip_file_scheme
+
+        p = strip_file_scheme(abs_path)
+        root = strip_file_scheme(self.path.rstrip("/")) + "/"
         return p[len(root):] if p.startswith(root) else p
 
     # -- schema evolution ---------------------------------------------------
@@ -1045,6 +1047,7 @@ class DeltaTable:
         from delta_kernel_rs_spark.sources.scan import (
             read_named_files,
             resolved_checkpoint_df,
+            strip_file_scheme,
         )
 
         seg = self.snapshot().log_segment
@@ -1087,12 +1090,12 @@ class DeltaTable:
             for r in rows:
                 rel = urllib.parse.unquote(r.p)
                 abs_p = rel if ("://" in rel or rel.startswith("/")) else f"{self.path}/{rel}"
-                record(abs_p, r.ts)
+                record(strip_file_scheme(abs_p), r.ts)
                 # The superseded DV file shares the remove's deletion time.
                 if r.dv and r.dv.storageType:
                     dv_path = dv_absolute_path(self.path, r.dv.asDict())
                     if dv_path:
-                        record(dv_path, r.ts)
+                        record(strip_file_scheme(dv_path), r.ts)
         return out
 
     def vacuum(
@@ -1113,6 +1116,7 @@ class DeltaTable:
         """
         from delta_kernel_rs_spark.functions.dv import dv_absolute_path
         from delta_kernel_rs_spark.sources.checkpoint import _tombstone_retention_ms
+        from delta_kernel_rs_spark.sources.scan import strip_file_scheme
         from delta_kernel_rs_spark.sources.transaction import _now_ms
 
         snap = self.snapshot()
@@ -1135,12 +1139,15 @@ class DeltaTable:
             if f.deletion_vector and f.deletion_vector.storageType:
                 dv_path = dv_absolute_path(self.path, f.deletion_vector.asDict())
                 if dv_path:
-                    protected.add(dv_path)
+                    protected.add(strip_file_scheme(dv_path))
         deletion_ts = self._tombstone_deletion_timestamps()
 
+        # scan paths and the local store's listing are plain paths: compare
+        # against the root without its ``file:`` scheme
+        root = strip_file_scheme(self.path)
         removed: list[str] = []
-        prefix_log = f"{self.path}/_delta_log"
-        prefix_cdc = f"{self.path}/_change_data"
+        prefix_log = f"{root}/_delta_log"
+        prefix_cdc = f"{root}/_change_data"
         for entry in self.storage.list_recursive(self.path):
             p = entry.path
             if p.startswith(prefix_log) or p.startswith(prefix_cdc):

@@ -749,6 +749,8 @@ class Transaction:
                 ) from None
             raise
 
+        from delta_kernel_rs_spark.sources.scan import strip_file_scheme
+
         staged = [
             e
             for e in self.storage.list_recursive(staging)
@@ -760,7 +762,7 @@ class Transaction:
         # an O(table) listing on the commit path.
         moves: list[tuple[str, str, str, int, int]] = []
         for entry in staged:
-            rel = entry.path[len(staging.rstrip("/")) + 1 :]
+            rel = entry.path[len(strip_file_scheme(staging)) + 1 :]
             if materialize:
                 # strip the shadow prefix so directories/partitionValues
                 # carry the real physical names (component-anchored: a
@@ -1108,7 +1110,6 @@ class Transaction:
             absolute_file_paths,
             plain_file_path,
             read_named_files,
-            strip_file_scheme,
         )
 
         abs_paths = absolute_file_paths(pa.array(missing), self.table_path).to_pylist()
@@ -1120,7 +1121,7 @@ class Transaction:
         )
         by_abs = {plain_file_path(r["__p"]): r["count"] for r in counts}
         return {
-            p: by_abs.get(strip_file_scheme(a), 0) for p, a in zip(missing, abs_paths)
+            p: by_abs.get(a, 0) for p, a in zip(missing, abs_paths)
         }
 
     def _prev_ict(self, version: int) -> int | None:

@@ -6,9 +6,10 @@ sources/cdf.py), built on the PySpark 4 Python Data Source API:
 
 * offsets are table versions — each micro-batch covers commit versions
   ``[start, end)``, so progress is exactly-once at commit granularity;
-* ``partitions()`` classifies each commit's actions on the driver (commit
-  JSONs are small) into per-file read tasks — inserts, removes,
-  DV-swap row-level deltas, and cdc files, mirroring the batch arms;
+* ``partitions()`` classifies each commit's actions on the driver with
+  the change-feed classifier that ``table_changes`` and the batch facade
+  share (``sources.cdf.plan_change_events``) and packs the events into
+  read tasks — inserts, removes, DV-swap row-level deltas, and cdc files;
 * ``read()`` runs on executors: pyarrow parquet read, row-index
   selection for DV diffs, physical→logical rename, partition-value
   injection, and the ``_change_type`` / ``_commit_version`` /
@@ -32,6 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
 from delta_kernel_rs_spark.functions.schema_codec import parse_schema_string
+from delta_kernel_rs_spark.sources.cdf import ChangeDataFeedError, cdf_enabled, plan_change_events
 from delta_kernel_rs_spark.sources.storage import storage_for_uri
 
 CDF_COLS = [
@@ -114,9 +116,8 @@ class DeltaCdfStreamReader(_CdfEventReadMixin, DataSourceStreamReader):
         else:
             self._start = int(sv if sv is not None else 0)
         meta = _latest_metadata(self._storage, self._path)
-        conf = meta.get("configuration") or {}
-        if conf.get("delta.enableChangeDataFeed", "false").lower() != "true":
-            raise ValueError("change data feed is not enabled on this table")
+        if not cdf_enabled(meta):
+            raise ChangeDataFeedError("change data feed is not enabled on this table")
         self._table_schema = parse_schema_string(meta["schemaString"])
         self._pcols = list(meta.get("partitionColumns") or [])
         self._out_schema = schema
@@ -207,15 +208,12 @@ class DeltaCdfStreamReader(_CdfEventReadMixin, DataSourceStreamReader):
 
     # -- planning (driver) ----------------------------------------------
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        """Classify the micro-batch's commits into CDF events via the
-        SAME planner the batch facade uses (sources/batch_source.py
-        _plan_cdf_events) and bin-pack them into read tasks. DV bitmaps
-        decode on EXECUTORS — the driver ships descriptors, never row
-        indexes (the pre-r9 per-file tasks decoded DVs driver-side)."""
-        from delta_kernel_rs_spark.sources.batch_source import (
-            _FileSliceTask,
-            _plan_cdf_events,
-        )
+        """Classify the micro-batch's commits into CDF events with the
+        one change-feed classifier (sources/cdf.py plan_change_events,
+        shared with table_changes and the batch facade) and bin-pack them
+        into read tasks. DV bitmaps decode on EXECUTORS — the driver ships
+        descriptors, never row indexes."""
+        from delta_kernel_rs_spark.sources.batch_source import _FileSliceTask
         from delta_kernel_rs_spark.sources.pyreplay import (
             bin_pack_by_size,
             ipc_serialize,
@@ -226,9 +224,7 @@ class DeltaCdfStreamReader(_CdfEventReadMixin, DataSourceStreamReader):
         self._cursor = max(self._cursor, end["version"])
         if sv >= end["version"]:
             return []
-        events = _plan_cdf_events(
-            self._storage, self._path, sv, end["version"] - 1
-        )
+        events = plan_change_events(self._storage, self._path, sv, end["version"] - 1)
         slices = bin_pack_by_size(events, self._target_bytes)
         return [_FileSliceTask(ipc_serialize(s)) for s in slices]
 

@@ -13,6 +13,13 @@ this engine's analogues, per BASELINE.md's replication list:
   listing, file opens) are measured at 10k files.
 - ``crc*/snapshotLatest``: Snapshot.create (P&M resolution) with a fresh
   CRC at the tip vs a stale one far behind vs none at all.
+- ``cdf_plan_long_range_<N>``: ``table_changes`` over N single-add
+  commits (500 and 5,000), built and counted — the change-feed
+  classifier parses every commit of the range on the driver, one after
+  another. ``cdf_plan_large_commit_50000``: the same over one commit of
+  50,000 adds. ``*_build`` times the build alone. These arms are
+  reported under ``cdf_queries`` with their own total ``cdf_plan_sec``,
+  outside ``value``.
 - ``300k*``: the same two paths on the reference's pathological
   300k-add / 100-partition-column log (mem-test/tests/
   dhat_large_table_log.rs gates the reference on this exact table) —
@@ -24,7 +31,8 @@ Prints ONE JSON line so the per-round artifact can feed
 scripts/bench_compare.py exactly like BENCH does:
 
     {"metric": "metadata_bench_sec", "value": <total>, "unit": "sec",
-     "queries": {"read_metadata_log_only": ..., ...}, "adds": 10000}
+     "queries": {"read_metadata_log_only": ..., ...}, "adds": 10000,
+     "cdf_plan_sec": <total>, "cdf_queries": {...}}
 
 Usage: python scripts/bench_metadata.py [--adds 10000] [--commits 20]
 Writes the table under $TMPDIR; each timing is min-of-2 (warm JVM).
@@ -77,6 +85,56 @@ def _build_table(spark, path: str, adds: int, commits: int):
 LARGE_TABLE = "300k-add-files-100-col-partitioned"
 LARGE_TABLE_TAR = f"/root/reference/kernel/tests/data/{LARGE_TABLE}.tar.zst"
 EXTRACT_ROOT = "/tmp/dkrs_ref_data"  # shared with tests' extract cache
+
+
+#: (arm name, commits, adds per commit after the first): long ranges of
+#: one-add commits, and one commit of 50k adds
+CDF_ARMS = [
+    ("cdf_plan_long_range_500", 500, 1),
+    ("cdf_plan_long_range_5000", 5000, 1),
+    ("cdf_plan_large_commit_50000", 2, 50_000),
+]
+
+
+def _cdf_plan(spark, root: str, commits: int, adds: int = 1) -> tuple[float, float]:
+    """(build, build + count) seconds of ``table_changes`` over versions
+    0..``commits``-1 of a 10-row CDF table whose later commits each add
+    ``adds`` hard links of its one data file, written straight into the
+    log (building them through the write path would dominate the set-up)."""
+    from pyspark.sql import functions as F
+
+    from delta_kernel_rs_spark.sources.cdf import table_changes
+    from delta_kernel_rs_spark.sources.table import DeltaTable
+
+    path = os.path.join(root, f"cdf{commits}x{adds}")
+    DeltaTable.create(
+        spark,
+        path,
+        df=spark.range(0, 10, 1, 1).select(F.col("id").alias("k")),
+        properties={"delta.enableChangeDataFeed": "true"},
+    )
+    src = os.path.join(path, next(p for p in os.listdir(path) if p.endswith(".parquet")))
+    size = os.path.getsize(src)
+    for v in range(1, commits):
+        lines = [json.dumps({"commitInfo": {"timestamp": v, "operation": "WRITE"}})]
+        for i in range(adds):
+            name = f"part-synth-{v:05d}-{i:06d}.parquet"
+            os.link(src, os.path.join(path, name))
+            lines.append(json.dumps({"add": {
+                "path": name, "partitionValues": {}, "size": size,
+                "modificationTime": v, "dataChange": True}}))
+        with open(os.path.join(path, "_delta_log", f"{v:020d}.json"), "w") as fh:
+            fh.write("\n".join(lines) + "\n")
+
+    def build():
+        return table_changes(spark, path, 0, commits - 1)
+
+    def build_count():
+        n = build().count()
+        assert n == 10 * (1 + (commits - 1) * adds), n
+
+    build_count()  # warm
+    return _timed(build), _timed(build_count)
 
 
 def _extract_large_table() -> str | None:
@@ -273,6 +331,13 @@ def main() -> int:
                 results["read_metadata_300k_incr_refresh"] = _timed(refresh)
                 prior.unpersist()
 
+    # change-feed planning arms: reported apart, so ``value`` stays
+    # comparable with runs that predate them
+    cdf: dict[str, float] = {}
+    with tempfile.TemporaryDirectory(prefix="dkrs_cdf_bench_") as root:
+        for name, commits, adds in CDF_ARMS:
+            cdf[f"{name}_build"], cdf[name] = _cdf_plan(spark, root, commits, adds)
+
     total = round(sum(results.values()), 3)
     print(
         json.dumps(
@@ -281,6 +346,8 @@ def main() -> int:
                 "value": total,
                 "unit": "sec",
                 "queries": results,
+                "cdf_plan_sec": round(sum(cdf.values()), 3),
+                "cdf_queries": cdf,
                 "adds": args.adds,
                 "commits": args.commits,
                 "files_seen": n_files,

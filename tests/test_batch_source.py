@@ -832,10 +832,10 @@ def test_format_cdf_schema_change_range_errors(spark, orders, tmp_path):
 
 
 def test_plan_cdf_events_never_lists_the_log(spark, orders, tmp_path, monkeypatch):
-    """_plan_cdf_events must stat only the [start, end] commit files —
+    """plan_change_events must stat only the [start, end] commit files —
     a full _delta_log listing per plan (streaming: per trigger) is
     O(log size) on long-lived tables."""
-    from delta_kernel_rs_spark.sources.batch_source import _plan_cdf_events
+    from delta_kernel_rs_spark.sources.cdf import plan_change_events
     from delta_kernel_rs_spark.sources.storage import storage_for_uri
 
     t = _cdf_fixture(spark, orders, str(tmp_path / "t"))
@@ -845,7 +845,7 @@ def test_plan_cdf_events_never_lists_the_log(spark, orders, tmp_path, monkeypatc
         raise AssertionError("list_dir called during CDF event planning")
 
     monkeypatch.setattr(type(storage), "list_dir", boom)
-    events = _plan_cdf_events(storage, t.path, 1, 2)
+    events = plan_change_events(storage, t.path, 1, 2)
     assert events.num_rows > 0
     assert set(events.column("version").to_pylist()) == {1, 2}
 

@@ -156,8 +156,7 @@ def test_facade_cdf_planning_never_decodes_dvs_on_driver(spark, tmp_path, monkey
     for the whole planning phase."""
     from pyspark.sql import functions as F
 
-    from delta_kernel_rs_spark import sources
-    from delta_kernel_rs_spark.sources import batch_source
+    from delta_kernel_rs_spark.sources.cdf import plan_change_events
     from delta_kernel_rs_spark.sources.delete import delete_with_dvs
     from delta_kernel_rs_spark.sources.storage import LocalStorage
     from delta_kernel_rs_spark.sources.table import DeltaTable
@@ -178,7 +177,7 @@ def test_facade_cdf_planning_never_decodes_dvs_on_driver(spark, tmp_path, monkey
         raise AssertionError("DV bitmap decoded on the driver during CDF planning")
 
     monkeypatch.setattr(dv_mod, "read_dv_row_indexes", boom)
-    events = batch_source._plan_cdf_events(LocalStorage(), path, 0, t.snapshot().version)
+    events = plan_change_events(LocalStorage(), path, 0, t.snapshot().version)
     assert events.num_rows >= 3
     kinds = set(events.column("kind").to_pylist())
     assert "swap" in kinds  # the DV delete classified without decoding

@@ -100,6 +100,20 @@ def test_partitioned_roundtrip_and_pruning(spark, orders, tmp_path):
     assert got_f.count() == orders.filter(F.col("o_orderstatus") == "F").count()
 
 
+def test_partitioned_create_at_a_file_uri_root(spark, tmp_path):
+    """A partitioned table created at a ``file://`` URI root records each
+    file's partition values, and reads back like the plain path."""
+    path = str(tmp_path / "t")
+    df = spark.range(0, 30).select(F.col("id").alias("k"), (F.col("id") % 3).alias("p"))
+    t = DeltaTable.create(spark, f"file://{path}", df=df, partition_by=["p"])
+    files = t.snapshot().scan().files()
+    assert {f.partition_values["p"] for f in files} == {"0", "1", "2"}
+    for table in (t, DeltaTable(spark, path)):
+        assert sorted((r.k, r.p) for r in table.to_df().collect()) == [
+            (i, i % 3) for i in range(30)
+        ]
+
+
 def test_data_skipping_minmax(spark, lineitem, tmp_path):
     path = str(tmp_path / "t")
     # write 4 files with disjoint l_orderkey ranges so min/max pruning bites

@@ -324,6 +324,21 @@ def test_delete_with_dvs_twice_merges_the_old_dv(spark, tmp_path):
         assert f.dv["cardinality"] == len(model.deleted[f.path])
 
 
+def test_delete_with_dvs_at_a_file_uri_root(spark, tmp_path):
+    """A table root given as a ``file://`` URI: the DV delete matches the
+    hit files to their log entries, reads back like the plain path, and
+    VACUUM finds nothing to remove."""
+    path = str(tmp_path / "t")
+    t = DeltaTable.create(spark, f"file://{path}", df=spark.range(0, 100, 1, 4))
+    assert delete_with_dvs(t, "id % 10 = 0") == 1
+    assert sum(1 for f in t.snapshot().scan().files() if f.dv) == 4
+    want = [i for i in range(100) if i % 10]
+    assert sorted(r.id for r in t.to_df().collect()) == want
+    assert sorted(r.id for r in DeltaTable(spark, path).to_df().collect()) == want
+    # every file is live: VACUUM must not take the log or the DV file for strays
+    assert t.vacuum(retention_ms=0, dry_run=True) == []
+
+
 def test_dml_on_dv_table(spark, tmp_path):
     t, model = _build(spark, str(tmp_path / "t"), partitioned=False, column_mapping=True)
     rows = model.logical()  # id -> (id, val, s)

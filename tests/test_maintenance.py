@@ -288,6 +288,33 @@ def test_restore_to_version(spark, tmp_path):
     assert t.restore(version=t.snapshot().version) == 4
 
 
+def test_restore_at_file_uri_root(spark, tmp_path):
+    """A table root given as a ``file://`` URI: the restore commit's
+    removes name the same relative paths as the adds they cancel (a path
+    that kept the scheme would remove nothing and double the rows)."""
+    import json
+
+    path = str(tmp_path / "t")
+    t = DeltaTable.create(spark, f"file://{path}", df=spark.range(100).toDF("x"))  # v0
+    t.append(spark.range(100, 200).toDF("x"), auto_checkpoint=False)         # v1
+    t.delete("x % 2 = 0")                                                    # v2
+    assert t.restore(version=1) == 3
+    assert _xs(t) == list(range(200))
+    assert t.restore(version=0) == 4
+    assert _xs(t) == list(range(100))
+
+    def actions(v, kind):
+        with open(f"{path}/_delta_log/{v:020d}.json") as fh:
+            lines = [json.loads(line) for line in fh if line.strip()]
+        return {a[kind]["path"] for a in lines if kind in a}
+
+    added = set().union(*(actions(v, "add") for v in range(4)))
+    for v in (3, 4):
+        removed = actions(v, "remove")
+        assert removed and removed <= added
+        assert not any(p.startswith(("file:", "/")) for p in removed)
+
+
 def test_restore_reverts_schema_change(spark, tmp_path):
     from pyspark.sql import types as T
 

@@ -87,3 +87,31 @@ def test_arrow_local_list_from_never_pages_the_directory(monkeypatch, log_dir):
     assert [f.path.rsplit("/", 1)[-1] for f in out] == [
         f"{v:020d}.json" for v in range(90, 100)
     ]
+
+
+def _handlers(spark, log_dir):
+    return [
+        LocalStorage(),
+        HadoopStorage(spark, f"file://{log_dir}"),
+        ArrowStorage(log_dir),
+    ]
+
+
+def test_stat_of_missing_path_raises_file_not_found(spark, log_dir):
+    """Every handler's ``stat`` raises FileNotFoundError for a missing
+    path, so callers stat once instead of probing ``exists`` first."""
+    for st in _handlers(spark, log_dir):
+        assert st.stat(f"{log_dir}/{0:020d}.json").size == 3
+        with pytest.raises(FileNotFoundError):
+            st.stat(f"{log_dir}/{100:020d}.json")
+
+
+def test_read_text_returns_every_line(spark, log_dir):
+    """Every handler's ``read_text`` keeps every line of the file, a blank
+    line included (the Hadoop handler decodes one whole-file read)."""
+    path = f"{log_dir}/multi.json"
+    body = '{"a": 1}\n\n{"b": 2}\n'
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.write(body)
+    for st in _handlers(spark, log_dir):
+        assert st.read_text(path).splitlines() == ['{"a": 1}', "", '{"b": 2}']
