@@ -409,19 +409,21 @@ def dv_diff_from_df(desc_df, table_path: str):
     )
 
 
-def dv_blobs_from_hits_df(hits_df, table_path: str):
+def dv_blobs_from_hits_df(hits_df, table_path: str, old_dvs: dict[str, dict]):
     """Executor-side DV bitmap construction: one serialized roaring
     treemap per file.
 
     ``hits_df`` columns: ``__file_path``, ``__row_index`` (the newly
-    deleted rows) joined with the file's CURRENT DV descriptor fields
-    ``old_st``/``old_p``/``old_off`` (nulls when the file has no DV).
-    Groups by file; each executor task merges the existing DV's indexes,
-    serializes the treemap (reference DV writer kernel/src/actions/
-    deletion_vector_writer.rs), and emits ONE (file_path, blob,
-    cardinality) row. The driver collects only the compressed blobs —
-    never row-index lists, whose size is O(deleted rows) and unbounded
-    for a broad predicate on a 100 TB table.
+    deleted rows). ``old_dvs`` maps each candidate file that already has
+    a deletion vector (plain absolute path, as ``__file_path`` spells it)
+    to its CURRENT descriptor; like :func:`live_row_filter`'s, it is
+    O(DV files) and travels in the task closure, so no join brings the
+    descriptors to the hits. Groups by file; each executor task merges
+    the existing DV's indexes, serializes the treemap (reference DV
+    writer kernel/src/actions/deletion_vector_writer.rs), and emits ONE
+    (file_path, blob, cardinality) row. The driver collects only the
+    compressed blobs — never row-index lists, whose size is O(deleted
+    rows) and unbounded for a broad predicate on a 100 TB table.
     """
     import pandas as pd
 
@@ -430,13 +432,8 @@ def dv_blobs_from_hits_df(hits_df, table_path: str):
 
         path = pdf["__file_path"].iloc[0]
         idx = {int(i) for i in pdf["__row_index"]}
-        st = pdf["old_st"].iloc[0]
-        if st is not None and not (isinstance(st, float) and pd.isna(st)):
-            dv = {
-                "storageType": st,
-                "pathOrInlineDv": pdf["old_p"].iloc[0],
-                "offset": pdf["old_off"].iloc[0],
-            }
+        dv = old_dvs.get(path)
+        if dv is not None:
             idx.update(deleted_row_indexes(table_path, dv, {}).tolist())
         data = encode_treemap(sorted(idx))
         return pd.DataFrame(

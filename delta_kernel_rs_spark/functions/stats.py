@@ -14,8 +14,9 @@ with the truncation rules that are a *correctness contract* for readers:
 * non-finite floats are excluded from min/max;
 * binary is excluded from min/max entirely.
 
-The collection itself is a distributed Spark job (groupBy file path), not a
-driver loop — at 100 TB a single commit can add thousands of files.
+The collection itself reads parquet footers on the executors
+(``collect_file_stats_footer``), not in a driver loop — at 100 TB a single
+commit can add thousands of files.
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 STRING_PREFIX_LEN = 32
@@ -103,53 +103,6 @@ def stats_selection(
         "stats_columns": explicit,
         "required": frozenset(phys_of.get(c, c) for c in clustering_cols),
     }
-
-
-def collect_file_stats(
-    spark: SparkSession,
-    paths: list[str],
-    read_schema: T.StructType,
-    num_indexed: int = DEFAULT_NUM_INDEXED_COLS,
-    stats_columns: tuple | None = None,
-    required: frozenset = frozenset(),
-) -> dict[str, dict[str, Any]]:
-    """Distributed stats job: one output row per file.
-
-    Returns ``{normalized_file_path: {"numRecords": n, "min": {...},
-    "max": {...}, "nullCount": {...}}}`` with raw (untruncated) values —
-    truncation happens at JSON-serialization time.
-    """
-    from delta_kernel_rs_spark.sources.scan import normalize_file_path, read_named_files
-
-    df = read_named_files(spark, paths, schema=read_schema)
-    cols = eligible_stats_columns(read_schema, num_indexed, stats_columns, required)
-    aggs = [F.count(F.lit(1)).alias("__numRecords")]
-    for f in cols:
-        aggs.append(F.min(f.name).alias(f"__min__{f.name}"))
-        aggs.append(F.max(f.name).alias(f"__max__{f.name}"))
-        aggs.append(
-            F.sum(F.when(F.col(f.name).isNull(), 1).otherwise(0)).alias(
-                f"__null__{f.name}"
-            )
-        )
-    grouped = df.groupBy(
-        normalize_file_path(F.col("_metadata.file_path")).alias("__path")
-    ).agg(*aggs)
-    result: dict[str, dict[str, Any]] = {}
-    for row in grouped.collect():
-        d = row.asDict()
-        stats = {
-            "numRecords": d["__numRecords"],
-            "min": {},
-            "max": {},
-            "nullCount": {},
-        }
-        for f in cols:
-            stats["min"][f.name] = d[f"__min__{f.name}"]
-            stats["max"][f.name] = d[f"__max__{f.name}"]
-            stats["nullCount"][f.name] = d[f"__null__{f.name}"]
-        result[d["__path"]] = stats
-    return result
 
 
 def collect_file_stats_footer(

@@ -49,12 +49,3 @@ def md5_hash32(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
-
-def md5_hash32_hi(col: Column | str) -> Column:
-    """Second independent 32-bit hash: hex digits 9-16 of the same MD5.
-
-    One MD5 evaluation yields both halves of a 64-bit fingerprint — the
-    DuckDB twin is ``('0x'||substr(md5(x),9,8))::BIGINT``.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long")

@@ -375,21 +375,6 @@ class BoolLiteral(Predicate):
 
 
 @dataclass(frozen=True, eq=False)
-class OpaqueExpr(Expr):
-    """Engine-defined scalar expression (reference OpaqueExpressionOp,
-    expressions/mod.rs:194-275): an escape hatch for ops the AST lacks.
-    ``fn`` builds the Column from the child Columns — typically a built-in
-    composition or a pandas UDF; never part of data skipping."""
-
-    name: str
-    children: tuple[Expr, ...]
-    fn: Any  # Callable[[list[Column]], Column]
-
-    def to_spark(self) -> Column:
-        return self.fn([c.to_spark() for c in self.children])
-
-
-@dataclass(frozen=True, eq=False)
 class OpaquePredicate(Predicate):
     """Engine-defined predicate (the UDF surface) — reference
     OpaquePredicateOp, expressions/mod.rs:194-275.

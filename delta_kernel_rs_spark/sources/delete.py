@@ -8,6 +8,15 @@ deletion_vector_writer.rs).
 Both paths start from a predicate-pruned scan: files whose stats prove they
 cannot contain matching rows are never touched (that is the same skipping
 rewrite that drives reads — plans/data_skipping.py).
+
+File metadata is never queried with Spark: the removes, the DV delete's
+re-emitted adds and the rewrite read's per-file constants are built from
+the matched files' rows of the scan's driver-side Arrow table
+(``Scan.file_rows``), as the reference's ``update_deletion_vectors``
+builds its remove/add pair from scan-file rows it already holds. The
+Spark jobs left are the data passes: the candidate-row query (the DV
+bitmaps, or the matched paths) and the rewrite. The same helpers serve
+UPDATE, MERGE and replaceWhere (sources/update.py, sources/merge.py).
 """
 
 from __future__ import annotations
@@ -18,8 +27,13 @@ from pyspark.sql import functions as F
 
 from delta_kernel_rs_spark.functions.dv import write_dv_file
 from delta_kernel_rs_spark.plans.expressions import Predicate
-from delta_kernel_rs_spark.sources.scan import live_file_head, strip_file_scheme
+from delta_kernel_rs_spark.sources.scan import (
+    SCAN_FILES_SCHEMA,
+    live_file_head,
+    strip_file_scheme,
+)
 from delta_kernel_rs_spark.sources.transaction import _now_ms, begin
+
 
 def _dv_protocol_upgrade(snapshot) -> dict | None:
     """Protocol action enabling deletionVectors, or None if already enabled.
@@ -90,27 +104,32 @@ _FILE_META_COLS = (
     "size",
     "partition_values",
     "deletion_vector",
-    "base_row_id",
-    "default_row_commit_version",
 )
 
 
-class _FileMeta:
-    """Per-file remove metadata (ScanFile-shaped, built from a BOUNDED
-    collect of matched files only — never the whole snapshot)."""
+def _remove_action(table, row: dict, data_change: bool = True, ts: int | None = None) -> dict:
+    """The remove that cancels a live file, from its scan row (a dict
+    keyed like ``SCAN_FILES_SCHEMA``: an Arrow row of ``Scan.file_rows``
+    or a Spark row's ``asDict(recursive=True)``)."""
+    return {
+        "remove": {
+            "path": _rel_path(table.path, row["file_path"]),
+            "deletionTimestamp": _now_ms() if ts is None else ts,
+            "dataChange": data_change,
+            "extendedFileMetadata": True,
+            "partitionValues": dict(row["partition_values"] or {}),
+            "size": row["size"],
+            # Replay keys are (path, dv_unique_id): the remove must carry
+            # the file's current DV or it never cancels the live add
+            # (reference log_replay/mod.rs:32).
+            "deletionVector": row["deletion_vector"],
+        }
+    }
 
-    __slots__ = (
-        "path", "size", "partition_values", "dv", "base_row_id",
-        "default_row_commit_version",
-    )
 
-    def __init__(self, row):
-        self.path = row.file_path
-        self.size = row.size
-        self.partition_values = dict(row.partition_values or {})
-        self.dv = row.deletion_vector.asDict() if row.deletion_vector else None
-        self.base_row_id = row.base_row_id
-        self.default_row_commit_version = row.default_row_commit_version
+def _removes(table, scan, paths) -> list[dict]:
+    """Removes for the matched files, built from their Arrow scan rows."""
+    return [_remove_action(table, r) for r in scan.file_rows(paths).to_pylist()]
 
 
 def _scan_meta_df(scan):
@@ -118,64 +137,54 @@ def _scan_meta_df(scan):
     return scan.scan_files_df().drop("stats", "modification_time")
 
 
-def _paths_frame(spark, paths):
-    return spark.createDataFrame([(p,) for p in sorted(paths)], "file_path STRING")
-
-
-def _narrow(sfdf, spark, paths):
-    """Limit a scan-files frame to an explicit path subset (semi-join on a
-    small driver-built frame — O(matched) paths, broadcast)."""
-    return sfdf.join(F.broadcast(_paths_frame(spark, paths)), "file_path", "semi")
-
-
-def _collect_file_meta(sfdf) -> list[_FileMeta]:
-    """Bounded driver collect of remove-action metadata (no stats)."""
-    return [_FileMeta(r) for r in sfdf.select(*_FILE_META_COLS).collect()]
-
-
 def _candidate_frames(scan, head=None):
-    """Candidate-row frame: ``Scan.live_rows`` over ``scan_files_df()``,
-    the same live-row read ``Scan.to_df()`` uses — the only O(files)
-    driver state is the ``live_file_head`` list the parquet reader
-    requires; partition constants stay in a frame joined executor-side.
+    """Candidate-row frame: ``Scan.live_rows`` over the scan's files, the
+    same live-row read ``Scan.to_df()`` uses, exposing the logical columns
+    plus ``__file_path``/``__row_index``. Returns ``(df, head)``; ``df``
+    is None when no file is a candidate.
 
-    ``head``: optional ``live_file_head`` subset from a prior phase — the
-    rewrite phase passes the matched files so the second pass reads ONLY
-    them (a filter on the derived ``__file_path`` column could not prune
-    files; Catalyst doesn't push ``_metadata``-derived predicates).
+    Without ``head`` the candidates are the scan's skipping-pruned files:
+    ``head`` is ``live_file_head(scan_files_df())``, the one O(files)
+    driver list the parquet reader requires (a collect over the local
+    relation, planned on the driver: no Spark job), and the partition
+    constants join from that frame executor-side.
+
+    ``head``: a ``live_file_head`` subset from a prior phase — the rewrite
+    phase passes the matched files so the second pass reads ONLY them (a
+    filter on the derived ``__file_path`` column could not prune files;
+    Catalyst doesn't push ``_metadata``-derived predicates). Their
+    constants come from a local relation over their Arrow scan rows
+    (``Scan.file_rows``).
 
     Rows already hidden by a file's deletion vector are excluded up front
     (the per-file DV filter on executors): a rewrite or DV update must
     never resurrect them (reference keys replay by FileActionKey(path,
     dv_unique_id) — log_replay/mod.rs:32 — so the live rows are always
     "file minus current DV").
-
-    Returns ``(df, head, sfdf)``: ``df`` exposes the logical columns plus
-    ``__file_path``/``__row_index``; ``sfdf`` is the (lazy) file-metadata
-    frame narrowed to the same files, for bounded metadata collects.
     """
-    sfdf = _scan_meta_df(scan)
     if head is None:
+        sfdf = _scan_meta_df(scan)
         head = live_file_head(sfdf)
     else:
-        sfdf = _narrow(sfdf, scan.spark, [p for p, _ in head])
+        rows = scan.file_rows([p for p, _ in head])
+        sfdf = scan.spark.createDataFrame(rows, SCAN_FILES_SCHEMA)
     if not head:
-        return None, head, sfdf
-    return scan.live_rows(head, sfdf, file_cols=True), head, sfdf
+        return None, head
+    return scan.live_rows(head, sfdf, file_cols=True), head
 
 
 def delete_where(table, predicate) -> int:
     """Copy-on-write delete; returns the committed version."""
     snap = table.snapshot()
     scan = snap.scan(predicate=_typed_predicate(predicate, snap.schema))
-    df, head, _ = _candidate_frames(scan)
+    df, head = _candidate_frames(scan)
     pred_col = _pred_to_column(predicate)
     if df is None:
         return snap.version  # nothing can match — no-op
 
-    matched_paths = {
+    matched_paths = sorted(
         r.p for r in df.filter(pred_col).select(F.col("__file_path").alias("p")).distinct().collect()
-    }
+    )
     if not matched_paths:
         return snap.version
 
@@ -183,9 +192,7 @@ def delete_where(table, predicate) -> int:
     # not a __file_path filter over the full candidate set (which Catalyst
     # cannot use for file pruning).
     by_path = dict(head)
-    touched_df, _, matched_sfdf = _candidate_frames(
-        scan, head=[(p, by_path[p]) for p in sorted(matched_paths)]
-    )
+    touched_df, _ = _candidate_frames(scan, head=[(p, by_path[p]) for p in matched_paths])
     kept = touched_df.filter(~pred_col.eqNullSafe(F.lit(True))).select(
         *[f.name for f in snap.schema.fields]
     )
@@ -199,24 +206,7 @@ def delete_where(table, predicate) -> int:
             *[f.name for f in snap.schema.fields]
         )
         cdc_actions = _write_cdc_files(table, deleted_rows, snap, "delete")
-    removes = []
-    for info in _collect_file_meta(matched_sfdf):
-        removes.append(
-            {
-                "remove": {
-                    "path": _rel_path(table.path, info.path),
-                    "deletionTimestamp": _now_ms(),
-                    "dataChange": True,
-                    "extendedFileMetadata": True,
-                    "partitionValues": info.partition_values,
-                    "size": info.size,
-                    # Replay keys are (path, dv_unique_id): the remove must
-                    # carry the file's current DV or it never cancels the
-                    # live add (reference log_replay/mod.rs:32).
-                    "deletionVector": info.dv,
-                }
-            }
-        )
+    removes = _removes(table, scan, matched_paths)
     txn = begin(table, "DELETE", snap)
     txn.write_data(kept)
     txn.add_actions(removes + cdc_actions)
@@ -298,7 +288,7 @@ def delete_with_dvs(table, predicate) -> int:
             "use the copy-on-write delete"
         )
     scan = snap.scan(predicate=_typed_predicate(predicate, snap.schema))
-    df, head, sfdf = _candidate_frames(scan)
+    df, head = _candidate_frames(scan)
     if df is None:
         return snap.version
     pred_col = _pred_to_column(predicate)
@@ -307,24 +297,13 @@ def delete_with_dvs(table, predicate) -> int:
     # file, each task merges the file's current DV and serializes the
     # roaring treemap; the driver collects only (path, blob, cardinality)
     # — O(matched files) compressed bitmaps, never the O(deleted rows)
-    # index lists (round-6 verdict, What's wrong #2).
+    # index lists. The current DVs ride in the task closure, from ``head``.
     from delta_kernel_rs_spark.functions.dv import dv_blobs_from_hits_df
 
-    desc = sfdf.select(
-        F.col("file_path").alias("__file_path"),
-        F.col("deletion_vector.storageType").alias("old_st"),
-        F.col("deletion_vector.pathOrInlineDv").alias("old_p"),
-        F.col("deletion_vector.offset").alias("old_off"),
-    )
-    if len(head) <= 100_000:
-        desc = F.broadcast(desc)
-    hits = (
-        df.filter(pred_col)
-        .select("__file_path", "__row_index")
-        .join(desc, "__file_path", "left")
-    )
+    hits = df.filter(pred_col).select("__file_path", "__row_index")
+    old_dvs = {p: dv for p, dv in head if dv is not None}
     blob_rows = sorted(
-        dv_blobs_from_hits_df(hits, table.path).collect(),
+        dv_blobs_from_hits_df(hits, table.path, old_dvs).collect(),
         key=lambda r: r.file_path,
     )
     if not blob_rows:
@@ -334,49 +313,32 @@ def delete_with_dvs(table, predicate) -> int:
         table.storage, table.path, [bytes(r.blob) for r in blob_rows]
     )
 
-    # Re-emitted adds need the full metadata row (stats keep skipping
-    # working after the swap) — collected for the MATCHED files only via
-    # an in-plan semi-join, never the whole snapshot (round-6 verdict,
-    # What's wrong #1).
-    matched_meta = {
-        r.file_path: r
-        for r in _narrow(
-            scan.scan_files_df(), table.spark, [r.file_path for r in blob_rows]
-        ).collect()
+    # Each matched file's remove/add pair re-emits its scan row from the
+    # Arrow table (stats keep skipping working after the swap; row-tracking
+    # fields keep their lineage), the way the reference's
+    # update_deletion_vectors builds the pair from the scan-file rows it
+    # holds (transaction/update.rs).
+    matched = {
+        r["file_path"]: r
+        for r in scan.file_rows([r.file_path for r in blob_rows]).to_pylist()
     }
-
     upgrade = _dv_protocol_upgrade(snap)
     actions = [upgrade] if upgrade else []
     for blob_row, (offset, size) in zip(blob_rows, spans):
-        row = matched_meta[blob_row.file_path]
-        rel = _rel_path(table.path, blob_row.file_path)
-        pv = dict(row.partition_values or {})
-        old_dv = row.deletion_vector.asDict() if row.deletion_vector else None
-        actions.append(
-            {
-                "remove": {
-                    "path": rel,
-                    "deletionTimestamp": _now_ms(),
-                    "dataChange": True,
-                    "extendedFileMetadata": True,
-                    "partitionValues": pv,
-                    "size": row.size,
-                    "deletionVector": old_dv,
-                }
-            }
-        )
+        row = matched[blob_row.file_path]
+        remove = _remove_action(table, row)
+        actions.append(remove)
         actions.append(
             {
                 "add": {
-                    "path": rel,
-                    "partitionValues": pv,
-                    "size": row.size,
-                    "modificationTime": row.modification_time,
+                    "path": remove["remove"]["path"],
+                    "partitionValues": remove["remove"]["partitionValues"],
+                    "size": row["size"],
+                    "modificationTime": row["modification_time"],
                     "dataChange": True,
-                    "stats": row.stats,
-                    # Preserve row-tracking lineage across the DV swap.
-                    "baseRowId": row.base_row_id,
-                    "defaultRowCommitVersion": row.default_row_commit_version,
+                    "stats": row["stats"],
+                    "baseRowId": row["base_row_id"],
+                    "defaultRowCommitVersion": row["default_row_commit_version"],
                     "deletionVector": {
                         "storageType": "u",
                         "pathOrInlineDv": uuid_enc,

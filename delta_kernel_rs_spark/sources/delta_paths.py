@@ -90,10 +90,6 @@ def compacted_filename(start: int, end: int) -> str:
     return f"{start:020d}.{end:020d}.compacted.json"
 
 
-def crc_filename(version: int) -> str:
-    return f"{version:020d}.crc"
-
-
 def is_local_path(path: str) -> bool:
     """True for a local filesystem path: no scheme, or ``file:``."""
     return "://" not in path or path.startswith("file://")

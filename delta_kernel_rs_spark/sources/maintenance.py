@@ -21,9 +21,8 @@ from __future__ import annotations
 
 from delta_kernel_rs_spark.sources.delete import (
     _FILE_META_COLS,
-    _FileMeta,
     _candidate_frames,
-    _rel_path,
+    _remove_action,
     _scan_meta_df,
 )
 from delta_kernel_rs_spark.sources.scan import live_file_head
@@ -122,7 +121,7 @@ def _rewrite_files(
     head = live_file_head(sel_sfdf)
     if not head:
         return snap.version
-    df, _, _ = _candidate_frames(scan, head=head)
+    df, _ = _candidate_frames(scan, head=head)
     kept = df.select(*[f.name for f in snap.schema.fields])
     total = (sel_sfdf.agg(F.sum("size").alias("s")).collect()[0].s) or 0
     n_out = max(1, (total + target_bytes - 1) // target_bytes)
@@ -151,18 +150,7 @@ def _rewrite_files(
 
     def _removes():
         for r in meta_df.toLocalIterator():
-            m = _FileMeta(r)
-            yield {
-                "remove": {
-                    "path": _rel_path(table.path, m.path),
-                    "deletionTimestamp": ts,
-                    "dataChange": False,
-                    "extendedFileMetadata": True,
-                    "partitionValues": m.partition_values,
-                    "size": m.size,
-                    "deletionVector": m.dv,
-                }
-            }
+            yield _remove_action(table, r.asDict(recursive=True), data_change=False, ts=ts)
 
     txn = begin(table, operation, snap)
     txn.data_change = False

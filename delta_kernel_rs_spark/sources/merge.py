@@ -14,7 +14,7 @@ Execution shape (the same two-phase targeted-read plan as DELETE):
   matched clause fires (one distributed job, one small collect of paths);
 * phase 2 re-reads ONLY those files, applies first-firing-clause-wins
   semantics per row, and rewrites them (unmatched and no-clause rows pass
-  through untouched);
+  through untouched); their removes come from the scan's Arrow table;
 * files with no firing row are never rewritten — stats-pruned exactly
   like DELETE;
 * with CDF enabled, cdc files record update_preimage / update_postimage /
@@ -37,11 +37,10 @@ from pyspark.sql import functions as F
 
 from delta_kernel_rs_spark.sources.delete import (
     _candidate_frames,
-    _collect_file_meta,
-    _rel_path,
+    _removes,
     _write_cdc_files,
 )
-from delta_kernel_rs_spark.sources.transaction import _now_ms, begin
+from delta_kernel_rs_spark.sources.transaction import begin
 
 
 class MergeError(Exception):
@@ -163,7 +162,7 @@ def merge(
         return F.lit(None)
 
     scan = snap.scan()
-    df, head, _ = _candidate_frames(scan)
+    df, head = _candidate_frames(scan)
 
     def joined_over(target: DataFrame) -> DataFrame:
         tdf = target.select(
@@ -198,24 +197,24 @@ def merge(
     removes: list[dict] = []
     out: DataFrame | None = inserts
 
-    matched_paths: set[str] = set()
+    matched_paths: list[str] = []
     if df is not None and clauses:
         # Phase 1: which files contain a row where some matched clause fires?
-        matched_paths = {
+        matched_paths = sorted(
             r.p
             for r in joined_over(df)
             .filter(F.col("__action") != "keep")
             .select(F.col("__file_path").alias("p"))
             .distinct()
             .collect()
-        }
+        )
 
     if matched_paths:
         # Phase 2: targeted re-read of ONLY the matched files (a
         # __file_path filter over the full scan cannot prune files).
         by_path = dict(head)
-        touched, _, matched_sfdf = _candidate_frames(
-            scan, head=[(p, by_path[p]) for p in sorted(matched_paths)]
+        touched, _ = _candidate_frames(
+            scan, head=[(p, by_path[p]) for p in matched_paths]
         )
         tj = joined_over(touched)
         upd = [updated_value(c).cast(types[c]).alias(c) for c in cols]
@@ -243,20 +242,7 @@ def merge(
             if inserts is not None:
                 cdc_actions += _write_cdc_files(table, inserts, snap, "insert")
 
-        for info in _collect_file_meta(matched_sfdf):
-            removes.append(
-                {
-                    "remove": {
-                        "path": _rel_path(table.path, info.path),
-                        "deletionTimestamp": _now_ms(),
-                        "dataChange": True,
-                        "extendedFileMetadata": True,
-                        "partitionValues": info.partition_values,
-                        "size": info.size,
-                        "deletionVector": info.dv,
-                    }
-                }
-            )
+        removes = _removes(table, scan, matched_paths)
     elif inserts is not None and snap.metadata.cdf_enabled:
         cdc_actions += _write_cdc_files(table, inserts, snap, "insert")
 

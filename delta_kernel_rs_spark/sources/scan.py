@@ -11,7 +11,8 @@ and the path collect in ``to_df`` run as zero Spark jobs; the frame joins
 executor-side only where file constants (partition values, row-id
 constants) meet the data rows. Deletion vectors apply as a per-file keep
 filter on the executors (``Scan.live_rows``, the read the DML paths
-share).
+share). The DML paths look up the metadata of the files they rewrite
+in the same Arrow table (``Scan.file_rows``).
 
 Every read of files the log names (data files, commits, checkpoint
 parts, sidecars, change files) goes through :func:`read_named_files`,
@@ -561,6 +562,16 @@ class Scan:
         while len(_SCAN_FILES_CACHE) > _SCAN_FILES_CACHE_MAX:
             _SCAN_FILES_CACHE.popitem(last=False)
         return hit
+
+    def file_rows(self, paths) -> pa.Table:
+        """The scan rows (:data:`SCAN_FILES_SCHEMA`) of the live files at
+        ``paths`` (absolute, as ``file_path`` spells them), taken from the
+        snapshot's driver-side Arrow table: a metadata lookup that starts
+        no Spark job. The caller names the files, so no skipping
+        predicate applies."""
+        rows = self._live_files()[0]
+        wanted = pa.array(list(paths), pa.string())
+        return rows.filter(pc.is_in(rows.column("file_path"), value_set=wanted))
 
     def scan_files_df(self) -> DataFrame:
         """One row per live file: absolute path + file-constant columns

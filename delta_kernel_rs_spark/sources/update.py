@@ -21,7 +21,9 @@ UPDATE semantics): all assignments evaluate against the old row, so
 ``{"a": "b", "b": "a"}`` swaps the columns.
 
 Scale posture: phase 1 collects file PATHS only (O(matched files), never
-rows); the rewrite reads exactly the matched files; generated / identity /
+rows); the rewrite reads exactly the matched files, and their removes and
+per-file constants come from the scan's driver-side Arrow table
+(``Scan.file_rows``), not from a Spark query; generated / identity /
 default column policies and CHECK-constraint verification ride the staged
 write through Transaction.write_data, unchanged from append.
 """
@@ -34,39 +36,18 @@ from pyspark.sql import functions as F
 from delta_kernel_rs_spark.sources.delete import (
     _FILE_META_COLS,
     _candidate_frames,
-    _collect_file_meta,
     _pred_to_column,
-    _rel_path,
+    _remove_action,
+    _removes,
     _scan_meta_df,
     _typed_predicate,
     _write_cdc_files,
 )
-from delta_kernel_rs_spark.sources.transaction import (
-    AppendOnlyError,
-    _now_ms,
-    begin,
-)
+from delta_kernel_rs_spark.sources.transaction import AppendOnlyError, begin
 
 
 class UpdateError(Exception):
     pass
-
-
-def _remove_action(table, info) -> dict:
-    return {
-        "remove": {
-            "path": _rel_path(table.path, info.path),
-            "deletionTimestamp": _now_ms(),
-            "dataChange": True,
-            "extendedFileMetadata": True,
-            "partitionValues": info.partition_values,
-            "size": info.size,
-            # Replay keys are (path, dv_unique_id): the remove must carry
-            # the file's current DV or it never cancels the live add
-            # (reference log_replay/mod.rs:32).
-            "deletionVector": info.dv,
-        }
-    }
 
 
 def update_where(
@@ -89,26 +70,24 @@ def update_where(
         raise UpdateError("UPDATE needs at least one assignment")
 
     scan = snap.scan(predicate=_typed_predicate(predicate, snap.schema))
-    df, head, _ = _candidate_frames(scan)
+    df, head = _candidate_frames(scan)
     if df is None:
         return snap.version  # stats prove nothing can match
     pred_col = _pred_to_column(predicate)
     hit = pred_col.eqNullSafe(F.lit(True))
 
-    matched_paths = {
+    matched_paths = sorted(
         r.p
         for r in df.filter(hit)
         .select(F.col("__file_path").alias("p"))
         .distinct()
         .collect()
-    }
+    )
     if not matched_paths:
         return snap.version
 
     by_path = dict(head)
-    touched, _, matched_sfdf = _candidate_frames(
-        scan, head=[(p, by_path[p]) for p in sorted(matched_paths)]
-    )
+    touched, _ = _candidate_frames(scan, head=[(p, by_path[p]) for p in matched_paths])
 
     def new_val(c: str) -> Column:
         a = assignments.get(c)
@@ -135,7 +114,7 @@ def update_where(
             "update_postimage",
         )
 
-    removes = [_remove_action(table, m) for m in _collect_file_meta(matched_sfdf)]
+    removes = _removes(table, scan, matched_paths)
 
     txn = begin(table, "UPDATE", snap)
     txn.write_data(rewritten)
@@ -165,15 +144,13 @@ def overwrite(table, df: DataFrame) -> int:
     # action list.
     sfdf = _scan_meta_df(snap.scan()).select(*_FILE_META_COLS)
 
-    def _removes():
-        from delta_kernel_rs_spark.sources.delete import _FileMeta
-
+    def removes():
         for r in sfdf.toLocalIterator():
-            yield _remove_action(table, _FileMeta(r))
+            yield _remove_action(table, r.asDict(recursive=True))
 
     txn = begin(table, "OVERWRITE", snap)
     txn.write_data(df)
-    txn.add_actions_stream(_removes)
+    txn.add_actions_stream(removes)
     version = txn.commit()
     if version != snap.version:
         table.maybe_write_crc(version)
@@ -203,24 +180,24 @@ def overwrite_where(table, df: DataFrame, predicate) -> int:
         )
 
     scan = snap.scan(predicate=_typed_predicate(predicate, snap.schema))
-    cand, head, _ = _candidate_frames(scan)
+    cand, head = _candidate_frames(scan)
 
     kept: DataFrame | None = None
     cdc_actions: list[dict] = []
     removes: list[dict] = []
     if cand is not None:
         hit = pred_col.eqNullSafe(F.lit(True))
-        matched_paths = {
+        matched_paths = sorted(
             r.p
             for r in cand.filter(hit)
             .select(F.col("__file_path").alias("p"))
             .distinct()
             .collect()
-        }
+        )
         if matched_paths:
             by_path = dict(head)
-            touched, _, matched_sfdf = _candidate_frames(
-                scan, head=[(p, by_path[p]) for p in sorted(matched_paths)]
+            touched, _ = _candidate_frames(
+                scan, head=[(p, by_path[p]) for p in matched_paths]
             )
             kept = touched.filter(~hit).select(*cols)
             if snap.metadata.cdf_enabled:
@@ -232,9 +209,7 @@ def overwrite_where(table, df: DataFrame, predicate) -> int:
                 cdc_actions += _write_cdc_files(
                     table, df.select(*cols), snap, "insert"
                 )
-            removes = [
-                _remove_action(table, m) for m in _collect_file_meta(matched_sfdf)
-            ]
+            removes = _removes(table, scan, matched_paths)
 
     out = df.select(*cols) if kept is None else kept.unionByName(df.select(*cols))
 

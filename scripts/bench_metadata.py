@@ -27,11 +27,16 @@ this engine's analogues, per BASELINE.md's replication list:
   happy path. ``--skip-large`` omits it (table extraction needs the
   reference checkout).
 
+- ``write_*``: append, DV delete (``write_dv_delete_1pct``), OPTIMIZE and
+  checkpoint on a 200-file table; ``spark_jobs`` gives the Spark job
+  count of each of the DV delete's timed runs.
+
 Prints ONE JSON line so the per-round artifact can feed
 scripts/bench_compare.py exactly like BENCH does:
 
     {"metric": "metadata_bench_sec", "value": <total>, "unit": "sec",
      "queries": {"read_metadata_log_only": ..., ...}, "adds": 10000,
+     "spark_jobs": {"write_dv_delete_1pct": [<jobs>, <jobs>]},
      "cdf_plan_sec": <total>, "cdf_queries": {...}}
 
 Usage: python scripts/bench_metadata.py [--adds 10000] [--commits 20]
@@ -148,6 +153,20 @@ def _extract_large_table() -> str | None:
     return dest
 
 
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` starts: run it under its own job group and
+    count that group's jobs with the status tracker."""
+    sc = spark.sparkContext
+    group = f"bench-metadata-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _timed(fn, reps: int = 2) -> float:
     best = float("inf")
     for _ in range(reps):
@@ -170,6 +189,7 @@ def main() -> int:
 
     spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     results: dict[str, float] = {}
+    spark_jobs: dict[str, list[int]] = {"write_dv_delete_1pct": []}
 
     with tempfile.TemporaryDirectory(prefix="dkrs_meta_bench_") as root:
         path = os.path.join(root, "tbl")
@@ -249,10 +269,13 @@ def main() -> int:
         )
 
         # ~1% of rows (one of 97 v-buckets), DVs across many files — the
-        # realistic worst case for row-level deletes
+        # realistic worst case for row-level deletes; each delete's Spark
+        # job count is reported beside the time
         preds = iter(["v = 3", "v = 5"])
         results["write_dv_delete_1pct"] = _timed(
-            lambda: delete_with_dvs(wt, next(preds))
+            lambda: spark_jobs["write_dv_delete_1pct"].append(
+                _spark_jobs(spark, lambda: delete_with_dvs(wt, next(preds)))
+            )
         )
 
         t0 = time.perf_counter()
@@ -346,6 +369,7 @@ def main() -> int:
                 "value": total,
                 "unit": "sec",
                 "queries": results,
+                "spark_jobs": spark_jobs,
                 "cdf_plan_sec": round(sum(cdf.values()), 3),
                 "cdf_queries": cdf,
                 "adds": args.adds,

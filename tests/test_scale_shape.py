@@ -370,27 +370,43 @@ def test_dml_paths_never_materialize_scan_files(spark, tmp_path, monkeypatch):
     assert t.to_df().count() == 50
 
 
-def test_dv_delete_collects_only_blobs_and_matched_meta(spark, tmp_path, monkeypatch):
-    """dv_delete_where driver collects are bounded (round-6 verdict,
-    What's wrong #1-#2): no collected frame ever carries ``__row_index``
-    (bitmaps serialize executor-side via applyInPandas) and any frame
-    carrying ``stats`` collects at most O(matched files) rows."""
-    from pyspark.sql import DataFrame
+def _spy_collects(spark, monkeypatch) -> list[tuple[tuple, int, int]]:
+    """Record every ``collect`` on the session's DataFrame class as
+    (columns, rows, Spark jobs it started). The class is the concrete one
+    (on PySpark 4 ``pyspark.sql.classic.dataframe.DataFrame``, which
+    overrides ``pyspark.sql.DataFrame.collect``)."""
+    cls = type(spark.range(0))
+    orig = cls.collect
+    seen: list[tuple[tuple, int, int]] = []
 
+    def spy(self):
+        rows, stages = _jobs_started(spark, lambda: orig(self))
+        seen.append((tuple(self.columns), len(rows), len(stages)))
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    return seen
+
+
+#: ``live_file_head``'s collect: the candidate list, planned over the
+#: scan's local relation on the driver (no Spark job)
+_HEAD_COLS = ("file_path", "st", "dv", "off")
+
+
+def test_dv_delete_collects_only_blobs_and_matched_meta(spark, tmp_path, monkeypatch):
+    """A DV delete's one driver collect that runs Spark jobs is the blob
+    frame, O(matched files) rows: bitmaps serialize executor-side, the
+    current DVs ride in the task closure, and the matched files' metadata
+    comes from the scan's Arrow table. The only other collect is the
+    candidate list over the local relation, which starts no job. No
+    collected frame carries ``stats`` or ``__row_index``."""
     from delta_kernel_rs_spark.sources.delete import delete_with_dvs
 
     path = str(tmp_path / "tbl")
     t = DeltaTable.create(spark, path, df=_ints(spark, 0, 400, partitions=4))
+    delete_with_dvs(t, "k = 0")  # the second delete merges an existing DV
 
-    collected: list[tuple[tuple, int]] = []
-    orig = DataFrame.collect
-
-    def spy(self):
-        rows = orig(self)
-        collected.append((tuple(self.columns), len(rows)))
-        return rows
-
-    monkeypatch.setattr(DataFrame, "collect", spy)
+    seen = _spy_collects(spark, monkeypatch)
     delete_with_dvs(t, "k < 100")  # hits a subset of the 4 files
     monkeypatch.undo()
 
@@ -398,11 +414,93 @@ def test_dv_delete_collects_only_blobs_and_matched_meta(spark, tmp_path, monkeyp
         1 for f in t.snapshot().scan().files() if f.dv and f.dv.get("cardinality")
     )
     assert matched >= 1
-    for cols, n in collected:
+    assert seen, "the spy saw no collect"
+    for cols, _, _ in seen:
         assert "__row_index" not in cols, "row-index frame collected to driver"
-        if "stats" in cols:
-            assert n <= matched, f"stats collected for {n} files (matched={matched})"
+        assert "stats" not in cols, "file metadata collected with Spark"
+    blobs = [(n, jobs) for cols, n, jobs in seen if cols == ("file_path", "blob", "cardinality")]
+    assert len(blobs) == 1 and blobs[0][0] == matched and blobs[0][1] >= 1
+    assert [(cols, jobs) for cols, _, jobs in seen if cols != ("file_path", "blob", "cardinality")] == [
+        (_HEAD_COLS, 0)
+    ]
     assert t.to_df().count() == 300
+
+
+def test_dv_delete_hit_plan_joins_no_file_metadata(spark, tmp_path, monkeypatch):
+    """The DV delete's hit query takes the candidate files' DVs from its
+    closure: its executed plan has no ``BroadcastExchange`` over the
+    scan-files relation. Unpartitioned, it has none at all; partitioned,
+    only the partition-constants broadcast every scan of the table has."""
+    from delta_kernel_rs_spark.functions import dv as dv_mod
+    from delta_kernel_rs_spark.sources.delete import delete_with_dvs
+
+    df = spark.range(0, 400, 1, 4).select(
+        F.col("id").alias("k"), (F.col("id") % 2).cast("string").alias("part")
+    )
+    for partition_by, broadcasts in ((None, 0), (["part"], 1)):
+        t = DeltaTable.create(
+            spark, str(tmp_path / f"tbl{broadcasts}"), df=df, partition_by=partition_by
+        )
+        delete_with_dvs(t, "k % 50 = 1")  # the second delete finds DVs
+        frames = []
+        orig = dv_mod.dv_blobs_from_hits_df
+
+        def spy(*args, **kwargs):
+            frames.append(orig(*args, **kwargs))
+            return frames[-1]
+
+        monkeypatch.setattr(dv_mod, "dv_blobs_from_hits_df", spy)
+        delete_with_dvs(t, "k % 50 = 2")
+        monkeypatch.undo()
+        assert len(frames) == 1
+        plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]  # AQE prints both
+        assert final.count("BroadcastExchange") == broadcasts, plan
+        assert t.to_df().count() == 400 - 16
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "overwrite_where", "merge"])
+def test_copy_on_write_collects_only_matched_paths(spark, tmp_path, monkeypatch, op):
+    """A copy-on-write statement collects the matched paths (phase 1) and
+    nothing else from the table: its removes and the rewrite's per-file
+    constants come from the scan's Arrow table. Besides the candidate
+    list (no Spark job) the only other collects check rows, not files:
+    the transaction's constraint check of the staged rows, MERGE's
+    duplicate-key check of its source and replaceWhere's check of its
+    input."""
+    from delta_kernel_rs_spark.sources.scan import SCAN_FILES_SCHEMA
+
+    path = str(tmp_path / "tbl")
+    t = DeltaTable.create(
+        spark,
+        path,
+        df=spark.range(0, 400, 1, 4).select(
+            F.col("id").alias("k"), (F.col("id") % 2).cast("string").alias("part")
+        ),
+        partition_by=["part"],
+    )
+    src = spark.createDataFrame([(5, "1"), (9000, "0")], "k LONG, part STRING")
+    run = {
+        "delete": lambda: t.delete("k < 100"),
+        "update": lambda: t.update("k < 100", {"k": "k + 1000"}),
+        "overwrite_where": lambda: t.overwrite_where(src.filter("part = '1'"), "part = '1'"),
+        "merge": lambda: t.upsert(src, keys=["k"]),
+    }[op]
+
+    seen = _spy_collects(spark, monkeypatch)
+    version = run()
+    monkeypatch.undo()
+    assert version == 1
+
+    assert [cols for cols, _, _ in seen].count(("p",)) == 1
+    file_cols = set(SCAN_FILES_SCHEMA.fieldNames()) | {"__row_index"}
+    for cols, _, jobs in seen:
+        if cols == _HEAD_COLS:
+            assert jobs == 0
+        elif cols != ("p",):
+            assert set(cols) <= {"k", "part", "count"}, cols
+            assert not set(cols) & file_cols
+    assert t.to_df().count() == {"delete": 300, "update": 400, "overwrite_where": 201, "merge": 401}[op]
 
 
 def test_incremental_refresh_never_materializes_scan_files(
