@@ -460,6 +460,24 @@ def normalize(p: Predicate) -> Predicate:
     return p
 
 
+def column_paths(node) -> set[str]:
+    """The column paths an expression or predicate references."""
+    out: set[str] = set()
+
+    def walk(n) -> None:
+        if isinstance(n, Col):
+            out.add(n.path)
+        for attr in ("expr", "left", "right", "child"):
+            sub = getattr(n, attr, None)
+            if sub is not None:
+                walk(sub)
+        for sub in getattr(n, "children", None) or getattr(n, "exprs", None) or ():
+            walk(sub)
+
+    walk(node)
+    return out
+
+
 # ---------------------------------------------------------------------------
 # Builders
 # ---------------------------------------------------------------------------

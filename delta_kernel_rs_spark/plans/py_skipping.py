@@ -1,29 +1,36 @@
-"""Pure-Python file skipping from Delta ``add.stats`` — the facade twin
-of plans/data_skipping.py.
+"""File skipping from Delta ``add.stats`` and partition values: the one
+data-skipping evaluator.
 
-The batch facade (sources/batch_source.py) plans inside a plain Python
-worker with no SparkSession, so it cannot run the Column-based skipping
-rewriter. This module evaluates the SAME verdict — "may this file contain
-a row matching the predicate?" — directly against one file's parsed
-stats document + typed partition values, mirroring the reference rules
-(kernel/src/scan/data_skipping.rs:32-52) case for case with
-plans/data_skipping._SkippingRewriter:
+``Scan`` (sources/scan.py) filters the version's driver-side Arrow scan
+rows with it before any Spark plan exists, and the batch facade
+(sources/batch_source.py) prunes its read tasks with it inside a plain
+Python worker with no SparkSession. Both call :meth:`FileSkipEvaluator.keep`,
+which answers "may this file contain a row matching the predicate?" for
+each file from its parsed stats document and typed partition values,
+following the reference rules (kernel/src/scan/data_skipping.rs:32-52):
 
     a < 10   ⇒  minValues.a < 10
     a > 10   ⇒  maxValues.a > 10
     a = 10   ⇒  minValues.a <= 10 AND maxValues.a >= 10
+    a != 10  ⇒  NOT (minValues.a = 10 AND maxValues.a = 10)
     a IS NULL     ⇒  nullCount.a > 0
     a IS NOT NULL ⇒  nullCount.a < numRecords
     AND / OR     Kleene; NOT eliminated up front (expressions.normalize)
 
-plus the keep-rule ``skip iff verdict is definitively False`` — missing
-stats, unrewritable atoms, and NULL comparisons all keep the file.
+plus the keep-rule ``skip iff verdict is definitively False`` (reference
+``DataSkippingFilter``, data_skipping.rs:92-223) — missing stats,
+unrewritable atoms, and NULL comparisons all keep the file. Comparisons
+are null-intolerant (SQL WHERE): a file whose column is all NULL never
+matches one. An :class:`~expressions.UnknownPredicate` is unknown; an
+:class:`~expressions.OpaquePredicate` is unknown unless it carries a
+``skipping_fn`` hook.
 
-Partition-column atoms delegate to py_predicate.eval_3vl over the typed
-partition row — exactly the evaluation the facade's planning pruning
-already used, so partition semantics cannot drift between the two paths.
+Partition-column atoms evaluate exactly with py_predicate.eval_3vl over
+the typed partition row (a NULL partition value makes a comparison
+FALSE, not unknown), so partition pruning and stats skipping are one
+filter, as in the reference.
 
-Soundness notes beyond the Spark twin:
+Soundness rules:
 
 * float/double stats parse back through ``float`` (shortest-roundtrip
   JSON repr), never Decimal — a Decimal parse understates a written max
@@ -33,11 +40,14 @@ Soundness notes beyond the Spark twin:
   written under JVM UTF-16 code-unit order, and the two orders diverge
   exactly for astral-plane strings.
 * timestamp max stats are ms-floored on write (functions/stats.py), so
-  the effective upper bound widens by 999µs — same adjustment as the
-  Spark rewriter's ``_max``.
+  the effective upper bound widens by 999µs (reference
+  ``adjust_scalar_for_max_stat_truncation``).
+* literals are compared in Python's exact domain, so a fractional
+  literal against an integer column or a timestamp against a date column
+  compares exactly instead of through a lossy cast.
 
-This module is differentially fuzzed against Spark row evaluation and
-the Spark rewriter in tests/test_skipping_fuzz.py.
+This module is differentially fuzzed against Spark row evaluation in
+tests/test_skipping_fuzz.py.
 """
 
 from __future__ import annotations
@@ -62,6 +72,7 @@ from delta_kernel_rs_spark.plans.expressions import (
     Literal,
     Not,
     NotDistinct,
+    OpaquePredicate,
     Or,
     Predicate,
 )
@@ -120,11 +131,12 @@ def _k_or(*vs) -> bool | None:
 
 
 class FileSkipEvaluator:
-    """Per-table evaluator; ``verdict`` is called once per candidate file.
+    """Per-table evaluator; :meth:`keep` filters a table of scan rows,
+    :meth:`verdict` decides one file.
 
     The predicate must already be literal-coerced
     (py_predicate.coerce_literals) and normalized (expressions.normalize)
-    by the caller — the same preconditions the Spark rewriter has.
+    by the caller.
     """
 
     def __init__(
@@ -150,6 +162,41 @@ class FileSkipEvaluator:
         }
         self.types = {f.name: f.dataType for f in schema.fields}
         self.phys = {f.name: physical_name(f) for f in schema.fields}
+
+    def keep(self, p: Predicate, files) -> list[bool]:
+        """Keep mask over an Arrow table of files with a
+        ``partition_values`` map (physical keys) and a ``stats`` JSON
+        column: False only where the file provably holds no matching
+        row."""
+        typed: dict = {}
+        out = []
+        for pv, stats in zip(
+            files.column("partition_values").to_pylist(),
+            files.column("stats").to_pylist(),
+        ):
+            key = tuple(pv or ())
+            row = typed.get(key)
+            if row is None:
+                row = typed[key] = self.typed_partition_row(pv)
+            out.append(self.verdict(p, row, stats) is not False)
+        return out
+
+    def typed_partition_row(self, pv_items) -> dict[str, Any]:
+        """``partitionValues`` entries (physical keys) → {logical name:
+        value in the column type's Python domain}. A value that does not
+        parse as its type is NULL, as Spark's cast makes it."""
+        from delta_kernel_rs_spark.streaming.cdf_source import _parse_pv_py
+
+        raw = dict(pv_items or ())
+        out = {}
+        for name in self.pcols:
+            try:
+                out[name] = _parse_pv_py(
+                    raw.get(self.phys[name], raw.get(name)), self.types[name]
+                )
+            except (ValueError, InvalidOperation):
+                out[name] = None
+        return out
 
     # -- stats document ----------------------------------------------------
     def parse_stats(self, stats_json: str | None) -> dict | None:
@@ -229,7 +276,7 @@ class FileSkipEvaluator:
             self.stat_types.get(name), (T.TimestampType, T.TimestampNTZType)
         ):
             # written max is floored to ms (functions/stats.py) — widen by
-            # exactly the truncation, same as the Spark rewriter's _max
+            # exactly the truncation
             v = v + _dt.timedelta(microseconds=999)
         return v
 
@@ -267,9 +314,15 @@ class FileSkipEvaluator:
             return _k_or(*(self._eval(c, pv, stats) for c in p.children))
         if isinstance(p, Not):
             # normalize() inverts NOT up front; a surviving NOT wraps an
-            # atom whose inversion wasn't expressible — same as the Spark
-            # rewriter's missing Not arm: unknown
+            # atom whose inversion wasn't expressible: unknown
             return None
+        if isinstance(p, OpaquePredicate):
+            # the engine's as_data_skipping_predicate hook (reference
+            # expressions/mod.rs:194-275); a negated op never uses the
+            # positive hook
+            if p.skipping_fn is None or p.negated:
+                return None
+            return p.skipping_fn(self, p.children, stats)
         return self._atom(p, pv, stats)
 
     def _atom(self, p: Predicate, pv: dict, stats: dict | None) -> bool | None:
@@ -287,9 +340,8 @@ class FileSkipEvaluator:
                 # SQL-WHERE null-intolerance on the exact partition value:
                 # a NULL on either side makes the comparison unsatisfiable
                 # for every row of the file — FALSE, not unknown-keep
-                # (parity with the Spark rewriter / reference
-                # eval_sql_where). A non-null cross-type mismatch stays
-                # unknown.
+                # (reference eval_sql_where). A non-null cross-type
+                # mismatch stays unknown.
                 if pv.get(c.path) is None or lit is None:
                     return False
                 return None
@@ -323,10 +375,13 @@ class FileSkipEvaluator:
         if isinstance(p, In):
             if isinstance(p.expr, Col) and p.expr.path in self.pcols:
                 # NULL partition value (or all-NULL member list): IN can
-                # never be TRUE — sql-where FALSE, matching the rewriter
+                # never be TRUE — sql-where FALSE
                 if pv.get(p.expr.path) is None:
                     return False
-                return None  # non-null mismatches handled by eval_3vl above
+                # NULL members never make IN true: under SQL WHERE the
+                # verdict is the non-null members'
+                members = tuple(x for x in p.values if x is not None)
+                return eval_3vl(In(p.expr, members), pv, self.pcols) if members else False
             if not (isinstance(p.expr, Col) and self._has_stats(p.expr)):
                 return None
             c = p.expr
@@ -359,7 +414,7 @@ class FileSkipEvaluator:
             out = _cmp3("ge", hi, prefix)
             nxt = ord(prefix[-1]) + 1
             if 0xD800 <= nxt <= 0xDFFF:
-                nxt = 0xE000  # same surrogate-safe successor as the rewriter
+                nxt = 0xE000  # a lone surrogate is no valid bound
             if nxt <= 0x10FFFF:
                 out = _k_and(out, _cmp3("lt", lo, prefix[:-1] + chr(nxt)))
             return _k_and(self._not_all_null(c.path, stats), out)
@@ -390,8 +445,8 @@ class FileSkipEvaluator:
 
     @staticmethod
     def _col_lit(p: Compare):
-        """col-vs-lit canonical shape (operator flipped on swap), else None
-        — same contract as the Spark rewriter's _col_lit."""
+        """col-vs-lit canonical shape (operator flipped on swap), else
+        None; callers dispatch on the flipped operator."""
         if isinstance(p.left, Col) and isinstance(p.right, Literal):
             return p
         if isinstance(p.left, Literal) and isinstance(p.right, Col):

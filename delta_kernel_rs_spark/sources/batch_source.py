@@ -389,21 +389,10 @@ class _FileSliceReadMixin:
         cached = getattr(self, "_pred_cols", None)
         if cached is not None:
             return cached
-        from delta_kernel_rs_spark.plans.expressions import Col as _Col
-
-        def walk(node, acc):
-            for attr in ("expr", "left", "right", "child"):
-                sub = getattr(node, attr, None)
-                if sub is not None:
-                    walk(sub, acc)
-            for sub in getattr(node, "children", ()) or ():
-                walk(sub, acc)
-            if isinstance(node, _Col):
-                acc.add(node.path)
-            return acc
+        from delta_kernel_rs_spark.plans.expressions import column_paths
 
         self._pred_cols = frozenset(
-            walk(self._predicate, set()) if self._predicate is not None else ()
+            column_paths(self._predicate) if self._predicate is not None else ()
         )
         return self._pred_cols
 
@@ -599,25 +588,18 @@ class DeltaKernelBatchReader(_FileSliceReadMixin, DataSourceReader):
         if self._predicate is not None and files.num_rows:
             # unified file skipping: exact partition pruning (typed 3VL
             # over partitionValues) + stats-based min/max skipping from
-            # add.stats — the facade twin of plans/data_skipping.py
-            # (reference data_skipping.rs keep-rule: drop a file only on a
+            # add.stats — the evaluator Scan plans with (reference
+            # data_skipping.rs keep-rule: drop a file only on a
             # definitively-False verdict; unknown always keeps)
+            import pyarrow as pa
+
             from delta_kernel_rs_spark.plans.expressions import normalize
             from delta_kernel_rs_spark.plans.py_skipping import FileSkipEvaluator
 
             ev = FileSkipEvaluator(
                 self._table_schema, self._pcols, self._configuration
             )
-            pred = normalize(self._predicate)
-            keep = [
-                ev.verdict(pred, self._pv_typed(pv), st) is not False
-                for pv, st in zip(
-                    files.column("partition_values").to_pylist(),
-                    files.column("stats").to_pylist(),
-                )
-            ]
-            import pyarrow as pa
-
+            keep = ev.keep(normalize(self._predicate), files)
             files = files.filter(pa.array(keep, type=pa.bool_()))
         # stats served planning; keep them off the executor IPC tasks
         files = files.drop_columns(["stats"])

@@ -21,14 +21,16 @@ Scale shape:
     serial per-commit cost is measured on local disk only
     (scripts/bench_metadata.py ``cdf_plan_*`` arms); on a remote store each
     commit costs two serial round trips, unmeasured;
-  * ``table_changes`` starts no Spark job before the read: the events
-    become a local relation (``spark.createDataFrame`` over the Arrow
-    table), and the per-kind path lists and DV flags come from the same
-    table through ``pyarrow.compute``;
+  * ``table_changes`` starts no Spark job before the read: the per-kind
+    path lists, DV flags and file constants come from the classifier's
+    Arrow table through ``pyarrow.compute``, and a change type with DVs
+    lifts its events into a local relation (``spark.createDataFrame``)
+    for the bitmap diffs;
   * the plan has a CONSTANT number of nodes regardless of range length
     (one parquet read per change *type*, not four arms per commit);
-  * per-file version/timestamp/partition-values constants join from the
-    events relation (broadcast);
+  * per-file version/timestamp/partition-values constants are literals
+    when a change type's events share one tuple (a one-commit append),
+    else they join from the events (broadcast);
   * DV bitmaps (old/new sibling pairs and exclusion sets) are decoded and
     diffed on EXECUTORS via ``functions.dv.dv_diff_from_df`` with
     descriptors built in-plan — the driver never decodes a bitmap.
@@ -59,6 +61,7 @@ from delta_kernel_rs_spark.sources.scan import (
     absolute_file_paths,
     normalize_file_path,
     read_named_files,
+    with_file_constants,
 )
 from delta_kernel_rs_spark.sources.snapshot import Snapshot
 
@@ -242,20 +245,6 @@ def table_changes(
         return spark.createDataFrame([], T.StructType(fields))
     kinds = planned.column("kind")
     file_paths = absolute_file_paths(planned.column("path"), table_path)
-    events = spark.createDataFrame(
-        pa.table(
-            {
-                "version": planned.column("version"),
-                "file_path": file_paths,
-                "kind": kinds,
-                "pv": planned.column("partition_values"),
-                "dv_new": planned.column("dv_new"),
-                "dv_old": planned.column("dv_old"),
-                "__ts": planned.column("ts_ms"),
-            }
-        )
-    )
-
     def has_dv(mask, dv_col: str) -> bool:
         dvs = pc.filter(planned.column(dv_col), mask)
         return pc.any(pc.is_valid(pc.struct_field(dvs, "storageType"))).as_py() or False
@@ -273,24 +262,37 @@ def table_changes(
             "__file_path", normalize_file_path(F.col("_metadata.file_path"))
         ).withColumn("__row_index", F.col("_metadata.row_index"))
 
+    def arm_rows(kind: str) -> pa.Table:
+        """One change type's events: path, constants and DV sides."""
+        mask = pc.equal(kinds, kind)
+        columns = {
+            "version": "version",
+            "pv": "partition_values",
+            "dv_new": "dv_new",
+            "dv_old": "dv_old",
+            "__ts": "ts_ms",
+        }
+        return pa.table(
+            {
+                "file_path": pc.filter(file_paths, mask),
+                **{name: pc.filter(planned.column(src), mask) for name, src in columns.items()},
+            }
+        )
+
     def arm_events(kind: str) -> DataFrame:
-        return events.filter(F.col("kind") == kind)
+        return spark.createDataFrame(arm_rows(kind))
 
     def join_constants(df: DataFrame, kind: str) -> DataFrame:
-        """Per-file (partition values, version, timestamp) via one broadcast
-        join — the constants side is the events relation (one row per
-        (version, path) event; the join is on
-        path alone, so a file with events at several versions fans out to
-        one change row set per version). The broadcast materializes in the
-        JVM only."""
-        consts = arm_events(kind).select(
-            F.col("file_path").alias("__const_path"),
-            F.col("pv").alias("__pv"),
-            F.col("version").alias("__v"),
-            F.col("__ts"),
-        )
-        return df.join(
-            F.broadcast(consts), df["__file_path"] == F.col("__const_path"), "inner"
+        """Per-file (partition values, version, timestamp) from the arm's
+        events (one row per (version, path) event; a file with events at
+        several versions yields one change row set per version):
+        literals when the arm's events share one tuple, else a broadcast
+        join (``scan.with_file_constants``)."""
+        return with_file_constants(
+            df,
+            arm_rows(kind),
+            {"pv": "__pv", "version": "__v", "__ts": "__ts"},
+            how="inner",
         )
 
     def logical_projection(df: DataFrame, change_type) -> DataFrame:
@@ -388,22 +390,19 @@ def table_changes(
         swap_df = with_lineage(
             read_named_files(spark, paths_by_kind["swap"], schema=read_schema)
         )
-        pv_consts = arm_events("swap").select(
-            F.col("file_path").alias("__const_path"),
-            F.col("pv").alias("__pv"),
-        ).dropDuplicates(["__const_path"])
-        joined = (
+        swaps = arm_rows("swap")
+        first: dict[str, int] = {}  # one pv row per swapped path
+        for i, p in enumerate(swaps.column("file_path").to_pylist()):
+            first.setdefault(p, i)
+        joined = with_file_constants(
             swap_df.join(
                 diff,
                 (swap_df["__file_path"] == F.col("dp"))
                 & (swap_df["__row_index"] == F.col("dri")),
                 "inner",
-            )
-            .join(
-                F.broadcast(pv_consts),
-                swap_df["__file_path"] == F.col("__const_path"),
-                "left",
-            )
+            ),
+            swaps.take(sorted(first.values())),
+            {"pv": "__pv"},
         )
         ct = F.when(F.col("side") == "new_only", F.lit("delete")).otherwise(
             F.lit("insert")

@@ -6,8 +6,8 @@ updates (``update_deletion_vectors``, DV writer kernel/src/actions/
 deletion_vector_writer.rs).
 
 Both paths start from a predicate-pruned scan: files whose stats prove they
-cannot contain matching rows are never touched (that is the same skipping
-rewrite that drives reads — plans/data_skipping.py).
+cannot contain matching rows are never touched (the same skipping
+evaluator that drives reads — plans/py_skipping.py).
 
 File metadata is never queried with Spark: the removes, the DV delete's
 re-emitted adds and the rewrite read's per-file constants are built from
@@ -26,12 +26,8 @@ import urllib.parse
 from pyspark.sql import functions as F
 
 from delta_kernel_rs_spark.functions.dv import write_dv_file
-from delta_kernel_rs_spark.plans.expressions import Predicate
-from delta_kernel_rs_spark.sources.scan import (
-    SCAN_FILES_SCHEMA,
-    live_file_head,
-    strip_file_scheme,
-)
+from delta_kernel_rs_spark.plans.expressions import Predicate, column_paths
+from delta_kernel_rs_spark.sources.scan import dv_descriptors, strip_file_scheme
 from delta_kernel_rs_spark.sources.transaction import _now_ms, begin
 
 
@@ -97,16 +93,6 @@ def _rel_path(table_path: str, abs_path: str) -> str:
     return "/".join(urllib.parse.quote(seg) for seg in rel.split("/"))
 
 
-#: remove-action metadata columns — everything a remove needs, and
-#: nothing more: stats / modification_time never ship to the driver.
-_FILE_META_COLS = (
-    "file_path",
-    "size",
-    "partition_values",
-    "deletion_vector",
-)
-
-
 def _remove_action(table, row: dict, data_change: bool = True, ts: int | None = None) -> dict:
     """The remove that cancels a live file, from its scan row (a dict
     keyed like ``SCAN_FILES_SCHEMA``: an Arrow row of ``Scan.file_rows``
@@ -132,29 +118,17 @@ def _removes(table, scan, paths) -> list[dict]:
     return [_remove_action(table, r) for r in scan.file_rows(paths).to_pylist()]
 
 
-def _scan_meta_df(scan):
-    """``scan_files_df()`` without the heavyweight plan-only columns."""
-    return scan.scan_files_df().drop("stats", "modification_time")
+def _candidate_frames(scan, paths=None):
+    """Candidate-row frame: ``Scan.live_rows``, the same live-row read
+    ``Scan.to_df()`` uses, exposing the logical columns plus
+    ``__file_path``/``__row_index``; None when no file is a candidate.
 
-
-def _candidate_frames(scan, head=None):
-    """Candidate-row frame: ``Scan.live_rows`` over the scan's files, the
-    same live-row read ``Scan.to_df()`` uses, exposing the logical columns
-    plus ``__file_path``/``__row_index``. Returns ``(df, head)``; ``df``
-    is None when no file is a candidate.
-
-    Without ``head`` the candidates are the scan's skipping-pruned files:
-    ``head`` is ``live_file_head(scan_files_df())``, the one O(files)
-    driver list the parquet reader requires (a collect over the local
-    relation, planned on the driver: no Spark job), and the partition
-    constants join from that frame executor-side.
-
-    ``head``: a ``live_file_head`` subset from a prior phase — the rewrite
-    phase passes the matched files so the second pass reads ONLY them (a
-    filter on the derived ``__file_path`` column could not prune files;
-    Catalyst doesn't push ``_metadata``-derived predicates). Their
-    constants come from a local relation over their Arrow scan rows
-    (``Scan.file_rows``).
+    Without ``paths`` the candidates are the scan's skipping-pruned files
+    (``Scan.kept_rows``, pruned on the driver: no Spark job). ``paths``
+    names the matched files of a prior phase — the rewrite phase reads
+    ONLY them (a filter on the derived ``__file_path`` column could not
+    prune files; Catalyst doesn't push ``_metadata``-derived predicates),
+    with their scan rows from ``Scan.file_rows``.
 
     Rows already hidden by a file's deletion vector are excluded up front
     (the per-file DV filter on executors): a rewrite or DV update must
@@ -162,22 +136,16 @@ def _candidate_frames(scan, head=None):
     dv_unique_id) — log_replay/mod.rs:32 — so the live rows are always
     "file minus current DV").
     """
-    if head is None:
-        sfdf = _scan_meta_df(scan)
-        head = live_file_head(sfdf)
-    else:
-        rows = scan.file_rows([p for p, _ in head])
-        sfdf = scan.spark.createDataFrame(rows, SCAN_FILES_SCHEMA)
-    if not head:
-        return None, head
-    return scan.live_rows(head, sfdf, file_cols=True), head
+    if paths is None:
+        return scan.read_kept(file_cols=True)
+    return scan.live_rows(scan.file_rows(paths), file_cols=True)
 
 
 def delete_where(table, predicate) -> int:
     """Copy-on-write delete; returns the committed version."""
     snap = table.snapshot()
     scan = snap.scan(predicate=_typed_predicate(predicate, snap.schema))
-    df, head = _candidate_frames(scan)
+    df = _candidate_frames(scan)
     pred_col = _pred_to_column(predicate)
     if df is None:
         return snap.version  # nothing can match — no-op
@@ -191,8 +159,7 @@ def delete_where(table, predicate) -> int:
     # Rewrite phase reads ONLY the matched files — a second targeted scan,
     # not a __file_path filter over the full candidate set (which Catalyst
     # cannot use for file pruning).
-    by_path = dict(head)
-    touched_df, _ = _candidate_frames(scan, head=[(p, by_path[p]) for p in matched_paths])
+    touched_df = _candidate_frames(scan, matched_paths)
     kept = touched_df.filter(~pred_col.eqNullSafe(F.lit(True))).select(
         *[f.name for f in snap.schema.fields]
     )
@@ -287,8 +254,15 @@ def delete_with_dvs(table, predicate) -> int:
             "deletion vectors are forbidden on icebergCompatV2 tables; "
             "use the copy-on-write delete"
         )
-    scan = snap.scan(predicate=_typed_predicate(predicate, snap.schema))
-    df, head = _candidate_frames(scan)
+    # The hit query reads only the predicate's columns, so a predicate on
+    # data columns joins no partition constants; an untyped string reads
+    # every column.
+    typed = _typed_predicate(predicate, snap.schema)
+    columns = None
+    if typed is not None:
+        columns = sorted({p.split(".")[0] for p in column_paths(typed)})
+    scan = snap.scan(predicate=typed, columns=columns)
+    df = _candidate_frames(scan)
     if df is None:
         return snap.version
     pred_col = _pred_to_column(predicate)
@@ -297,11 +271,11 @@ def delete_with_dvs(table, predicate) -> int:
     # file, each task merges the file's current DV and serializes the
     # roaring treemap; the driver collects only (path, blob, cardinality)
     # — O(matched files) compressed bitmaps, never the O(deleted rows)
-    # index lists. The current DVs ride in the task closure, from ``head``.
+    # index lists. The current DVs ride in the task closure.
     from delta_kernel_rs_spark.functions.dv import dv_blobs_from_hits_df
 
     hits = df.filter(pred_col).select("__file_path", "__row_index")
-    old_dvs = {p: dv for p, dv in head if dv is not None}
+    old_dvs = dv_descriptors(scan.kept_rows())
     blob_rows = sorted(
         dv_blobs_from_hits_df(hits, table.path, old_dvs).collect(),
         key=lambda r: r.file_path,

@@ -5,13 +5,13 @@ Both are pure file-layout rewrites: every remove+add carries
 ``dataChange: false``, so CDF readers and incremental consumers see no
 change (our cdf.py classification filters on ``dataChange == true``,
 matching the reference table_changes/log_replay.rs). The rewrite reads
-ONLY the selected files through the same targeted-scan machinery DELETE
-uses (`_candidate_frames`), applying current DVs so hidden rows are
-never resurrected.
+ONLY the selected files through the same live-row read DELETE uses
+(``Scan.live_rows``), applying current DVs so hidden rows are never
+resurrected.
 
-Scale shape: selection is IN-PLAN over the scan-files frame (no driver
-file list); the driver holds path strings for the read, the removes
-stream into bounded commit chunks, and the data rewrite is one
+Scale shape: selection filters the snapshot's driver-side Arrow scan
+rows (which the replay already holds; no Spark job); the removes stream
+from them into bounded commit chunks, and the data rewrite is one
 distributed job whose output partition count is sized from the selected
 bytes, so a 100 TB table compacts partition-by-partition without ever
 shuffling untouched files.
@@ -19,13 +19,12 @@ shuffling untouched files.
 
 from __future__ import annotations
 
-from delta_kernel_rs_spark.sources.delete import (
-    _FILE_META_COLS,
-    _candidate_frames,
-    _remove_action,
-    _scan_meta_df,
-)
-from delta_kernel_rs_spark.sources.scan import live_file_head
+from collections import Counter
+
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from delta_kernel_rs_spark.sources.delete import _remove_action
 from delta_kernel_rs_spark.sources.transaction import _now_ms, begin
 
 DEFAULT_TARGET_FILE_SIZE = 256 << 20
@@ -102,33 +101,24 @@ def _zorder_key(df, cols: list[str], bits: int = 8):
 def _rewrite_files(
     table,
     snap,
-    sel_sfdf,
+    rows: pa.Table,
     operation: str,
     target_bytes: int,
     zorder_by: list[str] | None = None,
 ) -> int:
-    """Rewrite the files selected by ``sel_sfdf`` (a scan-files-shaped
-    frame) into ~target-sized files; dataChange=false.
-
-    Planning is distributed: the driver collects only (path, DV
-    descriptor) pairs for the read plus one size aggregate; the removes STREAM from
-    the selection frame into bounded NDJSON commit chunks — never an
-    O(selected files) driver action list (a full-table ZORDER selects
-    every file)."""
+    """Rewrite the files of ``rows`` (scan rows of the snapshot) into
+    ~target-sized files; dataChange=false. The removes STREAM from the
+    rows into bounded NDJSON commit chunks, one record batch of Python
+    dicts at a time (a full-table ZORDER selects every file)."""
     from pyspark.sql import functions as F
 
-    scan = snap.scan()
-    head = live_file_head(sel_sfdf)
-    if not head:
+    if not rows.num_rows:
         return snap.version
-    df, _ = _candidate_frames(scan, head=head)
-    kept = df.select(*[f.name for f in snap.schema.fields])
-    total = (sel_sfdf.agg(F.sum("size").alias("s")).collect()[0].s) or 0
+    kept = snap.scan().live_rows(rows).select(*[f.name for f in snap.schema.fields])
+    total = pc.sum(pc.fill_null(rows.column("size"), 0)).as_py() or 0
     n_out = max(1, (total + target_bytes - 1) // target_bytes)
     pcols = snap.metadata.partition_columns
     if zorder_by:
-        from pyspark.sql import functions as F
-
         # multi-dimensional clustering: contiguous z-ranges per output
         # file give every z-ordered column tight min/max file stats
         kept = (
@@ -140,17 +130,15 @@ def _rewrite_files(
     elif snap.clustering_columns():
         pass  # the transaction's clustered layout shuffle re-clusters
     elif pcols:
-        from pyspark.sql import functions as F
-
         kept = kept.repartition(int(n_out), *[F.col(p) for p in pcols])
     else:
         kept = kept.repartition(int(n_out))
-    meta_df = sel_sfdf.select(*_FILE_META_COLS)
     ts = _now_ms()
 
     def _removes():
-        for r in meta_df.toLocalIterator():
-            yield _remove_action(table, r.asDict(recursive=True), data_change=False, ts=ts)
+        for batch in rows.to_batches(max_chunksize=4096):
+            for r in batch.to_pylist():
+                yield _remove_action(table, r, data_change=False, ts=ts)
 
     txn = begin(table, operation, snap)
     txn.data_change = False
@@ -211,30 +199,28 @@ def optimize(
         return _rewrite_files(
             table,
             snap,
-            _scan_meta_df(snap.scan()),
+            snap.scan().kept_rows(),
             "OPTIMIZE",
             target_file_size,
             zorder_by=zorder_by,
         )
     threshold = small_file_threshold if small_file_threshold is not None else target_file_size // 2
-    # In-plan selection (no driver file list): small-or-DV files, kept
-    # only where their partition holds 2+ of them. The map column can't
-    # key a window directly — canonicalize to sorted-entry JSON.
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    sfdf = _scan_meta_df(snap.scan())
-    pkey = F.to_json(
-        F.array_sort(F.map_entries(F.coalesce(F.col("partition_values"), F.expr("map()"))))
-    )
-    selected = (
-        sfdf.filter(
-            (F.coalesce(F.col("size"), F.lit(0)) < F.lit(threshold))
-            | F.col("deletion_vector").isNotNull()
+    # Small-or-DV files, kept only where their partition holds
+    # ``min_small_files``+ of them.
+    rows = snap.scan().kept_rows()
+    rows = rows.filter(
+        pc.or_(
+            pc.less(pc.fill_null(rows.column("size"), 0), threshold),
+            pc.is_valid(rows.column("deletion_vector")),
         )
-        .withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy(pkey)))
-        .filter(F.col("__n") >= min_small_files)
-        .drop("__n")
+    )
+    keys = [
+        tuple(sorted(pv or (), key=lambda kv: kv[0]))
+        for pv in rows.column("partition_values").to_pylist()
+    ]
+    per_partition = Counter(keys)
+    selected = rows.filter(
+        pa.array([per_partition[k] >= min_small_files for k in keys], pa.bool_())
     )
     return _rewrite_files(table, snap, selected, "OPTIMIZE", target_file_size)
 
@@ -245,15 +231,16 @@ def purge_deletion_vectors(
     """Materialize deletion vectors: rewrite every file whose DV hides at
     least ``min_cardinality`` rows into a clean file with no DV
     (REORG TABLE ... APPLY (PURGE)). Returns the committed version."""
-    from pyspark.sql import functions as F
-
     snap = table.snapshot()
     _check_supported(snap)
-    selected = _scan_meta_df(snap.scan()).filter(
-        F.col("deletion_vector").isNotNull()
-        & (
-            F.coalesce(F.col("deletion_vector.cardinality"), F.lit(0))
-            >= F.lit(min_cardinality)
+    rows = snap.scan().kept_rows()
+    dvs = rows.column("deletion_vector")
+    selected = rows.filter(
+        pc.and_(
+            pc.is_valid(dvs),
+            pc.greater_equal(
+                pc.fill_null(pc.struct_field(dvs, "cardinality"), 0), min_cardinality
+            ),
         )
     )
     return _rewrite_files(table, snap, selected, "PURGE", target_file_size)

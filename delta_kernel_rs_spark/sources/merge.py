@@ -162,7 +162,7 @@ def merge(
         return F.lit(None)
 
     scan = snap.scan()
-    df, head = _candidate_frames(scan)
+    df = _candidate_frames(scan)
 
     def joined_over(target: DataFrame) -> DataFrame:
         tdf = target.select(
@@ -212,10 +212,7 @@ def merge(
     if matched_paths:
         # Phase 2: targeted re-read of ONLY the matched files (a
         # __file_path filter over the full scan cannot prune files).
-        by_path = dict(head)
-        touched, _ = _candidate_frames(
-            scan, head=[(p, by_path[p]) for p in matched_paths]
-        )
+        touched = _candidate_frames(scan, matched_paths)
         tj = joined_over(touched)
         upd = [updated_value(c).cast(types[c]).alias(c) for c in cols]
         tvals = [F.col("t").getField(c).alias(c) for c in cols]

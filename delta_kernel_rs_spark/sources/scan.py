@@ -35,6 +35,7 @@ import threading
 from collections import OrderedDict
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
@@ -58,9 +59,10 @@ _LIVE_ADDS_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 # without ever reusing it.
 _LIVE_ADDS_CACHE_MAX = 64
 
-#: live files per (session, table, version): the Arrow replay result and
-#: the local DataFrame lifted from it (see Scan._live_files)
-_SCAN_FILES_CACHE: "OrderedDict[tuple, tuple[pa.Table, DataFrame]]" = OrderedDict()
+#: live files per (session, table, version): [the Arrow scan rows, the
+#: local DataFrame over them or None until first asked for] (see
+#: Scan._live_files)
+_SCAN_FILES_CACHE: "OrderedDict[tuple, list]" = OrderedDict()
 _SCAN_FILES_CACHE_MAX = 64
 
 #: the scan-row schema of ``Scan.scan_files_df()``
@@ -253,7 +255,8 @@ def read_named_files(
 
     ``fmt`` is ``"parquet"`` or ``"json"``; a JSON read should pass a
     ``schema``, or inferring one starts a job. ``options`` go to the
-    reader as-is.
+    reader as-is. The path list crosses to the JVM as one NUL-joined
+    string, split there: py4j would otherwise make one call per path.
     """
     reader = spark.read.format(fmt)
     if schema is not None:
@@ -262,7 +265,7 @@ def read_named_files(
         reader = reader.option(key, value)
     paths = list(paths)
     if not all(is_local_path(p) for p in paths):
-        return reader.load(paths)
+        return _load(reader, paths)
     with _LISTING_LOCK:
         held = _listing_raised.get(spark)
         if held is None:
@@ -271,7 +274,7 @@ def read_named_files(
             held = _listing_raised[spark] = [0, prior]
         held[0] += 1
     try:
-        return reader.load(paths)
+        return _load(reader, paths)
     finally:
         with _LISTING_LOCK:
             held[0] -= 1
@@ -281,6 +284,16 @@ def read_named_files(
                     spark.conf.unset(_LISTING_THRESHOLD)
                 else:
                     spark.conf.set(_LISTING_THRESHOLD, held[1])
+
+
+def _load(reader, paths: list[str]) -> DataFrame:
+    """``reader.load(paths)`` with the list passed to the JVM in one
+    string: a path never contains NUL."""
+    if len(paths) < 2:
+        return reader.load(paths)
+    jvm = reader._spark._sc._jvm
+    jpaths = jvm.java.util.regex.Pattern.compile("\x00").split("\x00".join(paths))
+    return reader._df(reader._jreader.load(jpaths))
 
 
 def canonical_log_path(col: Column) -> Column:
@@ -469,22 +482,98 @@ def _conform_checkpoint_file_actions(ckpt: DataFrame, add_type, remove_type) -> 
     return ckpt
 
 
-def live_file_head(sfdf: DataFrame) -> list[tuple[str, dict | None]]:
-    """``(file_path, DV descriptor or None)`` per file of a scan-files
-    frame — the one O(files) driver collect a parquet read needs. Over the
-    local relation this runs on the driver as zero Spark jobs; descriptors
-    are shipped to the DV filter undecoded."""
-    rows = sfdf.select(
-        "file_path",
-        F.col("deletion_vector.storageType").alias("st"),
-        F.col("deletion_vector.pathOrInlineDv").alias("dv"),
-        F.col("deletion_vector.offset").alias("off"),
-    ).collect()
-    return [
-        (r.file_path, None if r.st is None else
-         {"storageType": r.st, "pathOrInlineDv": r.dv, "offset": r.off})
-        for r in rows
-    ]
+def dv_descriptors(rows: pa.Table) -> dict[str, dict]:
+    """``file_path`` → DV descriptor (storage type, path or inline bitmap,
+    offset) for the scan rows that carry a deletion vector: what the DV
+    keep filter and the DV delete ship to executors, undecoded."""
+    dvs = rows.column("deletion_vector")
+    with_dv = rows.filter(pc.is_valid(pc.struct_field(dvs, "storageType")))
+    return {
+        r["file_path"]: {k: r["deletion_vector"][k] for k in ("storageType", "pathOrInlineDv", "offset")}
+        for r in with_dv.select(["file_path", "deletion_vector"]).to_pylist()
+    }
+
+
+def _dv_key(dv: dict | None) -> str:
+    """Per-value twin of :func:`dv_unique_id`."""
+    if not dv or dv.get("storageType") is None:
+        return ""
+    off = dv.get("offset")
+    return "\x00".join([dv["storageType"], dv["pathOrInlineDv"], "" if off is None else str(off)])
+
+
+def _all_equal(col: pa.ChunkedArray) -> bool:
+    """True when every entry of ``col`` equals its first (nulls equal)."""
+    col = col.combine_chunks()
+    if not pa.types.is_map(col.type):
+        return pc.count_distinct(col, mode="all").as_py() == 1
+    if col.null_count:
+        return col.null_count == len(col)
+    offsets = col.offsets.to_numpy()
+    lens = np.diff(offsets)
+    if (lens != lens[0]).any():
+        return False
+    n, start, end = int(lens[0]), int(offsets[0]), int(offsets[-1])
+    tiled = np.tile(np.arange(n), len(col))
+    return all(
+        a.equals(pc.take(a.slice(0, n), tiled))
+        for a in (col.keys.slice(start, end - start), col.items.slice(start, end - start))
+    )
+
+
+def _literal(value, dtype: T.DataType) -> Column:
+    if isinstance(dtype, T.MapType) and value is not None:
+        return F.create_map(*[F.lit(x) for kv in value for x in kv]).cast(dtype)
+    return F.lit(value).cast(dtype)
+
+
+def with_file_constants(
+    df: DataFrame, rows: pa.Table, cols: dict[str, str], *, how: str = "left", frame=None
+) -> DataFrame:
+    """The data rows of ``df`` (a read of the files in ``rows``) with
+    their file's constants.
+
+    ``rows`` is an Arrow table with ``file_path`` and the constant
+    columns ``cols`` names (source column → output name). When every
+    file shares one constants tuple, the constants are literal columns:
+    no join, so no broadcast job, as the reference hands its engine each
+    file's constants as a literal transform (kernel/src/scan/
+    transform_spec.rs). Otherwise they join on the decoded path
+    (``__file_path``, added here when ``df`` lacks it) from a local
+    relation over ``rows`` or from ``frame()``, a zero-argument callable
+    returning a frame with the same rows; the relation is broadcast up to
+    100k files. ``how="inner"`` with a path listed twice yields its rows
+    once per entry.
+    """
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    consts = rows.select(list(cols))
+    paths = rows.column("file_path")
+    if rows.num_rows and all(_all_equal(c) for c in consts.columns) and (
+        how == "left" or pc.count_distinct(paths).as_py() == rows.num_rows
+    ):
+        first = consts.slice(0, 1).to_pylist()[0]
+        return df.withColumns(
+            {
+                alias: _literal(first[c], from_arrow_type(consts.schema.field(c).type))
+                for c, alias in cols.items()
+            }
+        )
+    if "__file_path" not in df.columns:
+        df = df.withColumn("__file_path", normalize_file_path(F.col("_metadata.file_path")))
+    if frame is None:
+        src = df.sparkSession.createDataFrame(rows.select(["file_path", *cols]))
+    else:
+        src = frame()
+    const_df = src.select(
+        F.col("file_path").alias("__const_path"),
+        *[F.col(c).alias(a) for c, a in cols.items()],
+    )
+    # broadcast only when the file count is known small; beyond that let
+    # AQE pick the join strategy
+    if rows.num_rows <= 100_000:
+        const_df = F.broadcast(const_df)
+    return df.join(const_df, df["__file_path"] == F.col("__const_path"), how)
 
 
 @dataclass
@@ -517,6 +606,7 @@ class Scan:
         self.with_row_ids = with_row_ids
         self._files_df_override: DataFrame | None = None
         self._exclude_keys_df: DataFrame | None = None
+        self._planned: tuple[pa.Table, bool] | None = None
         # String predicates are parsed into the typed AST so the default
         # API gets file skipping + partition pruning too (reference
         # workloads/src/predicate_parser.rs); outside the grammar the
@@ -532,16 +622,9 @@ class Scan:
             )
 
     # ------------------------------------------------------------------
-    # Scan-file DataFrame with resolved absolute paths
+    # Scan rows: the version's Arrow table, pruned on the driver
     # ------------------------------------------------------------------
-    def _live_files(self) -> tuple[pa.Table, DataFrame]:
-        """(scan-row Arrow table, local DataFrame over it) for this
-        snapshot, from the driver LRU.
-
-        The replay result for one snapshot is immutable, so every scan of
-        that snapshot shares one Arrow table and one frame. The frame is a
-        local relation: Catalyst evaluates filters and projections over
-        it on the driver, so nothing needs persisting."""
+    def _live_entry(self) -> list:
         seg = self.snapshot.log_segment
         key = (
             self.spark.sparkContext.applicationId,
@@ -557,11 +640,25 @@ class Scan:
         rows = scan_rows_arrow(
             live_files_arrow(self.snapshot.storage, seg), self.snapshot.table_path
         )
-        hit = (rows, self.spark.createDataFrame(rows, SCAN_FILES_SCHEMA))
-        _SCAN_FILES_CACHE[key] = hit
+        hit = _SCAN_FILES_CACHE[key] = [rows, None]
         while len(_SCAN_FILES_CACHE) > _SCAN_FILES_CACHE_MAX:
             _SCAN_FILES_CACHE.popitem(last=False)
         return hit
+
+    def _live_files(self) -> pa.Table:
+        """The snapshot's scan-row Arrow table, from the driver LRU: the
+        replay result for one snapshot is immutable, so every scan of
+        that snapshot shares it."""
+        return self._live_entry()[0]
+
+    def _version_frame(self) -> DataFrame:
+        """A local DataFrame over :meth:`_live_files`, built on first use
+        and kept with it. Catalyst evaluates filters and projections over
+        a local relation on the driver, so nothing needs persisting."""
+        entry = self._live_entry()
+        if entry[1] is None:
+            entry[1] = self.spark.createDataFrame(entry[0], SCAN_FILES_SCHEMA)
+        return entry[1]
 
     def file_rows(self, paths) -> pa.Table:
         """The scan rows (:data:`SCAN_FILES_SCHEMA`) of the live files at
@@ -569,43 +666,133 @@ class Scan:
         snapshot's driver-side Arrow table: a metadata lookup that starts
         no Spark job. The caller names the files, so no skipping
         predicate applies."""
-        rows = self._live_files()[0]
+        rows = self._live_files()
         wanted = pa.array(list(paths), pa.string())
         return rows.filter(pc.is_in(rows.column("file_path"), value_set=wanted))
 
+    def _source_rows(self) -> pa.Table:
+        """The scan rows before skipping: a ``with_files_df`` frame
+        collected once, or the version's table; minus excluded keys."""
+        if self._files_df_override is not None:
+            rows = self._files_df_override.toArrow().select(SCAN_FILES_SCHEMA.fieldNames())
+        else:
+            rows = self._live_files()
+        if self._exclude_keys_df is not None and rows.num_rows:
+            keys = self._exclude_keys_df.select("x_path", "x_dv", "x_brid").toArrow()
+            drop = set(zip(*(keys.column(c).to_pylist() for c in ("x_path", "x_dv", "x_brid"))))
+            brids = rows.column("base_row_id").to_pylist()
+            rows = rows.filter(
+                pa.array(
+                    [
+                        (p, _dv_key(dv), -1 if b is None else b) not in drop
+                        for p, dv, b in zip(
+                            rows.column("file_path").to_pylist(),
+                            rows.column("deletion_vector").to_pylist(),
+                            brids,
+                        )
+                    ],
+                    pa.bool_(),
+                )
+            )
+        return rows
+
+    def _skipping_predicate(self):
+        """The typed predicate, literal-coerced and normalized for the
+        evaluator; None when it has no typed form (a raw string outside
+        the grammar, a Spark Column) or a literal fits no column type."""
+        from delta_kernel_rs_spark.plans.expressions import Predicate, normalize
+        from delta_kernel_rs_spark.plans.py_predicate import (
+            UnsupportedPredicate,
+            coerce_literals,
+        )
+
+        pred = self._parsed_predicate if self._parsed_predicate is not None else self.predicate
+        if not isinstance(pred, Predicate):
+            return None
+        try:
+            return normalize(coerce_literals(pred, self.snapshot.schema))
+        except UnsupportedPredicate:
+            return None
+
+    def _keep_mask(self, rows: pa.Table) -> pa.Array | None:
+        """Partition pruning + stats skipping over the scan rows
+        (plans/py_skipping), AND generated-column pruning; None when the
+        predicate cannot prune."""
+        from delta_kernel_rs_spark.plans.generated_pruning import (
+            derived_partition_filter,
+            generation_rules,
+        )
+        from delta_kernel_rs_spark.plans.py_skipping import FileSkipEvaluator
+
+        pred = self._skipping_predicate()
+        if pred is None:
+            return None
+        snap = self.snapshot
+        pcols = snap.metadata.partition_columns
+        ev = FileSkipEvaluator(
+            snap.schema,
+            pcols,
+            snap.metadata.configuration,
+            # clustering columns always carry stats (protocol MUST) —
+            # skip on them even when the table's stats config excludes them
+            tuple(
+                c["logical"][0]
+                for c in snap.clustering_columns()
+                if c.get("logical") and len(c["logical"]) == 1
+            ),
+        )
+        keep = pa.array(ev.keep(pred, rows), pa.bool_())
+        if generation_rules(snap.schema, pcols):
+            # A predicate on the SOURCE of a generated partition column
+            # implies one on the partition value (plans/generated_pruning),
+            # evaluated by Spark's own functions over a local relation.
+            raw = self._parsed_predicate if self._parsed_predicate is not None else self.predicate
+            derived = derived_partition_filter(raw, snap.schema, pcols)
+            if derived is not None:
+                pv = self.spark.createDataFrame(
+                    pa.table({"__i": np.arange(rows.num_rows), "partition_values": rows.column("partition_values")})
+                )
+                hit = pv.filter(derived).select("__i").toArrow().column("__i")
+                keep = pc.and_(keep, pc.is_in(pa.array(np.arange(rows.num_rows)), value_set=hit))
+        return keep
+
+    def _plan(self) -> tuple[pa.Table, bool]:
+        """(kept scan rows, whether they are the version's whole table)."""
+        if self._planned is None:
+            rows = self._source_rows()
+            whole = self._files_df_override is None and self._exclude_keys_df is None
+            keep = self._keep_mask(rows) if rows.num_rows else None
+            if keep is not None and not pc.all(keep).as_py():
+                rows, whole = rows.filter(keep), False
+            self._planned = (rows, whole)
+        return self._planned
+
+    def kept_rows(self) -> pa.Table:
+        """The scan rows (:data:`SCAN_FILES_SCHEMA`) of the files the
+        predicate may match, pruned on the driver: no Spark job."""
+        return self._plan()[0]
+
     def scan_files_df(self) -> DataFrame:
-        """One row per live file: absolute path + file-constant columns
-        (:data:`SCAN_FILES_SCHEMA`).
+        """One row per kept live file: absolute path + file-constant
+        columns (:data:`SCAN_FILES_SCHEMA`), as a local relation over
+        :meth:`kept_rows`.
 
         This is the reference's scan-row schema (kernel/src/scan/
         mod.rs:1410-1440): path, size, modificationTime, stats, DV,
         file constants.
         """
-        if self._files_df_override is not None:
-            df = self._files_df_override
-        else:
-            df = self._live_files()[1]
-        skip_pred = self._file_skipping_predicate()
-        if skip_pred is not None:
-            df = df.filter(skip_pred)
-        if self._exclude_keys_df is not None:
-            k = self._exclude_keys_df
-            df = df.join(
-                k,
-                (df["file_path"] == k["x_path"])
-                & (dv_unique_id(df["deletion_vector"]) == k["x_dv"])
-                & (F.coalesce(df["base_row_id"], F.lit(-1)) == k["x_brid"]),
-                "left_anti",
-            )
-        return df
+        rows, whole = self._plan()
+        if whole:
+            return self._version_frame()
+        return self.spark.createDataFrame(rows, SCAN_FILES_SCHEMA)
 
     def exclude_file_keys(self, keys_df: DataFrame) -> "Scan":
         """Exclude files whose (path, DV identity, baseRowId) key appears
-        in ``keys_df`` (columns ``x_path``/``x_dv``/``x_brid``) — an
-        in-plan anti-join, so the exclusion set never materializes on the
-        driver (CDF-by-row-tracking drops files byte-identical in both
-        compared snapshots this way; round-6 verdict, What's wrong #3)."""
+        in ``keys_df`` (columns ``x_path``/``x_dv``/``x_brid``), collected
+        once when the scan plans (CDF-by-row-tracking drops files
+        byte-identical in both compared snapshots this way)."""
         self._exclude_keys_df = keys_df
+        self._planned = None
         return self
 
     def file_keys_df(self) -> DataFrame:
@@ -618,86 +805,33 @@ class Scan:
             F.coalesce(F.col("base_row_id"), F.lit(-1)).alias("x_brid"),
         )
 
-    def _file_skipping_predicate(self) -> Column | None:
-        """Partition pruning + stats-based data skipping (plans/data_skipping)."""
-        pred = self._parsed_predicate if self._parsed_predicate is not None else self.predicate
-        if pred is None:
-            return None
-        from delta_kernel_rs_spark.plans.data_skipping import file_skipping_predicate
-        from delta_kernel_rs_spark.plans.generated_pruning import (
-            derived_partition_filter,
-        )
-
-        keep = file_skipping_predicate(
-            pred,
-            self.snapshot.schema,
-            self.snapshot.metadata.partition_columns,
-            self.snapshot.metadata.configuration,
-            # clustering columns always carry stats (protocol MUST) —
-            # skip on them even when the table's stats config excludes them
-            tuple(
-                c["logical"][0]
-                for c in self.snapshot.clustering_columns()
-                if c.get("logical") and len(c["logical"]) == 1
-            ),
-        )
-        # Generated-column partition pruning: a predicate on the SOURCE of a
-        # generated partition column implies a predicate on the partition
-        # value (plans/generated_pruning) — AND-ing an implied filter only
-        # drops files with no matching rows.
-        derived = derived_partition_filter(
-            pred,
-            self.snapshot.schema,
-            self.snapshot.metadata.partition_columns,
-        )
-        if derived is None:
-            return keep
-        return derived if keep is None else (keep & derived)
-
     def files(self) -> list[ScanFile]:
-        """The kept live files as driver-side handles (a collect of
-        :meth:`scan_files_df`; stats and mtime are plan-only columns)."""
-        rows = self.scan_files_df().drop("stats", "modification_time").collect()
+        """The kept live files as driver-side handles."""
+        rows = self.kept_rows().drop_columns(["stats", "modification_time"])
         return [
             ScanFile(
-                path=r.file_path,
-                size=r.size,
-                partition_values=dict(r.partition_values or {}),
-                dv=r.deletion_vector.asDict() if r.deletion_vector else None,
-                base_row_id=r.base_row_id,
-                commit_version=r.commit_version,
-                default_row_commit_version=r.default_row_commit_version,
+                path=r["file_path"],
+                size=r["size"],
+                partition_values=dict(r["partition_values"] or {}),
+                dv=r["deletion_vector"],
+                base_row_id=r["base_row_id"],
+                commit_version=r["commit_version"],
+                default_row_commit_version=r["default_row_commit_version"],
             )
-            for r in rows
+            for r in rows.to_pylist()
         ]
 
-    def with_files_df(self, files_df: DataFrame, persist: bool = True) -> "Scan":
+    def with_files_df(self, files_df: DataFrame) -> "Scan":
         """Plan this scan off a caller-supplied scan-files frame instead of
         log replay.
 
         Used by the incremental refresh path (``scan_metadata_from``,
         reference kernel/src/scan/mod.rs:880-1024): the merged
-        prior+diff frame flows straight into ``to_df()``'s distributed
-        planning; the driver never materializes the file list. The scan's
-        skipping predicate and exclusion keys still apply on top.
-
-        ``persist`` (default) spills the frame into the same bounded LRU
-        the live-adds cache uses: ``to_df()`` executes the scan-files
-        subtree several times (head collect, constants),
-        and unlike the default path's local relation this frame is
-        computed by Spark — measured 2.4→2.0 s on the d03 incr arm at sf0.1.
-        A frame that is ALREADY persisted (e.g. the stable-key cached
-        merge from ``Snapshot.scan_files_df_from``) is used as-is — no
-        duplicate persist, no id()-keyed LRU churn. Evictees are
-        unpersisted by the LRU."""
-        from pyspark import StorageLevel
-
-        if persist and files_df.storageLevel == StorageLevel.NONE:
-            cached_files_frame(
-                ("files_df_override", self.snapshot.table_path, id(files_df)),
-                lambda: files_df,
-            )
+        prior+diff frame is collected once, as Arrow, when the scan
+        plans, and the scan's skipping predicate and exclusion keys apply
+        on top."""
         self._files_df_override = files_df
+        self._planned = None
         return self
 
     # ------------------------------------------------------------------
@@ -789,22 +923,22 @@ class Scan:
             )
         return T.StructType(fields)
 
-    def live_rows(self, head, sfdf: DataFrame, file_cols: bool = False) -> DataFrame:
-        """The live rows of the files in ``head``, in logical columns.
+    def live_rows(self, rows: pa.Table, file_cols: bool = False, frame=None) -> DataFrame:
+        """The live rows of the files in ``rows`` (scan rows, e.g.
+        :meth:`kept_rows` or :meth:`file_rows`), in logical columns.
 
-        ``head`` is :func:`live_file_head` output (or a subset of it);
-        ``sfdf`` is the scan-files frame the per-file constants (partition
-        values, row-id constants) join from. DV-free files go through the
-        plain parquet reader; DV-carrying files through a second read of
-        only those files, filtered by :func:`live_row_filter` on (Spark's
-        file URI, physical row index) — the bitmaps decode on executors,
-        the driver ships descriptors only. Both reads are relations built
-        by :func:`read_named_files` (for local files a driver-side
-        listing, no Spark job).
-        The path is decoded to ``__file_path`` at most once per row, and
-        only when partition constants or ``file_cols`` need it.
-        ``file_cols`` keeps ``__file_path`` and ``__row_index`` (the DML
-        candidate read needs them).
+        DV-free files go through the plain parquet reader; DV-carrying
+        files through a second read of only those files, filtered by
+        :func:`live_row_filter` on (Spark's file URI, physical row index)
+        — the bitmaps decode on executors, the driver ships descriptors
+        only. Both reads are relations built by :func:`read_named_files`
+        (for local files a driver-side listing, no Spark job). Each read
+        gets its files' constants (partition values when ``columns``
+        names a partition column, row-id constants) from
+        :func:`with_file_constants`: literals when the read's files share
+        one tuple, else a broadcast join (over ``frame()`` when given, a
+        frame with the same rows). ``file_cols`` keeps ``__file_path``
+        and ``__row_index`` (the DML candidate read needs them).
         """
         from functools import reduce
 
@@ -813,8 +947,7 @@ class Scan:
         spark = self.spark
         schema = self.snapshot.schema
         pcols = self.snapshot.metadata.partition_columns
-        need_path = bool(pcols) or self.with_row_ids or file_cols
-        need_index = self.with_row_ids or file_cols
+        read_pcols = [c for c in pcols if self.columns is None or c in self.columns]
         phys_schema = self._physical_read_schema()
 
         def read(paths: list[str]) -> DataFrame:
@@ -822,38 +955,12 @@ class Scan:
                 return self._read_with_widening(spark, paths, phys_schema)
             return read_named_files(spark, paths, schema=phys_schema)
 
-        row_index = F.col("_metadata.row_index")
-        clean = [p for p, dv in head if dv is None]
-        dvs = {p: dv for p, dv in head if dv is not None}
-        arms = [read(clean)] if clean else []
-        if dvs:
-            keep = live_row_filter(dvs, self.snapshot.table_path)
-            arms.append(
-                read(sorted(dvs)).filter(keep(F.col("_metadata.file_path"), row_index))
-            )
-        if need_path:
-            file_path = normalize_file_path(F.col("_metadata.file_path"))
-            arms = [arm.withColumn("__file_path", file_path) for arm in arms]
-        if need_index:
-            arms = [arm.withColumn("__row_index", row_index) for arm in arms]
-        df = reduce(DataFrame.unionByName, arms)
-
         consts = {}
-        if pcols:
+        if read_pcols:
             consts["partition_values"] = "__pv"
         if self.with_row_ids:
             consts["base_row_id"] = "__base_row_id"
             consts["default_row_commit_version"] = "__drcv"
-        if consts:
-            const_df = sfdf.select(
-                F.col("file_path").alias("__const_path"),
-                *[F.col(c).alias(a) for c, a in consts.items()],
-            )
-            # broadcast per-file constants only when the file count is known
-            # small; beyond that let AQE pick the join strategy
-            if len(head) <= 100_000:
-                const_df = F.broadcast(const_df)
-            df = df.join(const_df, df["__file_path"] == F.col("__const_path"), "left")
 
         # Final projection in logical column order: physical→logical rename,
         # partition-value parse, type normalization (widening casts).
@@ -878,19 +985,50 @@ class Scan:
             out_cols.append(F.col("__drcv").alias("row_commit_version"))
         if file_cols:
             out_cols += [F.col("__file_path"), F.col("__row_index")]
-        return df.select(*out_cols)
+
+        row_index = F.col("_metadata.row_index")
+        dvs = dv_descriptors(rows)
+        has_dv = pc.is_in(rows.column("file_path"), value_set=pa.array(list(dvs), pa.string()))
+        arms = []
+        clean = rows.filter(pc.invert(has_dv))
+        if clean.num_rows:
+            arms.append((clean, read(clean.column("file_path").to_pylist())))
+        if dvs:
+            keep = live_row_filter(dvs, self.snapshot.table_path)
+            arms.append(
+                (
+                    rows.filter(has_dv),
+                    read(sorted(dvs)).filter(keep(F.col("_metadata.file_path"), row_index)),
+                )
+            )
+        out = []
+        for arm_rows, df in arms:
+            if file_cols:
+                df = df.withColumn("__file_path", normalize_file_path(F.col("_metadata.file_path")))
+            if self.with_row_ids or file_cols:
+                df = df.withColumn("__row_index", row_index)
+            if consts:
+                df = with_file_constants(df, arm_rows, consts, frame=frame)
+            out.append(df.select(*out_cols))
+        return reduce(DataFrame.unionByName, out)
+
+    def read_kept(self, file_cols: bool = False) -> DataFrame | None:
+        """:meth:`live_rows` over :meth:`kept_rows`; None when no file is
+        kept."""
+        rows, whole = self._plan()
+        if not rows.num_rows:
+            return None
+        return self.live_rows(rows, file_cols, frame=self._version_frame if whole else None)
 
     def to_df(self) -> DataFrame:
         """The scan result as a lazy logical DataFrame.
 
-        The parquet reader needs the kept path list, collected from
-        :meth:`scan_files_df` with each file's DV descriptor; see
-        :meth:`live_rows`. A ``with_files_df`` override plans off the
-        supplied frame.
+        The files come from :meth:`kept_rows`, pruned on the driver
+        before any Spark plan exists; see :meth:`live_rows`. The
+        predicate still filters the rows.
         """
-        sfdf = self.scan_files_df().drop("stats", "modification_time")
-        head = live_file_head(sfdf)
-        if not head:
+        df = self.read_kept()
+        if df is None:
             schema = self.snapshot.schema
             out_fields = [f for f in schema.fields if self.columns is None or f.name in self.columns]
             if self.with_row_ids:
@@ -899,8 +1037,6 @@ class Scan:
                     T.StructField("row_commit_version", T.LongType(), True),
                 ]
             return self.spark.createDataFrame([], T.StructType(out_fields))
-
-        df = self.live_rows(head, sfdf)
         if self.predicate is not None:
             pred = self.predicate
             from delta_kernel_rs_spark.plans.expressions import Predicate
@@ -911,3 +1047,200 @@ class Scan:
                 pred = F.expr(pred)
             df = df.filter(pred)
         return df
+
+
+def live_file_head(sfdf: DataFrame) -> list[tuple[str, dict | None]]:
+    """``(file_path, DV descriptor or None)`` per file of a scan-files
+    frame — the one O(files) driver collect a parquet read needs. Over the
+    local relation this runs on the driver as zero Spark jobs; descriptors
+    are shipped to the DV filter undecoded."""
+    rows = sfdf.select(
+        "file_path",
+        F.col("deletion_vector.storageType").alias("st"),
+        F.col("deletion_vector.pathOrInlineDv").alias("dv"),
+        F.col("deletion_vector.offset").alias("off"),
+    ).collect()
+    return [
+        (r.file_path, None if r.st is None else
+         {"storageType": r.st, "pathOrInlineDv": r.dv, "offset": r.off})
+        for r in rows
+    ]
+
+# -- legacy Column-rewriter planner (kept only to gate the Arrow planner) ----
+def _legacy_scan_files_df(self) -> DataFrame:
+    df = self._files_df_override if self._files_df_override is not None else self._version_frame()
+    skip_pred = _legacy_skipping_predicate(self)
+    if skip_pred is not None:
+        df = df.filter(skip_pred)
+    if self._exclude_keys_df is not None:
+        k = self._exclude_keys_df
+        df = df.join(
+            k,
+            (df["file_path"] == k["x_path"])
+            & (dv_unique_id(df["deletion_vector"]) == k["x_dv"])
+            & (F.coalesce(df["base_row_id"], F.lit(-1)) == k["x_brid"]),
+            "left_anti",
+        )
+    return df
+
+
+def _legacy_skipping_predicate(self) -> Column | None:
+    """Partition pruning + stats-based data skipping (plans/data_skipping)."""
+    pred = self._parsed_predicate if self._parsed_predicate is not None else self.predicate
+    if pred is None:
+        return None
+    from delta_kernel_rs_spark.plans.data_skipping import file_skipping_predicate
+    from delta_kernel_rs_spark.plans.generated_pruning import (
+        derived_partition_filter,
+    )
+
+    keep = file_skipping_predicate(
+        pred,
+        self.snapshot.schema,
+        self.snapshot.metadata.partition_columns,
+        self.snapshot.metadata.configuration,
+        # clustering columns always carry stats (protocol MUST) —
+        # skip on them even when the table's stats config excludes them
+        tuple(
+            c["logical"][0]
+            for c in self.snapshot.clustering_columns()
+            if c.get("logical") and len(c["logical"]) == 1
+        ),
+    )
+    # Generated-column partition pruning: a predicate on the SOURCE of a
+    # generated partition column implies a predicate on the partition
+    # value (plans/generated_pruning) — AND-ing an implied filter only
+    # drops files with no matching rows.
+    derived = derived_partition_filter(
+        pred,
+        self.snapshot.schema,
+        self.snapshot.metadata.partition_columns,
+    )
+    if derived is None:
+        return keep
+    return derived if keep is None else (keep & derived)
+
+
+def _legacy_live_rows(self, head, sfdf: DataFrame, file_cols: bool = False) -> DataFrame:
+    """The live rows of the files in ``head``, in logical columns.
+
+    ``head`` is :func:`live_file_head` output (or a subset of it);
+    ``sfdf`` is the scan-files frame the per-file constants (partition
+    values, row-id constants) join from. DV-free files go through the
+    plain parquet reader; DV-carrying files through a second read of
+    only those files, filtered by :func:`live_row_filter` on (Spark's
+    file URI, physical row index) — the bitmaps decode on executors,
+    the driver ships descriptors only. Both reads are relations built
+    by :func:`read_named_files` (for local files a driver-side
+    listing, no Spark job).
+    The path is decoded to ``__file_path`` at most once per row, and
+    only when partition constants or ``file_cols`` need it.
+    ``file_cols`` keeps ``__file_path`` and ``__row_index`` (the DML
+    candidate read needs them).
+    """
+    from functools import reduce
+
+    from delta_kernel_rs_spark.functions.dv import live_row_filter
+
+    spark = self.spark
+    schema = self.snapshot.schema
+    pcols = self.snapshot.metadata.partition_columns
+    need_path = bool(pcols) or self.with_row_ids or file_cols
+    need_index = self.with_row_ids or file_cols
+    phys_schema = self._physical_read_schema()
+
+    def read(paths: list[str]) -> DataFrame:
+        if self._needs_widening_read():
+            return self._read_with_widening(spark, paths, phys_schema)
+        return read_named_files(spark, paths, schema=phys_schema)
+
+    row_index = F.col("_metadata.row_index")
+    clean = [p for p, dv in head if dv is None]
+    dvs = {p: dv for p, dv in head if dv is not None}
+    arms = [read(clean)] if clean else []
+    if dvs:
+        keep = live_row_filter(dvs, self.snapshot.table_path)
+        arms.append(
+            read(sorted(dvs)).filter(keep(F.col("_metadata.file_path"), row_index))
+        )
+    if need_path:
+        file_path = normalize_file_path(F.col("_metadata.file_path"))
+        arms = [arm.withColumn("__file_path", file_path) for arm in arms]
+    if need_index:
+        arms = [arm.withColumn("__row_index", row_index) for arm in arms]
+    df = reduce(DataFrame.unionByName, arms)
+
+    consts = {}
+    if pcols:
+        consts["partition_values"] = "__pv"
+    if self.with_row_ids:
+        consts["base_row_id"] = "__base_row_id"
+        consts["default_row_commit_version"] = "__drcv"
+    if consts:
+        const_df = sfdf.select(
+            F.col("file_path").alias("__const_path"),
+            *[F.col(c).alias(a) for c, a in consts.items()],
+        )
+        # broadcast per-file constants only when the file count is known
+        # small; beyond that let AQE pick the join strategy
+        if len(head) <= 100_000:
+            const_df = F.broadcast(const_df)
+        df = df.join(const_df, df["__file_path"] == F.col("__const_path"), "left")
+
+    # Final projection in logical column order: physical→logical rename,
+    # partition-value parse, type normalization (widening casts).
+    out_cols = []
+    for f in schema.fields:
+        if self.columns is not None and f.name not in self.columns:
+            continue
+        if f.name in pcols:
+            # partitionValues keys are physical names under column mapping
+            raw = F.col("__pv").getItem(physical_name(f))
+            out_cols.append(parse_partition_column(raw, f.dataType).alias(f.name))
+        else:
+            out_cols.append(F.col(quoted(physical_name(f))).cast(f.dataType).alias(f.name))
+    if self.with_row_ids:
+        # Stable row id = baseRowId + row_index; commit version from the
+        # add's defaultRowCommitVersion (reference row_tracking.rs +
+        # transform_spec.rs:48-56 — materialized-column override would
+        # coalesce in front of this once writes materialize it).
+        out_cols.append(
+            (F.col("__base_row_id") + F.col("__row_index")).alias("row_id")
+        )
+        out_cols.append(F.col("__drcv").alias("row_commit_version"))
+    if file_cols:
+        out_cols += [F.col("__file_path"), F.col("__row_index")]
+    return df.select(*out_cols)
+
+
+def _legacy_to_df(self) -> DataFrame:
+    """The scan result as a lazy logical DataFrame.
+
+    The parquet reader needs the kept path list, collected from
+    :meth:`scan_files_df` with each file's DV descriptor; see
+    :meth:`live_rows`. A ``with_files_df`` override plans off the
+    supplied frame.
+    """
+    sfdf = _legacy_scan_files_df(self).drop("stats", "modification_time")
+    head = live_file_head(sfdf)
+    if not head:
+        schema = self.snapshot.schema
+        out_fields = [f for f in schema.fields if self.columns is None or f.name in self.columns]
+        if self.with_row_ids:
+            out_fields = list(out_fields) + [
+                T.StructField("row_id", T.LongType(), True),
+                T.StructField("row_commit_version", T.LongType(), True),
+            ]
+        return self.spark.createDataFrame([], T.StructType(out_fields))
+
+    df = _legacy_live_rows(self, head, sfdf)
+    if self.predicate is not None:
+        pred = self.predicate
+        from delta_kernel_rs_spark.plans.expressions import Predicate
+
+        if isinstance(pred, Predicate):
+            pred = pred.to_spark()
+        elif isinstance(pred, str):
+            pred = F.expr(pred)
+        df = df.filter(pred)
+    return df

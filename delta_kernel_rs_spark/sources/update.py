@@ -34,12 +34,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from delta_kernel_rs_spark.sources.delete import (
-    _FILE_META_COLS,
     _candidate_frames,
     _pred_to_column,
     _remove_action,
     _removes,
-    _scan_meta_df,
     _typed_predicate,
     _write_cdc_files,
 )
@@ -70,7 +68,7 @@ def update_where(
         raise UpdateError("UPDATE needs at least one assignment")
 
     scan = snap.scan(predicate=_typed_predicate(predicate, snap.schema))
-    df, head = _candidate_frames(scan)
+    df = _candidate_frames(scan)
     if df is None:
         return snap.version  # stats prove nothing can match
     pred_col = _pred_to_column(predicate)
@@ -86,8 +84,7 @@ def update_where(
     if not matched_paths:
         return snap.version
 
-    by_path = dict(head)
-    touched, _ = _candidate_frames(scan, head=[(p, by_path[p]) for p in matched_paths])
+    touched = _candidate_frames(scan, matched_paths)
 
     def new_val(c: str) -> Column:
         a = assignments.get(c)
@@ -139,14 +136,15 @@ def overwrite(table, df: DataFrame) -> int:
             "overwrite is not permitted"
         )
     # One remove per live file is protocol-inherent in an overwrite commit;
-    # the removes STREAM from the replay frame into bounded NDJSON chunks
-    # (the clone/convert pattern) — the driver never buffers an O(files)
-    # action list.
-    sfdf = _scan_meta_df(snap.scan()).select(*_FILE_META_COLS)
+    # the removes STREAM from the snapshot's Arrow scan rows into bounded
+    # NDJSON chunks (the clone/convert pattern), one record batch of
+    # Python dicts at a time.
+    rows = snap.scan().kept_rows()
 
     def removes():
-        for r in sfdf.toLocalIterator():
-            yield _remove_action(table, r.asDict(recursive=True))
+        for batch in rows.to_batches(max_chunksize=4096):
+            for r in batch.to_pylist():
+                yield _remove_action(table, r)
 
     txn = begin(table, "OVERWRITE", snap)
     txn.write_data(df)
@@ -180,7 +178,7 @@ def overwrite_where(table, df: DataFrame, predicate) -> int:
         )
 
     scan = snap.scan(predicate=_typed_predicate(predicate, snap.schema))
-    cand, head = _candidate_frames(scan)
+    cand = _candidate_frames(scan)
 
     kept: DataFrame | None = None
     cdc_actions: list[dict] = []
@@ -195,10 +193,7 @@ def overwrite_where(table, df: DataFrame, predicate) -> int:
             .collect()
         )
         if matched_paths:
-            by_path = dict(head)
-            touched, _ = _candidate_frames(
-                scan, head=[(p, by_path[p]) for p in matched_paths]
-            )
+            touched = _candidate_frames(scan, matched_paths)
             kept = touched.filter(~hit).select(*cols)
             if snap.metadata.cdf_enabled:
                 # the rewrite carries kept rows, so cdc must record the

@@ -183,9 +183,9 @@ def test_upsert_rewrite_reads_only_matched_files(spark, tmp_path, monkeypatch):
     subsets: list[int | None] = []
     orig = delete_mod._candidate_frames
 
-    def spy(scan, head=None):
-        subsets.append(None if head is None else len(head))
-        return orig(scan, head=head)
+    def spy(scan, paths=None):
+        subsets.append(None if paths is None else len(paths))
+        return orig(scan, paths)
 
     monkeypatch.setattr(merge_mod, "_candidate_frames", spy)
     src = spark.createDataFrame([(350, 9999)], "k LONG, v LONG")  # one file hit
@@ -388,18 +388,12 @@ def _spy_collects(spark, monkeypatch) -> list[tuple[tuple, int, int]]:
     return seen
 
 
-#: ``live_file_head``'s collect: the candidate list, planned over the
-#: scan's local relation on the driver (no Spark job)
-_HEAD_COLS = ("file_path", "st", "dv", "off")
-
-
 def test_dv_delete_collects_only_blobs_and_matched_meta(spark, tmp_path, monkeypatch):
-    """A DV delete's one driver collect that runs Spark jobs is the blob
-    frame, O(matched files) rows: bitmaps serialize executor-side, the
-    current DVs ride in the task closure, and the matched files' metadata
-    comes from the scan's Arrow table. The only other collect is the
-    candidate list over the local relation, which starts no job. No
-    collected frame carries ``stats`` or ``__row_index``."""
+    """A DV delete's one driver collect is the blob frame, O(matched
+    files) rows: bitmaps serialize executor-side, the current DVs ride in
+    the task closure, and the candidate list and the matched files'
+    metadata come from the scan's Arrow table. No collected frame carries
+    ``stats`` or ``__row_index``."""
     from delta_kernel_rs_spark.sources.delete import delete_with_dvs
 
     path = str(tmp_path / "tbl")
@@ -420,27 +414,23 @@ def test_dv_delete_collects_only_blobs_and_matched_meta(spark, tmp_path, monkeyp
         assert "stats" not in cols, "file metadata collected with Spark"
     blobs = [(n, jobs) for cols, n, jobs in seen if cols == ("file_path", "blob", "cardinality")]
     assert len(blobs) == 1 and blobs[0][0] == matched and blobs[0][1] >= 1
-    assert [(cols, jobs) for cols, _, jobs in seen if cols != ("file_path", "blob", "cardinality")] == [
-        (_HEAD_COLS, 0)
-    ]
+    assert [cols for cols, _, _ in seen if cols != ("file_path", "blob", "cardinality")] == []
     assert t.to_df().count() == 300
 
 
 def test_dv_delete_hit_plan_joins_no_file_metadata(spark, tmp_path, monkeypatch):
     """The DV delete's hit query takes the candidate files' DVs from its
-    closure: its executed plan has no ``BroadcastExchange`` over the
-    scan-files relation. Unpartitioned, it has none at all; partitioned,
-    only the partition-constants broadcast every scan of the table has."""
+    closure and reads only the predicate's columns: its executed plan has
+    no ``BroadcastExchange``, partitioned or not (a predicate on data
+    columns needs no partition constants)."""
     from delta_kernel_rs_spark.functions import dv as dv_mod
     from delta_kernel_rs_spark.sources.delete import delete_with_dvs
 
     df = spark.range(0, 400, 1, 4).select(
         F.col("id").alias("k"), (F.col("id") % 2).cast("string").alias("part")
     )
-    for partition_by, broadcasts in ((None, 0), (["part"], 1)):
-        t = DeltaTable.create(
-            spark, str(tmp_path / f"tbl{broadcasts}"), df=df, partition_by=partition_by
-        )
+    for name, partition_by in (("flat", None), ("parted", ["part"])):
+        t = DeltaTable.create(spark, str(tmp_path / name), df=df, partition_by=partition_by)
         delete_with_dvs(t, "k % 50 = 1")  # the second delete finds DVs
         frames = []
         orig = dv_mod.dv_blobs_from_hits_df
@@ -455,16 +445,39 @@ def test_dv_delete_hit_plan_joins_no_file_metadata(spark, tmp_path, monkeypatch)
         assert len(frames) == 1
         plan = frames[0]._jdf.queryExecution().executedPlan().toString()
         final = plan.split("== Initial Plan ==")[0]  # AQE prints both
-        assert final.count("BroadcastExchange") == broadcasts, plan
+        assert final.count("BroadcastExchange") == 0, plan
         assert t.to_df().count() == 400 - 16
+
+
+def test_point_read_takes_partition_values_as_literals(spark, tmp_path, monkeypatch):
+    """A point read whose kept files share one partition gets the
+    partition value as a literal: building ``to_df()`` collects nothing
+    and starts no Spark job, the executed plan has no join and no
+    ``BroadcastExchange``, and its count starts 2 Spark jobs (the
+    constants broadcast was a third)."""
+    path = str(tmp_path / "tbl")
+    df = spark.range(0, 400, 1, 4).select(
+        F.col("id").alias("k"), (F.col("id") / 100).cast("int").alias("part")
+    )
+    t = DeltaTable.create(spark, path, df=df, partition_by=["part"])
+
+    seen = _spy_collects(spark, monkeypatch)
+    out, stages = _jobs_started(spark, lambda: t.to_df(predicate="k >= 10 AND k < 20"))
+    monkeypatch.undo()
+    assert seen == [] and stages == []
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    n, stages = _jobs_started(spark, out.count)
+    assert n == 10 and len(stages) == 2, stages
+    assert {r.part for r in out.collect()} == {0}
 
 
 @pytest.mark.parametrize("op", ["delete", "update", "overwrite_where", "merge"])
 def test_copy_on_write_collects_only_matched_paths(spark, tmp_path, monkeypatch, op):
     """A copy-on-write statement collects the matched paths (phase 1) and
-    nothing else from the table: its removes and the rewrite's per-file
-    constants come from the scan's Arrow table. Besides the candidate
-    list (no Spark job) the only other collects check rows, not files:
+    nothing else from the table: its candidate list, removes and the
+    rewrite's per-file constants come from the scan's Arrow table. The
+    only other collects check rows, not files:
     the transaction's constraint check of the staged rows, MERGE's
     duplicate-key check of its source and replaceWhere's check of its
     input."""
@@ -494,10 +507,8 @@ def test_copy_on_write_collects_only_matched_paths(spark, tmp_path, monkeypatch,
 
     assert [cols for cols, _, _ in seen].count(("p",)) == 1
     file_cols = set(SCAN_FILES_SCHEMA.fieldNames()) | {"__row_index"}
-    for cols, _, jobs in seen:
-        if cols == _HEAD_COLS:
-            assert jobs == 0
-        elif cols != ("p",):
+    for cols, _, _ in seen:
+        if cols != ("p",):
             assert set(cols) <= {"k", "part", "count"}, cols
             assert not set(cols) & file_cols
     assert t.to_df().count() == {"delete": 300, "update": 400, "overwrite_where": 201, "merge": 401}[op]
@@ -817,13 +828,12 @@ def test_read_named_files_lists_only_local_paths_on_driver(spark, monkeypatch, p
     """The threshold is held only for local paths, whose driver listing
     was measured; a read naming any remote path keeps Spark's listing
     job and the session's value."""
-    from pyspark.sql.readwriter import DataFrameReader
-
+    from delta_kernel_rs_spark.sources import scan as scan_mod
     from delta_kernel_rs_spark.sources.scan import _LISTING_THRESHOLD, read_named_files
 
     seen: list = []
     monkeypatch.setattr(
-        DataFrameReader, "load", lambda self, p: seen.append(spark.conf.get(_LISTING_THRESHOLD, None))
+        scan_mod, "_load", lambda reader, p: seen.append(spark.conf.get(_LISTING_THRESHOLD, None))
     )
     spark.conf.unset(_LISTING_THRESHOLD)
     read_named_files(spark, paths)

@@ -218,6 +218,28 @@ def _spark_keeps(spark, files, preds):
     return out
 
 
+def utf16_sensitive(pred) -> bool:
+    """True when a string literal of ``pred`` has a code point >= U+D800,
+    where the evaluator deliberately keeps the file (py_skipping's UTF-16
+    ordering rule)."""
+
+    def unsafe(v):
+        return isinstance(v, str) and any(ord(ch) >= 0xD800 for ch in v)
+
+    def walk(n):
+        if isinstance(n, E.Literal):
+            return unsafe(n.value)
+        if isinstance(n, E.In):
+            return any(unsafe(v) for v in n.values) or walk(n.expr)
+        if isinstance(n, E.Like):
+            return unsafe(n.pattern)
+        subs = [getattr(n, a, None) for a in ("expr", "left", "right", "child")]
+        subs += list(getattr(n, "children", None) or ())
+        return any(walk(x) for x in subs if x is not None)
+
+    return walk(pred)
+
+
 def test_differential_fuzz_skipping_never_drops_matches(spark):
     rng = random.Random(SEED)
     files = _gen_files(rng)
@@ -237,7 +259,7 @@ def test_differential_fuzz_skipping_never_drops_matches(spark):
     pv_rows = [{"p": p} for (_, _, p) in files]
     stats_docs = [stats for (_, stats, _) in files]
 
-    spark_viol, py_viol = [], []
+    spark_viol, py_viol, parity_viol = [], [], []
     total_spark_skips = total_py_skips = 0
     for k, pred in enumerate(preds):
         match_files = truth.get(k, set())
@@ -253,6 +275,8 @@ def test_differential_fuzz_skipping_never_drops_matches(spark):
                 total_py_skips += 1
                 if fid in match_files:
                     py_viol.append((k, fid))
+            elif fid not in kept and not utf16_sensitive(pred):
+                parity_viol.append((k, fid))
 
     def _fmt(viol):
         k, fids = viol[0] if isinstance(viol[0], tuple) else (viol[0], None)
@@ -260,6 +284,8 @@ def test_differential_fuzz_skipping_never_drops_matches(spark):
 
     assert not spark_viol, f"Spark rewriter dropped matching files: {_fmt(spark_viol)}"
     assert not py_viol, f"Python twin dropped matching files: {_fmt(py_viol)}"
+    # pruning parity: the evaluator keeps no file the rewriter skipped
+    assert not parity_viol, f"Python twin kept a file the rewriter skipped: {_fmt(parity_viol)}"
     # the run must actually exercise pruning, or the invariant is vacuous
     assert total_spark_skips > N_PRED  # on average >1 skipped file per pred
     assert total_py_skips > N_PRED
