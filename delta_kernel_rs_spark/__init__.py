@@ -19,7 +19,7 @@ Layout:
               modes), checkpoints (V1/multipart/V2), incremental scan,
               history, vacuum
   plans/      expression AST (3VL, struct ops, opaque/unknown) +
-              data-skipping rewriter
+              data-skipping evaluator
   functions/  schemaString codec + column mapping, partition-value codec,
               footer stats + truncation contracts, DV roaring codec,
               schema-evolution diff

@@ -10,7 +10,7 @@ with the truncation rules that are a *correctness contract* for readers:
 * timestamps: truncated (not rounded) to milliseconds, serialized
   ``yyyy-MM-dd'T'HH:mm:ss.SSS'Z'`` (kernel/src/expressions/mod.rs:103-125
   ToJson contract) — readers must widen max bounds by 1ms (see
-  plans/data_skipping.py);
+  plans/py_skipping.py);
 * non-finite floats are excluded from min/max;
 * binary is excluded from min/max entirely.
 

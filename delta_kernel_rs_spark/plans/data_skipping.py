@@ -1,66 +1,17 @@
-"""Stats-based file skipping + partition pruning.
+"""The typed stats schema of a table: the parse schema for ``add.stats``.
 
-Port of the reference's centerpiece rewrite (kernel/src/scan/
-data_skipping.rs — rules documented at :32-52; 3VL evaluation framework
-kernel/src/kernel_predicates/mod.rs:87-535; stats schema derivation
-kernel/src/scan/data_skipping/stats_schema/mod.rs):
-
-    a < 10   ⇒  minValues.a < 10
-    a > 10   ⇒  maxValues.a > 10
-    a = 10   ⇒  minValues.a <= 10 AND maxValues.a >= 10
-    a != 10  ⇒  NOT (minValues.a = 10 AND maxValues.a = 10)
-    a IS NULL     ⇒  nullCount.a > 0
-    a IS NOT NULL ⇒  nullCount.a < numRecords
-    AND keeps rewritable conjuncts (unknown conjunct ⇒ TRUE);
-    OR requires every disjunct rewritable, else the whole OR is unknown;
-    NOT is eliminated up front by inversion (expressions.normalize).
-
-The verdict keeps a file unless the rewritten predicate is *definitely
-false*: ``skip iff verdict <=> FALSE`` — i.e. keep on TRUE **or NULL**
-(missing stats must never prune; reference keep-rule ``DISTINCT(p, false)``
-at data_skipping.rs:92-223).
-
-Partition columns are evaluated exactly against the typed
-``partitionValues`` (reference data_skipping.rs:121-131 — the same unified
-filter), so a partition-only FALSE prunes the file.
-
-Timestamp caveat: written max stats are truncated (floored) to
-milliseconds (functions/stats.py), so the effective upper bound is
-``maxValues.c + 1ms`` — without this, ``ts > (max, sub-ms)`` would wrongly
-prune a file that contains matching rows (reference fixture
-``timestamp-truncation-stats``; SURVEY §4 "hard parts").
+Derives the stats struct (``numRecords`` + ``minValues``/``maxValues``/
+``nullCount`` per eligible column) from the table schema, as the
+reference's stats schema derivation does (kernel/src/scan/data_skipping/
+stats_schema/mod.rs). The checkpoint writer uses it to write
+``add.stats_parsed``. File skipping itself is ``plans/py_skipping``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from delta_kernel_rs_spark.functions.partition_codec import parse_partition_column
 from delta_kernel_rs_spark.functions.stats import eligible_stats_columns
-from delta_kernel_rs_spark.plans.expressions import (
-    And,
-    BoolLiteral,
-    Col,
-    Compare,
-    Distinct,
-    In,
-    IsNotNull,
-    IsNull,
-    Like,
-    Literal,
-    NotDistinct,
-    OpaquePredicate,
-    Or,
-    Predicate,
-    UnknownPredicate,
-    normalize,
-    safe_lit,
-)
-
-STATS_COLUMN = "stats"  # column name in scan_files_df
-PARTITION_VALUES_COLUMN = "partition_values"
 
 
 def stats_schema_for(
@@ -103,362 +54,3 @@ def stats_schema_for(
             T.StructField("nullCount", nulls, True),
         ]
     return T.StructType(out)
-
-
-class _SkippingRewriter:
-    """Predicate-over-data → Column-over-file-stats rewriter."""
-
-    def __init__(
-        self,
-        schema: T.StructType,
-        partition_columns: list[str],
-        stats_col: Column,
-        configuration: dict | None = None,
-        clustering_cols: tuple = (),
-    ):
-        self.schema = schema
-        self.stats_col = stats_col
-        self.partition_columns = set(partition_columns)
-        from delta_kernel_rs_spark.functions.schema_codec import physical_name
-        from delta_kernel_rs_spark.functions.stats import stats_selection
-
-        data_fields = [f for f in schema.fields if f.name not in self.partition_columns]
-        selection = stats_selection(configuration)
-        # clustering columns always carry stats (protocol MUST) — skip on
-        # them even when numIndexedCols/statsColumns exclude everything
-        selection["required"] = selection["required"] | frozenset(clustering_cols)
-        self.stat_types = {
-            f.name: f.dataType
-            for f in eligible_stats_columns(T.StructType(data_fields), **selection)
-        }
-        self.types = {f.name: f.dataType for f in schema.fields}
-        # logical → physical (stats docs and partitionValues use physical keys)
-        self.phys = {f.name: physical_name(f) for f in schema.fields}
-
-    # -- stat accessors -------------------------------------------------
-    def _min(self, name: str) -> Column:
-        return self.stats_col.getField("minValues").getField(self.phys[name])
-
-    def _max(self, name: str) -> Column:
-        c = self.stats_col.getField("maxValues").getField(self.phys[name])
-        if isinstance(self.stat_types[name], (T.TimestampType, T.TimestampNTZType)):
-            # Written max is floored to ms, so the true max can exceed it by
-            # up to 999µs — widen by exactly that (reference
-            # adjust_scalar_for_max_stat_truncation subtracts 999µs from the
-            # literal; adding it to the bound is equivalent and exact).
-            return c + F.expr("INTERVAL 999 MICROSECOND")
-        return c
-
-    def _null_count(self, name: str) -> Column:
-        return self.stats_col.getField("nullCount").getField(self.phys[name])
-
-    def _num_records(self) -> Column:
-        return self.stats_col.getField("numRecords")
-
-    def _not_all_null(self, name: str) -> Column:
-        return self._null_count(name) < self._num_records()
-
-    def _partition_value(self, name: str) -> Column:
-        raw = F.col(PARTITION_VALUES_COLUMN).getItem(self.phys[name])
-        return parse_partition_column(raw, self.types[name])
-
-    _INT_BOUNDS = {
-        T.ByteType: 2**7 - 1,
-        T.ShortType: 2**15 - 1,
-        T.IntegerType: 2**31 - 1,
-        T.LongType: 2**63 - 1,
-    }
-
-    def _stat_literal(self, name: str, value) -> Column | None:
-        """Literal cast to the stat column's type for min/max comparison.
-
-        Returns None (⇒ unknown, never prunes) when the cast would be
-        lossy: a fractional double OR DECIMAL against an integral column
-        truncates toward zero under Spark's non-ANSI cast (``x < 0.5`` on
-        an int column would rewrite to ``min < 0`` and wrongly prune a
-        file whose min is 0), an out-of-range integer wraps, and a
-        datetime with any time-of-day against a DATE column FLOORS
-        (``d < TIMESTAMP'2020-06-15 12:00'`` would rewrite to ``min <
-        DATE'2020-06-15'`` and wrongly prune a file whose min date
-        matches at midnight — caught by tests/test_skipping_fuzz.py).
-        Sound because the residual row filter still evaluates the true
-        predicate.
-        """
-        import datetime as _dt
-        from decimal import Decimal as _Dec
-
-        t = self.stat_types[name]
-        bound = self._INT_BOUNDS.get(type(t))
-        if bound is not None:
-            if isinstance(value, (float, _Dec)) and value != int(value):
-                return None
-            if isinstance(value, (int, float, _Dec)) and not -bound - 1 <= value <= bound:
-                return None
-        if isinstance(t, T.DateType) and isinstance(value, _dt.datetime):
-            # Spark promotes the COLUMN to timestamp here, it never floors
-            # the literal — a date-typed rewrite cannot represent that
-            return None
-        return safe_lit(value).cast(t)
-
-    # -- classification ---------------------------------------------------
-    def _col_lit(self, p: Compare) -> Compare | None:
-        """Canonicalize a comparison to col-on-left, or None when the shape
-        is not col-vs-lit.  Returns the WHOLE swapped Compare — swapped()
-        flips the operator, and callers must dispatch on the flipped op
-        (``L <= col`` ≡ ``col >= L``; dispatching on the original op would
-        prune via inverted min/max bounds)."""
-        if isinstance(p.left, Col) and isinstance(p.right, Literal):
-            return p
-        if isinstance(p.left, Literal) and isinstance(p.right, Col):
-            return p.swapped()
-        return None
-
-    def _is_partition_col(self, c: Col) -> bool:
-        return c.path in self.partition_columns
-
-    def _has_stats(self, c: Col) -> bool:
-        return c.top_level and c.path in self.stat_types
-
-    # -- rewrite -----------------------------------------------------------
-    def rewrite(self, p: Predicate) -> Column | None:
-        """None = unknown (not rewritable) — caller treats per AND/OR rules."""
-        if isinstance(p, BoolLiteral):
-            return F.lit(p.value)
-        if isinstance(p, UnknownPredicate):
-            # unknown ⇒ NULL for skipping ONLY (reference mod.rs:503-511):
-            # never prunes alone, but lets a provably-false sibling conjunct
-            # still prune the file.
-            return F.lit(None).cast("boolean")
-        if isinstance(p, OpaquePredicate):
-            if p.skipping_fn is not None and not p.negated:
-                out = p.skipping_fn(self, p.children)
-                if out is not None:
-                    return out
-            return F.lit(None).cast("boolean")
-        if isinstance(p, And):
-            parts = [self.rewrite(c) for c in p.children]
-            known = [x for x in parts if x is not None]
-            if not known:
-                return None
-            out = known[0]
-            for x in known[1:]:
-                out = out & x
-            return out
-        if isinstance(p, Or):
-            parts = [self.rewrite(c) for c in p.children]
-            if any(x is None for x in parts):
-                return None
-            out = parts[0]
-            for x in parts[1:]:
-                out = out | x
-            return out
-        if isinstance(p, Compare):
-            shape = self._col_lit(p)
-            if shape is None:
-                return None
-            p = shape  # col-on-left; p.op is the (possibly flipped) op
-            c, v = p.left, p.right
-            if self._is_partition_col(c):
-                if v.value is None:
-                    # col <op> NULL matches no rows under SQL-WHERE
-                    return F.lit(False)
-                pv = self._partition_value(c.path)
-                # SQL-WHERE null-intolerance on the EXACT partition value:
-                # a null value makes the comparison unsatisfiable for every
-                # row in the file, so the verdict is FALSE (skip), not
-                # UNKNOWN (reference eval_sql_where — data_skipping.rs:85,
-                # predicates/mod.rs eval_sql_where adds the IS NOT NULL
-                # conjuncts). Sound because the scan always re-applies the
-                # predicate as the residual row filter.
-                return pv.isNotNull() & _compare(p.op, pv, safe_lit(v.value))
-            if not self._has_stats(c):
-                return None
-            lo, hi = self._min(c.path), self._max(c.path)
-            lv = self._stat_literal(c.path, v.value)
-            if lv is None:
-                return None
-            if p.op == "lt":
-                out = lo < lv
-            elif p.op == "le":
-                out = lo <= lv
-            elif p.op == "gt":
-                out = hi > lv
-            elif p.op == "ge":
-                out = hi >= lv
-            elif p.op == "eq":
-                out = (lo <= lv) & (hi >= lv)
-            elif p.op == "ne":
-                out = ~((lo == lv) & (hi == lv))
-            else:
-                return None
-            # SQL-WHERE semantics: comparisons are null-intolerant, so a
-            # present-but-all-null file can never match — prepend the
-            # not-all-null guard (reference eval_sql_where; our scan always
-            # applies the predicate as the residual row filter, which makes
-            # the guard sound).
-            return self._not_all_null(c.path) & out
-        if isinstance(p, IsNull):
-            if isinstance(p.expr, Col):
-                c = p.expr
-                if self._is_partition_col(c):
-                    return self._partition_value(c.path).isNull()
-                if self._has_stats(c):
-                    return self._null_count(c.path) > 0
-            return None
-        if isinstance(p, IsNotNull):
-            if isinstance(p.expr, Col):
-                c = p.expr
-                if self._is_partition_col(c):
-                    return self._partition_value(c.path).isNotNull()
-                if self._has_stats(c):
-                    return self._null_count(c.path) < self._num_records()
-            return None
-        if isinstance(p, In):
-            if isinstance(p.expr, Col):
-                c = p.expr
-                if self._is_partition_col(c):
-                    pv = self._partition_value(c.path)
-                    out = None
-                    # NULL members can never match under IN's equality
-                    # semantics; dropping them (and guarding pv) gives the
-                    # exact SQL-WHERE verdict: FALSE for a null partition
-                    # value instead of UNKNOWN-keep.
-                    for v in p.values:
-                        if v is None:
-                            continue
-                        eq = pv == safe_lit(v)
-                        out = eq if out is None else (out | eq)
-                    if out is None:
-                        return F.lit(False)
-                    return pv.isNotNull() & out
-                if self._has_stats(c):
-                    lo, hi = self._min(c.path), self._max(c.path)
-                    out = None
-                    for v in p.values:
-                        lv = self._stat_literal(c.path, v)
-                        if lv is None:
-                            # one lossy disjunct makes the whole IN unknown
-                            return None
-                        term = (lo <= lv) & (hi >= lv)
-                        out = term if out is None else (out | term)
-                    if out is not None:
-                        out = self._not_all_null(c.path) & out
-                    return out
-            return None
-        if isinstance(p, Like):
-            # LIKE prunes on the pattern's literal prefix: a matching value
-            # v satisfies prefix <= v < successor(prefix), so a file whose
-            # [min, max] misses that band cannot match. Sound under the
-            # stats truncation contract (min truncates downward, max
-            # upward). Wildcard-leading patterns have no usable prefix.
-            if not isinstance(p.expr, Col):
-                return None
-            if "\\" in p.pattern:
-                # backslash escapes (\% / \_) change which characters are
-                # wildcards; a literal-prefix band over the raw pattern
-                # would be unsound — leave escaped patterns residual-only
-                return None
-            c = p.expr
-            if not isinstance(self.types.get(c.path), T.StringType):
-                return None
-            if self._is_partition_col(c):
-                # SQL-WHERE null-intolerance: the partition value is exact
-                # per file, so LIKE over NULL is FALSE (skip), not UNKNOWN
-                # (keep) — mirrors the py_skipping twin so the two paths
-                # prune identically (twin drift flagged in r10 review).
-                pv = self._partition_value(c.path)
-                return pv.isNotNull() & pv.like(p.pattern)
-            if not self._has_stats(c):
-                return None
-            wild = len(p.pattern)
-            for ch in ("%", "_"):
-                i = p.pattern.find(ch)
-                if i != -1:
-                    wild = min(wild, i)
-            prefix = p.pattern[:wild]
-            if not prefix:
-                return None  # '%...' — every string is a candidate
-            lo, hi = self._min(c.path), self._max(c.path)
-            out = hi >= F.lit(prefix)
-            nxt = ord(prefix[-1]) + 1
-            if 0xD800 <= nxt <= 0xDFFF:
-                # a lone surrogate cannot round-trip through the JVM's
-                # UTF-8 strings (it would mangle to '?', collapsing the
-                # bound BELOW the prefix — unsound); valid strings cannot
-                # contain surrogates either, so U+E000 is the next real
-                # codepoint and stays a tight bound
-                nxt = 0xE000
-            if nxt <= 0x10FFFF:
-                successor = prefix[:-1] + chr(nxt)
-                out = out & (lo < F.lit(successor))
-            return self._not_all_null(c.path) & out
-        if isinstance(p, (Distinct, NotDistinct)):
-            if isinstance(p.left, Col) and isinstance(p.right, Literal):
-                c, v = p.left, p.right
-                if self._is_partition_col(c):
-                    pv = self._partition_value(c.path)
-                    eq = pv.eqNullSafe(safe_lit(v.value))
-                    return ~eq if isinstance(p, Distinct) else eq
-                if not self._has_stats(c):
-                    return None
-                # DISTINCT expands over null-ness (reference test_eval_distinct):
-                #   DISTINCT(x, NULL)      ≡ x IS NOT NULL
-                #   NOT DISTINCT(x, NULL)  ≡ x IS NULL
-                #   DISTINCT(x, v)     ⇒ nullCount > 0 OR NOT(min = v = max)
-                #   NOT DISTINCT(x, v) ⇒ not-all-null AND min <= v <= max
-                if v.value is None:
-                    has_null = self._null_count(c.path) > 0
-                    return (
-                        self._not_all_null(c.path)
-                        if isinstance(p, Distinct)
-                        else has_null
-                    )
-                lo, hi = self._min(c.path), self._max(c.path)
-                lv = self._stat_literal(c.path, v.value)
-                if lv is None:
-                    return None
-                if isinstance(p, Distinct):
-                    return (self._null_count(c.path) > 0) | ~((lo == lv) & (hi == lv))
-                return self._not_all_null(c.path) & (lo <= lv) & (hi >= lv)
-            return None
-        return None
-
-
-def file_skipping_predicate(
-    predicate,
-    schema: T.StructType,
-    partition_columns: list[str],
-    configuration: dict | None = None,
-    clustering_cols: tuple = (),
-) -> Column | None:
-    """Build the keep-file filter Column for ``Scan.scan_files_df()``.
-
-    Returns None when the predicate yields no skipping power (e.g. it is a
-    raw SQL string / Spark Column — those still filter rows, just not files).
-    """
-    if not isinstance(predicate, Predicate):
-        return None
-    stats_schema = stats_schema_for(
-        schema, partition_columns, configuration, clustering_cols
-    )
-    parsed = F.from_json(F.col(STATS_COLUMN), stats_schema)
-    rewriter = _SkippingRewriter(
-        schema, partition_columns, parsed, configuration, clustering_cols
-    )
-    verdict = rewriter.rewrite(normalize(predicate))
-    if verdict is None:
-        return None
-    # Keep rule: keep unless the verdict is *definitely* false — TRUE or
-    # NULL (missing stats / null partition value) both keep the file.
-    return ~verdict.eqNullSafe(F.lit(False))
-
-
-def _compare(op: str, a: Column, b: Column) -> Column:
-    return {
-        "lt": a < b,
-        "le": a <= b,
-        "gt": a > b,
-        "ge": a >= b,
-        "eq": a == b,
-        "ne": a != b,
-    }[op]

@@ -5,8 +5,8 @@ Mirrors the reference's untyped expression language
 :529-559): literals, column paths, arithmetic, coalesce, 3VL comparisons,
 IS [NOT] NULL, IS DISTINCT FROM, AND/OR junctions, NOT.
 
-Why an AST instead of raw Spark Columns: the data-skipping rewriter
-(plans/data_skipping.py) must *transform* predicates (``a < 10`` ⇒
+Why an AST instead of raw Spark Columns: the data-skipping evaluator
+(plans/py_skipping.py) must *transform* predicates (``a < 10`` ⇒
 ``minValues.a < 10``), which requires introspectable structure. ``to_spark``
 lowers any node to a Spark Column for the actual data filter — like the
 reference, the same predicate drives both the file filter and the row
@@ -14,7 +14,7 @@ filter (kernel/src/scan/data_skipping.rs).
 
 NOT is never evaluated directly — it is pushed down, inverting children
 (reference kernel/src/expressions/mod.rs:533-538 — ``NOT(a<b)`` ⇒
-``a>=b``), so the skipping rewriter only ever sees positive forms.
+``a>=b``), so the skipping evaluator only ever sees positive forms.
 """
 
 from __future__ import annotations
@@ -39,8 +39,8 @@ def safe_lit(value: Any) -> Column:
     years < 1000, so ``date(1, 1, 1)`` becomes ``"1-01-01"`` and the JVM
     throws. Spell such literals as an ISO-8601 string cast instead —
     ``isoformat()`` zero-pads — keeping the exact same typed literal in the
-    plan (found by test_partition_fuzz on the skipping rewriter's
-    partition-value compare)."""
+    plan (found by test_partition_fuzz on the Column skipping rewriter's
+    partition-value compare, since replaced by plans/py_skipping)."""
     if isinstance(value, _dt.datetime):
         if value.year < 1000:
             return F.lit(value.isoformat(sep=" ")).cast("timestamp")
@@ -326,7 +326,7 @@ class Like(Predicate):
     """SQL LIKE with ``%``/``_`` wildcards (no ESCAPE clause).
 
     Skipping: a literal pattern prefix prunes on string min/max bounds
-    (plans/data_skipping); patterns starting with a wildcard are residual
+    (plans/py_skipping); patterns starting with a wildcard are residual
     row filters only."""
 
     expr: Expr
@@ -381,16 +381,18 @@ class OpaquePredicate(Predicate):
 
     ``fn`` builds the evaluation Column from the child Columns;
     ``skipping_fn`` (optional) is the ``as_data_skipping_predicate``
-    callback: given the rewriter, return a skipping Column or None. Without
-    it the op poisons skipping as NULL — the file is never pruned, and the
-    documented safety rule holds because our scans always re-apply the
-    predicate as the residual row filter.
+    callback: given the skipping evaluator, the children and one file's
+    parsed stats, return that file's verdict (True / False / None;
+    ``FileSkipEvaluator._min``/``_max``/``_null_count`` read the stats).
+    Without it the op poisons skipping as NULL — the file is never pruned,
+    and the documented safety rule holds because our scans always re-apply
+    the predicate as the residual row filter.
     """
 
     name: str
     children: tuple[Expr, ...]
     fn: Any  # Callable[[list[Column]], Column]
-    skipping_fn: Any = None  # Callable[[rewriter, children], Column | None]
+    skipping_fn: Any = None  # Callable[[evaluator, children, stats], bool | None]
     negated: bool = False
 
     def to_spark(self) -> Column:
@@ -450,7 +452,7 @@ def normalize(p: Predicate) -> Predicate:
         inv = invert(p.child)
         if isinstance(inv, Not) and inv.child is p.child:
             # uninvertible leaf (e.g. LIKE): keep the Not in place — the
-            # skipping rewriter treats it as unknown, never prunes on it
+            # skipping evaluator treats it as unknown, never prunes on it
             return inv
         return normalize(inv)
     if isinstance(p, And):

@@ -246,7 +246,7 @@ def derived_partition_filter(
 ) -> Column | None:
     """Keep-file filter derived from generated-column rules, or None.
 
-    Same keep rule as ``file_skipping_predicate``: a file survives unless
+    Same keep rule as ``plans/py_skipping``: a file survives unless
     the derived predicate is *definitely* false on its partition values
     (NULL partition value ⇒ UNKNOWN ⇒ kept).
     """

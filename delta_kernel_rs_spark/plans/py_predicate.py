@@ -442,7 +442,7 @@ def _align_temporal(p: Predicate, kinds: dict[str, str]) -> Predicate:
       cast to timestamp — Spark promotes DATE to TIMESTAMP at comparison,
       so ``d = TIMESTAMP '... 12:00'`` is False for every date, NOT
       floored to the day (the same bug test_skipping_fuzz shrank out of
-      the stats rewriter);
+      the Column stats rewriter that preceded plans/py_skipping);
     * tz vs ntz column comparison is refused — no Arrow spelling keeps
       both 3VL and instant semantics."""
 

@@ -45,7 +45,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # Arrow for any pandas interop (toPandas / pandas UDFs).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Make sure scan-level pushdown is on (it is by default; be explicit —
-    # the skipping layer in plans/data_skipping.py builds on it).
+    # row-group pruning below the file skipping of plans/py_skipping.py).
     "spark.sql.parquet.filterPushdown": "true",
     # Python Data Source filter pushdown: lets .filter() on a facade read
     # reach DeltaKernelBatchReader.pushFilters (partition pruning + file

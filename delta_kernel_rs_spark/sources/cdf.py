@@ -308,8 +308,9 @@ def table_changes(
         cols.append(F.timestamp_millis(F.col("__ts")).alias(COMMIT_TIMESTAMP_COL))
         return df.select(*cols)
 
-    def dv_desc(kind: str, old_col: str | None, new_col: str | None) -> DataFrame:
-        """DV descriptor rows for dv_diff_from_df, built in-plan."""
+    def dv_desc(kind: str, old_col: str | None, new_col: str | None, group=None) -> DataFrame:
+        """DV descriptor rows for dv_diff_from_df, built in-plan; ``group``
+        (default: the kind) rides on every diff row."""
 
         def side(col: str | None, prefix: str):
             if col is None:
@@ -325,7 +326,7 @@ def table_changes(
             ]
 
         return arm_events(kind).select(
-            F.lit(kind).alias("group"),
+            (F.lit(kind) if group is None else group).alias("group"),
             "file_path",
             "version",
             F.col("__ts").alias("ts_ms"),
@@ -377,32 +378,27 @@ def table_changes(
 
     if paths_by_kind.get("swap"):
         # One read over all swapped files; the executor-decoded bitmap diff
-        # carries (version, ts, side) per row — an inner join turns it into
-        # row-level 'delete'/'insert' changes. The same path may be swapped
-        # at several versions in the range; each diff row is version-tagged.
-        diff = dv_diff_from_df(dv_desc("swap", "dv_old", "dv_new"), table_path).select(
+        # carries (version, ts, partition values, side) per row — an inner
+        # join turns it into row-level 'delete'/'insert' changes, with no
+        # constants join of its own. The same path may be swapped at
+        # several versions in the range; each diff row is version-tagged.
+        desc = dv_desc("swap", "dv_old", "dv_new", group=F.to_json(F.col("pv")))
+        diff = dv_diff_from_df(desc, table_path).select(
             F.col("file_path").alias("dp"),
             F.col("row_index").alias("dri"),
             F.col("version").alias("__v"),
             F.col("ts_ms").alias("__ts"),
+            F.from_json(F.col("group"), "map<string,string>").alias("__pv"),
             "side",
         )
         swap_df = with_lineage(
             read_named_files(spark, paths_by_kind["swap"], schema=read_schema)
         )
-        swaps = arm_rows("swap")
-        first: dict[str, int] = {}  # one pv row per swapped path
-        for i, p in enumerate(swaps.column("file_path").to_pylist()):
-            first.setdefault(p, i)
-        joined = with_file_constants(
-            swap_df.join(
-                diff,
-                (swap_df["__file_path"] == F.col("dp"))
-                & (swap_df["__row_index"] == F.col("dri")),
-                "inner",
-            ),
-            swaps.take(sorted(first.values())),
-            {"pv": "__pv"},
+        joined = swap_df.join(
+            diff,
+            (swap_df["__file_path"] == F.col("dp"))
+            & (swap_df["__row_index"] == F.col("dri")),
+            "inner",
         )
         ct = F.when(F.col("side") == "new_only", F.lit("delete")).otherwise(
             F.lit("insert")

@@ -10,7 +10,7 @@ The Spark-first layout implementation: clustered writes range-partition +
 sort by the clustering columns (``repartitionByRange`` +
 ``sortWithinPartitions``), which gives each written file a tight, nearly
 disjoint min/max range on those columns — exactly what makes the
-stats-based file skipping in plans/data_skipping.py effective. OPTIMIZE
+stats-based file skipping in plans/py_skipping.py effective. OPTIMIZE
 re-runs the same layout, so compaction re-clusters.
 """
 

@@ -1,18 +1,30 @@
-"""Table scan: driver-side log replay → live-file frame → logical DataFrame.
+"""Table scan: driver-side log replay → pruned scan rows → logical DataFrame.
 
-Planning follows the reference kernel, which replays the log on a single
-node (kernel/src/log_replay/mod.rs:28-66): ``pyreplay.live_files_arrow``
-folds the commit tail and the checkpoint into one Arrow table of live
-files on the driver (~10 ms for a few hundred files), and
-``Scan.scan_files_df`` lifts that table into a local DataFrame in the
-reference's scan-row shape (kernel/src/scan/mod.rs:1410-1440). Spark
-plans a local relation on the driver, so data skipping, the projections
-and the path collect in ``to_df`` run as zero Spark jobs; the frame joins
-executor-side only where file constants (partition values, row-id
-constants) meet the data rows. Deletion vectors apply as a per-file keep
-filter on the executors (``Scan.live_rows``, the read the DML paths
-share). The DML paths look up the metadata of the files they rewrite
-in the same Arrow table (``Scan.file_rows``).
+Planning follows the reference kernel, which replays the log and prunes
+files on a single node (kernel/src/log_replay/mod.rs:28-66,
+kernel/src/scan/data_skipping.rs): ``pyreplay.live_files_arrow`` folds
+the commit tail and the checkpoint into one Arrow table of live files on
+the driver (~10 ms for a few hundred files), in the reference's scan-row
+shape (kernel/src/scan/mod.rs:1410-1440). ``Scan`` plans every read from
+that table, before any Spark plan exists:
+
+* the one skipping evaluator (``plans/py_skipping.FileSkipEvaluator``)
+  drops the files the predicate provably misses, partition pruning and
+  stats skipping alike; tables with generation rules also prune on the
+  derived partition predicate (``plans/generated_pruning``);
+* the kept rows give the read its path list and DV descriptors with no
+  collect, and ``scan_files_df()`` is a local relation over them;
+* each read's per-file constants (partition values, row-id constants)
+  come from :func:`with_file_constants`: literal columns when the read's
+  files share one tuple, as the reference's per-file transform
+  (kernel/src/scan/transform_spec.rs), else a broadcast join.
+
+Deletion vectors apply as a per-file keep filter on the executors
+(``Scan.live_rows``, the read the DML paths share). The DML paths look
+up the metadata of the files they rewrite in the same Arrow table
+(``Scan.file_rows``). A frame a caller hands in (``with_files_df``,
+``exclude_file_keys``) is collected once, as Arrow, so there is one
+planning path.
 
 Every read of files the log names (data files, commits, checkpoint
 parts, sidecars, change files) goes through :func:`read_named_files`,
@@ -21,11 +33,11 @@ one-task-per-path listing job, so building ``to_df()`` over a local
 table starts no Spark job at any file count. Remote stores keep
 Spark's listing job.
 
-One Arrow table and its frame are kept per (session, table, version) in
-a small driver LRU; nothing is persisted. The Column helpers below
-(path decoding, DV identity, checkpoint conforming) serve the Spark-side
-folds that remain: the checkpoint writer, the change feed and the
-incremental refresh.
+One Arrow table is kept per (session, table, version) in a small driver
+LRU, with a local DataFrame over it built on first use; nothing is
+persisted. The Column helpers below (path decoding, DV identity,
+checkpoint conforming) serve the Spark-side folds that remain: the
+checkpoint writer, the change feed and the incremental refresh.
 """
 
 from __future__ import annotations
@@ -1047,200 +1059,3 @@ class Scan:
                 pred = F.expr(pred)
             df = df.filter(pred)
         return df
-
-
-def live_file_head(sfdf: DataFrame) -> list[tuple[str, dict | None]]:
-    """``(file_path, DV descriptor or None)`` per file of a scan-files
-    frame — the one O(files) driver collect a parquet read needs. Over the
-    local relation this runs on the driver as zero Spark jobs; descriptors
-    are shipped to the DV filter undecoded."""
-    rows = sfdf.select(
-        "file_path",
-        F.col("deletion_vector.storageType").alias("st"),
-        F.col("deletion_vector.pathOrInlineDv").alias("dv"),
-        F.col("deletion_vector.offset").alias("off"),
-    ).collect()
-    return [
-        (r.file_path, None if r.st is None else
-         {"storageType": r.st, "pathOrInlineDv": r.dv, "offset": r.off})
-        for r in rows
-    ]
-
-# -- legacy Column-rewriter planner (kept only to gate the Arrow planner) ----
-def _legacy_scan_files_df(self) -> DataFrame:
-    df = self._files_df_override if self._files_df_override is not None else self._version_frame()
-    skip_pred = _legacy_skipping_predicate(self)
-    if skip_pred is not None:
-        df = df.filter(skip_pred)
-    if self._exclude_keys_df is not None:
-        k = self._exclude_keys_df
-        df = df.join(
-            k,
-            (df["file_path"] == k["x_path"])
-            & (dv_unique_id(df["deletion_vector"]) == k["x_dv"])
-            & (F.coalesce(df["base_row_id"], F.lit(-1)) == k["x_brid"]),
-            "left_anti",
-        )
-    return df
-
-
-def _legacy_skipping_predicate(self) -> Column | None:
-    """Partition pruning + stats-based data skipping (plans/data_skipping)."""
-    pred = self._parsed_predicate if self._parsed_predicate is not None else self.predicate
-    if pred is None:
-        return None
-    from delta_kernel_rs_spark.plans.data_skipping import file_skipping_predicate
-    from delta_kernel_rs_spark.plans.generated_pruning import (
-        derived_partition_filter,
-    )
-
-    keep = file_skipping_predicate(
-        pred,
-        self.snapshot.schema,
-        self.snapshot.metadata.partition_columns,
-        self.snapshot.metadata.configuration,
-        # clustering columns always carry stats (protocol MUST) —
-        # skip on them even when the table's stats config excludes them
-        tuple(
-            c["logical"][0]
-            for c in self.snapshot.clustering_columns()
-            if c.get("logical") and len(c["logical"]) == 1
-        ),
-    )
-    # Generated-column partition pruning: a predicate on the SOURCE of a
-    # generated partition column implies a predicate on the partition
-    # value (plans/generated_pruning) — AND-ing an implied filter only
-    # drops files with no matching rows.
-    derived = derived_partition_filter(
-        pred,
-        self.snapshot.schema,
-        self.snapshot.metadata.partition_columns,
-    )
-    if derived is None:
-        return keep
-    return derived if keep is None else (keep & derived)
-
-
-def _legacy_live_rows(self, head, sfdf: DataFrame, file_cols: bool = False) -> DataFrame:
-    """The live rows of the files in ``head``, in logical columns.
-
-    ``head`` is :func:`live_file_head` output (or a subset of it);
-    ``sfdf`` is the scan-files frame the per-file constants (partition
-    values, row-id constants) join from. DV-free files go through the
-    plain parquet reader; DV-carrying files through a second read of
-    only those files, filtered by :func:`live_row_filter` on (Spark's
-    file URI, physical row index) — the bitmaps decode on executors,
-    the driver ships descriptors only. Both reads are relations built
-    by :func:`read_named_files` (for local files a driver-side
-    listing, no Spark job).
-    The path is decoded to ``__file_path`` at most once per row, and
-    only when partition constants or ``file_cols`` need it.
-    ``file_cols`` keeps ``__file_path`` and ``__row_index`` (the DML
-    candidate read needs them).
-    """
-    from functools import reduce
-
-    from delta_kernel_rs_spark.functions.dv import live_row_filter
-
-    spark = self.spark
-    schema = self.snapshot.schema
-    pcols = self.snapshot.metadata.partition_columns
-    need_path = bool(pcols) or self.with_row_ids or file_cols
-    need_index = self.with_row_ids or file_cols
-    phys_schema = self._physical_read_schema()
-
-    def read(paths: list[str]) -> DataFrame:
-        if self._needs_widening_read():
-            return self._read_with_widening(spark, paths, phys_schema)
-        return read_named_files(spark, paths, schema=phys_schema)
-
-    row_index = F.col("_metadata.row_index")
-    clean = [p for p, dv in head if dv is None]
-    dvs = {p: dv for p, dv in head if dv is not None}
-    arms = [read(clean)] if clean else []
-    if dvs:
-        keep = live_row_filter(dvs, self.snapshot.table_path)
-        arms.append(
-            read(sorted(dvs)).filter(keep(F.col("_metadata.file_path"), row_index))
-        )
-    if need_path:
-        file_path = normalize_file_path(F.col("_metadata.file_path"))
-        arms = [arm.withColumn("__file_path", file_path) for arm in arms]
-    if need_index:
-        arms = [arm.withColumn("__row_index", row_index) for arm in arms]
-    df = reduce(DataFrame.unionByName, arms)
-
-    consts = {}
-    if pcols:
-        consts["partition_values"] = "__pv"
-    if self.with_row_ids:
-        consts["base_row_id"] = "__base_row_id"
-        consts["default_row_commit_version"] = "__drcv"
-    if consts:
-        const_df = sfdf.select(
-            F.col("file_path").alias("__const_path"),
-            *[F.col(c).alias(a) for c, a in consts.items()],
-        )
-        # broadcast per-file constants only when the file count is known
-        # small; beyond that let AQE pick the join strategy
-        if len(head) <= 100_000:
-            const_df = F.broadcast(const_df)
-        df = df.join(const_df, df["__file_path"] == F.col("__const_path"), "left")
-
-    # Final projection in logical column order: physical→logical rename,
-    # partition-value parse, type normalization (widening casts).
-    out_cols = []
-    for f in schema.fields:
-        if self.columns is not None and f.name not in self.columns:
-            continue
-        if f.name in pcols:
-            # partitionValues keys are physical names under column mapping
-            raw = F.col("__pv").getItem(physical_name(f))
-            out_cols.append(parse_partition_column(raw, f.dataType).alias(f.name))
-        else:
-            out_cols.append(F.col(quoted(physical_name(f))).cast(f.dataType).alias(f.name))
-    if self.with_row_ids:
-        # Stable row id = baseRowId + row_index; commit version from the
-        # add's defaultRowCommitVersion (reference row_tracking.rs +
-        # transform_spec.rs:48-56 — materialized-column override would
-        # coalesce in front of this once writes materialize it).
-        out_cols.append(
-            (F.col("__base_row_id") + F.col("__row_index")).alias("row_id")
-        )
-        out_cols.append(F.col("__drcv").alias("row_commit_version"))
-    if file_cols:
-        out_cols += [F.col("__file_path"), F.col("__row_index")]
-    return df.select(*out_cols)
-
-
-def _legacy_to_df(self) -> DataFrame:
-    """The scan result as a lazy logical DataFrame.
-
-    The parquet reader needs the kept path list, collected from
-    :meth:`scan_files_df` with each file's DV descriptor; see
-    :meth:`live_rows`. A ``with_files_df`` override plans off the
-    supplied frame.
-    """
-    sfdf = _legacy_scan_files_df(self).drop("stats", "modification_time")
-    head = live_file_head(sfdf)
-    if not head:
-        schema = self.snapshot.schema
-        out_fields = [f for f in schema.fields if self.columns is None or f.name in self.columns]
-        if self.with_row_ids:
-            out_fields = list(out_fields) + [
-                T.StructField("row_id", T.LongType(), True),
-                T.StructField("row_commit_version", T.LongType(), True),
-            ]
-        return self.spark.createDataFrame([], T.StructType(out_fields))
-
-    df = _legacy_live_rows(self, head, sfdf)
-    if self.predicate is not None:
-        pred = self.predicate
-        from delta_kernel_rs_spark.plans.expressions import Predicate
-
-        if isinstance(pred, Predicate):
-            pred = pred.to_spark()
-        elif isinstance(pred, str):
-            pred = F.expr(pred)
-        df = df.filter(pred)
-    return df

@@ -11,6 +11,12 @@ this engine's analogues, per BASELINE.md's replication list:
 - ``read_data_latest``: ``to_df()`` + ``count()`` over every live file of
   the same table (log only), so the data read's per-file costs (path
   listing, file opens) are measured at 10k files.
+- ``read_metadata_pruned_{cold,warm}``: building ``to_df()`` under a
+  stats-pruned predicate (one file's key range) on the same version:
+  the file-skipping evaluator over every live file's stats plus the read
+  plan. ``cold`` is the process's first such build (the version's scan
+  rows already cached), ``warm`` the min of two later ones. Reported
+  under ``pruned_queries``, outside ``value``.
 - ``crc*/snapshotLatest``: Snapshot.create (P&M resolution) with a fresh
   CRC at the tip vs a stale one far behind vs none at all.
 - ``cdf_plan_long_range_<N>``: ``table_changes`` over N single-add
@@ -37,7 +43,8 @@ scripts/bench_compare.py exactly like BENCH does:
     {"metric": "metadata_bench_sec", "value": <total>, "unit": "sec",
      "queries": {"read_metadata_log_only": ..., ...}, "adds": 10000,
      "spark_jobs": {"write_dv_delete_1pct": [<jobs>, <jobs>]},
-     "cdf_plan_sec": <total>, "cdf_queries": {...}}
+     "cdf_plan_sec": <total>, "cdf_queries": {...},
+     "pruned_queries": {...}}
 
 Usage: python scripts/bench_metadata.py [--adds 10000] [--commits 20]
 Writes the table under $TMPDIR; each timing is min-of-2 (warm JVM).
@@ -190,6 +197,7 @@ def main() -> int:
     spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     results: dict[str, float] = {}
     spark_jobs: dict[str, list[int]] = {"write_dv_delete_1pct": []}
+    pruned: dict[str, float] = {}
 
     with tempfile.TemporaryDirectory(prefix="dkrs_meta_bench_") as root:
         path = os.path.join(root, "tbl")
@@ -210,6 +218,14 @@ def main() -> int:
 
         n_rows = read_data()
         results["read_data_latest"] = _timed(read_data)
+
+        snap = Snapshot.create(spark, path)
+
+        def read_metadata_pruned():
+            return snap.scan(predicate="k >= 10 AND k < 20").to_df()
+
+        pruned["read_metadata_pruned_cold"] = _timed(read_metadata_pruned, reps=1)
+        pruned["read_metadata_pruned_warm"] = _timed(read_metadata_pruned)
 
         t.checkpoint()
         results["read_metadata_v1_checkpoint"] = _timed(read_metadata)
@@ -372,6 +388,7 @@ def main() -> int:
                 "spark_jobs": spark_jobs,
                 "cdf_plan_sec": round(sum(cdf.values()), 3),
                 "cdf_queries": cdf,
+                "pruned_queries": pruned,
                 "adds": args.adds,
                 "commits": args.commits,
                 "files_seen": n_files,

@@ -1,8 +1,8 @@
-"""The facade's pure-Python file-skipping twin (plans/py_skipping.py).
+"""The file-skipping evaluator (plans/py_skipping.py).
 
 Mirrors the reference truth tables (kernel/src/scan/data_skipping/tests.rs,
-already ported for the Spark rewriter in test_skipping_rules.py) against
-the SparkSession-free evaluator, plus the twin-specific soundness rules
+also ported in test_skipping_rules.py) against the SparkSession-free
+evaluator, plus its own soundness rules
 (float stat parse, UTF-16 ordering guard, timestamp max widening), and
 proves the facade reads FEWER FILES under a pushed data-column filter
 (footer-read count — r9 VERDICT next #1's done-criterion).

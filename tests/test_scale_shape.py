@@ -472,6 +472,35 @@ def test_point_read_takes_partition_values_as_literals(spark, tmp_path, monkeypa
     assert {r.part for r in out.collect()} == {0}
 
 
+def test_change_feed_of_one_append_and_dv_delete_joins_no_constants(spark, tmp_path):
+    """A change feed over one append and one DV delete joins no per-file
+    constants: the append's files share one (partition, version,
+    timestamp) tuple, taken as literals, and the DV swap's partition
+    values ride on its bitmap-diff rows. The only broadcast left is the
+    diff itself."""
+    from delta_kernel_rs_spark.sources.cdf import table_changes
+    from delta_kernel_rs_spark.sources.delete import delete_with_dvs
+
+    path = str(tmp_path / "tbl")
+    df = spark.range(0, 400, 1, 4).select(
+        F.col("id").alias("k"), (F.col("id") % 4).cast("int").alias("part")
+    )
+    t = DeltaTable.create(
+        spark, path, df=df, partition_by=["part"],
+        properties={"delta.enableChangeDataFeed": "true"},
+    )
+    t.append(spark.range(1000, 1010, 1, 2).select(F.col("id").alias("k"), F.lit(2).alias("part")))
+    delete_with_dvs(t, "k < 100 AND k % 10 = 3")
+    changes = table_changes(spark, path, 1)
+    plan = changes._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastExchange") == 1, plan
+    got = sorted((r._change_type, r.k, r.part, r._commit_version) for r in changes.collect())
+    assert got == sorted(
+        [("insert", k, 2, 1) for k in range(1000, 1010)]
+        + [("delete", k, k % 4, 2) for k in range(3, 100, 10)]
+    )
+
+
 @pytest.mark.parametrize("op", ["delete", "update", "overwrite_where", "merge"])
 def test_copy_on_write_collects_only_matched_paths(spark, tmp_path, monkeypatch, op):
     """A copy-on-write statement collects the matched paths (phase 1) and

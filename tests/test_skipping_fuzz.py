@@ -1,36 +1,32 @@
-"""Differential fuzz of the data-skipping rewriters (r9 VERDICT next #2).
+"""Differential fuzz of the data-skipping evaluator (r9 VERDICT next #2).
 
-The 3VL skipping rewriter is the one component where a silent bug means
-silently wrong answers at scale: its enumerated truth tables
-(test_skipping_rules.py, ported from kernel/src/scan/data_skipping/
-tests.rs) cannot explore the composition space. This harness generates
-seeded random predicates (nested And/Or/Not over comparisons / IsNull /
-In / LIKE / DISTINCT over int/float/string/date/timestamp/null-heavy
-columns, including deliberately cross-typed literals) and random files
-(rows + the stats document the REAL writer would produce via
-functions.stats.stats_json — ms-floored timestamps, truncated strings),
-then asserts the soundness invariant on every (predicate, file) pair:
+File skipping is the one component where a silent bug means silently
+wrong answers at scale: its enumerated truth tables
+(test_skipping_rules.py and test_py_skipping.py, ported from
+kernel/src/scan/data_skipping/tests.rs) cannot explore the composition
+space. This harness generates seeded random predicates (nested
+And/Or/Not over comparisons / IsNull / In / LIKE / DISTINCT over
+int/float/string/date/timestamp/null-heavy columns, including
+deliberately cross-typed literals) and random files (rows + the stats
+document the REAL writer would produce via functions.stats.stats_json —
+ms-floored timestamps, truncated strings), then asserts the soundness
+invariant on every (predicate, file) pair:
 
     a file containing a row that matches the predicate
     (Spark row evaluation of the same AST = ground truth)
-    is NEVER skipped — by the Spark rewriter
-    (plans/data_skipping.file_skipping_predicate) NOR by the facade's
-    pure-Python twin (plans/py_skipping.FileSkipEvaluator).
+    is NEVER skipped by plans/py_skipping.FileSkipEvaluator.
 
-Shrink notes — real bugs this harness caught on its first runs, now
-fixed and pinned below (test_shrunk_regressions):
+Shrink notes — real bugs this harness caught in the Column rewriter that
+preceded the evaluator, pinned below (test_shrunk_regressions):
 
-1. ``x < Decimal('0.5')`` on a LongType column: _stat_literal's
-   lossy-cast guard checked ``isinstance(value, float)`` only, so a
-   fractional Decimal cast to long truncated toward zero and rewrote to
-   ``min < 0`` — wrongly skipping a file whose min is 0 (shrunk from a
-   random Compare atom at seed 20260815). Fixed by treating fractional
-   Decimal like fractional float (unknown ⇒ keep).
+1. ``x < Decimal('0.5')`` on a LongType column: a fractional Decimal
+   cast to long truncated toward zero and rewrote to ``min < 0`` —
+   wrongly skipping a file whose min is 0 (shrunk from a random Compare
+   atom at seed 20260815).
 2. ``d < TIMESTAMP'2020-06-15 12:00'`` on a DateType column: casting the
    timestamp literal to date FLOORS it, rewriting to ``min < DATE
    '2020-06-15'`` — wrongly skipping a file whose min is 2020-06-15
-   (its midnight < noon matches). Fixed: a datetime literal with any
-   time-of-day against a date stat column is unknown (keep).
+   (its midnight < noon matches).
 
 Runtime knobs: SPARK_GRAFT_FUZZ_N (predicates, default 400),
 SPARK_GRAFT_FUZZ_SEED (default 20260815).
@@ -49,7 +45,6 @@ from pyspark.sql import types as T
 
 from delta_kernel_rs_spark.functions.stats import stats_json
 from delta_kernel_rs_spark.plans import expressions as E
-from delta_kernel_rs_spark.plans.data_skipping import file_skipping_predicate
 from delta_kernel_rs_spark.plans.expressions import normalize
 from delta_kernel_rs_spark.plans.py_predicate import (
     UnsupportedPredicate,
@@ -188,58 +183,6 @@ def _ground_truth(spark, files, preds):
     return out
 
 
-def _spark_keeps(spark, files, preds):
-    """{pred_idx: set of file ids the Spark rewriter KEEPS}."""
-    data = [
-        (fid, stats, ({} if p is None else {"p": p}))
-        for fid, (_, stats, p) in enumerate(files)
-    ]
-    df = spark.createDataFrame(
-        data, "file INT, stats STRING, partition_values MAP<STRING,STRING>"
-    )
-    out: dict[int, set[int]] = {}
-    all_files = set(range(len(files)))
-    for lo in range(0, len(preds), CHUNK):
-        chunk = preds[lo : lo + CHUNK]
-        cols, idx = [], []
-        for j, p in enumerate(chunk):
-            keep = file_skipping_predicate(p, SCHEMA, PCOLS)
-            if keep is None:
-                out[lo + j] = all_files  # no skipping power: keeps all
-            else:
-                cols.append(keep.alias(f"k{lo + j}"))
-                idx.append(lo + j)
-        if not cols:
-            continue
-        for row in df.select("file", *cols).collect():
-            for k in idx:
-                if row[f"k{k}"]:
-                    out.setdefault(k, set()).add(row["file"])
-    return out
-
-
-def utf16_sensitive(pred) -> bool:
-    """True when a string literal of ``pred`` has a code point >= U+D800,
-    where the evaluator deliberately keeps the file (py_skipping's UTF-16
-    ordering rule)."""
-
-    def unsafe(v):
-        return isinstance(v, str) and any(ord(ch) >= 0xD800 for ch in v)
-
-    def walk(n):
-        if isinstance(n, E.Literal):
-            return unsafe(n.value)
-        if isinstance(n, E.In):
-            return any(unsafe(v) for v in n.values) or walk(n.expr)
-        if isinstance(n, E.Like):
-            return unsafe(n.pattern)
-        subs = [getattr(n, a, None) for a in ("expr", "left", "right", "child")]
-        subs += list(getattr(n, "children", None) or ())
-        return any(walk(x) for x in subs if x is not None)
-
-    return walk(pred)
-
-
 def test_differential_fuzz_skipping_never_drops_matches(spark):
     rng = random.Random(SEED)
     files = _gen_files(rng)
@@ -253,42 +196,30 @@ def test_differential_fuzz_skipping_never_drops_matches(spark):
     assert len(preds) >= N_PRED * 0.5, "generator mostly uncoercible — widen domains"
 
     truth = _ground_truth(spark, files, preds)
-    spark_keeps = _spark_keeps(spark, files, preds)
 
     ev = FileSkipEvaluator(SCHEMA, PCOLS)
     pv_rows = [{"p": p} for (_, _, p) in files]
     stats_docs = [stats for (_, stats, _) in files]
 
-    spark_viol, py_viol, parity_viol = [], [], []
-    total_spark_skips = total_py_skips = 0
+    viol = []
+    total_skips = 0
     for k, pred in enumerate(preds):
         match_files = truth.get(k, set())
-        kept = spark_keeps.get(k, set())
-        total_spark_skips += N_FILES - len(kept)
-        missing = match_files - kept
-        if missing:
-            spark_viol.append((k, sorted(missing)))
         norm = normalize(pred)
         for fid in range(N_FILES):
-            v = ev.verdict(norm, pv_rows[fid], stats_docs[fid])
-            if v is False:
-                total_py_skips += 1
+            if ev.verdict(norm, pv_rows[fid], stats_docs[fid]) is False:
+                total_skips += 1
                 if fid in match_files:
-                    py_viol.append((k, fid))
-            elif fid not in kept and not utf16_sensitive(pred):
-                parity_viol.append((k, fid))
+                    viol.append((k, fid))
 
-    def _fmt(viol):
-        k, fids = viol[0] if isinstance(viol[0], tuple) else (viol[0], None)
-        return f"seed={SEED} pred#{k}: {preds[k]!r} files={fids} stats={[stats_docs[f] for f in (fids if isinstance(fids, list) else [fids])]}"
-
-    assert not spark_viol, f"Spark rewriter dropped matching files: {_fmt(spark_viol)}"
-    assert not py_viol, f"Python twin dropped matching files: {_fmt(py_viol)}"
-    # pruning parity: the evaluator keeps no file the rewriter skipped
-    assert not parity_viol, f"Python twin kept a file the rewriter skipped: {_fmt(parity_viol)}"
+    if viol:
+        k, fid = viol[0]
+        raise AssertionError(
+            f"evaluator dropped a matching file: seed={SEED} pred#{k}: "
+            f"{preds[k]!r} file={fid} stats={stats_docs[fid]}"
+        )
     # the run must actually exercise pruning, or the invariant is vacuous
-    assert total_spark_skips > N_PRED  # on average >1 skipped file per pred
-    assert total_py_skips > N_PRED
+    assert total_skips > N_PRED  # on average >1 skipped file per pred
 
 
 def test_shrunk_regressions(spark):
@@ -296,17 +227,13 @@ def test_shrunk_regressions(spark):
     shrink notes 1 and 2) — pinned so they can never regress."""
     import json
 
+    ev = FileSkipEvaluator(SCHEMA, PCOLS)
     # 1. fractional Decimal vs Long column
     stats = json.dumps(
         {"numRecords": 2, "minValues": {"i": 0}, "maxValues": {"i": 7}, "nullCount": {"i": 0}}
     )
     pred = E.Compare("lt", E.Col("i"), E.Literal(Decimal("0.5")))
-    keep = file_skipping_predicate(pred, SCHEMA, PCOLS)
-    df = spark.createDataFrame([(stats, {})], "stats STRING, partition_values MAP<STRING,STRING>")
-    if keep is not None:
-        assert df.select(keep.alias("k")).collect()[0].k  # i=0 matches: keep
-    ev = FileSkipEvaluator(SCHEMA, PCOLS)
-    assert ev.verdict(normalize(pred), {}, stats) is not False
+    assert ev.verdict(normalize(pred), {}, stats) is not False  # i=0 matches: keep
 
     # 2. datetime literal with time-of-day vs Date column
     stats2 = json.dumps(
@@ -318,8 +245,4 @@ def test_shrunk_regressions(spark):
         }
     )
     pred2 = E.Compare("lt", E.Col("d"), E.Literal(dt.datetime(2020, 6, 15, 12, 0)))
-    keep2 = file_skipping_predicate(pred2, SCHEMA, PCOLS)
-    df2 = spark.createDataFrame([(stats2, {})], "stats STRING, partition_values MAP<STRING,STRING>")
-    if keep2 is not None:
-        assert df2.select(keep2.alias("k")).collect()[0].k  # d=2020-06-15 matches
-    assert ev.verdict(normalize(pred2), {}, stats2) is not False
+    assert ev.verdict(normalize(pred2), {}, stats2) is not False  # d=2020-06-15 matches

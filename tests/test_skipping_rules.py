@@ -3,9 +3,11 @@
 (default-engine/src/stats.rs) — the "silent corruption territory" of
 SURVEY §7.
 
-Each case evaluates the rewritten skipping predicate over a synthetic
-stats document and asserts the exact three-valued verdict (True / False /
-None). The keep rule downstream is "keep unless definitely False".
+Each case evaluates a predicate with the skipping evaluator
+(plans/py_skipping.FileSkipEvaluator) over a synthetic stats document and
+asserts the exact three-valued verdict (True / False / None, where None
+also covers a predicate with no skipping form). The keep rule downstream
+is "keep unless definitely False".
 """
 
 from __future__ import annotations
@@ -14,17 +16,12 @@ import datetime as dt
 import json
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from delta_kernel_rs_spark.functions.stats import (
     _ts_to_stat,
     truncate_max_string,
     truncate_min_string,
-)
-from delta_kernel_rs_spark.plans.data_skipping import (
-    _SkippingRewriter,
-    stats_schema_for,
 )
 from delta_kernel_rs_spark.plans.expressions import (
     And,
@@ -39,6 +36,7 @@ from delta_kernel_rs_spark.plans.expressions import (
     Or,
     normalize,
 )
+from delta_kernel_rs_spark.plans.py_skipping import FileSkipEvaluator, _cmp3
 
 SCHEMA = T.StructType(
     [
@@ -50,20 +48,11 @@ SCHEMA = T.StructType(
     ]
 )
 
-UNREWRITABLE = "unrewritable"
-
-
-def _verdict(spark, pred, stats: dict):
-    """Evaluate the skipping rewrite of ``pred`` against one stats doc."""
-    df = spark.createDataFrame(
-        [(json.dumps(stats),)], "stats STRING"
-    )
-    parsed = F.from_json(F.col("stats"), stats_schema_for(SCHEMA, []))
-    rewriter = _SkippingRewriter(SCHEMA, [], parsed)
-    out = rewriter.rewrite(normalize(pred))
-    if out is None:
-        return UNREWRITABLE
-    return df.select(out.alias("v")).collect()[0].v
+def _verdict(spark, pred, stats: dict, schema=SCHEMA, pv=None):
+    """The evaluator's verdict for ``pred`` over one stats document (and
+    partition values ``pv``)."""
+    ev = FileSkipEvaluator(schema, list(pv or ()))
+    return ev.verdict(normalize(pred), pv or {}, None if stats is None else json.dumps(stats))
 
 
 def _stats_x(min=None, max=None, nulls=None, nrecords=2):  # noqa: A002
@@ -185,14 +174,14 @@ def test_eval_junction(spark, inputs, expect_and, expect_or):
 
 
 def test_and_drops_unrewritable_conjunct(spark):
-    """AND keeps rewritable conjuncts (unknown ⇒ TRUE); OR with any
-    unrewritable disjunct is wholly unknown (tests.rs rules at
-    data_skipping.rs:32-52)."""
+    """AND prunes on its rewritable conjuncts (an unknown one never
+    blocks a provably-false sibling); OR with any unrewritable disjunct
+    is wholly unknown (tests.rs rules at data_skipping.rs:32-52)."""
     unknown = Compare("lt", Col("x"), Col("a"))  # col-vs-col: no rewrite
     false_leaf = Compare("lt", X, TEN)
     stats = _stats_x(min=15, max=15, nulls=0)
     assert _verdict(spark, And((false_leaf, unknown)), stats) is False
-    assert _verdict(spark, Or((false_leaf, unknown)), stats) == UNREWRITABLE
+    assert _verdict(spark, Or((false_leaf, unknown)), stats) is None
 
 
 def test_bool_literals(spark):
@@ -287,7 +276,7 @@ def test_opaque_predicate_eval_and_skipping_hook(spark):
         "ge_10",
         (Col("x"),),
         fn=lambda cols: cols[0] >= 10,
-        skipping_fn=lambda rw, children: rw._max("x") >= 10,
+        skipping_fn=lambda ev, children, stats: _cmp3("ge", ev._max("x", stats), 10),
     )
     assert _verdict(spark, hooked, stats) is False  # max=9 proves no match
     # negated opaque never uses the positive hook
@@ -337,13 +326,7 @@ def _verdict_like(spark, pattern: str, mn, mx, nulls=0, nrecords=2):
         doc["minValues"]["s"] = mn
     if mx is not None:
         doc["maxValues"]["s"] = mx
-    df = spark.createDataFrame([(json.dumps(doc),)], "stats STRING")
-    parsed = F.from_json(F.col("stats"), stats_schema_for(S_SCHEMA, []))
-    rewriter = _SkippingRewriter(S_SCHEMA, [], parsed)
-    out = rewriter.rewrite(normalize(Like(Col("s"), pattern)))
-    if out is None:
-        return UNREWRITABLE
-    return df.select(out.alias("v")).collect()[0].v
+    return _verdict(spark, Like(Col("s"), pattern), doc, S_SCHEMA)
 
 
 @pytest.mark.parametrize(
@@ -353,7 +336,7 @@ def _verdict_like(spark, pattern: str, mn, mx, nulls=0, nrecords=2):
         ("apple", "azure", "b%", False),     # max < prefix -> prune
         ("cherry", "grape", "b%", False),    # min >= successor -> prune
         ("apple", "grape", "ba_x%", True),   # prefix stops at '_'
-        ("apple", "grape", "%suffix", UNREWRITABLE),  # no literal prefix
+        ("apple", "grape", "%suffix", None),  # no literal prefix
         ("apple", "grape", "banana", True),  # wildcard-free: exact-band check
         ("x", "z", "banana", False),
         (None, None, "b%", None),            # missing stats -> keep
@@ -361,7 +344,7 @@ def _verdict_like(spark, pattern: str, mn, mx, nulls=0, nrecords=2):
 )
 def test_eval_like_prefix(spark, mn, mx, pattern, expected):
     got = _verdict_like(spark, pattern, mn, mx)
-    assert got is expected or got == expected, f"LIKE {pattern!r} [{mn}..{mx}]: {got}"
+    assert got is expected, f"LIKE {pattern!r} [{mn}..{mx}]: {got}"
 
 
 def test_like_all_null_file_prunes(spark):
@@ -371,30 +354,15 @@ def test_like_all_null_file_prunes(spark):
 def test_like_escaped_pattern_never_prunes(spark):
     """Backslash escapes change wildcard identity; the prefix band over the
     raw pattern would be unsound — escaped patterns stay residual-only."""
-    assert _verdict_like(spark, r"ab\%c%", "apple", "azure") is UNREWRITABLE
+    assert _verdict_like(spark, r"ab\%c%", "apple", "azure") is None
 
 
 def _verdict_like_partition(spark, pattern: str, value):
-    """LIKE over a PARTITION column: the rewriter sees the exact per-file
-    value from the partitionValues map, not stats."""
-    from delta_kernel_rs_spark.plans.data_skipping import PARTITION_VALUES_COLUMN
+    """LIKE over a PARTITION column: the evaluator sees the exact per-file
+    value, not stats."""
     from delta_kernel_rs_spark.plans.expressions import Like
 
-    df = spark.createDataFrame(
-        [({"s": value},)],
-        T.StructType(
-            [
-                T.StructField(
-                    PARTITION_VALUES_COLUMN, T.MapType(T.StringType(), T.StringType())
-                )
-            ]
-        ),
-    )
-    rewriter = _SkippingRewriter(S_SCHEMA, ["s"], None)
-    out = rewriter.rewrite(normalize(Like(Col("s"), pattern)))
-    if out is None:
-        return UNREWRITABLE
-    return df.select(out.alias("v")).collect()[0].v
+    return _verdict(spark, Like(Col("s"), pattern), None, S_SCHEMA, pv={"s": value})
 
 
 def test_like_partition_value_matches_keep(spark):
@@ -407,6 +375,5 @@ def test_like_partition_value_mismatch_prunes(spark):
 
 def test_like_null_partition_value_prunes(spark):
     """SQL-WHERE null-intolerance: the partition value is exact per file,
-    so LIKE over NULL is FALSE (prune), not UNKNOWN (keep) — keeps the
-    Spark rewriter consistent with the py_skipping twin (r10 review)."""
+    so LIKE over NULL is FALSE (prune), not UNKNOWN (keep)."""
     assert _verdict_like_partition(spark, "b%", None) is False
