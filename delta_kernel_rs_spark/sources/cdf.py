@@ -289,10 +289,7 @@ def table_changes(
         literals when the arm's events share one tuple, else a broadcast
         join (``scan.with_file_constants``)."""
         return with_file_constants(
-            df,
-            arm_rows(kind),
-            {"pv": "__pv", "version": "__v", "__ts": "__ts"},
-            how="inner",
+            df, arm_rows(kind), {"pv": "__pv", "version": "__v", "__ts": "__ts"}
         )
 
     def logical_projection(df: DataFrame, change_type) -> DataFrame:

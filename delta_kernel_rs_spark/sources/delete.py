@@ -95,8 +95,7 @@ def _rel_path(table_path: str, abs_path: str) -> str:
 
 def _remove_action(table, row: dict, data_change: bool = True, ts: int | None = None) -> dict:
     """The remove that cancels a live file, from its scan row (a dict
-    keyed like ``SCAN_FILES_SCHEMA``: an Arrow row of ``Scan.file_rows``
-    or a Spark row's ``asDict(recursive=True)``)."""
+    keyed like ``SCAN_FILES_SCHEMA``: an Arrow row of the scan's rows)."""
     return {
         "remove": {
             "path": _rel_path(table.path, row["file_path"]),

@@ -61,8 +61,8 @@ from delta_kernel_rs_spark.sources.delta_paths import is_local_path
 from delta_kernel_rs_spark.sources.pyreplay import _unq, live_files_arrow
 
 
-#: persisted snapshot-derived frames (change-feed events, incremental
-#: merges, with_files_df overrides), one per stable key; small LRU —
+#: persisted snapshot-derived frames (incremental merges, the row-lineage
+#: change feed's common keys), one per stable key; small LRU —
 #: evictees are unpersisted (see cached_files_frame).
 _LIVE_ADDS_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 # Frames are metadata-sized and persist MEMORY_AND_DISK (spill, not
@@ -539,9 +539,7 @@ def _literal(value, dtype: T.DataType) -> Column:
     return F.lit(value).cast(dtype)
 
 
-def with_file_constants(
-    df: DataFrame, rows: pa.Table, cols: dict[str, str], *, how: str = "left", frame=None
-) -> DataFrame:
+def with_file_constants(df: DataFrame, rows: pa.Table, cols: dict[str, str], frame=None) -> DataFrame:
     """The data rows of ``df`` (a read of the files in ``rows``) with
     their file's constants.
 
@@ -554,15 +552,17 @@ def with_file_constants(
     (``__file_path``, added here when ``df`` lacks it) from a local
     relation over ``rows`` or from ``frame()``, a zero-argument callable
     returning a frame with the same rows; the relation is broadcast up to
-    100k files. ``how="inner"`` with a path listed twice yields its rows
-    once per entry.
+    100k files. A path listed twice (a change-feed file with events at
+    two versions) yields its rows once per entry.
     """
     from pyspark.sql.pandas.types import from_arrow_type
 
     consts = rows.select(list(cols))
     paths = rows.column("file_path")
-    if rows.num_rows and all(_all_equal(c) for c in consts.columns) and (
-        how == "left" or pc.count_distinct(paths).as_py() == rows.num_rows
+    if (
+        rows.num_rows
+        and pc.count_distinct(paths).as_py() == rows.num_rows
+        and all(_all_equal(c) for c in consts.columns)
     ):
         first = consts.slice(0, 1).to_pylist()[0]
         return df.withColumns(
@@ -585,7 +585,7 @@ def with_file_constants(
     # AQE pick the join strategy
     if rows.num_rows <= 100_000:
         const_df = F.broadcast(const_df)
-    return df.join(const_df, df["__file_path"] == F.col("__const_path"), how)
+    return df.join(const_df, df["__file_path"] == F.col("__const_path"), "left")
 
 
 @dataclass
