@@ -72,8 +72,8 @@ _LIVE_ADDS_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 _LIVE_ADDS_CACHE_MAX = 64
 
 #: live files per (session, table, version): [the Arrow scan rows, the
-#: local DataFrame over them or None until first asked for] (see
-#: Scan._live_files)
+#: local DataFrame over them or None until first asked for, the skipping
+#: evaluator's parsed stats] (see Scan._live_files)
 _SCAN_FILES_CACHE: "OrderedDict[tuple, list]" = OrderedDict()
 _SCAN_FILES_CACHE_MAX = 64
 
@@ -652,7 +652,7 @@ class Scan:
         rows = scan_rows_arrow(
             live_files_arrow(self.snapshot.storage, seg), self.snapshot.table_path
         )
-        hit = _SCAN_FILES_CACHE[key] = [rows, None]
+        hit = _SCAN_FILES_CACHE[key] = [rows, None, {}]
         while len(_SCAN_FILES_CACHE) > _SCAN_FILES_CACHE_MAX:
             _SCAN_FILES_CACHE.popitem(last=False)
         return hit
@@ -753,7 +753,9 @@ class Scan:
                 if c.get("logical") and len(c["logical"]) == 1
             ),
         )
-        keep = pa.array(ev.keep(pred, rows), pa.bool_())
+        whole = self._files_df_override is None and self._exclude_keys_df is None
+        parsed = self._live_entry()[2] if whole else None
+        keep = pa.array(ev.keep(pred, rows, parsed), pa.bool_())
         if generation_rules(snap.schema, pcols):
             # A predicate on the SOURCE of a generated partition column
             # implies one on the partition value (plans/generated_pruning),
