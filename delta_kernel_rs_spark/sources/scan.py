@@ -494,6 +494,13 @@ def _conform_checkpoint_file_actions(ckpt: DataFrame, add_type, remove_type) -> 
     return ckpt
 
 
+def _scan_rows_frame(spark, rows: pa.Table) -> DataFrame:
+    """A local DataFrame (:data:`SCAN_FILES_SCHEMA`) over scan rows. An
+    empty filter result has columns of no chunks, which
+    ``createDataFrame`` rejects, so no rows take the empty-list path."""
+    return spark.createDataFrame(rows if rows.num_rows else [], SCAN_FILES_SCHEMA)
+
+
 def dv_descriptors(rows: pa.Table) -> dict[str, dict]:
     """``file_path`` → DV descriptor (storage type, path or inline bitmap,
     offset) for the scan rows that carry a deletion vector: what the DV
@@ -669,7 +676,7 @@ class Scan:
         a local relation on the driver, so nothing needs persisting."""
         entry = self._live_entry()
         if entry[1] is None:
-            entry[1] = self.spark.createDataFrame(entry[0], SCAN_FILES_SCHEMA)
+            entry[1] = _scan_rows_frame(self.spark, entry[0])
         return entry[1]
 
     def file_rows(self, paths) -> pa.Table:
@@ -708,66 +715,61 @@ class Scan:
             )
         return rows
 
-    def _skipping_predicate(self):
-        """The typed predicate, literal-coerced and normalized for the
-        evaluator; None when it has no typed form (a raw string outside
-        the grammar, a Spark Column) or a literal fits no column type."""
+    def _keep_mask(self, rows: pa.Table, whole: bool):
+        """Keep mask over the scan rows (a list of bools or an Arrow
+        array), or None when the predicate cannot prune: partition
+        pruning + stats skipping (plans/py_skipping), AND generated-column
+        pruning (plans/generated_pruning) on tables with generation
+        rules. ``whole``: ``rows`` are the version's cached table, whose
+        parsed stats the evaluator may keep."""
         from delta_kernel_rs_spark.plans.expressions import Predicate, normalize
-        from delta_kernel_rs_spark.plans.py_predicate import (
-            UnsupportedPredicate,
-            coerce_literals,
-        )
-
-        pred = self._parsed_predicate if self._parsed_predicate is not None else self.predicate
-        if not isinstance(pred, Predicate):
-            return None
-        try:
-            return normalize(coerce_literals(pred, self.snapshot.schema))
-        except UnsupportedPredicate:
-            return None
-
-    def _keep_mask(self, rows: pa.Table) -> pa.Array | None:
-        """Partition pruning + stats skipping over the scan rows
-        (plans/py_skipping), AND generated-column pruning; None when the
-        predicate cannot prune."""
         from delta_kernel_rs_spark.plans.generated_pruning import (
             derived_partition_filter,
             generation_rules,
         )
+        from delta_kernel_rs_spark.plans.py_predicate import (
+            UnsupportedPredicate,
+            coerce_literals,
+        )
         from delta_kernel_rs_spark.plans.py_skipping import FileSkipEvaluator
 
-        pred = self._skipping_predicate()
-        if pred is None:
-            return None
+        pred = self._parsed_predicate if self._parsed_predicate is not None else self.predicate
+        if not isinstance(pred, Predicate):
+            return None  # a raw string outside the grammar, a Spark Column
         snap = self.snapshot
         pcols = snap.metadata.partition_columns
-        ev = FileSkipEvaluator(
-            snap.schema,
-            pcols,
-            snap.metadata.configuration,
-            # clustering columns always carry stats (protocol MUST) —
-            # skip on them even when the table's stats config excludes them
-            tuple(
-                c["logical"][0]
-                for c in snap.clustering_columns()
-                if c.get("logical") and len(c["logical"]) == 1
-            ),
-        )
-        whole = self._files_df_override is None and self._exclude_keys_df is None
-        parsed = self._live_entry()[2] if whole else None
-        keep = pa.array(ev.keep(pred, rows, parsed), pa.bool_())
+        keep = None
+        try:
+            typed = normalize(coerce_literals(pred, snap.schema))
+        except UnsupportedPredicate:
+            typed = None  # a literal fits no column type: no stats verdict
+        if typed is not None:
+            ev = FileSkipEvaluator(
+                snap.schema,
+                pcols,
+                snap.metadata.configuration,
+                # clustering columns always carry stats (protocol MUST) —
+                # skip on them even when the table's stats config excludes them
+                tuple(
+                    c["logical"][0]
+                    for c in snap.clustering_columns()
+                    if c.get("logical") and len(c["logical"]) == 1
+                ),
+            )
+            keep = ev.keep(typed, rows, self._live_entry()[2] if whole else None)
         if generation_rules(snap.schema, pcols):
             # A predicate on the SOURCE of a generated partition column
-            # implies one on the partition value (plans/generated_pruning),
-            # evaluated by Spark's own functions over a local relation.
-            raw = self._parsed_predicate if self._parsed_predicate is not None else self.predicate
-            derived = derived_partition_filter(raw, snap.schema, pcols)
+            # implies one on the partition value, evaluated by Spark's own
+            # functions over a local relation (no Spark job).
+            derived = derived_partition_filter(pred, snap.schema, pcols)
             if derived is not None:
+                index = np.arange(rows.num_rows)
                 pv = self.spark.createDataFrame(
-                    pa.table({"__i": np.arange(rows.num_rows), "partition_values": rows.column("partition_values")})
+                    pa.table({"__i": index, "partition_values": rows.column("partition_values")})
                 )
                 hit = pv.filter(derived).select("__i").toArrow().column("__i")
-                keep = pc.and_(keep, pc.is_in(pa.array(np.arange(rows.num_rows)), value_set=hit))
+                implied = pc.is_in(pa.array(index), value_set=hit)
+                keep = implied if keep is None else pc.and_(pa.array(keep, pa.bool_()), implied)
         return keep
 
     def _plan(self) -> tuple[pa.Table, bool]:
@@ -775,9 +777,11 @@ class Scan:
         if self._planned is None:
             rows = self._source_rows()
             whole = self._files_df_override is None and self._exclude_keys_df is None
-            keep = self._keep_mask(rows) if rows.num_rows else None
-            if keep is not None and not pc.all(keep).as_py():
-                rows, whole = rows.filter(keep), False
+            keep = self._keep_mask(rows, whole) if rows.num_rows else None
+            if keep is not None:
+                keep = pa.array(keep, pa.bool_())
+                if not pc.all(keep).as_py():
+                    rows, whole = rows.filter(keep), False
             self._planned = (rows, whole)
         return self._planned
 
@@ -798,7 +802,7 @@ class Scan:
         rows, whole = self._plan()
         if whole:
             return self._version_frame()
-        return self.spark.createDataFrame(rows, SCAN_FILES_SCHEMA)
+        return _scan_rows_frame(self.spark, rows)
 
     def exclude_file_keys(self, keys_df: DataFrame) -> "Scan":
         """Exclude files whose (path, DV identity, baseRowId) key appears

@@ -336,7 +336,8 @@ def _verdict_like(spark, pattern: str, mn, mx, nulls=0, nrecords=2):
         ("apple", "azure", "b%", False),     # max < prefix -> prune
         ("cherry", "grape", "b%", False),    # min >= successor -> prune
         ("apple", "grape", "ba_x%", True),   # prefix stops at '_'
-        ("apple", "grape", "%suffix", None),  # no literal prefix
+        # no literal prefix: unrewritable, so unknown
+        pytest.param("apple", "grape", "%suffix", None, id="apple-grape-%suffix-unrewritable"),
         ("apple", "grape", "banana", True),  # wildcard-free: exact-band check
         ("x", "z", "banana", False),
         (None, None, "b%", None),            # missing stats -> keep
