@@ -135,7 +135,7 @@ def _map_entries(col) -> list[tuple]:
     """A map column → one tuple of (key, value) entries per row (a NULL
     map has none), read from the flat key and value arrays: converting a
     map column row by row costs ~13 µs a row."""
-    col = col.combine_chunks() if hasattr(col, "combine_chunks") else col
+    col = col.combine_chunks()
     offsets = col.offsets.to_pylist()
     start, end = offsets[0], offsets[-1]
     keys = col.keys.slice(start, end - start).to_pylist()
