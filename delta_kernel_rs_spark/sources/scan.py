@@ -546,38 +546,43 @@ def _literal(value, dtype: T.DataType) -> Column:
     return F.lit(value).cast(dtype)
 
 
-def with_file_constants(df: DataFrame, rows: pa.Table, cols: dict[str, str], frame=None) -> DataFrame:
-    """The data rows of ``df`` (a read of the files in ``rows``) with
-    their file's constants.
-
-    ``rows`` is an Arrow table with ``file_path`` and the constant
-    columns ``cols`` names (source column → output name). When every
-    file shares one constants tuple, the constants are literal columns:
-    no join, so no broadcast job, as the reference hands its engine each
-    file's constants as a literal transform (kernel/src/scan/
-    transform_spec.rs). Otherwise they join on the decoded path
-    (``__file_path``, added here when ``df`` lacks it) from a local
-    relation over ``rows`` or from ``frame()``, a zero-argument callable
-    returning a frame with the same rows; the relation is broadcast up to
-    100k files. A path listed twice (a change-feed file with events at
-    two versions) yields its rows once per entry.
-    """
+def file_constant_literals(rows: pa.Table, cols: dict[str, str]) -> dict[str, Column] | None:
+    """Literal columns (output name → Column) for the constants ``cols``
+    names (source column of ``rows`` → output name) when every file of
+    ``rows`` shares one constants tuple and is listed once, else None:
+    the reference hands its engine each file's constants as a literal
+    transform (kernel/src/scan/transform_spec.rs), so no join, and no
+    broadcast job, is needed."""
     from pyspark.sql.pandas.types import from_arrow_type
 
     consts = rows.select(list(cols))
-    paths = rows.column("file_path")
-    if (
+    if not (
         rows.num_rows
-        and pc.count_distinct(paths).as_py() == rows.num_rows
+        and pc.count_distinct(rows.column("file_path")).as_py() == rows.num_rows
         and all(_all_equal(c) for c in consts.columns)
     ):
-        first = consts.slice(0, 1).to_pylist()[0]
-        return df.withColumns(
-            {
-                alias: _literal(first[c], from_arrow_type(consts.schema.field(c).type))
-                for c, alias in cols.items()
-            }
-        )
+        return None
+    first = consts.slice(0, 1).to_pylist()[0]
+    return {
+        alias: _literal(first[c], from_arrow_type(consts.schema.field(c).type))
+        for c, alias in cols.items()
+    }
+
+
+def with_file_constants(df: DataFrame, rows: pa.Table, cols: dict[str, str], frame=None) -> DataFrame:
+    """The data rows of ``df`` (a read of the files in ``rows``) with
+    their file's constants: :func:`file_constant_literals` when the files
+    share one tuple, else a join on the decoded path (``__file_path``,
+    added here when ``df`` lacks it; a union must carry it, as
+    ``_metadata`` does not cross one) from a local relation over
+    ``rows`` or from ``frame()``, a zero-argument callable returning a
+    frame with the same rows. The relation is broadcast up to 100k files.
+    A path listed twice (a change-feed file with events at two versions)
+    yields its rows once per entry.
+    """
+    literals = file_constant_literals(rows, cols)
+    if literals is not None:
+        return df.withColumns(literals)
     if "__file_path" not in df.columns:
         df = df.withColumn("__file_path", normalize_file_path(F.col("_metadata.file_path")))
     if frame is None:
@@ -1019,14 +1024,27 @@ class Scan:
                     read(sorted(dvs)).filter(keep(F.col("_metadata.file_path"), row_index)),
                 )
             )
-        out = []
+        out, joined = [], []
         for arm_rows, df in arms:
             if file_cols:
                 df = df.withColumn("__file_path", normalize_file_path(F.col("_metadata.file_path")))
             if self.with_row_ids or file_cols:
                 df = df.withColumn("__row_index", row_index)
-            if consts:
-                df = with_file_constants(df, arm_rows, consts, frame=frame)
+            literals = file_constant_literals(arm_rows, consts) if consts else {}
+            if literals is None:
+                if not file_cols:
+                    df = df.withColumn("__file_path", normalize_file_path(F.col("_metadata.file_path")))
+                joined.append((arm_rows, df))
+            else:
+                out.append(df.withColumns(literals).select(*out_cols) if literals else df.select(*out_cols))
+        if joined:
+            # the arms that need the join share one, above their union
+            df = with_file_constants(
+                reduce(DataFrame.unionByName, [df for _, df in joined]),
+                pa.concat_tables([arm_rows for arm_rows, _ in joined]),
+                consts,
+                frame=frame,
+            )
             out.append(df.select(*out_cols))
         return reduce(DataFrame.unionByName, out)
 
