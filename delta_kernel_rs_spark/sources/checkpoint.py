@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from delta_kernel_rs_spark.sources.actions import ACTIONS_SCHEMA
 from delta_kernel_rs_spark.sources.delta_paths import (
     LOG_DIR,
+    arrow_fs_and_path,
     classic_checkpoint_filename,
     compacted_filename,
 )
@@ -489,13 +490,9 @@ def _num_add_actions(file_actions: DataFrame) -> int:
 
 
 def _parquet_num_rows(path: str) -> int:
-    import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
-    if "://" in path:
-        fs, rel = pafs.FileSystem.from_uri(path)
-    else:  # no URI parsing: local table paths may carry spaces/escapes
-        fs, rel = pafs.LocalFileSystem(), path
+    fs, rel = arrow_fs_and_path(path)
     return pq.read_metadata(rel, filesystem=fs).num_rows
 
 

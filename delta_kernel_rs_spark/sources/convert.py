@@ -2,9 +2,9 @@
 
 The standard migration entry point for users switching to a Delta
 engine: no data is rewritten — the conversion lists the parquet files,
-reads ONLY their footers (distributed, executor-side — the same
-footer-stats pass every commit uses, functions/stats.py
-collect_file_stats_footer), and writes commit 0 with one ``add`` per
+reads ONLY their footers (the same footer-stats pass every commit uses,
+functions/stats.py collect_file_stats_footer: on the driver for local
+files, in a Spark job for remote ones), and writes commit 0 with one ``add`` per
 file carrying real min/max/nullCount stats, so data skipping works from
 the first read. Hive-style ``col=value`` directories become Delta
 partition columns (declared explicitly with their types, as in
@@ -12,9 +12,9 @@ partition columns (declared explicitly with their types, as in
 alone cannot recover types).
 
 Scale posture: the driver holds one (path, size, mtime) tuple per file
-from the listing; footer parsing and stat aggregation run on executors;
+from the listing; footers are parsed one 10,000-file chunk at a time;
 the commit is the normal atomic PUT-if-absent. Converting a million-file
-dataset costs a listing + a footer task wave — never a data read.
+dataset costs a listing + one footer read per file — never a data read.
 
 The reference kernel has no converter (tables reach it already-Delta);
 the action/stats shapes written here are the ones its replay consumes
@@ -94,11 +94,11 @@ def convert_to_delta(
         + [T.StructField(n, t, True) for n, t in pcols.items()]
     )
 
-    # Distributed footer pass + streamed commit assembly: stats are
-    # computed (executor-side) and turned into add actions one bounded
-    # chunk of files at a time, so converting a million-file directory
-    # never holds the full stats map or action list in driver memory —
-    # only the (path, pv, size, mtime) string tuples from the listing.
+    # Footer pass + streamed commit assembly: stats are computed and
+    # turned into add actions one bounded chunk of files at a time, so
+    # converting a million-file directory never holds the full stats map
+    # or action list in driver memory — only the (path, pv, size, mtime)
+    # string tuples from the listing.
     CHUNK = 10_000
 
     def convert_adds():

@@ -795,8 +795,9 @@ class Transaction:
         if not moves:
             return []
 
-        # Footer-only stats (no second pass over the data just written);
-        # keys are the physical parquet column names by construction.
+        # Stats from the footers of the files just moved into place (no
+        # second pass over their data; local files on the driver, no Spark
+        # job); keys are the physical parquet column names by construction.
         data_fields = [
             T.StructField(phys_of[f.name], f.dataType, True)
             for f in self.schema.fields

@@ -36,6 +36,12 @@ this engine's analogues, per BASELINE.md's replication list:
 - ``write_*``: append, DV delete (``write_dv_delete_1pct``), OPTIMIZE and
   checkpoint on a 200-file table; ``spark_jobs`` gives the Spark job
   count of each of the DV delete's timed runs.
+- ``stats_footer_<N>``: the write path's footer stats
+  (``collect_file_stats_footer``) over N freshly written local files
+  (2, 2,000, and 10,000 = CONVERT's chunk), timed on the driver, as
+  writes to local tables collect them, and as the Spark job that remote
+  files take (``<arm>_job``). Reported under ``stats_footer_queries``,
+  outside ``value``.
 
 Prints ONE JSON line so the per-round artifact can feed
 scripts/bench_compare.py exactly like BENCH does:
@@ -44,7 +50,7 @@ scripts/bench_compare.py exactly like BENCH does:
      "queries": {"read_metadata_log_only": ..., ...}, "adds": 10000,
      "spark_jobs": {"write_dv_delete_1pct": [<jobs>, <jobs>]},
      "cdf_plan_sec": <total>, "cdf_queries": {...},
-     "pruned_queries": {...}}
+     "pruned_queries": {...}, "stats_footer_queries": {...}}
 
 Usage: python scripts/bench_metadata.py [--adds 10000] [--commits 20]
 Writes the table under $TMPDIR; each timing is min-of-2 (warm JVM).
@@ -149,6 +155,42 @@ def _cdf_plan(spark, root: str, commits: int, adds: int = 1) -> tuple[float, flo
     return _timed(build), _timed(build_count)
 
 
+#: file counts of the ``stats_footer_*`` arms
+STATS_FOOTER_FILES = (2, 2_000, 10_000)
+
+
+def _stats_footer(spark, root: str, n_files: int) -> tuple[float, float]:
+    """(driver, Spark job) seconds of footer stats over ``n_files`` local
+    parquet files of 100 rows and three columns, written with pyarrow."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from delta_kernel_rs_spark.functions import stats
+
+    out = os.path.join(root, f"footers{n_files}")
+    os.makedirs(out)
+    paths = []
+    for i in range(n_files):
+        k = list(range(i * 100, (i + 1) * 100))
+        p = os.path.join(out, f"part-{i:05d}.parquet")
+        pq.write_table(pa.table({"k": k, "v": [x % 97 for x in k], "s": [f"s{x}" for x in k]}), p)
+        paths.append(p)
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("v", T.LongType()),
+        T.StructField("s", T.StringType()),
+    ])
+    eligible = frozenset(schema.fieldNames())
+    driver = stats.collect_file_stats_footer(spark, paths, schema)
+    job = stats._footer_stats_job(spark, paths, eligible)
+    assert len(driver) == n_files and repr(driver) == repr(job)
+    return (
+        _timed(lambda: stats.collect_file_stats_footer(spark, paths, schema)),
+        _timed(lambda: stats._footer_stats_job(spark, paths, eligible)),
+    )
+
+
 def _extract_large_table() -> str | None:
     if not os.path.exists(LARGE_TABLE_TAR):
         return None
@@ -194,6 +236,10 @@ def main() -> int:
     from delta_kernel_rs_spark.session import get_spark
     from delta_kernel_rs_spark.sources.snapshot import Snapshot
 
+    # the Spark job arms unpickle engine functions in the Python workers
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     results: dict[str, float] = {}
     spark_jobs: dict[str, list[int]] = {"write_dv_delete_1pct": []}
@@ -377,6 +423,13 @@ def main() -> int:
         for name, commits, adds in CDF_ARMS:
             cdf[f"{name}_build"], cdf[name] = _cdf_plan(spark, root, commits, adds)
 
+    footer: dict[str, float] = {}
+    with tempfile.TemporaryDirectory(prefix="dkrs_footer_bench_") as root:
+        for n in STATS_FOOTER_FILES:
+            footer[f"stats_footer_{n}"], footer[f"stats_footer_{n}_job"] = _stats_footer(
+                spark, root, n
+            )
+
     total = round(sum(results.values()), 3)
     print(
         json.dumps(
@@ -389,6 +442,7 @@ def main() -> int:
                 "cdf_plan_sec": round(sum(cdf.values()), 3),
                 "cdf_queries": cdf,
                 "pruned_queries": pruned,
+                "stats_footer_queries": footer,
                 "adds": args.adds,
                 "commits": args.commits,
                 "files_seen": n_files,

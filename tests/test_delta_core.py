@@ -102,15 +102,25 @@ def test_partitioned_roundtrip_and_pruning(spark, orders, tmp_path):
 
 def test_partitioned_create_at_a_file_uri_root(spark, tmp_path):
     """A partitioned table created at a ``file://`` URI root records each
-    file's partition values, and reads back like the plain path."""
+    file's partition values and footer stats, also for values a URI
+    parser rejects (a space, ``%``, non-ASCII), and reads back like the
+    plain path."""
     path = str(tmp_path / "t")
-    df = spark.range(0, 30).select(F.col("id").alias("k"), (F.col("id") % 3).alias("p"))
+    values = ["a b%c", "ü", "2"]
+    df = spark.range(0, 30).select(
+        F.col("id").alias("k"),
+        F.element_at(F.array(*map(F.lit, values)), (F.col("id") % 3 + 1).cast("int")).alias("p"),
+    )
     t = DeltaTable.create(spark, f"file://{path}", df=df, partition_by=["p"])
     files = t.snapshot().scan().files()
-    assert {f.partition_values["p"] for f in files} == {"0", "1", "2"}
+    assert {f.partition_values["p"] for f in files} == set(values)
+    with open(os.path.join(path, "_delta_log", f"{0:020d}.json")) as fh:
+        adds = [a["add"] for a in map(json.loads, fh) if "add" in a]
+    assert len(adds) == len(files) and all(a["stats"] for a in adds)
+    assert sum(json.loads(a["stats"])["numRecords"] for a in adds) == 30
     for table in (t, DeltaTable(spark, path)):
         assert sorted((r.k, r.p) for r in table.to_df().collect()) == [
-            (i, i % 3) for i in range(30)
+            (i, values[i % 3]) for i in range(30)
         ]
 
 

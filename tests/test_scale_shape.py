@@ -717,6 +717,36 @@ def test_log_named_reads_start_no_listing_job(spark, tmp_path):
     assert got == {"insert": 4000, "delete": 134}
 
 
+def test_footer_stats_of_local_files_start_no_job(spark, tmp_path):
+    """Stats of local files come from their footers on the driver:
+    collecting them starts no Spark job, and a 2-file append starts only
+    the jobs of its data write."""
+    import json
+
+    from delta_kernel_rs_spark.functions.stats import collect_file_stats_footer
+
+    path = str(tmp_path / "tbl")
+    t = DeltaTable.create(spark, path, df=_ints(spark, 0, 100, partitions=2))
+    files = [f.path for f in t.snapshot().scan().files()]
+    assert len(files) == 2
+
+    stats, stages = _jobs_started(
+        spark, lambda: collect_file_stats_footer(spark, files, t.snapshot().schema)
+    )
+    assert stages == []
+    assert sum(s["numRecords"] for s in stats.values()) == 100
+
+    _, stages = _jobs_started(
+        spark, lambda: t.append(_ints(spark, 100, 200, partitions=2), auto_checkpoint=False)
+    )
+    assert len(stages) == 2
+    with open(f"{path}/_delta_log/{1:020d}.json") as fh:
+        adds = [a["add"] for a in map(json.loads, fh) if "add" in a]
+    docs = [json.loads(a["stats"]) for a in adds]
+    assert len(docs) == 2 and sum(d["numRecords"] for d in docs) == 100
+    assert min(d["minValues"]["k"] for d in docs) == 100
+
+
 @pytest.mark.parametrize("prior", [None, "7"], ids=["unset", "user_set"])
 def test_read_named_files_restores_listing_threshold(spark, tmp_path, prior):
     """The helper holds Spark's listing threshold only while it builds the
