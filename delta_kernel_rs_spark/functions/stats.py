@@ -15,11 +15,10 @@ with the truncation rules that are a *correctness contract* for readers:
 * binary is excluded from min/max entirely.
 
 The collection itself reads the parquet footers of the files a write
-just made (``collect_file_stats_footer``), never their data. One function,
-``footer_stats``, holds the per-file rules. Local files are parsed on the
-driver, which costs less than starting a Spark job even for the 10,000
-files of one CONVERT chunk; a commit that names remote files parses them
-in one Spark job on the executors.
+just made (``collect_file_stats_footer``), never their data, one file at
+a time in the driver process; ``footer_stats`` holds the per-file rules.
+That costs less than starting a Spark job even for the 10,000 files of
+one CONVERT chunk, with their pages in the OS cache or not.
 """
 
 from __future__ import annotations
@@ -33,7 +32,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from delta_kernel_rs_spark.sources.delta_paths import arrow_fs_and_path, is_local_path
+from delta_kernel_rs_spark.sources.delta_paths import arrow_fs_and_path
 
 STRING_PREFIX_LEN = 32
 DEFAULT_NUM_INDEXED_COLS = 32
@@ -123,19 +122,22 @@ def collect_file_stats_footer(
 
     Zero data reads — the writer's row-group stats already hold min/max/
     null-count (the reference reads them the same way via
-    read_parquet_footer, kernel/src/lib.rs:1011-1067). Local files (no
-    scheme, or ``file:``) are parsed on the driver, one footer read per
-    file; any remote path sends the whole list to a Spark job that parses
-    the footers on the executors, as ``scan.read_named_files`` splits its
-    listing. Both call :func:`footer_stats`.
+    read_parquet_footer, kernel/src/lib.rs:1011-1067). Each footer is read
+    and folded by :func:`footer_stats` in the driver process; ``spark`` is
+    not used and no Spark job starts.
 
-    The driver loop beats the job at every measured size (100-row local
-    files just written, page cache warm, ``local[4]`` on a 4-vCPU host;
-    the ``stats_footer_*`` arms of ``scripts/bench_metadata.py``, min of
-    2, two runs): 2 files 0.0001 vs 0.16 s, 2,000 files 0.10 vs 2.4-2.9 s,
-    10,000 (CONVERT's chunk) 0.49-0.53 vs 2.5-2.9 s, about 50 µs a
-    footer. Remote stores stay on the job: there each footer is a round
-    trip, which the driver would pay one after another (not measured).
+    Timings (100-row files, ``local[4]`` on a 4-vCPU host, ext4 on a
+    virtio disk; the ``stats_footer_*`` arms of
+    ``scripts/bench_metadata.py``, min of 2, two runs): over files just
+    written, 2 files 0.0002 s, 2,000 files 0.11-0.13 s, 10,000 (CONVERT's
+    chunk) 0.56-0.66 s; with each file's pages first dropped from the OS
+    cache (the ``_cold`` arms, as CONVERT meets old files), 0.0004-0.0006,
+    0.22-0.23 and 1.31-1.47 s. The Spark job of up to 64 tasks that
+    collected them before took 0.16 s for 2 files, 2.3-3.8 s for 2,000
+    and 2.8-5.8 s for 10,000, cold or warm. In a one-off probe, 8 driver
+    threads were slower than one (the fold holds the GIL). Remote stores
+    (abfs, gs, hdfs through pyarrow) pay one round trip per footer here,
+    not measured.
 
     Columns whose stats the writer omitted (e.g. NaN-bearing floats) are
     simply absent from min/max — readers treat missing stats as unknown.
@@ -144,23 +146,7 @@ def collect_file_stats_footer(
         f.name
         for f in eligible_stats_columns(read_schema, num_indexed, stats_columns, required)
     )
-    if all(is_local_path(p) for p in paths):
-        return {p: footer_stats(p, eligible) for p in paths}
-    return _footer_stats_job(spark, paths, eligible)
-
-
-def _footer_stats_job(
-    spark: SparkSession, paths: list[str], eligible: frozenset
-) -> dict[str, dict[str, Any] | None]:
-    """:func:`footer_stats` of each path, in one Spark job of at most 64
-    tasks."""
-    n_slices = max(1, min(len(paths), 64))
-    rows = (
-        spark.sparkContext.parallelize(paths, n_slices)
-        .mapPartitions(lambda it: ((p, footer_stats(p, eligible)) for p in it))
-        .collect()
-    )
-    return dict(rows)
+    return {p: footer_stats(p, eligible) for p in paths}
 
 
 def footer_stats(path: str, eligible: frozenset) -> dict[str, Any] | None:
@@ -172,7 +158,7 @@ def footer_stats(path: str, eligible: frozenset) -> dict[str, Any] | None:
     all-null lacks them, and its null count when any row group lacks one.
     ``None`` when pyarrow cannot parse the footer (e.g. a Spark VARIANT
     logical type): the whole file's stats are then unknown, which readers
-    already handle. Runs on the driver and on executors alike.
+    already handle.
     """
     import pyarrow.parquet as pq
 

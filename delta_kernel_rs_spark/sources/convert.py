@@ -3,10 +3,10 @@
 The standard migration entry point for users switching to a Delta
 engine: no data is rewritten — the conversion lists the parquet files,
 reads ONLY their footers (the same footer-stats pass every commit uses,
-functions/stats.py collect_file_stats_footer: on the driver for local
-files, in a Spark job for remote ones), and writes commit 0 with one ``add`` per
-file carrying real min/max/nullCount stats, so data skipping works from
-the first read. Hive-style ``col=value`` directories become Delta
+functions/stats.py collect_file_stats_footer, on the driver), and
+writes commit 0 with one ``add`` per file carrying real min/max/
+nullCount stats, so data skipping works from the first read. Hive-style
+``col=value`` directories become Delta
 partition columns (declared explicitly with their types, as in
 ``CONVERT TO DELTA ... PARTITIONED BY``, because the directory names
 alone cannot recover types).

@@ -796,8 +796,8 @@ class Transaction:
             return []
 
         # Stats from the footers of the files just moved into place (no
-        # second pass over their data; local files on the driver, no Spark
-        # job); keys are the physical parquet column names by construction.
+        # second pass over their data, no Spark job); keys are the
+        # physical parquet column names by construction.
         data_fields = [
             T.StructField(phys_of[f.name], f.dataType, True)
             for f in self.schema.fields

@@ -38,10 +38,10 @@ this engine's analogues, per BASELINE.md's replication list:
   count of each of the DV delete's timed runs.
 - ``stats_footer_<N>``: the write path's footer stats
   (``collect_file_stats_footer``) over N freshly written local files
-  (2, 2,000, and 10,000 = CONVERT's chunk), timed on the driver, as
-  writes to local tables collect them, and as the Spark job that remote
-  files take (``<arm>_job``). Reported under ``stats_footer_queries``,
-  outside ``value``.
+  (2, 2,000, and 10,000 = CONVERT's chunk); ``<arm>_cold`` first drops
+  each file's pages from the OS cache (``posix_fadvise`` DONTNEED), as
+  CONVERT meets files written long before. Reported under
+  ``stats_footer_queries``, outside ``value``.
 
 Prints ONE JSON line so the per-round artifact can feed
 scripts/bench_compare.py exactly like BENCH does:
@@ -160,8 +160,10 @@ STATS_FOOTER_FILES = (2, 2_000, 10_000)
 
 
 def _stats_footer(spark, root: str, n_files: int) -> tuple[float, float]:
-    """(driver, Spark job) seconds of footer stats over ``n_files`` local
-    parquet files of 100 rows and three columns, written with pyarrow."""
+    """(warm, cold) seconds of footer stats over ``n_files`` local parquet
+    files of 100 rows and three columns, written with pyarrow; each is the
+    min of 2. A cold run first flushes each file and drops its pages from
+    the OS cache."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
@@ -181,14 +183,27 @@ def _stats_footer(spark, root: str, n_files: int) -> tuple[float, float]:
         T.StructField("v", T.LongType()),
         T.StructField("s", T.StringType()),
     ])
-    eligible = frozenset(schema.fieldNames())
-    driver = stats.collect_file_stats_footer(spark, paths, schema)
-    job = stats._footer_stats_job(spark, paths, eligible)
-    assert len(driver) == n_files and repr(driver) == repr(job)
-    return (
-        _timed(lambda: stats.collect_file_stats_footer(spark, paths, schema)),
-        _timed(lambda: stats._footer_stats_job(spark, paths, eligible)),
-    )
+
+    def collect():
+        got = stats.collect_file_stats_footer(spark, paths, schema)
+        assert len(got) == n_files and all(got.values())
+
+    def evict():
+        for p in paths:
+            fd = os.open(p, os.O_RDONLY)
+            try:
+                os.fsync(fd)
+                os.posix_fadvise(fd, 0, 0, os.POSIX_FADV_DONTNEED)
+            finally:
+                os.close(fd)
+
+    cold = float("inf")
+    for _ in range(2):
+        evict()
+        t0 = time.perf_counter()
+        collect()
+        cold = min(cold, time.perf_counter() - t0)
+    return _timed(collect), round(cold, 4)
 
 
 def _extract_large_table() -> str | None:
@@ -236,10 +251,6 @@ def main() -> int:
     from delta_kernel_rs_spark.session import get_spark
     from delta_kernel_rs_spark.sources.snapshot import Snapshot
 
-    # the Spark job arms unpickle engine functions in the Python workers
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (str(REPO), os.environ.get("PYTHONPATH")) if p
-    )
     spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     results: dict[str, float] = {}
     spark_jobs: dict[str, list[int]] = {"write_dv_delete_1pct": []}
@@ -426,7 +437,7 @@ def main() -> int:
     footer: dict[str, float] = {}
     with tempfile.TemporaryDirectory(prefix="dkrs_footer_bench_") as root:
         for n in STATS_FOOTER_FILES:
-            footer[f"stats_footer_{n}"], footer[f"stats_footer_{n}_job"] = _stats_footer(
+            footer[f"stats_footer_{n}"], footer[f"stats_footer_{n}_cold"] = _stats_footer(
                 spark, root, n
             )
 

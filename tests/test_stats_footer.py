@@ -1,17 +1,14 @@
-"""Footer stats: the driver loop for local files against the Spark job
-that serves remote ones.
-
-``collect_file_stats_footer`` parses local footers on the driver and
-sends any list naming a remote path to a Spark job. Both call
-``footer_stats`` per file. Nothing here reaches a remote store, so this
-differential runs the job over local files and is the reference for the
-remote branch.
+"""Footer stats: what ``collect_file_stats_footer`` reads from the
+parquet footers of Spark- and pyarrow-written files, per column type,
+and the ``stats_json`` documents built from it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import glob
+import json
+import math
 import struct
 from decimal import Decimal
 
@@ -111,33 +108,61 @@ def footer_files(spark, tmp_path):
     return paths + [multi, empty, bad]
 
 
-def test_driver_stats_equal_the_spark_job(spark, footer_files):
-    """The driver loop and the job return the same stats dict and the
-    same ``stats_json`` document for every file."""
-    *written, multi, empty, bad = footer_files
-    driver = S.collect_file_stats_footer(spark, footer_files, SCHEMA, num_indexed=-1)
-    eligible = frozenset(SCHEMA.fieldNames())
-    job = S._footer_stats_job(spark, footer_files, eligible)
-    assert list(driver) == footer_files and set(job) == set(driver)
-    for path in footer_files:
-        # repr, not ==: Spark's writer records NaN as a double's max, and
-        # NaN != NaN
-        assert repr(job[path]) == repr(driver[path])
-        raw = driver[path]
-        if raw is not None:
-            assert S.stats_json(job[path], SCHEMA) == S.stats_json(raw, SCHEMA)
+def _bounds(values: list) -> tuple:
+    """(min, max) of the non-null, non-NaN values, as a parquet writer
+    records them."""
+    kept = [v for v in values if v is not None and not (isinstance(v, float) and math.isnan(v))]
+    return min(kept), max(kept)
 
-    assert driver[bad] is None
-    assert driver[empty]["numRecords"] == 0
-    assert driver[multi]["numRecords"] == 40
-    assert driver[multi]["min"]["dec"] == Decimal("-34.039")
-    assert sum(driver[p]["numRecords"] for p in written) == 24
-    for path in written + [multi]:
-        raw = driver[path]
+
+def test_footer_stats_per_type(spark, footer_files):
+    """Per file: the row count, each eligible column's bounds and null
+    count folded over the row groups, ``None`` for a footer pyarrow cannot
+    parse, and a ``stats_json`` document that keeps the reader contract
+    (truncated strings, millisecond timestamps, no non-finite floats)."""
+    *written, multi, empty, bad = footer_files
+    got = S.collect_file_stats_footer(spark, footer_files, SCHEMA, num_indexed=-1)
+    assert list(got) == footer_files
+    assert got[bad] is None
+    assert got[empty] == {"numRecords": 0, "min": {}, "max": {}, "nullCount": {}}
+
+    # six row groups of pyarrow's writer: bounds fold to the file's own
+    rows = _rows(40, 5)
+    raw = got[multi]
+    assert raw["numRecords"] == 40
+    assert raw["nullCount"] == {name: 40 if name == "nul" else 0 for name in SCHEMA.fieldNames()}
+    assert set(raw["min"]) == set(raw["max"]) == set(SCHEMA.fieldNames()) - {"nul"}
+    for name in raw["min"]:
+        assert (raw["min"][name], raw["max"][name]) == _bounds(rows[name]), name
+    assert raw["min"]["d"] == -math.inf and raw["max"]["d"] == math.inf
+    doc = json.loads(S.stats_json(raw, SCHEMA))
+    lo, hi = doc["minValues"], doc["maxValues"]
+    assert "d" not in lo and "d" not in hi and "nul" not in lo
+    for name in ("s", "u"):
+        small, big = _bounds(rows[name])
+        assert len(small) > 32 and len(big) > 32
+        assert lo[name] == small[:32] and hi[name] == S.truncate_max_string(big)
+    assert hi["u"][-1] == "\U0001F601"
+    assert (lo["i"], hi["i"], lo["l"], hi["l"]) == (-48, 50, 5380558138607, 5497558138880)
+    assert (lo["dec"], hi["dec"]) == ("-34.039", 5.0)
+    assert (lo["dt"], hi["dt"]) == ("1969-12-26", "1974-04-04")
+    assert (lo["ts"], hi["ts"]) == ("2024-02-29T23:59:59.999Z", "2024-03-01T00:00:48.148Z")
+    assert (lo["ntz"], hi["ntz"]) == ("1900-01-01T05:00:00.000Z", "1900-01-09T08:00:00.000Z")
+
+    # Spark's writer: two files that together hold _rows(24, 3)
+    rows = _rows(24, 3)
+    assert sum(got[p]["numRecords"] for p in written) == 24
+    for name in ("i", "l", "s", "u", "dt"):
+        assert (
+            min(got[p]["min"][name] for p in written),
+            max(got[p]["max"][name] for p in written),
+        ) == _bounds(rows[name]), name
+    for path in written:
+        raw = got[path]
         assert raw["nullCount"]["nul"] == raw["numRecords"]
         # Spark writes a decimal of precision <= 18 as INT64, whose
         # statistics pyarrow cannot convert: its bounds are unknown
-        assert set(raw["min"]) >= {"i", "l", "s", "u", "dt", "ts", "ntz"}
-        doc = S.stats_json(raw, SCHEMA)
-        assert '"nul"' in doc and "Infinity" not in doc and "NaN" not in doc
-
+        assert "dec" not in raw["min"] and "dec" not in raw["max"]
+        text = S.stats_json(raw, SCHEMA)
+        assert "Infinity" not in text and "NaN" not in text
+        assert json.loads(text)["nullCount"]["nul"] == raw["numRecords"]
