@@ -132,12 +132,12 @@ def collect_file_stats_footer(
     written, 2 files 0.0002 s, 2,000 files 0.11-0.13 s, 10,000 (CONVERT's
     chunk) 0.56-0.66 s; with each file's pages first dropped from the OS
     cache (the ``_cold`` arms, as CONVERT meets old files), 0.0004-0.0006,
-    0.22-0.23 and 1.31-1.47 s. The Spark job of up to 64 tasks that
-    collected them before took 0.16 s for 2 files, 2.3-3.8 s for 2,000
-    and 2.8-5.8 s for 10,000, cold or warm. In a one-off probe, 8 driver
-    threads were slower than one (the fold holds the GIL). Remote stores
-    (abfs, gs, hdfs through pyarrow) pay one round trip per footer here,
-    not measured.
+    0.22-0.23 and 1.31-1.47 s. A Spark job of up to 64 tasks over the
+    same files took 0.16 s for 2 files, 2.3-3.8 s for 2,000 and 2.8-5.8 s
+    for 10,000, cold or warm. In a one-off probe, 8 driver threads were
+    slower than one (the fold holds the GIL). Remote stores (abfs, gs,
+    hdfs through pyarrow) pay one round trip per footer here, not
+    measured.
 
     Columns whose stats the writer omitted (e.g. NaN-bearing floats) are
     simply absent from min/max — readers treat missing stats as unknown.
